@@ -46,3 +46,36 @@ def test_rect_empty_matrix():
     )
     assert out.tokens.shape == (3, 0)
     assert list(out.size_bytes) == [0, 0, 0]
+
+
+def _moving_mean_reference(mat: np.ndarray, window: int) -> np.ndarray:
+    """Plain-numpy replicate-padded moving mean, floor(mean + 0.5)."""
+    h = window // 2
+    padded = np.pad(mat.astype(np.int64), ((0, 0), (h, h)), mode="edge")
+    n = mat.shape[1]
+    sums = sum(padded[:, k : k + n] for k in range(window))
+    return np.floor(sums / window + 0.5).astype(np.int64)
+
+
+@pytest.mark.parametrize("window", range(3, 22, 2))
+def test_moving_mean_branches_match_reference(window):
+    """Both _moving_mean_rect branches (shifted adds for w <= 8, cumsum
+    above) accept the same odd-window domain and equal the plain
+    definition — including negative inputs, which take the int64 path."""
+    from tokforge.operators.kernel_rect import _moving_mean_rect
+
+    rng = np.random.default_rng(window)
+    for lo, hi in ((0, 50257), (-50257, 50257)):
+        for n in (1, 5, window, 40):
+            mat = rng.integers(lo, hi, size=(7, n)).astype(np.int32)
+            got = _moving_mean_rect(mat, window)
+            np.testing.assert_array_equal(got, _moving_mean_reference(mat, window))
+
+
+def test_moving_mean_rejects_even_window():
+    from tokforge.operators.kernel_rect import _moving_mean_rect
+
+    mat = np.arange(12, dtype=np.int32).reshape(2, 6)
+    for window in (4, 10):
+        with pytest.raises(AssertionError):
+            _moving_mean_rect(mat, window)

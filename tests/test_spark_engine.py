@@ -1,4 +1,4 @@
-"""Spark engine integration: the vectorized UDF pipeline must equal the
+"""Spark engine integration: the Arrow transform pass must equal the
 numpy kernel row-for-row (token-array equality, the per-row invariant),
 and the error channel must carry parse/validation failures."""
 
@@ -10,11 +10,8 @@ import pytest
 
 from tests.conftest import SF_SMALL
 from tokforge.engine.config import EngineConfig
-from tokforge.engine.transform import (
-    cache_key_col,
-    make_sign_udf,
-    transform_requests,
-)
+from tokforge.engine.transform import cache_key_col, make_sign_udf
+from tokforge.engine.transform_arrow import transform_requests_arrow
 from tokforge.operators.kernel import apply_plan
 from tokforge.plans.options import parse_chain
 from tokforge.sources.requests import requests_df
@@ -31,7 +28,7 @@ def test_engine_matches_kernel_rowwise(spark):
         r["doc_id"]: r
         for r in req.select("doc_id", "tokens", "orientation", "src_dtype").collect()
     }
-    out = transform_requests(req, EngineConfig(), verify=False)
+    out = transform_requests_arrow(req, EngineConfig(), verify=False)
     rows = out.select("doc_id", "tokens_out", "dtype", "size_bytes", "error").collect()
     assert len(rows) == len(inputs) > 0
     plan = parse_chain(CHAIN)
@@ -51,14 +48,14 @@ def test_engine_matches_kernel_rowwise(spark):
 
 def test_error_channel_carries_parse_failures(spark):
     req = requests_df(spark, SF_SMALL, "rotate:45/format:png").limit(5)
-    out = transform_requests(req, EngineConfig(), verify=False)
+    out = transform_requests_arrow(req, EngineConfig(), verify=False)
     errs = [r["error"] for r in out.select("error").collect()]
     assert all(e == "rotation must be one of: 0, 90, 180, 270" for e in errs)
 
 
 def test_unsupported_format_error(spark):
     req = requests_df(spark, SF_SMALL, "format:bmp").limit(3)
-    out = transform_requests(req, EngineConfig(), verify=False)
+    out = transform_requests_arrow(req, EngineConfig(), verify=False)
     errs = [r["error"] for r in out.select("error").collect()]
     assert all(e == "Unsupported format: bmp" for e in errs)
 
@@ -74,7 +71,7 @@ def test_signature_verification_end_to_end(spark):
         F.when(F.col("doc_id").cast("long") % 2 == 0, F.concat("sig", F.lit("x")))
         .otherwise(F.col("sig")),
     )
-    out = transform_requests(req, cfg, verify=True)
+    out = transform_requests_arrow(req, cfg, verify=True)
     for r in out.select("doc_id", "sig_valid").collect():
         assert r["sig_valid"] == (int(r["doc_id"]) % 2 == 1)
 
@@ -82,7 +79,7 @@ def test_signature_verification_end_to_end(spark):
 def test_presets_expand_in_engine(spark):
     cfg = EngineConfig(presets=(("th", "resize:fit:4:0:0:0/format:png"),))
     req = requests_df(spark, SF_SMALL, "preset:th").limit(4)
-    out = transform_requests(req, cfg, verify=False)
+    out = transform_requests_arrow(req, cfg, verify=False)
     for r in out.select("n_tok", "n_out").collect():
         assert r["n_out"] == min(4, r["n_tok"])
 
@@ -101,7 +98,7 @@ def test_cache_key_default_format_prefix(spark):
 
 def test_expired_rows_flagged(spark):
     req = requests_df(spark, SF_SMALL, "expires:1704070800/format:png")
-    out = transform_requests(req, EngineConfig(), verify=False)
+    out = transform_requests_arrow(req, EngineConfig(), verify=False)
     for r in out.select("doc_id", "error").collect():
         expired = int(r["doc_id"]) % 7200 > 3600
         assert (r["error"] == "Request expired") == expired
@@ -110,15 +107,13 @@ def test_expired_rows_flagged(spark):
 def test_mime_allowlist_rejects_disallowed_dtypes(spark):
     cfg = EngineConfig(allowed_src_dtypes=("int32",))
     req = requests_df(spark, SF_SMALL, "crop:4:0/format:png").limit(9)
-    out = transform_requests(req, cfg, verify=False)
+    out = transform_requests_arrow(req, cfg, verify=False)
     for r in out.select("doc_id", "error").collect():
         disallowed = int(r["doc_id"]) % 3 != 0  # src_dtype cycles by doc_id%3
         assert (r["error"] == "Source type not allowed") == disallowed
 
 
 def test_bearer_gate_filters_rows(spark):
-    from tokforge.engine.transform_arrow import transform_requests_arrow
-
     cfg = EngineConfig(bearer_token="s3cret")
     req = requests_df(spark, SF_SMALL, "crop:4:0/format:png").limit(10)
     req = req.withColumn(

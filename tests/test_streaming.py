@@ -91,7 +91,7 @@ def test_cache_state_hit_miss_end_to_end(spark, tmp_path):
 
 def test_cache_hits_match_batch_engine(spark, tmp_path):
     """Streaming MISS output must equal the batch engine (token equality)."""
-    from tokforge.engine.transform import transform_requests
+    from tokforge.engine.transform_arrow import transform_requests_arrow
 
     in_path, out_dir, ckpt = (
         str(tmp_path / "in"),
@@ -110,9 +110,40 @@ def test_cache_hits_match_batch_engine(spark, tmp_path):
     }
     batch_rows = {
         r["doc_id"]: list(r["tokens_out"])
-        for r in transform_requests(req, CFG, verify=False).collect()
+        for r in transform_requests_arrow(req, CFG, verify=False).collect()
     }
     assert stream_rows == batch_rows
+
+
+def test_cache_expiry_gates_hits(spark, tmp_path):
+    """Expiry runs before the cache probe (reference service.rs:232, then
+    :241-250): a key first requested before its `expires:` and repeated
+    after it is rejected on the repeat, not served from the cache."""
+    expires = 1704070800
+    chain = f"expires:{expires}/crop:8:0/format:png"
+    in_path, out_dir, ckpt = (
+        str(tmp_path / "in"),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    req = requests_df(spark, SF_SMALL, chain).limit(6).coalesce(1)
+    for i, ts in enumerate((expires - 100, expires + 50)):
+        req.withColumn("ts", F.lit(ts).cast("timestamp")).write.mode(
+            "append"
+        ).parquet(f"{in_path}/drop={i}")
+    query, _ = transform_stream(
+        spark, in_path, out_dir, ckpt, CFG, verify=False, max_files_per_trigger=1
+    )
+    _finish(query)
+    rows = read_sink(spark, out_dir).select(
+        F.unix_timestamp("ts").alias("t"), "cache_status", "error"
+    ).collect()
+    assert len(rows) == 12
+    for r in rows:
+        if r["t"] < expires:
+            assert (r["cache_status"], r["error"]) == ("MISS", None), r
+        else:
+            assert (r["cache_status"], r["error"]) == ("ERROR", "Request expired"), r
 
 
 def test_exactly_once_ledger_skips_replay(spark, tmp_path):
@@ -240,6 +271,7 @@ def test_cache_ttl_rearmed_on_every_invocation(spark):
             "cache_key": ["k0"],
             "doc_id": req["doc_id"],
             "ts": req["ts"],
+            "ts_unix": req["ts"].map(pd.Timestamp.timestamp).astype("int64"),
             "tokens": req["tokens"],
             "ops": req["ops"],
             "orientation": req["orientation"],
@@ -273,6 +305,7 @@ def _one_request_batch(spark, cache_keys, doc_ids=None):
             "cache_key": cache_keys,
             "doc_id": (doc_ids or [f"d{i}" for i in range(n)]),
             "ts": [req["ts"][0]] * n,
+            "ts_unix": [int(req["ts"][0].timestamp())] * n,
             "tokens": [req["tokens"][0]] * n,
             "ops": [req["ops"][0]] * n,
             "orientation": [req["orientation"][0]] * n,

@@ -1,15 +1,19 @@
-"""Arrow-native transform path == pandas path, bit for bit, including
-signature verification, error channels, and empty/edge buckets."""
+"""One transform core, two callers: the stateful streaming MISS path must
+return what the batch Arrow pass returns for the same requests — tokens,
+metadata and the error channel — and both must apply the same signature
+gate."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from tests.conftest import SF_SMALL
 from tokforge.engine.config import EngineConfig
-from tokforge.engine.transform import make_sign_udf, transform_requests
+from tokforge.engine.transform import cache_key_col, make_sign_udf
 from tokforge.engine.transform_arrow import transform_requests_arrow
 from tokforge.sources.requests import requests_df
+from tokforge.streaming.job import read_sink, transform_stream
 
 CFG = EngineConfig()
 
@@ -20,53 +24,101 @@ CHAINS = [
     "crop:50:0:ce",  # default-format fallback per src_dtype
     "raw",
     "rotate:45/format:png",  # parse error channel
-    "expires:1704070800/format:png",  # expiry channel
+    "expires:1704067230/format:png",  # expiry channel: doc_id % 7200 > 30 expire
     "max_bytes:40/format:jpeg/quality:95",
 ]
 
+# MIME allowlist drops uint8 (doc_id % 3 == 2); the 500-byte source cap
+# rejects the 256-token rung of the length ladder (256 * 4 > 500)
+GATED_CFG = EngineConfig(
+    allowed_src_dtypes=("int32", "int16"),
+    allow_security_options=True,
+    max_src_file_size=500,
+)
 
-def _rows(df):
+
+def _run_stream(spark, base, req, cfg, verify):
+    in_path, out_dir, ckpt = (str(base / d) for d in ("in", "out", "ckpt"))
+    req.write.mode("append").parquet(f"{in_path}/drop=0")
+    query, _ = transform_stream(
+        spark, in_path, out_dir, ckpt, cfg, verify=verify, available_now=True
+    )
+    query.awaitTermination()
+    return read_sink(spark, out_dir)
+
+
+def _by_key(rows):
     return {
-        r["doc_id"]: (
-            r["sig_valid"],
+        r["cache_key"]: (
             list(r["tokens_out"]) if r["tokens_out"] is not None else None,
             r["n_out"],
             r["dtype"],
-            r["size_bytes"],
-            r["quality"],
-            r["fmt"],
             r["error"],
         )
-        for r in df.collect()
+        for r in rows
     }
 
 
-def test_arrow_equals_pandas_across_chains(spark):
+@pytest.mark.parametrize("cfg", [CFG, GATED_CFG], ids=["default", "gated"])
+def test_stream_miss_equals_batch(spark, tmp_path, cfg):
+    """Every first-seen key takes the stateful MISS path; its output must
+    equal transform_requests_arrow row for row, error rows included."""
+    req = None
     for chain in CHAINS:
-        req = requests_df(spark, SF_SMALL, chain).limit(60)
-        a = _rows(transform_requests(req, CFG, verify=False))
-        b = _rows(transform_requests_arrow(req, CFG, verify=False))
-        assert a == b, chain
-
-
-def test_bearer_gate_parity(spark):
-    """The bearer-secret admission filter must act identically on BOTH
-    paths (round-1 advice: it was Arrow-only, silently processing
-    unauthorized rows through the pandas path)."""
-    cfg = EngineConfig(bearer_token="s3cret")
-    chain = "crop:8:0/format:png"
-    req = requests_df(spark, SF_SMALL, chain).limit(30)
-    req = req.withColumn(
-        "bearer",
-        F.when(F.col("doc_id").cast("long") % 2 == 0, F.lit("s3cret")).otherwise(
-            F.lit("wrong")
-        ),
+        part = requests_df(spark, SF_SMALL, chain).limit(60)
+        req = part if req is None else req.unionByName(part)
+    req = req.cache()
+    batch = _by_key(
+        transform_requests_arrow(req, cfg, verify=False)
+        .withColumn("cache_key", cache_key_col(cfg))
+        .collect()
     )
-    a = _rows(transform_requests(req, cfg, verify=False))
-    b = _rows(transform_requests_arrow(req, cfg, verify=False))
-    assert a == b
-    assert a, "bearer filter must admit the matching half"
-    assert all(int(d) % 2 == 0 for d in a), "only bearer-matching rows admitted"
+    sunk = _run_stream(spark, tmp_path, req, cfg, verify=False).collect()
+    assert {r["cache_status"] for r in sunk} <= {"MISS", "ERROR"}
+    assert _by_key(sunk) == batch
+    errors = {e for (_, _, _, e) in batch.values()}
+    assert {None, "Request expired"} <= errors
+    if cfg is GATED_CFG:
+        assert {"Source type not allowed", "Source image is too large"} <= errors
+    req.unpersist()
+
+
+def _signed(spark, limit):
+    req = requests_df(spark, SF_SMALL, "crop:8:0/format:png").limit(limit)
+    return req.withColumn("sig", make_sign_udf(CFG)(F.col("ops"), F.col("doc_id")))
+
+
+def _gate_verdicts(spark, tmp_path, req):
+    """(batch sig_valid per doc, doc_ids the stream admitted)."""
+    batch = {
+        r["doc_id"]: r["sig_valid"]
+        for r in transform_requests_arrow(req, CFG, verify=True).collect()
+    }
+    sunk = _run_stream(spark, tmp_path, req, CFG, verify=True)
+    return batch, {r["doc_id"] for r in sunk.select("doc_id").collect()}
+
+
+def test_stream_gate_rejects_padded_signature(spark, tmp_path):
+    """docs/SEMANTICS.md: signatures are base64url WITHOUT padding; a
+    `=`-padded copy of a valid signature fails on both paths."""
+    d = F.col("doc_id").cast("long")
+    req = _signed(spark, 12).withColumn(
+        "sig", F.when(d % 2 == 0, F.concat("sig", F.lit("="))).otherwise(F.col("sig"))
+    )
+    batch, admitted = _gate_verdicts(spark, tmp_path, req)
+    assert batch and all(ok == (int(doc) % 2 == 1) for doc, ok in batch.items())
+    assert admitted == {doc for doc, ok in batch.items() if ok}
+
+
+def test_null_signature_rejected_on_both_paths(spark, tmp_path):
+    """A null sig is a failed signature — not a crashed micro-batch."""
+    d = F.col("doc_id").cast("long")
+    req = _signed(spark, 12).withColumn(
+        "sig", F.when(d % 2 == 0, F.lit(None).cast("string")).otherwise(F.col("sig"))
+    )
+    batch, admitted = _gate_verdicts(spark, tmp_path, req)
+    assert batch and all(ok == (int(doc) % 2 == 1) for doc, ok in batch.items())
+    assert admitted == {doc for doc, ok in batch.items() if ok}
 
 
 def test_arrow_verify_in_pass(spark):
@@ -85,16 +137,11 @@ def test_arrow_verify_in_pass(spark):
         assert r["sig_valid"] == (int(r["doc_id"]) % 3 != 0)
 
 
-def test_output_shaping_columns_both_paths(spark):
-    """content_disposition + meta_orientation (round-4 real effects) agree
-    between the pandas and Arrow paths and follow the reference rules:
-    filename -> header (sanitized), strip -> NULL metadata, auto_rotate
-    consumes the EXIF tag (1), auto_rotate:false / raw keep the original."""
-    from tokforge.engine.config import EngineConfig
-    from tokforge.engine.transform import transform_requests
-    from tokforge.engine.transform_arrow import transform_requests_arrow
-    from tokforge.sources.requests import requests_df
-
+def test_output_shaping_columns(spark):
+    """content_disposition + meta_orientation (round-4 real effects)
+    follow the reference rules: filename -> header (sanitized), strip ->
+    NULL metadata, auto_rotate consumes the EXIF tag (1),
+    auto_rotate:false / raw keep the original."""
     cases = {
         'filename:a"b/return_attachment:1/strip_metadata:true/format:jpeg': (
             'attachment; filename="a_b"',
@@ -107,37 +154,26 @@ def test_output_shaping_columns_both_paths(spark):
         "crop:10:0/format:png": (None, 1),
         "raw": (None, "orig"),
     }
-    cfg = EngineConfig()
     for chain, (cd, meta) in cases.items():
-        req = requests_df(spark, "/root/testdata/sf0.001", chain).limit(24)
-        for path_fn in (transform_requests, transform_requests_arrow):
-            rows = path_fn(req, cfg, verify=False).collect()
-            assert rows, chain
-            for r in rows:
-                assert r["content_disposition"] == cd, (chain, path_fn)
-                expect = 1 + int(r["doc_id"]) % 8 if meta == "orig" else meta
-                assert r["meta_orientation"] == expect, (chain, path_fn, r)
+        req = requests_df(spark, SF_SMALL, chain).limit(24)
+        rows = transform_requests_arrow(req, CFG, verify=False).collect()
+        assert rows, chain
+        for r in rows:
+            assert r["content_disposition"] == cd, chain
+            expect = 1 + int(r["doc_id"]) % 8 if meta == "orig" else meta
+            assert r["meta_orientation"] == expect, (chain, r)
 
 
-def test_status_taxonomy_both_paths(spark):
+def test_status_taxonomy(spark):
     """The status column mirrors the reference's error classes
     (service.rs:676-800): 403 bad signature, 404 expired, 400 other
-    errors, 200 OK — identical in both execution paths and equal to the
-    scalar mapping."""
-    from tokforge.engine.config import EngineConfig
-    from tokforge.engine.transform import (
-        make_sign_udf,
-        status_for_error,
-        transform_requests,
-    )
-    from tokforge.engine.transform_arrow import transform_requests_arrow
-    from tokforge.sources.requests import requests_df
+    errors, 200 OK — equal to the scalar mapping."""
+    from tokforge.engine.transform import status_for_error
 
-    cfg = EngineConfig()
     # expires = EPOCH+10s: docs with doc_id%7200 > 10 expire (most of 30)
     chain = "expires:1704067210/crop:10:0/format:int32"
-    req = requests_df(spark, "/root/testdata/sf0.001", chain).limit(30)
-    sign = make_sign_udf(cfg)
+    req = requests_df(spark, SF_SMALL, chain).limit(30)
+    sign = make_sign_udf(CFG)
     d = F.col("doc_id").cast("long")
     req = req.withColumn(
         "sig",
@@ -145,11 +181,8 @@ def test_status_taxonomy_both_paths(spark):
             sign(F.col("ops"), F.col("doc_id"))
         ),
     )
-    for path_fn in (transform_requests, transform_requests_arrow):
-        rows = path_fn(req, cfg, verify=True).collect()
-        seen = set()
-        for r in rows:
-            expect = status_for_error(r["error"], r["sig_valid"])
-            assert r["status"] == expect, (path_fn, r)
-            seen.add(r["status"])
-        assert {200, 403, 404} <= seen
+    seen = set()
+    for r in transform_requests_arrow(req, CFG, verify=True).collect():
+        assert r["status"] == status_for_error(r["error"], r["sig_valid"]), r
+        seen.add(r["status"])
+    assert {200, 403, 404} <= seen

@@ -223,7 +223,7 @@ def oracle_transform_sql(
     where: str | None = None,
     digest_tokens: bool = False,
 ) -> str:
-    """Full DuckDB query reproducing ``transform_requests`` output columns
+    """Full DuckDB query reproducing ``transform_requests_arrow`` output columns
     (doc_id, n_out, tokens_out|tokens_md5, dtype, size_bytes, quality, fmt)
     for one fixed ops chain over the driver's `documents` table."""
     plan: Plan = parse_chain(ops, presets)

@@ -2,7 +2,7 @@
 operator gets a (Spark callable, DuckDB oracle SQL) pair.
 
 Transform-op queries run the REAL engine path (request synthesis ->
-single vectorized pandas UDF) and their oracles come from the SQL
+one Arrow pass, engine/transform_arrow.py) and their oracles come from the SQL
 generator in tokforge.engine.oracle, so Spark-vs-DuckDB equality checks
 the full parse+kernel pipeline bit-for-bit.  Analytics/pipeline queries
 are pure built-in DataFrame ops with hand-written SQL mirrors.

@@ -1,6 +1,7 @@
-"""The Spark execution of the transform chain: ONE Arrow-vectorized pandas
-UDF applies parse -> validate -> kernel for a whole record batch (no
-per-row Python crossing the JVM boundary; SURVEY.md §1.2 model mapping).
+"""Column-level building blocks shared by the batch transform
+(engine/transform_arrow.py) and the streaming jobs: the memoized plan
+parser, the signing / verification UDFs, the bearer admission filter, the
+cache-key column and the response-status taxonomy.
 
 Plan parsing is memoized per distinct ops string (chains repeat massively
 in a real request stream — the reference memoizes the same way via its
@@ -10,52 +11,15 @@ dominated by the numpy kernel, not the parser.
 
 from __future__ import annotations
 
-from typing import Optional
-
-import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BooleanType, StringType
 
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
-from tokforge.functions.signing import sign_series, verify_series
-from tokforge.operators.kernel import TransformError
-from tokforge.plans.options import (
-    OptionParseError,
-    Plan,
-    content_disposition,
-    parse_chain,
-    strips_metadata,
-)
-
-TRANSFORM_RESULT_SCHEMA = StructType(
-    [
-        StructField("tokens_out", ArrayType(IntegerType()), True),
-        StructField("n_out", IntegerType(), True),
-        StructField("dtype", StringType(), True),
-        StructField("size_bytes", LongType(), True),
-        StructField("quality", IntegerType(), True),
-        StructField("fmt", StringType(), True),
-        # Content-Disposition header value (service.rs:662-674); null
-        # without a filename option or on error rows
-        StructField("content_disposition", StringType(), True),
-        # EXIF-orientation metadata carried INTO the output: the original
-        # tag when kept (raw / auto_rotate:false), 1 once auto-rotate has
-        # consumed it, null when strip_metadata/strip_color_profile drops
-        # metadata on encode (save.rs:66-72) or on error rows
-        StructField("meta_orientation", IntegerType(), True),
-        StructField("error", StringType(), True),
-    ]
-)
+from tokforge.functions.signing import sign_series, verify_arrays
+from tokforge.plans.options import OptionParseError, Plan, parse_chain
 
 # Module-level plan cache: lives per executor Python worker, shared across
 # batches (the parse analog of the reference's OnceCell'd watermark/format
@@ -77,150 +41,16 @@ def _plan_for(ops: str, config: EngineConfig):
     return hit
 
 
-def _transform_batch(
-    tokens: pd.Series,
-    ops: pd.Series,
-    orientation: pd.Series,
-    src_dtype: pd.Series,
-    ts_unix: pd.Series,
-    config: EngineConfig,
-) -> pd.DataFrame:
-    """Length-bucketed vectorized execution: rows are grouped by
-    (ops, n_tok, src_dtype) and each bucket runs through the rectangular
-    kernel as one (m, n) matrix — the whole chain is numpy axis ops with
-    zero per-row Python (SURVEY.md §4: the libvips fused-pipeline analog).
-    """
-    from tokforge.operators.kernel_rect import apply_plan_rect
-
-    n = len(tokens)
-    out_tokens = np.empty(n, dtype=object)
-    out_n = np.zeros(n, dtype=np.int32)
-    out_dtype = np.empty(n, dtype=object)
-    out_size = np.zeros(n, dtype=np.int64)
-    out_quality = np.zeros(n, dtype=np.int32)
-    out_fmt = np.empty(n, dtype=object)
-    out_cd = np.full(n, None, dtype=object)
-    out_meta = np.full(n, None, dtype=object)
-    out_error = np.full(n, None, dtype=object)
-
-    tok_vals = tokens.to_numpy(dtype=object)
-    ops_vals = ops.to_numpy(dtype=object)
-    ori_vals = np.asarray(orientation.to_numpy(), dtype=np.int64)
-    dt_vals = src_dtype.to_numpy(dtype=object)
-    ts_vals = np.asarray(ts_unix.to_numpy(), dtype=np.int64)
-    lengths = np.fromiter((len(t) for t in tok_vals), dtype=np.int64, count=n)
-
-    # bucket rows by (ops, length, src_dtype)
-    buckets: dict[tuple, list[int]] = {}
-    for i in range(n):
-        buckets.setdefault((ops_vals[i], lengths[i], dt_vals[i]), []).append(i)
-
-    for (ops_str, length, sdt), idx_list in buckets.items():
-        idx = np.asarray(idx_list, dtype=np.int64)
-        plan = _plan_for(ops_str, config)
-        if isinstance(plan, OptionParseError):
-            out_error[idx] = str(plan)
-            continue
-
-        # MIME-allowlist analog (reference: service.rs:500-510).
-        if (
-            config.allowed_src_dtypes is not None
-            and str(sdt).lower() not in config.allowed_src_dtypes
-        ):
-            out_error[idx] = "Source type not allowed"
-            continue
-
-        # Expiry gate (reference: service.rs:645-660; event-time, never
-        # wall-clock, so replay is deterministic).
-        if plan.expires is not None:
-            expired = ts_vals[idx] > plan.expires
-            out_error[idx[expired]] = "Request expired"
-            idx = idx[~expired]
-            if len(idx) == 0:
-                continue
-
-        # Security caps (reference: limits.rs:26-86, honored only when the
-        # deployment allows per-request security options, service.rs:550-570).
-        cap_bytes = config.max_src_file_size
-        cap_res = config.max_src_resolution
-        if config.allow_security_options:
-            if plan.max_src_file_size is not None:
-                cap_bytes = plan.max_src_file_size
-            if plan.max_src_resolution is not None:
-                cap_res = plan.max_src_resolution
-        if cap_bytes is not None and length * 4 > cap_bytes:
-            out_error[idx] = "Source image is too large"
-            continue
-        if cap_res is not None and length > cap_res * 1_000_000:
-            out_error[idx] = "Source image resolution is too large"
-            continue
-
-        mat = (
-            np.vstack([np.asarray(tok_vals[i], dtype=np.int64) for i in idx])
-            if length > 0
-            else np.empty((len(idx), 0), dtype=np.int64)
-        )
-        try:
-            result = apply_plan_rect(
-                mat,
-                plan,
-                orientations=ori_vals[idx],
-                src_dtype=str(sdt),
-                default_format=config.default_format,
-            )
-        except (TransformError, OptionParseError) as exc:
-            out_error[idx] = str(exc)
-            continue
-
-        mat32 = result.tokens.astype(np.int32)
-        for row_pos, i in enumerate(idx):
-            out_tokens[i] = mat32[row_pos]
-        out_n[idx] = result.tokens.shape[1]
-        out_dtype[idx] = result.dtype
-        out_size[idx] = result.size_bytes
-        out_quality[idx] = result.quality
-        out_fmt[idx] = result.fmt
-        out_cd[idx] = content_disposition(plan)
-        if not strips_metadata(plan):
-            if plan.auto_rotate and not plan.raw:
-                out_meta[idx] = 1  # EXIF consumed by auto-rotate
-            else:
-                out_meta[idx] = ori_vals[idx]
-
-    return pd.DataFrame(
-        {
-            "tokens_out": out_tokens,
-            "n_out": out_n,
-            "dtype": out_dtype,
-            "size_bytes": out_size,
-            "quality": out_quality,
-            "fmt": out_fmt,
-            "content_disposition": out_cd,
-            "meta_orientation": out_meta,
-            "error": out_error,
-        }
-    )
-
-
-def make_transform_udf(config: EngineConfig = DEFAULT_CONFIG):
-    @F.pandas_udf(TRANSFORM_RESULT_SCHEMA)
-    def transform_udf(
-        tokens: pd.Series,
-        ops: pd.Series,
-        orientation: pd.Series,
-        src_dtype: pd.Series,
-        ts_unix: pd.Series,
-    ) -> pd.DataFrame:
-        return _transform_batch(tokens, ops, orientation, src_dtype, ts_unix, config)
-
-    return transform_udf
-
-
 def make_verify_udf(config: EngineConfig = DEFAULT_CONFIG):
-    @F.pandas_udf(BooleanType())
-    def verify_udf(sig: pd.Series, ops: pd.Series, doc_id: pd.Series) -> pd.Series:
-        return verify_series(
-            config.key, config.salt, sig, ops, doc_id, config.allow_unsigned
+    """Scalar Arrow UDF over ``verify_arrays`` (plans as ArrowEvalPython:
+    only sig/ops/doc_id cross the boundary; null sig -> False)."""
+
+    @F.arrow_udf(BooleanType())
+    def verify_udf(sig: pa.Array, ops: pa.Array, doc_id: pa.Array) -> pa.Array:
+        return pa.array(
+            verify_arrays(
+                config.key, config.salt, sig, ops, doc_id, config.allow_unsigned
+            )
         )
 
     return verify_udf
@@ -273,8 +103,7 @@ def status_code_col(
 def admit_bearer(df: DataFrame, config: EngineConfig) -> DataFrame:
     """Bearer-secret admission gate (reference: service.rs:432-446): a
     constant-token filter evaluated JVM-side before any Python work.
-    Shared by BOTH execution paths — the pandas and Arrow transforms must
-    stay row-identical (docs/SEMANTICS.md invariant)."""
+    Applied ahead of the transform's single Python pass."""
     if config.bearer_token is not None and "bearer" in df.columns:
         return df.filter(F.col("bearer").eqNullSafe(F.lit(config.bearer_token)))
     return df
@@ -291,52 +120,3 @@ def cache_key_col(config: EngineConfig = DEFAULT_CONFIG) -> Column:
     return F.when(has_format, path).otherwise(
         F.concat(default_fmt, F.lit(":"), path)
     )
-
-
-def transform_requests(
-    requests: DataFrame,
-    config: EngineConfig = DEFAULT_CONFIG,
-    verify: bool = True,
-) -> DataFrame:
-    """The full per-row pipeline over a request DataFrame:
-    signature gate -> parse/validate -> vectorized kernel -> output columns.
-
-    Spark shape (SURVEY.md §3 entry point 1): everything before/after the
-    single pandas UDF is built-in Column algebra, so Catalyst keeps scan
-    pruning and whole-stage codegen around the one Arrow exchange.
-    """
-    transform_udf = make_transform_udf(config)
-    df = admit_bearer(requests, config)
-    if verify:
-        verify_udf = make_verify_udf(config)
-        df = df.withColumn(
-            "sig_valid", verify_udf(F.col("sig"), F.col("ops"), F.col("doc_id"))
-        )
-    else:
-        df = df.withColumn("sig_valid", F.lit(True))
-
-    result = transform_udf(
-        F.col("tokens"),
-        F.col("ops"),
-        F.col("orientation"),
-        F.col("src_dtype"),
-        F.unix_timestamp(F.col("ts")),
-    )
-    df = df.withColumn("result", result)
-    return df.select(
-        "doc_id",
-        "source",
-        "ts",
-        "ops",
-        "n_tok",
-        "sig_valid",
-        F.col("result.tokens_out").alias("tokens_out"),
-        F.col("result.n_out").alias("n_out"),
-        F.col("result.dtype").alias("dtype"),
-        F.col("result.size_bytes").alias("size_bytes"),
-        F.col("result.quality").alias("quality"),
-        F.col("result.fmt").alias("fmt"),
-        F.col("result.content_disposition").alias("content_disposition"),
-        F.col("result.meta_orientation").alias("meta_orientation"),
-        F.col("result.error").alias("error"),
-    ).withColumn("status", status_code_col())

@@ -1,16 +1,24 @@
-"""Arrow-native execution of the transform chain via ``mapInArrow``.
+"""The transform chain: one gate + kernel core and the batch pass over it.
 
-The pandas-UDF path converts every ``array<int>`` cell into a per-row
-numpy object (O(rows) Python allocations each way).  This path never
-materializes rows at all:
+``transform_core`` is the only place a request is parsed, gated (expiry,
+MIME allowlist, security caps) and run through the rect kernel.  Two
+callers feed it:
 
-  pa.ListArray  ->  flat values + offsets  ->  bucket gather (one fancy
-  index per (ops, n, dtype) bucket)  ->  rect kernel  ->  flat scatter
-  ->  pa.ListArray.from_arrays
+- the batch pass, ``transform_requests_arrow`` — one ``mapInArrow`` that
+  never materializes rows:
+
+    pa.ListArray  ->  flat values + offsets  ->  bucket gather (one fancy
+    index per (ops, n, dtype) bucket)  ->  rect kernel  ->  flat scatter
+    ->  pa.ListArray.from_arrays
+
+  with the signature check (``functions.signing.verify_arrays``) in the
+  same pass;
+- the stateful cache and info MISS paths (streaming/cache_state.py,
+  info_state.py), which build the same flat input from their pandas rows.
 
 Strings (ops, src_dtype) are dictionary-encoded so bucketing works on
-int codes.  Rows that error fall back to the (identical-semantics)
-pandas batch path — the fast path stays branch-free.
+int codes.  Error rows carry their message in ``error`` and a null
+``tokens_out``; the JVM derives ``status`` from (sig_valid, error).
 """
 
 from __future__ import annotations
@@ -20,11 +28,12 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
-from tokforge.engine.transform import _plan_for
+from tokforge.engine.transform import _plan_for, admit_bearer, status_code_col
+from tokforge.functions.signing import verify_arrays
 from tokforge.operators.alloc import tune_allocator  # noqa: F401
 from tokforge.operators.kernel import TransformError
 from tokforge.operators.kernel_rect import apply_plan_rect
@@ -49,64 +58,153 @@ def _dict_codes(arr: pa.Array) -> tuple[np.ndarray, list]:
     return enc.indices.to_numpy(zero_copy_only=False), enc.dictionary.to_pylist()
 
 
-def _string_views(arr: pa.Array) -> tuple[np.ndarray, memoryview]:
-    """(offsets, utf-8 data) views over a string column's raw Arrow
-    buffers — per-row byte access without materializing Python strings."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    bufs = arr.buffers()  # [validity, offsets, data]
-    odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
-    offsets = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
-    return offsets, memoryview(bufs[2])
-
-
 def _verify_batch(batch: pa.RecordBatch, config: EngineConfig) -> pa.Array:
     """HMAC verification inside the same Arrow pass (a separate pandas-UDF
     stage chained into mapInArrow measured 25x slower than either alone —
-    one Python crossing beats two).
+    one Python crossing beats two)."""
+    return pa.array(
+        verify_arrays(
+            config.key,
+            config.salt,
+            batch.column("sig"),
+            batch.column("ops"),
+            batch.column("doc_id"),
+            config.allow_unsigned,
+        )
+    )
 
-    The HMAC over ``salt || "/ops/"`` is precomputed once per distinct ops
-    chain (dictionary-encoded, so repeats are found in C) and ``copy()``-ed
-    per row — each row pays only the doc_id update + digest (reference
-    parity: url.rs:60-72 hashes salt+path; HMAC state after the shared
-    prefix is identical).  r8: sig/doc_id bytes come straight off the Arrow
-    buffers as memoryview slices and the comparison runs on the b64 BYTES —
-    the per-row ``to_pylist`` string materialization of all three columns
-    was ~3x the cost of the HMAC itself (guide §4.2: operate on the Arrow
-    buffers, not per-row Python objects).
-    """
-    import base64
-    import hashlib
-    import hmac
 
-    n = batch.num_rows
-    key, salt = config.key, config.salt
-    allow = config.allow_unsigned
-    ops_codes, ops_dict = _dict_codes(batch.column("ops"))
-    prefix_macs = [
-        hmac.new(key, salt + b"/" + o.encode() + b"/", hashlib.sha256)
-        for o in ops_dict
-    ]
-    doc_off, doc_mv = _string_views(batch.column("doc_id"))
-    sig_off, sig_mv = _string_views(batch.column("sig"))
-    # plain-int lists: per-row numpy scalar indexing costs ~0.4 us/row on
-    # top of a ~2.5 us/row HMAC floor
-    codes = ops_codes.tolist()
-    d_off = doc_off.tolist()
-    s_off = sig_off.tolist()
-    out = np.empty(n, dtype=bool)
-    unsafe = b"unsafe"
-    compare = hmac.compare_digest
-    b64 = base64.urlsafe_b64encode
-    for i in range(n):
-        s = sig_mv[s_off[i] : s_off[i + 1]]
-        if s == unsafe:
-            out[i] = allow
+def expired_rows(
+    ops_codes: np.ndarray, ops_dict: list, ts_unix: np.ndarray, config: EngineConfig
+) -> np.ndarray:
+    """The expiry gate (service.rs:232): row i is expired when its chain
+    parses, names ``expires:`` and its event time ``ts_unix`` is past it
+    (event time, never wall-clock, so replay is deterministic).  One plan
+    lookup per distinct chain."""
+    out = np.zeros(len(ops_codes), dtype=bool)
+    for c, chain in enumerate(ops_dict):
+        plan = _plan_for(chain, config)
+        if not isinstance(plan, OptionParseError) and plan.expires is not None:
+            sel = ops_codes == c
+            out[sel] = ts_unix[sel] > plan.expires
+    return out
+
+
+def transform_core(
+    values: np.ndarray,
+    offsets: np.ndarray,
+    ops_codes: np.ndarray,
+    ops_dict: list,
+    sdt_codes: np.ndarray,
+    sdt_dict: list,
+    orientations: np.ndarray,
+    ts_unix: np.ndarray,
+    config: EngineConfig,
+) -> tuple[dict[str, np.ndarray], list[tuple[np.ndarray, np.ndarray]]]:
+    """THE per-bucket gate + kernel, shared by the batch pass and the
+    stateful MISS paths.  Input is one flat token buffer (row i is
+    ``values[offsets[i]:offsets[i+1]]``) plus per-row ops / src_dtype
+    codes into their dictionaries, EXIF orientations and event-time
+    ``ts_unix``.
+
+    Rows are bucketed by (ops, n, src_dtype); each bucket runs the gates
+    in the reference's request order — parse (service.rs:230), expiry
+    (:232, ``expired_rows``), MIME allowlist (:500-510), security caps (limits.rs:26-86, per-request
+    overrides only when the deployment allows them, :550-570) — and then
+    ``apply_plan_rect`` over one gathered (m, n) matrix: zero per-row
+    Python (SURVEY.md §4: the libvips fused-pipeline analog).
+
+    Returns the per-row metadata columns keyed by output column name
+    (``error`` is None on computed rows) and ``(row_idx, tokens)`` per
+    computed bucket."""
+    n = len(ops_codes)
+    lengths = np.diff(offsets)
+    # composite bucket key -> inverse index (fully vectorized bucketing)
+    key = (ops_codes.astype(np.int64) * len(sdt_dict) + sdt_codes) * (
+        int(lengths.max(initial=0)) + 1
+    ) + lengths
+    uniq, inv = np.unique(key, return_inverse=True)
+    expired = expired_rows(ops_codes, ops_dict, ts_unix, config)
+
+    cols = {
+        "n_out": np.zeros(n, dtype=np.int32),
+        "dtype": np.full(n, None, dtype=object),
+        "size_bytes": np.zeros(n, dtype=np.int64),
+        "quality": np.zeros(n, dtype=np.int32),
+        "fmt": np.full(n, None, dtype=object),
+        "content_disposition": np.full(n, None, dtype=object),
+        "meta_orientation": np.full(n, None, dtype=object),
+        "error": np.full(n, None, dtype=object),
+    }
+    error = cols["error"]
+    buckets: list[tuple[np.ndarray, np.ndarray]] = []
+
+    for b in range(len(uniq)):
+        row_idx = np.nonzero(inv == b)[0]
+        i0 = row_idx[0]
+        sdt = str(sdt_dict[sdt_codes[i0]])
+        length = int(lengths[i0])
+
+        plan = _plan_for(ops_dict[ops_codes[i0]], config)
+        if isinstance(plan, OptionParseError):
+            error[row_idx] = str(plan)
             continue
-        mac = prefix_macs[codes[i]].copy()
-        mac.update(doc_mv[d_off[i] : d_off[i + 1]])
-        out[i] = compare(b64(mac.digest()).rstrip(b"="), s)
-    return pa.array(out)
+        gone = expired[row_idx]
+        if gone.any():
+            error[row_idx[gone]] = "Request expired"
+            row_idx = row_idx[~gone]
+            if len(row_idx) == 0:
+                continue
+        if (
+            config.allowed_src_dtypes is not None
+            and sdt.lower() not in config.allowed_src_dtypes
+        ):
+            error[row_idx] = "Source type not allowed"
+            continue
+        cap_bytes = config.max_src_file_size
+        cap_res = config.max_src_resolution
+        if config.allow_security_options:
+            if plan.max_src_file_size is not None:
+                cap_bytes = plan.max_src_file_size
+            if plan.max_src_resolution is not None:
+                cap_res = plan.max_src_resolution
+        if cap_bytes is not None and length * 4 > cap_bytes:
+            error[row_idx] = "Source image is too large"
+            continue
+        if cap_res is not None and length > cap_res * 1_000_000:
+            error[row_idx] = "Source image resolution is too large"
+            continue
+
+        if length > 0:
+            gather = offsets[row_idx][:, None] + np.arange(length, dtype=np.int64)
+            mat = values[gather]
+        else:
+            mat = np.empty((len(row_idx), 0), dtype=values.dtype)
+        try:
+            result = apply_plan_rect(
+                mat,
+                plan,
+                orientations=orientations[row_idx],
+                src_dtype=sdt,
+                default_format=config.default_format,
+            )
+        except (TransformError, OptionParseError) as exc:
+            error[row_idx] = str(exc)
+            continue
+
+        cols["n_out"][row_idx] = result.tokens.shape[1]
+        cols["dtype"][row_idx] = result.dtype
+        cols["size_bytes"][row_idx] = result.size_bytes
+        cols["quality"][row_idx] = result.quality
+        cols["fmt"][row_idx] = result.fmt
+        cols["content_disposition"][row_idx] = content_disposition(plan)
+        if not strips_metadata(plan):
+            if plan.auto_rotate and not plan.raw:
+                cols["meta_orientation"][row_idx] = 1  # EXIF consumed by auto-rotate
+            else:
+                cols["meta_orientation"][row_idx] = orientations[row_idx]
+        buckets.append((row_idx, result.tokens))
+    return cols, buckets
 
 
 def _transform_record_batch(batch: pa.RecordBatch, config: EngineConfig) -> pa.RecordBatch:
@@ -117,104 +215,27 @@ def _transform_record_batch(batch: pa.RecordBatch, config: EngineConfig) -> pa.R
     # flatten() drops per-list validity/offset base; use raw buffers
     offsets = toks.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     values = toks.values.to_numpy(zero_copy_only=False)  # int32, zero-copy
-    lengths = np.diff(offsets)
-
     ops_codes, ops_dict = _dict_codes(batch.column("ops"))
     sdt_codes, sdt_dict = _dict_codes(batch.column("src_dtype"))
-    orientations = batch.column("orientation").to_numpy(zero_copy_only=False).astype(np.int64)
-    ts_unix = batch.column("ts_unix").to_numpy(zero_copy_only=False).astype(np.int64)
-
-    # composite bucket key -> inverse index (fully vectorized bucketing)
-    key = (ops_codes.astype(np.int64) * len(sdt_dict) + sdt_codes) * (
-        int(lengths.max(initial=0)) + 1
-    ) + lengths
-    uniq, inv = np.unique(key, return_inverse=True)
-
-    out_n = np.zeros(n, dtype=np.int32)
-    out_dtype = np.empty(n, dtype=object)
-    out_size = np.zeros(n, dtype=np.int64)
-    out_quality = np.zeros(n, dtype=np.int32)
-    out_fmt = np.empty(n, dtype=object)
-    out_cd = np.full(n, None, dtype=object)
-    out_meta = np.full(n, None, dtype=object)
-    out_error = np.full(n, None, dtype=object)
-    bucket_results: list[tuple[np.ndarray, np.ndarray]] = []  # (row_idx, matrix)
-
-    for b in range(len(uniq)):
-        row_idx = np.nonzero(inv == b)[0]
-        i0 = row_idx[0]
-        ops_str = ops_dict[ops_codes[i0]]
-        sdt = sdt_dict[sdt_codes[i0]]
-        length = int(lengths[i0])
-
-        plan = _plan_for(ops_str, config)
-        if isinstance(plan, OptionParseError):
-            out_error[row_idx] = str(plan)
-            continue
-        # MIME-allowlist analog (reference: service.rs:500-510).
-        if (
-            config.allowed_src_dtypes is not None
-            and sdt_dict[sdt_codes[i0]].lower() not in config.allowed_src_dtypes
-        ):
-            out_error[row_idx] = "Source type not allowed"
-            continue
-        if plan.expires is not None:
-            expired = ts_unix[row_idx] > plan.expires
-            out_error[row_idx[expired]] = "Request expired"
-            row_idx = row_idx[~expired]
-            if len(row_idx) == 0:
-                continue
-        cap_bytes = config.max_src_file_size
-        cap_res = config.max_src_resolution
-        if config.allow_security_options:
-            if plan.max_src_file_size is not None:
-                cap_bytes = plan.max_src_file_size
-            if plan.max_src_resolution is not None:
-                cap_res = plan.max_src_resolution
-        if cap_bytes is not None and length * 4 > cap_bytes:
-            out_error[row_idx] = "Source image is too large"
-            continue
-        if cap_res is not None and length > cap_res * 1_000_000:
-            out_error[row_idx] = "Source image resolution is too large"
-            continue
-
-        if length > 0:
-            gather = offsets[row_idx][:, None] + np.arange(length, dtype=np.int64)
-            mat = values[gather]
-        else:
-            mat = np.empty((len(row_idx), 0), dtype=np.int32)
-        try:
-            result = apply_plan_rect(
-                mat,
-                plan,
-                orientations=orientations[row_idx],
-                src_dtype=str(sdt),
-                default_format=config.default_format,
-            )
-        except (TransformError, OptionParseError) as exc:
-            out_error[row_idx] = str(exc)
-            continue
-
-        out_n[row_idx] = result.tokens.shape[1]
-        out_dtype[row_idx] = result.dtype
-        out_size[row_idx] = result.size_bytes
-        out_quality[row_idx] = result.quality
-        out_fmt[row_idx] = result.fmt
-        out_cd[row_idx] = content_disposition(plan)
-        if not strips_metadata(plan):
-            if plan.auto_rotate and not plan.raw:
-                out_meta[row_idx] = 1  # EXIF consumed by auto-rotate
-            else:
-                out_meta[row_idx] = orientations[row_idx]
-        bucket_results.append((row_idx, result.tokens))
+    cols, buckets = transform_core(
+        values,
+        offsets,
+        ops_codes,
+        ops_dict,
+        sdt_codes,
+        sdt_dict,
+        batch.column("orientation").to_numpy(zero_copy_only=False).astype(np.int64),
+        batch.column("ts_unix").to_numpy(zero_copy_only=False).astype(np.int64),
+        config,
+    )
 
     # assemble the output list column: flat scatter into one values buffer
-    has_error = out_error != None  # noqa: E711 - vectorized comparison
-    out_counts = np.where(has_error, 0, out_n).astype(np.int64)
+    has_error = cols["error"] != None  # noqa: E711 - vectorized comparison
+    out_counts = np.where(has_error, 0, cols["n_out"]).astype(np.int64)
     out_offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(out_counts, out=out_offsets[1:])
     flat = np.empty(int(out_offsets[-1]), dtype=np.int32)
-    for row_idx, matrix in bucket_results:
+    for row_idx, matrix in buckets:
         width = matrix.shape[1]
         if width == 0:
             continue
@@ -233,30 +254,23 @@ def _transform_record_batch(batch: pa.RecordBatch, config: EngineConfig) -> pa.R
         sig_col = _verify_batch(batch, config)
     else:
         sig_col = pa.array(np.ones(n, dtype=bool))
+    passthrough = ["doc_id", "source", "ts", "ops", "n_tok"]
     return pa.RecordBatch.from_arrays(
-        [
-            batch.column("doc_id"),
-            batch.column("source"),
-            batch.column("ts"),
-            batch.column("ops"),
-            batch.column("n_tok"),
+        [batch.column(c) for c in passthrough]
+        + [
             sig_col,
             tokens_out,
-            pa.array(out_n, type=pa.int32()),
-            pa.array(out_dtype, type=pa.string()),
-            pa.array(out_size, type=pa.int64()),
-            pa.array(out_quality, type=pa.int32()),
-            pa.array(out_fmt, type=pa.string()),
-            pa.array(out_cd, type=pa.string()),
-            pa.array(out_meta.tolist(), type=pa.int32()),
-            pa.array(out_error, type=pa.string()),
+            pa.array(cols["n_out"], type=pa.int32()),
+            pa.array(cols["dtype"], type=pa.string()),
+            pa.array(cols["size_bytes"], type=pa.int64()),
+            pa.array(cols["quality"], type=pa.int32()),
+            pa.array(cols["fmt"], type=pa.string()),
+            pa.array(cols["content_disposition"], type=pa.string()),
+            pa.array(cols["meta_orientation"].tolist(), type=pa.int32()),
+            pa.array(cols["error"], type=pa.string()),
         ],
-        names=[
-            "doc_id",
-            "source",
-            "ts",
-            "ops",
-            "n_tok",
+        names=passthrough
+        + [
             "sig_valid",
             "tokens_out",
             "n_out",
@@ -276,10 +290,10 @@ def transform_requests_arrow(
     config: EngineConfig = DEFAULT_CONFIG,
     verify: bool = True,
 ) -> DataFrame:
-    """Arrow-native equivalent of ``transform_requests`` (same output
-    columns and values; tests assert parity)."""
-    from tokforge.engine.transform import admit_bearer
-
+    """The full per-row pipeline over a request DataFrame: bearer gate
+    (JVM) -> one Arrow pass (signature check + ``transform_core``) ->
+    ``status`` (JVM).  Catalyst keeps scan pruning and whole-stage codegen
+    around the single Python exchange (SURVEY.md §3 entry point 1)."""
     df = admit_bearer(requests, config)
     df = df.withColumn("ts_unix", F.unix_timestamp(F.col("ts")))
     cols = [
@@ -308,10 +322,8 @@ def transform_requests_arrow(
                         batch.slice(s, _KERNEL_SLICE_ROWS), config
                     )
 
-    from tokforge.engine.transform import status_code_col
-
     # status class is derived JVM-side from (sig_valid, error) — zero cost
-    # inside the Arrow pass, identical to the pandas path
+    # inside the Arrow pass
     return df.mapInArrow(fn, OUTPUT_SCHEMA_DDL).withColumn(
         "status", status_code_col()
     )

@@ -14,6 +14,8 @@ import hmac
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 
 def canonical_path(ops: str, doc_id: str) -> str:
@@ -26,15 +28,8 @@ def sign_path(key: bytes, salt: bytes, path: str) -> str:
 
 
 def validate_signature(key: bytes, salt: bytes, signature: str, path: str) -> bool:
-    """Constant-time comparison against the expected digest
-    (reference: url.rs:60-72 mac.verify_slice)."""
-    pad = "=" * (-len(signature) % 4)
-    try:
-        decoded = base64.urlsafe_b64decode(signature + pad)
-    except Exception:  # noqa: BLE001 - malformed base64 is just invalid
-        return False
-    mac = hmac.new(key, salt + path.encode("utf-8"), hashlib.sha256)
-    return hmac.compare_digest(mac.digest(), decoded)
+    """Scalar form of :func:`validate_path_series` (reference: url.rs:60-72)."""
+    return bool(validate_path_series(key, salt, pd.Series([signature]), pd.Series([path]))[0])
 
 
 def sign_series(key: bytes, salt: bytes, ops: pd.Series, doc_id: pd.Series) -> pd.Series:
@@ -57,22 +52,75 @@ def sign_path_series(key: bytes, salt: bytes, path: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def validate_path_series(
-    key: bytes, salt: bytes, sig: pd.Series, path: pd.Series
-) -> pd.Series:
-    """Verify signatures over arbitrary path strings (url.rs:60-72)."""
-    sig_vals = sig.to_numpy(dtype=object)
-    path_vals = path.to_numpy(dtype=object)
-    out = np.empty(len(sig_vals), dtype=bool)
-    for i in range(len(out)):
-        s, pth = sig_vals[i], path_vals[i]
-        # Spark evaluates extracted python UDFs unconditionally even when
-        # they sit inside a CASE branch — nulls must not crash the batch
-        if s is None or pth is None:
-            out[i] = False
+def _string_views(arr: pa.Array) -> tuple[list, memoryview]:
+    """(offsets, utf-8 data) over a string column's raw Arrow buffers —
+    per-row byte access without materializing Python strings."""
+    bufs = arr.buffers()  # [validity, offsets, data]
+    odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offsets = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
+    return offsets.tolist(), memoryview(bufs[2] if bufs[2] is not None else b"")
+
+
+def _verify_rows(
+    key: bytes,
+    salt: bytes,
+    sig: pa.Array,
+    prefixes: list[bytes],
+    codes: list[int],
+    suffix: pa.Array,
+    valid: pa.Array,
+    allow_unsigned: bool,
+) -> np.ndarray:
+    """THE per-row signature loop (reference: url.rs:60-72,
+    service.rs:453-470).  Row i's message is ``salt || prefixes[codes[i]]
+    || suffix[i]``; it passes when ``sig[i]`` equals the message's
+    ``base64url_nopad(HMAC)`` byte for byte, or is the literal ``unsafe``
+    and the deployment allows unsigned requests.  Rows where ``valid`` is
+    False (a null input) fail: Spark evaluates extracted UDFs even inside
+    a CASE branch, so nulls reach here and must not crash the batch.
+
+    The HMAC over ``salt || prefix`` is computed once per distinct prefix
+    and ``copy()``-ed per row — each row pays only the suffix update +
+    digest.  sig/suffix bytes come straight off the Arrow buffers as
+    memoryview slices and the comparison runs on the b64 bytes: per-row
+    ``to_pylist`` string materialization was ~3x the cost of the HMAC."""
+    out = np.zeros(len(sig), dtype=bool)
+    prefix_macs = [hmac.new(key, salt + p, hashlib.sha256) for p in prefixes]
+    x_off, x_mv = _string_views(suffix)
+    s_off, sig_mv = _string_views(sig)
+    unsafe = b"unsafe"
+    compare = hmac.compare_digest
+    b64 = base64.urlsafe_b64encode
+    for i in np.flatnonzero(valid.to_numpy(zero_copy_only=False)).tolist():
+        s = sig_mv[s_off[i] : s_off[i + 1]]
+        if s == unsafe:
+            out[i] = allow_unsigned
             continue
-        out[i] = validate_signature(key, salt, s, pth)
-    return pd.Series(out)
+        mac = prefix_macs[codes[i]].copy()
+        mac.update(x_mv[x_off[i] : x_off[i + 1]])
+        out[i] = compare(b64(mac.digest()).rstrip(b"="), s)
+    return out
+
+
+def verify_arrays(
+    key: bytes,
+    salt: bytes,
+    sig: pa.Array,
+    ops: pa.Array,
+    doc_id: pa.Array,
+    allow_unsigned: bool = False,
+) -> np.ndarray:
+    """Request-signature verdicts over Arrow (sig, ops, doc_id) columns:
+    the message is ``canonical_path(ops, doc_id)``.  The ``"/ops/"``
+    prefix is dictionary-encoded, so repeated chains share one
+    precomputed HMAC state (found in C)."""
+    enc = pc.dictionary_encode(ops)
+    prefixes = [b"/" + o.encode() + b"/" for o in enc.dictionary.to_pylist()]
+    # plain-int list: per-row numpy scalar indexing costs ~0.4 us/row on
+    # top of a ~2.5 us/row HMAC floor
+    codes = enc.indices.fill_null(0).to_numpy(zero_copy_only=False).tolist()
+    valid = pc.and_(pc.and_(sig.is_valid(), ops.is_valid()), doc_id.is_valid())
+    return _verify_rows(key, salt, sig, prefixes, codes, doc_id, valid, allow_unsigned)
 
 
 def verify_series(
@@ -83,18 +131,17 @@ def verify_series(
     doc_id: pd.Series,
     allow_unsigned: bool = False,
 ) -> pd.Series:
-    """Vectorized verification; `unsafe` literal passes only when the
-    deployment allows unsigned requests (reference: service.rs:453-470)."""
-    out = np.empty(len(sig), dtype=bool)
-    sig_vals = sig.to_numpy(dtype=object)
-    ops_vals = ops.to_numpy(dtype=object)
-    doc_vals = doc_id.to_numpy(dtype=object)
-    for i in range(len(out)):
-        s = sig_vals[i]
-        if s == "unsafe":
-            out[i] = allow_unsigned
-        else:
-            out[i] = validate_signature(
-                key, salt, s, canonical_path(ops_vals[i], doc_vals[i])
-            )
-    return pd.Series(out)
+    """pandas adapter over :func:`verify_arrays`."""
+    arrays = (pa.array(s, type=pa.string(), from_pandas=True) for s in (sig, ops, doc_id))
+    return pd.Series(verify_arrays(key, salt, *arrays, allow_unsigned))
+
+
+def validate_path_series(
+    key: bytes, salt: bytes, sig: pd.Series, path: pd.Series
+) -> pd.Series:
+    """Verify signatures over ARBITRARY path strings (the full-envelope
+    flow, url.rs:60-72); the literal ``unsafe`` never passes here."""
+    sig_a, path_a = (pa.array(s, type=pa.string(), from_pandas=True) for s in (sig, path))
+    valid = pc.and_(sig_a.is_valid(), path_a.is_valid())
+    codes = [0] * len(sig_a)
+    return pd.Series(_verify_rows(key, salt, sig_a, [b""], codes, path_a, valid, False))

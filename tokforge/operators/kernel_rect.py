@@ -223,7 +223,11 @@ def _moving_mean_rect(mat: np.ndarray, window: int) -> np.ndarray:
     value is >= 1/(2w) from the cutoff, far beyond double rounding error.
     tests/test_kernel_rect + the property fuzz pin the equality.)  Doing
     it in int64 avoids three full-size float64 temporaries — this op is
-    memory-bandwidth-bound at high core counts."""
+    memory-bandwidth-bound at high core counts.
+
+    ``window`` must be odd (callers pass 2*ceil(sigma)+1): the cumsum
+    branch's slice arithmetic assumes a centered window."""
+    assert window % 2 == 1, f"moving-mean window must be odd, got {window}"
     m, n = mat.shape
     if n == 0 or window <= 1:
         return mat.copy()

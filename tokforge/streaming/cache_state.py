@@ -43,11 +43,9 @@ from pyspark.sql.types import (
 )
 
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
-from tokforge.engine.transform import _plan_for, cache_key_col
+from tokforge.engine.transform import cache_key_col
+from tokforge.engine.transform_arrow import expired_rows, transform_core
 from tokforge.operators.alloc import tune_allocator  # noqa: F401 - worker mallopt
-from tokforge.operators.kernel import TransformError
-from tokforge.operators.kernel_rect import apply_plan_rect
-from tokforge.plans.options import OptionParseError
 
 CACHE_OUTPUT_SCHEMA = StructType(
     [
@@ -72,44 +70,53 @@ CACHE_STATE_SCHEMA = StructType(
     ]
 )
 
-DEFAULT_BUCKETS = 16384
-# Scale-adaptive default: buckets per shuffle partition.  Each state task
-# owns (buckets / shuffle_partitions) groups, so this bounds grouped-
+# Scale-adaptive bucket count: buckets per shuffle partition.  Each state
+# task owns (buckets / shuffle_partitions) groups, so this bounds grouped-
 # pandas invocations per task at a constant while total bucket count
 # grows with the cluster (bigger clusters <-> bigger state).
 BUCKETS_PER_PARTITION = 32
 
 
-def resolve_buckets(buckets: "int | None", df: "DataFrame | None" = None) -> int:
-    """Call-time bucket-count resolution (round-8: the old import-time
-    default froze the dial at 16384).  The trade is per-invocation
-    grouped-pandas overhead (measured ~0.25 ms/group on this box: 16384
-    groups cost ~4.8 s of pure machinery on a 200k-row batch, and the
-    full streaming pass dropped 5.99s -> 2.87s at 1024 buckets, rows
-    identical) against per-bucket state-table size (every TOUCHED bucket
-    (de)serializes its whole entry list, so sparse trickle batches over a
-    huge state want MANY buckets, while availableNow/full-scan batches
-    want few).  Resolution order: explicit argument > TOKFORGE_STATE_
-    BUCKETS env > BUCKETS_PER_PARTITION x spark.sql.shuffle.partitions
-    (scale-adaptive) > DEFAULT_BUCKETS.  Bucketing never changes row
-    output — only which group serves a key — pinned by
+def resolve_buckets(buckets: "int | None", df: DataFrame) -> int:
+    """Call-time bucket-count resolution: an explicit ``buckets`` wins,
+    else BUCKETS_PER_PARTITION x spark.sql.shuffle.partitions.  The trade
+    is per-invocation grouped-pandas overhead (measured ~0.25 ms/group on
+    this box: 16384 groups cost ~4.8 s of pure machinery on a 200k-row
+    batch, and the full streaming pass dropped 5.99s -> 2.87s at 1024
+    buckets, rows identical) against per-bucket state-table size (every
+    TOUCHED bucket (de)serializes its whole entry list, so sparse trickle
+    batches over a huge state want MANY buckets, while availableNow/
+    full-scan batches want few).  Bucketing never changes row output —
+    only which group serves a key — pinned by
     tests/test_streaming.py::test_cache_bucket_count_invariance."""
-    import os
-
     if buckets is not None:
         return buckets
-    env = os.environ.get("TOKFORGE_STATE_BUCKETS")
-    if env:
-        return int(env)
-    if df is not None:
-        try:
-            n_part = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-            return BUCKETS_PER_PARTITION * n_part
-        except Exception:
-            pass
-    return DEFAULT_BUCKETS
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return BUCKETS_PER_PARTITION * n_part
+
+
+def miss_core(rows: pd.DataFrame, idx: np.ndarray, config: EngineConfig):
+    """Run ``transform_core`` over the pandas rows ``idx`` of a state
+    group: one concatenate builds the flat token buffer, ``pd.factorize``
+    the ops / src_dtype codes.  Returns the core's (columns, buckets), row
+    positions relative to ``idx``."""
+    toks = rows["tokens"].to_numpy(dtype=object)[idx]
+    lengths = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
+    offsets = np.zeros(len(toks) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    ops_codes, ops_dict = pd.factorize(rows["ops"].to_numpy(dtype=object)[idx])
+    sdt_codes, sdt_dict = pd.factorize(rows["src_dtype"].to_numpy(dtype=object)[idx])
+    return transform_core(
+        np.concatenate(toks).astype(np.int32, copy=False),
+        offsets,
+        ops_codes,
+        list(ops_dict),
+        sdt_codes,
+        list(sdt_dict),
+        rows["orientation"].to_numpy(dtype=np.int64)[idx],
+        rows["ts_unix"].to_numpy(dtype=np.int64)[idx],
+        config,
+    )
 
 
 def make_cache_state_func(
@@ -149,11 +156,6 @@ def make_cache_state_func(
         ts_vals = rows["ts"].to_numpy()
         cache_keys = rows["cache_key"].to_numpy(dtype=object)
         order = np.lexsort((doc_ids, ts_vals)) if m > 1 else np.arange(m)
-        tokens_col = rows["tokens"].to_numpy(dtype=object)
-        ops_col = rows["ops"].to_numpy(dtype=object)
-        ori_col = rows["orientation"].to_numpy()
-        sdt_col = rows["src_dtype"].to_numpy(dtype=object)
-
         # state -> dict {cache_key: [tokens_list, dtype, last_access_ms]}
         entries: dict = {}
         if state.exists:
@@ -176,12 +178,25 @@ def make_cache_state_func(
         dtypes = np.empty(m, dtype=object)
         errors = np.full(m, None, dtype=object)
 
+        # Expiry runs BEFORE the cache probe (reference request order:
+        # service.rs:232 then :241-250), so an expired request is rejected
+        # even when its result is cached; the other gates (MIME, size caps,
+        # service.rs:300-306) run on MISS rows only, inside the core.
+        ops_codes, ops_dict = pd.factorize(rows["ops"].to_numpy(dtype=object))
+        expired = expired_rows(
+            ops_codes, list(ops_dict), rows["ts_unix"].to_numpy(dtype=np.int64), config
+        )
+        statuses[expired] = "ERROR"
+        errors[expired] = "Request expired"
+
         # Pass 1 — classify in event-time order, no kernel work: state HIT,
         # first-occurrence MISS (computes below), or duplicate of a MISS in
         # this same batch (serves the computed result, status HIT).
         first_of: dict = {}  # cache_key -> computing row index
         dup_of = np.full(m, -1, dtype=np.int64)
         for i in order:
+            if expired[i]:
+                continue
             ent = entries.get(cache_keys[i])
             if ent is not None:
                 statuses[i] = "HIT"
@@ -196,49 +211,26 @@ def make_cache_state_func(
             else:
                 dup_of[i] = j
 
-        # Pass 2 — MISS rows batched by (ops, n, src_dtype) through the
-        # RECT kernel (the transform_arrow bucketing pattern): a cold cache
-        # or miss storm pays vectorized cost, never per-row Python
-        # (service.rs:312-322 compute-and-insert).
+        # Pass 2 — MISS rows through the shared transform core (bucketed by
+        # (ops, n, src_dtype), rect kernel): a cold cache or miss storm pays
+        # vectorized cost, never per-row Python (service.rs:312-322
+        # compute-and-insert).
         inserted = False
-        miss_groups: dict[tuple, list[int]] = {}
-        for ck, i in first_of.items():
-            miss_groups.setdefault(
-                (ops_col[i], len(tokens_col[i]), sdt_col[i]), []
-            ).append(i)
-        for (ops_str, length, sdt), idx_list in miss_groups.items():
-            idx = np.asarray(idx_list, dtype=np.int64)
-            plan = _plan_for(ops_str, config)
-            if isinstance(plan, OptionParseError):
-                statuses[idx] = "ERROR"
-                errors[idx] = str(plan)
-                continue
-            mat = (
-                np.vstack([np.asarray(tokens_col[i], dtype=np.int64) for i in idx])
-                if length > 0
-                else np.empty((len(idx), 0), dtype=np.int64)
-            )
-            try:
-                result = apply_plan_rect(
-                    mat,
-                    plan,
-                    orientations=np.asarray(ori_col[idx], dtype=np.int64),
-                    src_dtype=str(sdt),
-                    default_format=config.default_format,
-                )
-            except (OptionParseError, TransformError) as exc:
-                statuses[idx] = "ERROR"
-                errors[idx] = str(exc)
-                continue
-            width = result.tokens.shape[1]
-            for row_pos, i in enumerate(idx):
-                cached = result.tokens[row_pos].tolist()
-                entries[cache_keys[i]] = [cached, result.dtype, now_ms]
-                statuses[i] = "MISS"
-                toks_out[i] = cached
-                n_out[i] = width
-                dtypes[i] = result.dtype
-            inserted = True
+        if first_of:
+            miss = np.fromiter(first_of.values(), dtype=np.int64, count=len(first_of))
+            cols, buckets = miss_core(rows, miss, config)
+            failed = cols["error"] != None  # noqa: E711 - vectorized comparison
+            statuses[miss[failed]] = "ERROR"
+            errors[miss[failed]] = cols["error"][failed]
+            for pos, matrix in buckets:
+                dtype = cols["dtype"][pos[0]]
+                for i, cached in zip(miss[pos].tolist(), matrix.tolist()):
+                    entries[cache_keys[i]] = [cached, dtype, now_ms]
+                    toks_out[i] = cached
+                statuses[miss[pos]] = "MISS"
+                n_out[miss[pos]] = matrix.shape[1]
+                dtypes[miss[pos]] = dtype
+                inserted = True
 
         # Pass 3 — duplicates serve their computing row's result (HIT, like
         # a state hit) or replay its error.
@@ -326,8 +318,10 @@ def with_cache_state(
     per_bucket) caps entries per bucket with LRU eviction, bounding total
     state at buckets x capacity."""
     buckets = resolve_buckets(buckets, requests)
-    keyed = requests.withColumn("cache_key", cache_key_col(config)).withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col("cache_key")), F.lit(buckets))
+    keyed = (
+        requests.withColumn("cache_key", cache_key_col(config))
+        .withColumn("_bucket", F.pmod(F.xxhash64(F.col("cache_key")), F.lit(buckets)))
+        .withColumn("ts_unix", F.unix_timestamp("ts"))
     )
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout

@@ -40,11 +40,8 @@ from pyspark.sql.types import (
 )
 
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
-from tokforge.engine.transform import _plan_for
 from tokforge.operators.alloc import tune_allocator  # noqa: F401 - worker mallopt
-from tokforge.operators.kernel import TransformError
-from tokforge.operators.kernel_rect import apply_plan_rect
-from tokforge.plans.options import OptionParseError
+from tokforge.streaming.cache_state import miss_core, resolve_buckets
 
 INFO_OUTPUT_SCHEMA = StructType(
     [
@@ -68,8 +65,6 @@ INFO_STATE_SCHEMA = StructType(
         StructField("last_ms", ArrayType(LongType())),
     ]
 )
-
-DEFAULT_BUCKETS = 16384
 
 
 def make_info_state_func(
@@ -102,11 +97,6 @@ def make_info_state_func(
         doc_ids = rows["doc_id"].to_numpy(dtype=object)
         ts_vals = rows["ts"].to_numpy()
         order = np.lexsort((doc_ids, ts_vals)) if m > 1 else np.arange(m)
-        tokens_col = rows["tokens"].to_numpy(dtype=object)
-        ops_col = rows["ops"].to_numpy(dtype=object)
-        ori_col = rows["orientation"].to_numpy()
-        sdt_col = rows["src_dtype"].to_numpy(dtype=object)
-
         entries: dict = {}  # doc_id -> [n_out, dtype, size, last_ms]
         if state.exists:
             keys, n_outs_s, dtypes_s, sizes_s, last_s = state.get
@@ -125,8 +115,10 @@ def make_info_state_func(
         errors = np.full(m, None, dtype=object)
 
         # Same three-pass shape as cache_state.py: classify in event-time
-        # order, batch the MISS rows through the RECT kernel grouped by
-        # (ops, n, src_dtype), then fill duplicates — no per-row kernel.
+        # order, run the MISS rows through the shared transform core, then
+        # fill duplicates — no per-row kernel.  HITs are served ungated:
+        # the /info flow (service.rs:347-408) has no expiry step before
+        # its cache probe.
         first_of: dict = {}  # doc_id -> computing row index
         dup_of = np.full(m, -1, dtype=np.int64)
         for i in order:
@@ -143,42 +135,21 @@ def make_info_state_func(
                 dup_of[i] = j
 
         inserted = False
-        miss_groups: dict[tuple, list[int]] = {}
-        for _doc, i in first_of.items():
-            miss_groups.setdefault(
-                (ops_col[i], len(tokens_col[i]), sdt_col[i]), []
-            ).append(i)
-        for (ops_str, length, sdt), idx_list in miss_groups.items():
-            idx = np.asarray(idx_list, dtype=np.int64)
-            plan = _plan_for(ops_str, config)
-            if isinstance(plan, OptionParseError):
-                statuses[idx] = "ERROR"
-                errors[idx] = str(plan)
-                continue
-            mat = (
-                np.vstack([np.asarray(tokens_col[i], dtype=np.int64) for i in idx])
-                if length > 0
-                else np.empty((len(idx), 0), dtype=np.int64)
-            )
-            try:
-                result = apply_plan_rect(
-                    mat,
-                    plan,
-                    orientations=np.asarray(ori_col[idx], dtype=np.int64),
-                    src_dtype=str(sdt),
-                    default_format=config.default_format,
-                )
-            except (OptionParseError, TransformError) as exc:
-                statuses[idx] = "ERROR"
-                errors[idx] = str(exc)
-                continue
-            width = int(result.tokens.shape[1])
-            for row_pos, i in enumerate(idx):
-                ent = [width, result.dtype, int(result.size_bytes[row_pos]), now_ms]
-                entries[doc_ids[i]] = ent
-                statuses[i] = "MISS"
-                n_out[i], dtypes[i], sizes[i] = ent[0], ent[1], ent[2]
-            inserted = True
+        if first_of:
+            miss = np.fromiter(first_of.values(), dtype=np.int64, count=len(first_of))
+            cols, buckets = miss_core(rows, miss, config)
+            failed = cols["error"] != None  # noqa: E711 - vectorized comparison
+            statuses[miss[failed]] = "ERROR"
+            errors[miss[failed]] = cols["error"][failed]
+            for pos, matrix in buckets:
+                width, dtype = matrix.shape[1], cols["dtype"][pos[0]]
+                for i, size in zip(miss[pos].tolist(), cols["size_bytes"][pos].tolist()):
+                    entries[doc_ids[i]] = [width, dtype, size, now_ms]
+                statuses[miss[pos]] = "MISS"
+                n_out[miss[pos]] = width
+                dtypes[miss[pos]] = dtype
+                sizes[miss[pos]] = cols["size_bytes"][pos]
+                inserted = True
 
         for i in np.nonzero(dup_of >= 0)[0]:
             j = dup_of[i]
@@ -244,13 +215,11 @@ def with_info_state(
     Shuffles once on the doc_id HASH BUCKET — a DIFFERENT key space than
     the result cache's cache_key buckets, which is what makes it a genuine
     second namespace.  Bucket count resolves at call time
-    (cache_state.resolve_buckets: env dial / scale-adaptive default)."""
-    from tokforge.streaming.cache_state import resolve_buckets
-
+    (cache_state.resolve_buckets)."""
     buckets = resolve_buckets(buckets, requests)
     keyed = requests.withColumn(
         "_bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(buckets))
-    )
+    ).withColumn("ts_unix", F.unix_timestamp("ts"))
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if ttl_ms > 0

@@ -60,7 +60,6 @@ from tokforge.pipeline.dedup import (
 from tokforge.streaming.sink import IdempotentParquetSink
 from tokforge.streaming.source import read_request_stream
 
-DEFAULT_BUCKETS = 16384
 DEFAULT_THRESHOLD = 0.5  # >= 4 of 8 MinHash positions equal
 DEFAULT_HORIZON_MS = 10 * 60 * 1000
 
