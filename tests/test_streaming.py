@@ -146,6 +146,52 @@ def test_cache_expiry_gates_hits(spark, tmp_path):
             assert (r["cache_status"], r["error"]) == ("ERROR", "Request expired"), r
 
 
+def test_info_hits_ignore_expiry(spark, tmp_path):
+    """The info namespace's one gate difference: the /info flow
+    (service.rs:347-408) has no expiry step before its cache probe, so a
+    doc first requested before its `expires:` and repeated after it is a
+    MISS and then a HIT serving the stored metadata — where the result
+    cache rejects the repeat (test_cache_expiry_gates_hits)."""
+    from tokforge.streaming.job import info_stream
+
+    expires = 1704070800
+    chain = f"expires:{expires}/crop:8:0/format:png"
+    in_path, out_dir, ckpt = (
+        str(tmp_path / "in"),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    req = requests_df(spark, SF_SMALL, chain).limit(6).coalesce(1)
+    for i, ts in enumerate((expires - 100, expires + 50)):
+        req.withColumn("ts", F.lit(ts).cast("timestamp")).write.mode(
+            "append"
+        ).parquet(f"{in_path}/drop={i}")
+    query, _ = info_stream(spark, in_path, out_dir, ckpt, CFG)
+    _finish(query)
+    rows = read_sink(spark, out_dir).select(
+        "doc_id",
+        F.unix_timestamp("ts").alias("t"),
+        "info_status",
+        "n_out",
+        "dtype",
+        "size_bytes",
+        "error",
+    ).collect()
+    assert len(rows) == 12
+    stored = {}
+    for r in sorted(rows, key=lambda r: r["t"]):
+        meta = (r["n_out"], r["dtype"], r["size_bytes"])
+        assert r["error"] is None, r
+        if r["t"] < expires:
+            assert r["info_status"] == "MISS", r
+            assert r["n_out"] > 0 and r["dtype"] is not None, r
+            stored[r["doc_id"]] = meta
+        else:
+            assert r["info_status"] == "HIT", r
+            assert meta == stored[r["doc_id"]], r
+    assert len(stored) == 6
+
+
 def test_exactly_once_ledger_skips_replay(spark, tmp_path):
     sink = IdempotentParquetSink(str(tmp_path / "sink"))
     df = spark.range(5).select(F.col("id").alias("n_out"))
@@ -262,8 +308,7 @@ def test_cache_ttl_rearmed_on_every_invocation(spark):
     directly — the e2e eviction path is test_cache_ttl_eviction."""
     import pandas as pd
 
-    from tokforge.streaming.cache_state import make_cache_state_func
-    from tokforge.streaming.info_state import make_info_state_func
+    from tokforge.streaming.cache_state import INFO_CACHE, RESULT_CACHE
 
     req = _signed_requests(spark, limit=1).toPandas()
     batch = pd.DataFrame(
@@ -279,8 +324,8 @@ def test_cache_ttl_rearmed_on_every_invocation(spark):
         }
     )
     for make in (
-        lambda: make_cache_state_func(CFG, ttl_ms=100000),
-        lambda: make_info_state_func(CFG, ttl_ms=100000),
+        lambda: RESULT_CACHE.state_func(CFG, ttl_ms=100000),
+        lambda: INFO_CACHE.state_func(CFG, ttl_ms=100000),
     ):
         fn = make()
         state = _StubGroupState()
@@ -322,9 +367,9 @@ def test_cache_capacity_lru_eviction(spark):
     entry still HITs.  State stays bounded at `capacity` entries no matter
     how many distinct keys flow through (vs TTL-only eviction, where state
     grows with active-keys-per-TTL)."""
-    from tokforge.streaming.cache_state import make_cache_state_func
+    from tokforge.streaming.cache_state import RESULT_CACHE
 
-    fn = make_cache_state_func(CFG, ttl_ms=0, capacity=2)
+    fn = RESULT_CACHE.state_func(CFG, ttl_ms=0, capacity=2)
     state = _StubGroupState()
 
     def run(keys):
@@ -344,7 +389,7 @@ def test_cache_capacity_lru_eviction(spark):
 
     # a single over-cap miss storm: every row is still answered, state
     # retains only `capacity` entries (admission-then-evict at capacity)
-    fn2 = make_cache_state_func(CFG, ttl_ms=0, capacity=2)
+    fn2 = RESULT_CACHE.state_func(CFG, ttl_ms=0, capacity=2)
     st2 = _StubGroupState()
     out = list(fn2((0,), iter([_one_request_batch(spark, [f"k{i}" for i in range(5)])]), st2))
     assert list(out[0]["cache_status"]) == ["MISS"] * 5
@@ -359,8 +404,7 @@ def test_pure_hit_batch_skips_state_rewrite(spark):
     state once per micro-batch.  With ttl_ms > 0 or capacity > 0 the
     write must stay unconditional (recency then drives expiry/eviction).
     Outputs are identical either way."""
-    from tokforge.streaming.cache_state import make_cache_state_func
-    from tokforge.streaming.info_state import make_info_state_func
+    from tokforge.streaming.cache_state import INFO_CACHE, RESULT_CACHE
 
     class _CountingState(_StubGroupState):
         def __init__(self):
@@ -372,8 +416,8 @@ def test_pure_hit_batch_skips_state_rewrite(spark):
             super().update(v)
 
     for make, status_col in (
-        (make_cache_state_func, "cache_status"),
-        (make_info_state_func, "info_status"),
+        (RESULT_CACHE.state_func, "cache_status"),
+        (INFO_CACHE.state_func, "info_status"),
     ):
         # ttl=0, capacity=0: second (pure-HIT) invocation must not write
         fn = make(CFG, ttl_ms=0, capacity=0)
@@ -412,9 +456,9 @@ def test_info_capacity_lru_eviction(spark):
     """Same capacity bound on the SECOND namespace (info cache, keyed by
     doc_id) — both reference namespaces live in one capacity-bounded
     store."""
-    from tokforge.streaming.info_state import make_info_state_func
+    from tokforge.streaming.cache_state import INFO_CACHE
 
-    fn = make_info_state_func(CFG, ttl_ms=0, capacity=1)
+    fn = INFO_CACHE.state_func(CFG, ttl_ms=0, capacity=1)
     state = _StubGroupState()
 
     def run(docs):

@@ -13,8 +13,9 @@ callers feed it:
 
   with the signature check (``functions.signing.verify_arrays``) in the
   same pass;
-- the stateful cache and info MISS paths (streaming/cache_state.py,
-  info_state.py), which build the same flat input from their pandas rows.
+- the MISS path of the stateful cache lifecycle (streaming/cache_state.py,
+  shared by the result and info namespaces), which builds the same flat
+  input from its pandas rows.
 
 Strings (ops, src_dtype) are dictionary-encoded so bucketing works on
 int codes.  Error rows carry their message in ``error`` and a null

@@ -446,6 +446,16 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str, replicas: int = 1) -> DataFram
     return band_pairs(sig)
 
 
+def band_val_col(i: int):
+    """Band ``i``'s bucket value: the fold v = (v*31 + h) % P over its
+    ROWS_PER_BAND signature positions.  The batch band join and the
+    streaming LSH state share it, so both bucket a doc identically."""
+    v = F.element_at("sig", ROWS_PER_BAND * i + 1)
+    for j in range(1, ROWS_PER_BAND):
+        v = (v * 31 + F.element_at("sig", ROWS_PER_BAND * i + j + 1)) % P
+    return v
+
+
 def band_pairs(sig: DataFrame) -> DataFrame:
     """The band-bucket self-join over a signature table (doc_id,
     sig array<long>) — the LSH hot path, shared by q_lsh_pairs and the
@@ -460,12 +470,6 @@ def band_pairs(sig: DataFrame) -> DataFrame:
     whole bucket.  tests/test_skew.py pins `skew=true` in the EXECUTED
     plan under a 30%-hot synthetic corpus."""
 
-    def band_val(i):
-        v = F.element_at("sig", ROWS_PER_BAND * i + 1)
-        for j in range(1, ROWS_PER_BAND):
-            v = (v * 31 + F.element_at("sig", ROWS_PER_BAND * i + j + 1)) % P
-        return v
-
     bands = sig.select(
         "doc_id",
         F.explode(
@@ -473,7 +477,7 @@ def band_pairs(sig: DataFrame) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(i).alias("band_idx"),
-                        band_val(i).alias("band_val"),
+                        band_val_col(i).alias("band_val"),
                     )
                     for i in range(N_BANDS)
                 ]

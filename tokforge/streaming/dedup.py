@@ -68,11 +68,4 @@ def dedup_stream(
     stream = read_request_stream(spark, in_path, max_files_per_trigger)
     deduped = dedup_request_stream(stream, watermark)
     sink = IdempotentParquetSink(out_dir)
-    writer = (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return sink.start(deduped, checkpoint_dir, available_now), sink

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
 from tokforge.engine.transform import make_verify_udf
-from tokforge.streaming.cache_state import with_cache_state
+from tokforge.streaming.cache_state import with_cache_state, with_info_state
 from tokforge.streaming.sink import IdempotentParquetSink, observe_requests
 from tokforge.streaming.source import read_request_stream
 
@@ -77,14 +77,9 @@ def transform_stream(
             rejected_sink = IdempotentParquetSink(
                 rejected_dir, partition_cols=("status",)
             )
-            rej_writer = (
-                rejected.writeStream.foreachBatch(rejected_sink)
-                .option("checkpointLocation", rejected_dir + "/_ckpt")
-                .outputMode("append")
+            rejected_query = rejected_sink.start(
+                rejected, rejected_dir + "/_ckpt", available_now
             )
-            if available_now:
-                rej_writer = rej_writer.trigger(availableNow=True)
-            rejected_query = rej_writer.start()
             if available_now:
                 # The dead-letter channel drains the already-available input
                 # synchronously, so a failure surfaces here (awaitTermination
@@ -99,16 +94,7 @@ def transform_stream(
     # stays stable for every caller while the channel remains observable
     sink.rejected_query = rejected_query
     sink.rejected_sink = rejected_sink
-    writer = (
-        cached.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start(), sink
+    return sink.start(cached, checkpoint_dir, available_now), sink
 
 
 def info_stream(
@@ -126,22 +112,12 @@ def info_stream(
     cache.rs:240-256 / service.rs:347-408) into its own exactly-once sink.
     Returns (query, sink)."""
     from tokforge.engine.session import apply_state_store
-    from tokforge.streaming.info_state import with_info_state
 
     apply_state_store(spark, config.state_store)
     stream = read_request_stream(spark, in_path).withWatermark("ts", watermark)
     infod = with_info_state(stream, config, ttl_ms)
     sink = IdempotentParquetSink(out_dir)
-    writer = (
-        infod.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start(), sink
+    return sink.start(infod, checkpoint_dir, available_now), sink
 
 
 def ratelimit_stream(
@@ -163,16 +139,7 @@ def ratelimit_stream(
     stream = read_request_stream(spark, in_path).withWatermark("ts", watermark)
     limited = with_rate_limit(stream, capacity, refill_per_sec)
     sink = IdempotentParquetSink(out_dir)
-    writer = (
-        limited.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start(), sink
+    return sink.start(limited, checkpoint_dir, available_now), sink
 
 
 def tumbling_rate_query(
@@ -198,14 +165,7 @@ def tumbling_rate_query(
         )
     )
     sink = IdempotentParquetSink(out_dir)
-    writer = (
-        agg.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return sink.start(agg, checkpoint_dir, available_now), sink
 
 
 def session_burst_query(
@@ -232,14 +192,7 @@ def session_burst_query(
         )
     )
     sink = IdempotentParquetSink(out_dir)
-    return (
-        agg.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start(),
-        sink,
-    )
+    return sink.start(agg, checkpoint_dir, available_now=True), sink
 
 
 def read_sink(

@@ -105,11 +105,4 @@ def invalidation_stream(
         .withColumn("cache_bypass", F.col("purge_ts").isNotNull())
     )
     sink = IdempotentParquetSink(out_dir)
-    writer = (
-        joined.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return sink.start(joined, checkpoint_dir, available_now), sink

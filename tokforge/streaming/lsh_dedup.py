@@ -53,8 +53,7 @@ from pyspark.sql.types import (
 from tokforge.pipeline.dedup import (
     FEATURE_SPACE,
     N_BANDS,
-    P,
-    ROWS_PER_BAND,
+    band_val_col,
     signatures_arrow,
 )
 from tokforge.streaming.sink import IdempotentParquetSink
@@ -94,15 +93,6 @@ def signatures_with_ts(stream: DataFrame) -> DataFrame:
     )
 
 
-def _band_val_col(i: int):
-    """Identical fold to batch q_lsh_pairs: v = (v*31 + h) % P over the
-    band's ROWS_PER_BAND signature positions."""
-    v = F.element_at("sig", ROWS_PER_BAND * i + 1)
-    for j in range(1, ROWS_PER_BAND):
-        v = (v * 31 + F.element_at("sig", ROWS_PER_BAND * i + j + 1)) % P
-    return v
-
-
 def banded(sig_stream: DataFrame) -> DataFrame:
     """Explode each signed doc into its N_BANDS (band_idx, band_val) keys.
     Docs too short to shingle (NULL sig) keep a NULL band_val — the state
@@ -116,7 +106,7 @@ def banded(sig_stream: DataFrame) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(i).cast("int").alias("band_idx"),
-                        _band_val_col(i).alias("band_val"),
+                        band_val_col(i).alias("band_val"),
                     )
                     for i in range(N_BANDS)
                 ]
@@ -309,11 +299,4 @@ def lsh_dedup_stream(
     stream = read_request_stream(spark, in_path, max_files_per_trigger)
     verdict_rows = with_lsh_state(stream, threshold, horizon_ms, buckets)
     sink = _VerdictSink(out_dir)
-    writer = (
-        verdict_rows.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return sink.start(verdict_rows, checkpoint_dir, available_now), sink

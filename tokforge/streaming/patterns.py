@@ -355,14 +355,7 @@ def pattern_stream(
     )
     matched = with_pattern_state(stream, pattern, within_s)
     sink = IdempotentParquetSink(out_dir)
-    writer = (
-        matched.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return sink.start(matched, checkpoint_dir, available_now), sink
 
 
 # ---------------------------------------------------------------------------
@@ -611,11 +604,4 @@ def absence_stream(
     )
     alerts = with_absence_state(stream, a, b, within_s)
     sink = IdempotentParquetSink(out_dir)
-    writer = (
-        alerts.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return sink.start(alerts, checkpoint_dir, available_now), sink

@@ -48,6 +48,20 @@ class IdempotentParquetSink:
         Path(self.ledger_dir).mkdir(parents=True, exist_ok=True)
         self.skipped_replays = 0
 
+    def start(self, df: DataFrame, checkpoint_dir: str, available_now: bool):
+        """Start ``df`` as a checkpointed append query into this sink and
+        return the query.  ``available_now`` drains the input present at
+        start and stops; otherwise the query runs a micro-batch every
+        second."""
+        writer = (
+            df.writeStream.foreachBatch(self)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+        )
+        if available_now:
+            return writer.trigger(availableNow=True).start()
+        return writer.trigger(processingTime="1 second").start()
+
     def _marker(self, batch_id: int) -> str:
         return os.path.join(self.ledger_dir, f"batch-{batch_id}.json")
 
