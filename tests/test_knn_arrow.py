@@ -9,13 +9,34 @@ import pytest
 from tokforge.pipeline.similarity import (
     N_QUERIES,
     TOP_K,
+    _dot_spark,
+    _norm_spark,
     knn_bruteforce,
-    knn_bruteforce_reference,
+    topk_per_key,
 )
 from tokforge.sources.requests import load_embeddings
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
+
+
+def knn_bruteforce_reference(emb, queries, k_top=TOP_K):
+    """The original HOF-expression scoring (broadcast cross-join +
+    interpreted `aggregate`/`zip_with` cosine): the semantic reference the
+    Arrow fast path must stay row-identical to."""
+    corpus = emb.select("vec_id", "embedding")
+    joined = corpus.crossJoin(F.broadcast(queries)).filter(
+        F.col("vec_id") != F.col("qid")
+    )
+    cos = F.round(
+        _dot_spark(F.col("qvec"), F.col("embedding"))
+        / (_norm_spark(F.col("qvec")) * _norm_spark(F.col("embedding"))),
+        4,
+    )
+    scored = joined.select("qid", "vec_id", cos.alias("cos_sim"))
+    return topk_per_key(
+        scored, "qid", [F.desc("cos_sim"), F.col("vec_id")], k_top
+    ).select("qid", "vec_id", "cos_sim", "rank")
 
 
 def _rows(df):

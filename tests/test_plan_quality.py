@@ -344,9 +344,9 @@ def test_ivf_trained_search_broadcasts_probes_no_corpus_window(spark):
     nested-loop pair scan), and the only corpus-row shuffles are the
     two-phase top-k's qid exchanges — assignment is a pure column
     expression over the scan."""
-    from tokforge.pipeline.similarity import q_ivf_search_trained_exact
+    from tokforge.pipeline.similarity import q_ivf_search_trained
 
-    plan = plan_of(q_ivf_search_trained_exact(spark, SF_SMALL))
+    plan = plan_of(q_ivf_search_trained(spark, SF_SMALL))
     assert "BroadcastExchange" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan

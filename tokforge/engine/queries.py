@@ -260,18 +260,11 @@ _PATHPARSE_FIXTURES: dict[tuple, str] = {}
 def _pathparse_fixture_dir(spark: SparkSession, sf_dir: str, built: DataFrame) -> str:
     """Write the path fixture once per (session, sf_dir), under an
     atexit-cleaned scratch dir (TOKFORGE_SCRATCH_DIR overrides the root)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    from tokforge.pipeline.stage import make_scratch_dir
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PATHPARSE_FIXTURES:
-        root = tempfile.mkdtemp(
-            prefix="tokforge-pathparse-",
-            dir=os.environ.get("TOKFORGE_SCRATCH_DIR") or None,
-        )
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        root = make_scratch_dir("tokforge-pathparse-")
         built.write.mode("overwrite").parquet(root + "/paths")
         _PATHPARSE_FIXTURES[key] = root + "/paths"
     return _PATHPARSE_FIXTURES[key]
@@ -347,10 +340,8 @@ def q_path_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at minutes even at sf0.001).  Production parses paths that already
     # EXIST as a storage column — this write recreates that shape, exactly
     # like the streaming gate queries materialize their input drops.
-    # Written ONCE per (session, sf_dir) and removed at interpreter exit;
-    # TOKFORGE_SCRATCH_DIR overrides the scratch root (on a multi-node
-    # cluster point it at a shared filesystem — driver-local /tmp only
-    # works because local/local-cluster executors share the driver's FS).
+    # Written ONCE per (session, sf_dir) under a scratch dir removed at
+    # interpreter exit (pipeline/stage.make_scratch_dir).
     built = docs.select(ds.alias("doc_id"), path.alias("path"))
     paths = spark.read.parquet(_pathparse_fixture_dir(spark, sf_dir, built))
     parsed = paths.select("doc_id", parse_path_col(F.col("path")).alias("p"))

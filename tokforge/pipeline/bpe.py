@@ -61,10 +61,7 @@ except the two narrow passes, and nothing global is ever sorted.
 
 from __future__ import annotations
 
-import atexit
-import os
 import shutil
-import tempfile
 from typing import Iterable
 
 import numpy as np
@@ -73,7 +70,7 @@ from pyspark.sql import functions as F
 
 from tokforge.constants import VOCAB
 from tokforge.pipeline.dedup import _flat_tokens
-from tokforge.pipeline.stage import stage_boundary
+from tokforge.pipeline.stage import make_scratch_dir, stage_boundary
 
 # Pair code = tok_a * PAIR_BASE + tok_b.  PAIR_BASE must exceed every token
 # id the trainer can mint (VOCAB + n_merges); 2^20 = 1,048,576 leaves room
@@ -281,11 +278,7 @@ def train_bpe(
             f"VOCAB + n_merges = {VOCAB + n_merges} exceeds PAIR_BASE "
             f"({PAIR_BASE}): minted ids would collide in pair codes"
         )
-    scratch = tempfile.mkdtemp(
-        prefix="tokforge-bpe-",
-        dir=scratch_dir or os.environ.get("TOKFORGE_SCRATCH_DIR") or None,
-    )
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = make_scratch_dir("tokforge-bpe-", scratch_dir)
     current = req.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("tokens").cast("array<int>").alias("tokens"),

@@ -14,7 +14,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tokforge.pipeline.stage import stage_boundary
+from tokforge.pipeline.stage import make_scratch_dir, stage_boundary
 from tokforge.sources.requests import (
     load_documents,
     requests_df,
@@ -45,15 +45,14 @@ SIMHASH_MULT = 2654435761
 SIMHASH_MOD = 2147483648
 
 
-# (The round-1/2 Spark-expression shingle/minhash builders lived here; they
-# are superseded by the Arrow fast path below.  Two measured traps from
-# that era still bind anyone reintroducing HOF versions: eight separate
+# The 3-shingle hash g, as the DuckDB oracles render it: the reference
+# semantics the Arrow passes below reproduce.  Two measured traps bind
+# anyone writing it as Spark HOF expressions instead: eight separate
 # `array_min(transform(...))` columns make Catalyst inline the feature
 # expression into every column and codegen blows up superlinearly
 # (>390s vs ~5s at sf0.1); and an unmaterialized `tokens` expression gets
-# inlined into every element_at — O(n^2) per row, 50x slowdown.  See
-# CLAUDE.md and _materialized_requests.)
-
+# inlined into every element_at — O(n^2) per row, 50x slowdown (see
+# _materialized_requests).
 _SQL_SHINGLES = (
     f"CASE WHEN n_tok >= {SHINGLE_K} THEN "
     f"list_transform(range(0, n_tok - {SHINGLE_K} + 1), s -> "
@@ -81,13 +80,12 @@ GROUP BY 1"""
 
 
 # ---------------------------------------------------------------------------
-# Arrow fast path for the hash lineage.  The HOF expressions above are the
-# REFERENCE semantics (and the oracle mirrors them), but Catalyst interprets
-# higher-order functions per element (~0.5M tokens/s measured) while the
-# engine's Arrow+numpy path does 30M+ — at 100 TB that constant is the
-# difference between a day and a month.  The numpy code reproduces the exact
-# integer arithmetic, so the DuckDB oracles are UNCHANGED and the driver
-# gate pins equality.
+# Arrow fast path for the hash lineage.  _SQL_SHINGLES (the DuckDB oracle)
+# is the REFERENCE semantics; Catalyst would interpret the same higher-order
+# functions per element (~0.5M tokens/s measured) while the engine's
+# Arrow+numpy path does 30M+ — at 100 TB that constant is the difference
+# between a day and a month.  The numpy code reproduces the exact integer
+# arithmetic, so the driver gate pins equality against the oracles.
 # ---------------------------------------------------------------------------
 
 
@@ -113,7 +111,7 @@ def _flat_tokens(batch):
 def _row_shingles(values: "np.ndarray", rowmap: "np.ndarray"):
     """Flat 3-token rolling shingles + their row ids: g(s) =
     ((t[s]*50261 + t[s+1]) % P * 50261 + t[s+2]) % P, windows never
-    crossing a row boundary (same g as _shingle_expr_spark)."""
+    crossing a row boundary (same g as _SQL_SHINGLES)."""
     if len(values) < SHINGLE_K:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     valid = rowmap[:-2] == rowmap[2:]
@@ -668,17 +666,12 @@ def connected_components(
     The final dataset lives until interpreter exit (atexit-cleaned;
     TOKFORGE_SCRATCH_DIR overrides the root) — external cleanup of the
     scratch dir invalidates a result still in use."""
-    import atexit
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Observation
 
-    scratch = tempfile.mkdtemp(
-        prefix="tokforge-cc-", dir=os.environ.get("TOKFORGE_SCRATCH_DIR") or None
-    )
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = make_scratch_dir("tokforge-cc-")
 
     graph = stage_boundary(
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).union(

@@ -89,28 +89,6 @@ def topk_per_key(
     )
 
 
-def knn_bruteforce_reference(
-    emb: DataFrame, queries: DataFrame, k_top: int = TOP_K
-) -> DataFrame:
-    """The original HOF-expression scoring (broadcast cross-join +
-    interpreted `aggregate`/`zip_with` cosine).  Kept as the semantic
-    reference for tests/test_knn_arrow.py — the Arrow fast path below must
-    stay row-identical to this."""
-    corpus = emb.select("vec_id", "embedding")
-    joined = corpus.crossJoin(F.broadcast(queries)).filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    cos = F.round(
-        _dot_spark(F.col("qvec"), F.col("embedding"))
-        / (_norm_spark(F.col("qvec")) * _norm_spark(F.col("embedding"))),
-        4,
-    )
-    scored = joined.select("qid", "vec_id", cos.alias("cos_sim"))
-    return topk_per_key(
-        scored, "qid", [F.desc("cos_sim"), F.col("vec_id")], k_top
-    ).select("qid", "vec_id", "cos_sim", "rank")
-
-
 # Derive-from-data collect cap (capped-with-error, the adjudicated
 # pattern): the query set is the broadcast-sized dim table by design.
 KNN_QUERY_CAP = 8192
@@ -127,9 +105,10 @@ def knn_bruteforce(emb: DataFrame, queries: DataFrame, k_top: int = TOP_K) -> Da
     """Exact cosine top-k of ``queries`` (qid, qvec) against a corpus
     (vec_id, embedding) on the Arrow fast path.
 
-    The HOF-expression cosine (knn_bruteforce_reference) is interpreted by
-    Catalyst at ~0.5M element-ops/s; this path moves the identical IEEE
-    arithmetic into numpy inside ONE mapInArrow pass over the corpus:
+    The HOF-expression cosine (the broadcast cross-join reference in
+    tests/test_knn_arrow.py) is interpreted by Catalyst at ~0.5M
+    element-ops/s; this path moves the identical IEEE arithmetic into
+    numpy inside ONE mapInArrow pass over the corpus:
 
     - the bounded query set is collected (it is the broadcast dim table;
       KNN_QUERY_CAP raises past the cap rather than collect unbounded),
@@ -374,6 +353,25 @@ def _sql_cell_case(names: list[str]) -> str:
     return "CAST(CASE " + " ".join(arms) + f" ELSE {len(names) - 1} END AS INTEGER)"
 
 
+def _probe_topk(corpus: DataFrame, probes: DataFrame, k_top: int) -> DataFrame:
+    """The IVF scoring tail: broadcast the (qid, qvec, cell) probes into an
+    equi-join on the corpus's (vec_id, embedding, cell), score the rounded
+    cosine over the ORIGINAL float embeddings (the knn expression), rank
+    via two-phase top-k."""
+    joined = corpus.join(F.broadcast(probes), "cell").filter(
+        F.col("vec_id") != F.col("qid")
+    )
+    cos = F.round(
+        _dot_spark(F.col("qvec"), F.col("embedding"))
+        / (_norm_spark(F.col("qvec")) * _norm_spark(F.col("embedding"))),
+        4,
+    )
+    scored = joined.select("qid", "vec_id", cos.alias("cos_sim"))
+    return topk_per_key(
+        scored, "qid", [F.desc("cos_sim"), F.col("vec_id")], k_top
+    ).select("qid", "vec_id", "cos_sim", "rank")
+
+
 def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe: assign queries AND corpus to cells, search top-k only
     within the query's cell (reference analog: the cache probe
@@ -411,18 +409,7 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"), "cell"
     )
 
-    joined = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    cos = F.round(
-        _dot_spark(F.col("qvec"), F.col("embedding"))
-        / (_norm_spark(F.col("qvec")) * _norm_spark(F.col("embedding"))),
-        4,
-    )
-    scored = joined.select("qid", "vec_id", cos.alias("cos_sim"))
-    return topk_per_key(
-        scored, "qid", [F.desc("cos_sim"), F.col("vec_id")], TOP_K
-    ).select("qid", "vec_id", "cos_sim", "rank")
+    return _probe_topk(corpus, probes, TOP_K)
 
 
 def _sql_ivf_search() -> str:
@@ -655,188 +642,36 @@ FROM a JOIN b ON a.bucket = b.probe AND a.vec_a < b.vec_b
 WHERE round(({dot}) / (({na}) * ({nb})), 4) >= {NEAR_DUP_THRESHOLD}"""
 
 
-# --- trained IVF codebook (round 6) -----------------------------------------
+# ---------------------------------------------------------------------------
+# Trained IVF codebook: spherical k-means whose ENTIRE training run is
+# engine-reproducible, so the driver-gated ivf_search_trained row's DuckDB
+# oracle (_sql_ivf_trained) replays it bit for bit.
+#
+# A float Lloyd update (avg over doubles) is order-dependent across rows,
+# so no SQL oracle could replay it.  Instead embeddings quantize once to
+# int64 (floor(x * 2^20 + 0.5) — the house floor(x+0.5) rule), and each
+# Lloyd round keeps only the per-cell INTEGER VECTOR SUM — integer
+# addition commutes, so the state is independent of row order,
+# partitioning and engine.  Cosine is scale-invariant, so the un-normalized
+# sum IS the centroid for assignment purposes (no count, no division — the
+# mean never needs to exist).  Assignment compares round(cos, 4) with ties
+# to the lowest cell; every scalar is a fixed-order fold over the dim axis,
+# the same idiom the gated knn row already proves bit-identical across
+# engines.  Quantization at 2^-20 is far below the 1e-4 cosine rounding.
+#
+# Scale shape: per round ONE scan + ONE map-side-combinable agg collecting
+# k x dim int64s (a small dim table, like any collected codebook);
+# assignment is a pure column expression (array_max over k structs), so
+# the corpus never shuffles; each round rebuilds its plan from the base
+# scan with fresh literals, so lineage depth is constant (unlike
+# connected_components, where the round output feeds the next round's
+# join).  Recall bounds: tests/test_similarity_trained_ivf.py.
+# ---------------------------------------------------------------------------
 
 IVF_SEED = 20240817
 IVF_K = 8
 IVF_ITERS = 5
 IVF_NPROBE = 2
-
-
-def _unit(vecs):
-    import numpy as np
-
-    v = np.asarray(vecs, dtype=np.float64)
-    n = np.linalg.norm(v, axis=-1, keepdims=True)
-    n[n == 0.0] = 1.0
-    return v / n
-
-
-def _cell_from_units(vec_col: Column, cents_unit) -> Column:
-    """argmax-cosine cell over UNIT-NORM literal centroids.  Cosine argmax
-    is invariant to the vector's own norm, so only the dot products are
-    computed — k dots per row, O(k) expression size via array_max over
-    (dot, -cell) structs (ties -> lowest cell, the rank-rule mirror)."""
-    scs = []
-    for i, c in enumerate(cents_unit):
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        scs.append(
-            F.struct(
-                _dot_spark(lit, vec_col).alias("dot"),
-                F.lit(-i).cast("int").alias("negcell"),
-            )
-        )
-    return (-F.array_max(F.array(*scs))["negcell"]).cast("int")
-
-
-def train_ivf(
-    emb: DataFrame,
-    k: int = IVF_K,
-    iters: int = IVF_ITERS,
-    seed: int = IVF_SEED,
-    dim: int = EMBED_DIM,
-):
-    """Spherical k-means codebook for IVF, Lloyd iterations as DataFrame
-    aggregations (replaces the round-5 "first k vectors" placeholder).
-
-    Shape at 100 TB: every iteration is ONE scan + ONE map-side-combinable
-    aggregation — assignment is a pure column expression against the
-    k literal unit centroids (zero shuffle), and the update groups k cells
-    into k x (dim + 1) doubles (64 avg(element_at) over the PLAIN column —
-    not the fanned-expression codegen trap) that collect to the driver,
-    exactly like any broadcast dim table.  No stage boundaries are needed:
-    each round rebuilds its plan from the base scan with fresh literals,
-    so lineage depth is constant (unlike connected_components, where the
-    round output feeds the next round's join).
-
-    Init is a seeded deterministic k-sample: the k lowest
-    md5(seed || vec_id) rows — a TakeOrdered top-k, no global sort.
-    Empty cells keep their previous centroid.  Returns (centroids,
-    unit_centroids) as plain nested lists — the model state a checkpoint
-    would record."""
-    import numpy as np
-
-    base = emb.select("vec_id", "embedding")
-    init_rows = (
-        base.withColumn(
-            "__r", F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("vec_id")))
-        )
-        .orderBy("__r", "vec_id")
-        .limit(k)
-        .collect()
-    )
-    cents = np.array(
-        [[float(x) for x in r["embedding"]] for r in init_rows], dtype=np.float64
-    )
-    for _ in range(iters):
-        cell = _cell_from_units(F.col("embedding"), _unit(cents))
-        agg = (
-            base.select(cell.alias("cell"), "embedding")
-            .groupBy("cell")
-            .agg(
-                F.count("*").alias("n"),
-                *[
-                    F.avg(F.element_at("embedding", i + 1)).alias(f"m{i}")
-                    for i in range(dim)
-                ],
-            )
-            .collect()
-        )
-        new = cents.copy()
-        for r in agg:
-            new[int(r["cell"])] = [float(r[f"m{i}"]) for i in range(dim)]
-        cents = new
-    return cents.tolist(), _unit(cents).tolist()
-
-
-def ivf_search_trained(
-    emb: DataFrame,
-    queries: DataFrame,
-    cents_unit,
-    nprobe: int = IVF_NPROBE,
-    k_top: int = TOP_K,
-) -> DataFrame:
-    """ANN top-k against a TRAINED codebook, probing the query's `nprobe`
-    nearest cells (multi-cell probe — the recall lever IVF actually
-    ships with).  ``queries`` carries (qid, qvec).
-
-    The corpus is assigned once (pure column expression); each query
-    explodes into its nprobe best cells (array_sort over k structs,
-    slice — O(k log k) per query row, queries are the tiny side); the
-    cell join broadcasts the exploded queries, so the corpus still never
-    shuffles; ranking reuses the two-phase top-k."""
-    corpus = emb.select(
-        "vec_id", "embedding",
-        _cell_from_units(F.col("embedding"), cents_unit).alias("cell"),
-    )
-    scs = []
-    for i, c in enumerate(cents_unit):
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        scs.append(
-            F.struct(
-                (-_dot_spark(lit, F.col("qvec"))).alias("negdot"),
-                F.lit(i).cast("int").alias("cell"),
-            )
-        )
-    probe_cells = F.transform(
-        F.slice(F.array_sort(F.array(*scs)), 1, nprobe), lambda s: s["cell"]
-    )
-    probes = queries.select(
-        "qid", "qvec", F.explode(probe_cells).alias("cell")
-    )
-    joined = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    cos = F.round(
-        _dot_spark(F.col("qvec"), F.col("embedding"))
-        / (_norm_spark(F.col("qvec")) * _norm_spark(F.col("embedding"))),
-        4,
-    )
-    scored = joined.select("qid", "vec_id", cos.alias("cos_sim")).distinct()
-    return topk_per_key(
-        scored, "qid", [F.desc("cos_sim"), F.col("vec_id")], k_top
-    ).select("qid", "vec_id", "cos_sim", "rank")
-
-
-def q_ivf_search_trained(
-    spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
-) -> DataFrame:
-    """Trained-codebook ANN over the brute-force query set (pytest face;
-    recall@10 vs q_knn_bruteforce asserted by
-    tests/test_similarity_trained_ivf.py.  The driver-gated ann_ivf_search
-    row keeps the fixed first-N_CELLS codebook so its DuckDB oracle stays
-    exact — the trained path's correctness check IS the recall bound)."""
-    emb = load_embeddings(spark, sf_dir)
-    _, cents_unit = train_ivf(emb)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    return ivf_search_trained(emb, queries, cents_unit, nprobe=nprobe)
-
-
-# ---------------------------------------------------------------------------
-# Exact-arithmetic trained IVF — the driver-gated face of the TRAINED
-# codebook path (round-7; VERDICT r6 item 6).
-#
-# train_ivf's float Lloyd update (F.avg over doubles) is order-dependent
-# across rows, so no SQL oracle can replay it bit-for-bit.  This variant
-# makes the ENTIRE training run engine-reproducible: embeddings quantize
-# once to int64 (floor(x * 2^20 + 0.5) — the house floor(x+0.5) rule), and
-# each Lloyd round keeps only the per-cell INTEGER VECTOR SUM — integer
-# addition commutes, so the state is independent of row order, partitioning
-# and engine.  Cosine is scale-invariant, so the un-normalized sum IS the
-# centroid for assignment purposes (no count, no division — the mean never
-# needs to exist).  Assignment compares round(cos, 4) with ties to the
-# lowest cell; every scalar is a fixed-order fold over the dim axis, the
-# same idiom the gated knn row already proves bit-identical across engines.
-#
-# Scale shape: unchanged from train_ivf — per round ONE scan + ONE
-# map-side-combinable agg collecting k x dim int64s; assignment stays a
-# pure column expression (array_max over k structs); lineage depth
-# constant.  Quantization at 2^-20 is far below the 1e-4 cosine rounding,
-# so recall matches the float trainer (tests/test_similarity_trained_ivf).
-# ---------------------------------------------------------------------------
-
 IVF_SCALE = 1 << 20
 
 
@@ -877,7 +712,7 @@ def _argmax_cell_int(eq_col: Column, sums) -> Column:
     return (-F.array_max(F.array(*scs))["negcell"]).cast("int")
 
 
-def train_ivf_exact(
+def train_ivf(
     emb: DataFrame,
     k: int = IVF_K,
     iters: int = IVF_ITERS,
@@ -885,9 +720,10 @@ def train_ivf_exact(
     dim: int = EMBED_DIM,
 ):
     """Engine-reproducible spherical k-means: returns the k per-cell int64
-    vector sums after ``iters`` Lloyd rounds (init = the k lowest
-    md5(seed:vec_id) rows' quantized vectors; empty cells keep their
-    previous sum)."""
+    vector sums after ``iters`` Lloyd rounds as plain nested lists — the
+    model state a checkpoint would record.  Init is the quantized vectors
+    of the k lowest md5(seed:vec_id) rows (a TakeOrdered top-k, no global
+    sort); empty cells keep their previous sum."""
     # the quantized projection is scanned once per round (+ init): persist
     # it for the loop — at 100 TB the same role is played by writing the
     # projection once as a stage table and training against that
@@ -925,27 +761,28 @@ def train_ivf_exact(
     return sums
 
 
-def q_ivf_search_trained_exact(
-    spark: SparkSession,
-    sf_dir: str,
+def ivf_search_trained(
+    emb: DataFrame,
+    queries: DataFrame,
+    sums,
     nprobe: int = IVF_NPROBE,
     k_top: int = TOP_K,
 ) -> DataFrame:
-    """ANN top-k against the exact-trained codebook, nprobe-cell probe.
-    Corpus assignment is a pure column expression (never shuffles); the
-    exploded query probes broadcast; final scoring is the knn cosine over
-    the ORIGINAL float embeddings; rank via two-phase top-k."""
-    emb = load_embeddings(spark, sf_dir)
-    sums = train_ivf_exact(emb)
-    base = emb.select(
+    """ANN top-k of ``queries`` (qid, qvec) against the trained codebook
+    ``sums``, probing each query's ``nprobe`` best cells (multi-cell probe
+    — the recall lever IVF actually ships with).  Corpus assignment is a
+    pure column expression (the corpus never shuffles); each query
+    explodes into its nprobe best cells (array_sort over k (-cos, cell)
+    structs, ties to the lowest cell), and the exploded probes are the
+    broadcast side of the cell join."""
+    # quantize in a projection of its own: the cell expressions read it 2k
+    # times per row
+    corpus = emb.select(
         "vec_id", "embedding", _quant_expr(F.col("embedding")).alias("eq")
-    )
-    corpus = base.select(
-        "vec_id", "embedding", _argmax_cell_int(F.col("eq"), sums).alias("cell")
-    )
+    ).select("vec_id", "embedding", _argmax_cell_int(F.col("eq"), sums).alias("cell"))
     scs = [
         F.struct(
-            (-_cos_to_sum(F.col("eq"), s)).alias("negcos"),
+            (-_cos_to_sum(F.col("qeq"), s)).alias("negcos"),
             F.lit(i).cast("int").alias("cell"),
         )
         for i, s in enumerate(sums)
@@ -953,23 +790,23 @@ def q_ivf_search_trained_exact(
     probe_cells = F.transform(
         F.slice(F.array_sort(F.array(*scs)), 1, nprobe), lambda s: s["cell"]
     )
-    probes = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qvec"),
-        F.explode(probe_cells).alias("cell"),
+    probes = queries.select(
+        "qid", "qvec", _quant_expr(F.col("qvec")).alias("qeq")
+    ).select("qid", "qvec", F.explode(probe_cells).alias("cell"))
+    return _probe_topk(corpus, probes, k_top)
+
+
+def q_ivf_search_trained(
+    spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
+) -> DataFrame:
+    """The driver-gated trained-IVF row: train on the embeddings table,
+    then search the brute-force query set (vec_id < N_QUERIES).
+    _sql_ivf_trained replays training, assignment, probe and rank."""
+    emb = load_embeddings(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    joined = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    cos = F.round(
-        _dot_spark(F.col("qvec"), F.col("embedding"))
-        / (_norm_spark(F.col("qvec")) * _norm_spark(F.col("embedding"))),
-        4,
-    )
-    scored = joined.select("qid", "vec_id", cos.alias("cos_sim"))
-    return topk_per_key(
-        scored, "qid", [F.desc("cos_sim"), F.col("vec_id")], k_top
-    ).select("qid", "vec_id", "cos_sim", "rank")
+    return ivf_search_trained(emb, queries, train_ivf(emb), nprobe=nprobe)
 
 
 def _sql_ivf_trained(
@@ -980,7 +817,7 @@ def _sql_ivf_trained(
     nprobe: int = IVF_NPROBE,
     k_top: int = TOP_K,
 ) -> str:
-    """DuckDB replay of the ENTIRE exact-IVF pipeline: quantize -> seeded
+    """DuckDB replay of the ENTIRE trained-IVF pipeline: quantize -> seeded
     init -> ``iters`` Lloyd rounds (integer sums, empty cells carried) ->
     corpus assignment -> nprobe probe -> cosine top-k."""
     dot_eq_s = (
@@ -1064,7 +901,7 @@ SELECT qid, vec_id, cos_sim, rank FROM (
 
 SIMILARITY_QUERIES = {
     "knn_bruteforce": (q_knn_bruteforce, _sql_knn_bruteforce()),
-    "ivf_search_trained": (q_ivf_search_trained_exact, _sql_ivf_trained()),
+    "ivf_search_trained": (q_ivf_search_trained, _sql_ivf_trained()),
     "embed_near_dup": (q_embed_near_dup, _sql_embed_near_dup()),
 }
 
@@ -1075,7 +912,7 @@ SIMILARITY_QUERIES = {
 SIMILARITY_QUERIES_EXTRA = {
     "ann_ivf_assign": (q_ivf_assign, _sql_ivf_assign()),
     # r7: the fixed-first-4-codebook probe gave its slot to the TRAINED
-    # exact-IVF row above (strictly more of the ANN path under the hash
+    # IVF row above (strictly more of the ANN path under the hash
     # check: training + multi-cell probe, not just assignment+probe).
     "ann_ivf_search": (q_ivf_search, _sql_ivf_search()),
 }

@@ -20,11 +20,31 @@ pipeline runs at 100 TB — each stage lands durably between jobs:
 * ``stage_boundary(df, path)`` — parquet round-trip: the production
   boundary (durable, resumable, and the next stage's scan gets column
   pruning + predicate pushdown against real files).
+
+``make_scratch_dir`` is the one place the scratch-root policy lives for
+every module that lands intermediate data on disk.
 """
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame
+
+
+def make_scratch_dir(prefix: str, root: str | None = None) -> str:
+    """A fresh directory that is removed at interpreter exit, created under
+    ``root``, else TOKFORGE_SCRATCH_DIR, else the system temp dir.  On a
+    multi-node cluster TOKFORGE_SCRATCH_DIR must name a shared filesystem:
+    driver-local /tmp only works while the executors share the driver's."""
+    path = tempfile.mkdtemp(
+        prefix=prefix, dir=root or os.environ.get("TOKFORGE_SCRATCH_DIR") or None
+    )
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def stage_boundary(df: DataFrame, path: str | None = None) -> DataFrame:

@@ -6,15 +6,11 @@ batch DataFrame so the DuckDB oracle can check it exactly.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from tokforge.engine.config import EngineConfig
+from tokforge.pipeline.stage import make_scratch_dir
 from tokforge.sources.requests import requests_df, sql_requests_cte
 
 _CHAIN = "resize:fit:32/quality:80/format:int16"
@@ -29,8 +25,8 @@ def _drain(query, timeout=300):
 
 
 # One fixture tree (inputs + checkpoint + committed sink) per
-# (application, sf_dir, query) — the same memoize + atexit-rmtree +
-# TOKFORGE_SCRATCH_DIR pattern as engine/queries.q_path_parse.  A rerun
+# (application, sf_dir, query), memoized like engine/queries.q_path_parse
+# and placed by pipeline/stage.make_scratch_dir.  A rerun
 # in the same session re-reads the committed sink instead of writing and
 # streaming a fresh tree into /tmp (round-5 review: the five mkdtemp
 # call sites leaked one dataset + checkpoint per invocation).
@@ -42,12 +38,7 @@ def _fixture_out(spark, sf_dir: str, name: str, build) -> str:
     into ``tmp``'s sink, returning the sink path; memoized per session."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if key not in _STREAM_FIXTURES:
-        tmp = tempfile.mkdtemp(
-            prefix=f"tokforge-q-{name}-",
-            dir=os.environ.get("TOKFORGE_SCRATCH_DIR") or None,
-        )
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        _STREAM_FIXTURES[key] = build(tmp)
+        _STREAM_FIXTURES[key] = build(make_scratch_dir(f"tokforge-q-{name}-"))
     return _STREAM_FIXTURES[key]
 
 

@@ -36,7 +36,7 @@ sections.append(("ann_ivf_search (cell-pruned probe; rotated out r7 — kept for
 centroid arrays (no shuffle, no per-vector window), probes broadcast,
 the only exchange keys on `cell`, then the same two-phase top-k.""", fmt(q_ivf_search(spark, SF))))
 
-from tokforge.pipeline.similarity import q_ivf_search_trained_exact
+from tokforge.pipeline.similarity import q_ivf_search_trained
 sections.append(("ivf_search_trained (gated r7: exact-trained codebook, nprobe=2)",
 """What to check: SAME scale contract as the untrained probe — the
 trained integer-sum centroids arrive as literals (training itself ran
@@ -44,7 +44,7 @@ as one scan + one map-side-combinable agg per Lloyd round, constant
 lineage depth), corpus assignment is inline column algebra, the
 exploded 2-cell probes broadcast into a hash equi-join on `cell`
 (no nested loop), then the two-phase top-k.""",
-fmt(q_ivf_search_trained_exact(spark, SF))))
+fmt(q_ivf_search_trained(spark, SF))))
 
 sections.append(("embed_near_dup (multi-probe sign-LSH blocking)",
 """What to check: the join is a hash EQUI-join on bucket == probe (a

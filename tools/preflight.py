@@ -44,7 +44,7 @@ COLLECT_ALLOWLIST = {
     "pipeline/interleave.py": 2,  # limit(max_strata+1) x2, raise past cap
     "pipeline/bpe.py": 1,         # per-round limit(k)
     "pipeline/corpusops.py": 1,   # _greedy_disjoint_picks growing limit()
-    "pipeline/similarity.py": 7,  # centroid/query dim tables: constant
+    "pipeline/similarity.py": 5,  # centroid/query dim tables: constant
                                   # filters, limit(k), k-row aggs, query
                                   # cap raising past KNN_QUERY_CAP
 }
