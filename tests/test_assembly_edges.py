@@ -10,8 +10,8 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from tokforge.pipeline.pack import pack_sequences_bucketed
-from tokforge.pipeline.sample import budget_sample_bucketed
+from tokforge.pipeline.pack import pack_sequences
+from tokforge.pipeline.sample import budget_sample
 
 ROWS = [
     # (doc_id, lang, text)
@@ -41,10 +41,11 @@ def _con():
 
 @pytest.mark.parametrize("budget", [0, 1, 3, 7, 26, 10**6])
 @pytest.mark.parametrize("prefix_len", [1, 2])
-def test_sampler_edges_vs_duckdb(corpus, budget, prefix_len):
+def test_sampler_edges_vs_duckdb(corpus, budget, prefix_len, monkeypatch):
+    monkeypatch.setattr("tokforge.pipeline.sample.PREFIX_LEN", prefix_len)
     got = sorted(
         (r["doc_id"], r["lang"], r["w"], r["cum"])
-        for r in budget_sample_bucketed(corpus, budget, prefix_len=prefix_len)
+        for r in budget_sample(corpus, budget)
         .select("doc_id", "lang", "w", "cum")
         .collect()
     )
@@ -75,7 +76,7 @@ def test_sampler_edges_vs_duckdb(corpus, budget, prefix_len):
 def test_pack_edges_vs_duckdb(corpus, seq_len):
     got = sorted(
         (r["doc_id"], r["cum_before"], r["chunk_first"], r["chunk_last"], r["offset"])
-        for r in pack_sequences_bucketed(corpus, seq_len)
+        for r in pack_sequences(corpus, seq_len)
         .select("doc_id", "cum_before", "chunk_first", "chunk_last", "offset")
         .collect()
     )

@@ -1,20 +1,21 @@
 """Token-budget stratified sampler (tokforge/pipeline/sample.py):
-budget semantics, determinism under repartitioning, the bucketed scale
-path row-identical to the global-window reference, and a DuckDB mirror
-of the whole computation (same md5 order key, same crossing rule).
+budget semantics, determinism under repartitioning, a DuckDB mirror of
+the whole computation (same md5 order key, same crossing rule) at
+PREFIX_LEN 1 and 2, and the scale shape of every running-total op's plan.
 """
 
 from __future__ import annotations
+
+import re
 
 import duckdb
 import pyspark.sql.functions as F
 
 from tests.conftest import SF_SMALL
-from tokforge.pipeline.sample import (
-    budget_sample,
-    budget_sample_bucketed,
-    q_budget_sample,
-)
+from tokforge.pipeline.epoch import epoch_order
+from tokforge.pipeline.interleave import weighted_interleave
+from tokforge.pipeline.pack import pack_sequences
+from tokforge.pipeline.sample import budget_sample, q_budget_sample
 from tokforge.sources.requests import load_documents
 
 BUDGET = 2000  # sf0.001 strata carry ~4k-10k tokens: budget binds everywhere
@@ -71,16 +72,7 @@ def test_deterministic_under_repartitioning(spark):
     assert a == b
 
 
-def test_bucketed_equals_reference(spark):
-    docs = load_documents(spark, SF_SMALL)
-    ref = _rows(budget_sample(docs, BUDGET))
-    for prefix_len in (1, 2):
-        got = _rows(budget_sample_bucketed(docs, BUDGET, prefix_len=prefix_len))
-        assert got == ref, f"prefix_len={prefix_len} diverges"
-
-
-def test_matches_duckdb_oracle(spark):
-    got = _rows(q_budget_sample(spark, SF_SMALL, BUDGET, bucketed=True))
+def test_matches_duckdb_oracle(spark, monkeypatch):
     con = duckdb.connect()
     want = sorted(
         (int(d), l, int(w), int(c))
@@ -101,13 +93,42 @@ def test_matches_duckdb_oracle(spark):
         """
         ).fetchall()
     )
-    assert got == want
+    for prefix_len in (1, 2):
+        monkeypatch.setattr("tokforge.pipeline.sample.PREFIX_LEN", prefix_len)
+        got = _rows(q_budget_sample(spark, SF_SMALL, BUDGET))
+        assert got == want, f"PREFIX_LEN={prefix_len} diverges"
+
+
+def _executed_plan(df) -> str:
+    df.collect()  # AQE: the final plan exists only after execution
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_bucket_pruning_in_plan(spark):
-    """The scale path must prune full buckets BEFORE the per-bucket sort:
-    the offsets side carries a pushed filter on __offset < budget."""
+    """The 100 TB shape of every running-total op, in the executed plan:
+    each row-level Window (the one ordered by ``__key``) partitions by
+    ``__bucket``, and the offsets arrive through a broadcast.  The budget
+    sampler also prunes full buckets BEFORE the per-bucket sort: the
+    offsets side filters ``__offset < budget``."""
     docs = load_documents(spark, SF_SMALL)
-    plan = budget_sample_bucketed(docs, BUDGET)._jdf.queryExecution().toString()
-    assert "__offset" in plan
-    assert "BroadcastExchange" in plan or "Broadcast" in plan
+    plans = {
+        name: _executed_plan(df)
+        for name, df in {
+            "budget_sample": budget_sample(docs, BUDGET),
+            "weighted_interleave": weighted_interleave(docs, {"src0": 1.0}),
+            "pack_sequences": pack_sequences(docs, 256),
+            "epoch_order": epoch_order(docs, epoch=0, id_cols=("doc_id",)),
+        }.items()
+    }
+    for name, plan in plans.items():
+        # Window [exprs], [partition keys], [order keys]
+        specs = re.findall(r"Window \[.*\], \[([^\]]*)\], \[([^\]]*)\]$", plan, re.M)
+        row_level = [part for part, order in specs if "__key" in order]
+        assert row_level, f"{name}: no row-level window\n{plan}"
+        assert all("__bucket" in part for part in row_level), f"{name}\n{plan}"
+        assert "BroadcastHashJoin" in plan and "BroadcastExchange" in plan, (
+            f"{name}\n{plan}"
+        )
+    assert re.search(
+        rf"coalesce\(_we\d+#\d+L, 0\) < {BUDGET}", plans["budget_sample"]
+    ), "budget sampler must prune full buckets before the sort"

@@ -23,9 +23,9 @@ import pyspark.sql.functions as F
 from tests.conftest import SF_SMALL
 from tokforge.pipeline.decontam import decontaminate
 from tokforge.pipeline.dedup import keep_canonical, q_lsh_pairs
-from tokforge.pipeline.interleave import weighted_interleave_bucketed
-from tokforge.pipeline.pack import pack_sequences_bucketed
-from tokforge.pipeline.sample import budget_sample_bucketed
+from tokforge.pipeline.interleave import weighted_interleave
+from tokforge.pipeline.pack import pack_sequences
+from tokforge.pipeline.sample import budget_sample
 from tokforge.pipeline.stage import stage_boundary
 from tokforge.sources.requests import load_documents
 
@@ -60,7 +60,7 @@ def test_full_assembly_chain(spark, tmp_path):
     assert 0 < n_screened <= n_kept
 
     # 3. per-language token budget (overshoot bounded by one document)
-    sample = stage_boundary(budget_sample_bucketed(screened, BUDGET))
+    sample = stage_boundary(budget_sample(screened, BUDGET))
     per_lang = {
         r["lang"]: (r["tot"], r["mx"])
         for r in sample.groupBy("lang")
@@ -73,7 +73,7 @@ def test_full_assembly_chain(spark, tmp_path):
     srcs = sorted(r[0] for r in sample.select("source").distinct().collect())[:3]
     weights = {s: float(i + 1) for i, s in enumerate(srcs)}
     mixed = stage_boundary(
-        weighted_interleave_bucketed(sample.drop("w", "cum"), weights)
+        weighted_interleave(sample.drop("w", "cum"), weights)
     )
     order = [
         r["doc_id"] for r in mixed.orderBy("pos", "__key", "doc_id").collect()
@@ -81,7 +81,7 @@ def test_full_assembly_chain(spark, tmp_path):
     assert order and len(order) == len(set(order))
 
     # 5. pack the mixed corpus into fixed-length sequences
-    packed = pack_sequences_bucketed(mixed.drop("w"), SEQ_LEN)
+    packed = pack_sequences(mixed.drop("w"), SEQ_LEN)
     rows = packed.select("lang", "w", "cum_before", "chunk_first").collect()
     assert rows
     by_lang = {}
@@ -97,8 +97,8 @@ def test_full_assembly_chain(spark, tmp_path):
 
     # determinism: the sample+interleave replayed from the same screened
     # corpus yields the identical training order
-    sample2 = stage_boundary(budget_sample_bucketed(screened, BUDGET))
-    mixed2 = weighted_interleave_bucketed(sample2.drop("w", "cum"), weights)
+    sample2 = stage_boundary(budget_sample(screened, BUDGET))
+    mixed2 = weighted_interleave(sample2.drop("w", "cum"), weights)
     order2 = [
         r["doc_id"] for r in mixed2.orderBy("pos", "__key", "doc_id").collect()
     ]

@@ -1,7 +1,7 @@
 """Deterministic per-epoch ordering + mid-epoch resume
-(tokforge/pipeline/epoch.py): permutation properties, bucketed scale
-path row-identical to the window reference, resume-is-a-suffix, a DuckDB
-mirror, and composition with the packed-chunk emitter.
+(tokforge/pipeline/epoch.py): permutation properties, resume-is-a-suffix,
+a DuckDB mirror at PREFIX_LEN 1 and 2, and composition with the
+packed-chunk emitter.
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from tests.conftest import SF_SMALL
 from tokforge.pipeline.epoch import (
     EPOCH_SEED,
     epoch_order,
-    epoch_order_bucketed,
     resume_from_step,
 )
 from tokforge.sources.requests import load_documents
@@ -50,21 +49,9 @@ def test_epochs_are_distinct_deterministic_permutations(spark):
     assert e0a != e1  # ...different order per epoch
 
 
-def test_bucketed_equals_reference(spark):
-    d = _docs(spark)
-    ref = epoch_order(d, epoch=3, id_cols=("doc_id",))
-    ref_rows = sorted((r["doc_id"], r["step"]) for r in ref.collect())
-    for prefix_len in (1, 2):
-        got = epoch_order_bucketed(
-            d, epoch=3, id_cols=("doc_id",), prefix_len=prefix_len
-        )
-        got_rows = sorted((r["doc_id"], r["step"]) for r in got.collect())
-        assert got_rows == ref_rows, f"prefix_len={prefix_len} diverges"
-
-
 def test_resume_is_exact_suffix(spark):
     d = _docs(spark)
-    full = epoch_order_bucketed(d, epoch=2, id_cols=("doc_id",))
+    full = epoch_order(d, epoch=2, id_cols=("doc_id",))
     order = _order(full)
     n = len(order)
     for step in (0, 1, n // 2, n - 1, n):
@@ -72,13 +59,7 @@ def test_resume_is_exact_suffix(spark):
         assert resumed == order[step:], f"step={step}"
 
 
-def test_matches_duckdb_oracle(spark):
-    got = sorted(
-        (r["doc_id"], r["step"])
-        for r in epoch_order_bucketed(
-            _docs(spark), epoch=5, id_cols=("doc_id",)
-        ).collect()
-    )
+def test_matches_duckdb_oracle(spark, monkeypatch):
     con = duckdb.connect()
     ref = sorted(
         (r[0], r[1])
@@ -93,7 +74,13 @@ def test_matches_duckdb_oracle(spark):
             """
         ).fetchall()
     )
-    assert got == ref
+    for prefix_len in (1, 2):
+        monkeypatch.setattr("tokforge.pipeline.sample.PREFIX_LEN", prefix_len)
+        got = sorted(
+            (r["doc_id"], r["step"])
+            for r in epoch_order(_docs(spark), epoch=5, id_cols=("doc_id",)).collect()
+        )
+        assert got == ref, f"PREFIX_LEN={prefix_len} diverges"
 
 
 def test_composes_with_packed_chunks_composite_id(spark):
@@ -103,10 +90,10 @@ def test_composes_with_packed_chunks_composite_id(spark):
     from tokforge.pipeline.pack import q_pack_chunks
 
     chunks = q_pack_chunks(spark, SF_SMALL)
-    out = epoch_order_bucketed(chunks, epoch=0, id_cols=("lang", "chunk_id"))
+    out = epoch_order(chunks, epoch=0, id_cols=("lang", "chunk_id"))
     n = chunks.count()
     assert _steps(out) == list(range(n))
-    e1 = epoch_order_bucketed(chunks, epoch=1, id_cols=("lang", "chunk_id"))
+    e1 = epoch_order(chunks, epoch=1, id_cols=("lang", "chunk_id"))
     a = _order(out, id_cols=("lang", "chunk_id"))
     b = _order(e1, id_cols=("lang", "chunk_id"))
     assert sorted(a) == sorted(b) and a != b

@@ -1,6 +1,6 @@
 """Weighted deterministic interleave (tokforge/pipeline/interleave.py):
-stride-scheduling proportionality, determinism, bucketed scale path
-row-identical to the window reference, and a DuckDB mirror.
+stride-scheduling proportionality, determinism, and a DuckDB mirror at
+PREFIX_LEN 1 and 2.
 """
 
 from __future__ import annotations
@@ -10,10 +10,7 @@ import math
 import duckdb
 
 from tests.conftest import SF_SMALL
-from tokforge.pipeline.interleave import (
-    weighted_interleave,
-    weighted_interleave_bucketed,
-)
+from tokforge.pipeline.interleave import weighted_interleave
 from tokforge.sources.requests import load_documents
 
 WEIGHTS = {"src0": 4.0, "src1": 2.0, "src2": 1.0}
@@ -66,17 +63,8 @@ def test_deterministic_under_repartitioning(spark):
     assert a == b
 
 
-def test_bucketed_equals_reference(spark):
+def test_matches_duckdb_oracle(spark, monkeypatch):
     docs = load_documents(spark, SF_SMALL)
-    ref = _rows(weighted_interleave(docs, WEIGHTS))
-    for prefix_len in (1, 2):
-        got = _rows(weighted_interleave_bucketed(docs, WEIGHTS, prefix_len=prefix_len))
-        assert got == ref, f"prefix_len={prefix_len} diverges"
-
-
-def test_matches_duckdb_oracle(spark):
-    docs = load_documents(spark, SF_SMALL)
-    got = _rows(weighted_interleave_bucketed(docs, WEIGHTS))
     con = duckdb.connect()
     cases = " ".join(
         f"WHEN source = '{s}' THEN {w}" for s, w in WEIGHTS.items()
@@ -99,7 +87,10 @@ def test_matches_duckdb_oracle(spark):
         """
         ).fetchall()
     )
-    assert got == want
+    for prefix_len in (1, 2):
+        monkeypatch.setattr("tokforge.pipeline.sample.PREFIX_LEN", prefix_len)
+        got = _rows(weighted_interleave(docs, WEIGHTS))
+        assert got == want, f"PREFIX_LEN={prefix_len} diverges"
 
 
 def test_temperature_weights_match_duckdb_and_compose(spark):
@@ -109,11 +100,7 @@ def test_temperature_weights_match_duckdb_and_compose(spark):
     directly."""
     import duckdb
 
-    from tokforge.pipeline.interleave import (
-        temperature_weights,
-        weighted_interleave,
-        weighted_interleave_bucketed,
-    )
+    from tokforge.pipeline.interleave import temperature_weights, weighted_interleave
     from tokforge.sources.requests import load_documents
 
     docs = load_documents(spark, SF_SMALL)
@@ -146,9 +133,7 @@ FROM c"""
     assert spread(t03) < spread(natural)
     # and the derived weights drive the interleave deterministically
     a = weighted_interleave(docs, t03).select("doc_id", "pos").collect()
-    b = weighted_interleave_bucketed(docs.repartition(7), t03).select(
-        "doc_id", "pos"
-    ).collect()
+    b = weighted_interleave(docs.repartition(7), t03).select("doc_id", "pos").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
     import pytest

@@ -1,6 +1,6 @@
 """Sequence packing (tokforge/pipeline/pack.py): no-gap/no-overlap chunk
-coverage, boundary spans, bucketed scale path row-identical to the
-window reference, determinism, and a DuckDB mirror.
+coverage, boundary spans, determinism, and DuckDB mirrors of the map and
+the emitted chunks at PREFIX_LEN 1 and 2.
 """
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import duckdb
 import pyspark.sql.functions as F
 
 from tests.conftest import SF_SMALL
-from tokforge.pipeline.pack import pack_sequences, pack_sequences_bucketed, q_pack
+from tokforge.pipeline.pack import pack_sequences, q_pack
 from tokforge.sources.requests import load_documents
 
 L = 256
@@ -65,20 +65,6 @@ def test_boundary_spans_exist_and_are_consistent(spark):
         assert (r["chunk_last"] > r["chunk_first"]) == (r["offset"] + r["w"] > L)
 
 
-def test_bucketed_equals_reference(spark):
-    docs = load_documents(spark, SF_SMALL)
-    ref = _rows(pack_sequences(docs, L).select(
-        "doc_id", "lang", "w", "cum_before", "chunk_first", "chunk_last", "offset"
-    ))
-    for prefix_len in (1, 2):
-        got = _rows(
-            pack_sequences_bucketed(docs, L, prefix_len=prefix_len).select(
-                "doc_id", "lang", "w", "cum_before", "chunk_first", "chunk_last", "offset"
-            )
-        )
-        assert got == ref, f"prefix_len={prefix_len} diverges"
-
-
 def test_deterministic_under_repartitioning(spark):
     docs = load_documents(spark, SF_SMALL)
     cols = ["doc_id", "lang", "w", "cum_before", "chunk_first", "chunk_last", "offset"]
@@ -87,8 +73,7 @@ def test_deterministic_under_repartitioning(spark):
     assert a == b
 
 
-def test_matches_duckdb_oracle(spark):
-    got = _rows(q_pack(spark, SF_SMALL, L, bucketed=True))
+def test_matches_duckdb_oracle(spark, monkeypatch):
     con = duckdb.connect()
     want = sorted(
         (int(d), lang, int(w), int(cb), int(cf), int(cl), int(o))
@@ -114,7 +99,10 @@ def test_matches_duckdb_oracle(spark):
         """
         ).fetchall()
     )
-    assert got == want
+    for prefix_len in (1, 2):
+        monkeypatch.setattr("tokforge.pipeline.sample.PREFIX_LEN", prefix_len)
+        got = _rows(q_pack(spark, SF_SMALL, L))
+        assert got == want, f"PREFIX_LEN={prefix_len} diverges"
 
 
 def test_emit_chunks_materializes_gapfree_sequences(spark):
@@ -157,31 +145,20 @@ def test_emit_chunks_materializes_gapfree_sequences(spark):
         assert seg == texts[m["doc_id"]].split(" "), m["doc_id"]
 
 
-def test_emit_chunks_bucketed_equals_reference_and_oracle(spark):
-    """Bucketed and window emitters are row-identical, and both match the
-    DuckDB mirror digest (the gated q_pack_chunks face)."""
-    from tokforge.pipeline.pack import SQL_PACK_CHUNKS, q_pack_chunks, emit_chunks
-    import pyspark.sql.functions as F
+def test_emit_chunks_bucketed_equals_reference_and_oracle(spark, monkeypatch):
+    """The emitted chunks match the DuckDB mirror digest (the gated
+    q_pack_chunks face) at PREFIX_LEN 1 and 2."""
+    from tokforge.pipeline.pack import SQL_PACK_CHUNKS, q_pack_chunks
 
-    got = sorted(tuple(r) for r in q_pack_chunks(spark, SF_SMALL).collect())
-    ref = sorted(
-        tuple(r)
-        for r in emit_chunks(load_documents(spark, SF_SMALL), L, bucketed=False)
-        .select(
-            "lang",
-            "chunk_id",
-            F.col("n_fill").cast("long").alias("n_fill"),
-            F.md5(F.concat_ws(",", "tokens")).alias("chunk_md5"),
-        )
-        .collect()
-    )
-    assert got == ref
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF_SMALL}/documents.parquet'"
     )
     want = sorted(tuple(r) for r in con.execute(SQL_PACK_CHUNKS).fetchall())
-    assert got == want
+    for prefix_len in (1, 2):
+        monkeypatch.setattr("tokforge.pipeline.sample.PREFIX_LEN", prefix_len)
+        got = sorted(tuple(r) for r in q_pack_chunks(spark, SF_SMALL).collect())
+        assert got == want, f"PREFIX_LEN={prefix_len} diverges"
 
 
 def test_emit_chunks_zero_weight_docs_emit_nothing(spark):
@@ -216,7 +193,7 @@ def test_chunk_boundaries_match_emitted_tiling(spark):
     chunks — every chunk's boundary offsets are exactly where a new doc's
     tokens begin in the emitted sequence, boundary 0 appears iff the
     chunk starts a document, and a missing map entry means the chunk is
-    fully covered by a continuing doc; bucketed == window reference."""
+    fully covered by a continuing doc."""
     from tokforge.pipeline.pack import chunk_boundaries, emit_chunks, pack_sequences
 
     docs = load_documents(spark, SF_SMALL)
@@ -224,11 +201,7 @@ def test_chunk_boundaries_match_emitted_tiling(spark):
         (r["lang"], r["chunk_id"]): (r["n_starts"], list(r["boundaries"]))
         for r in chunk_boundaries(docs, L).collect()
     }
-    ref = {
-        (r["lang"], r["chunk_id"]): (r["n_starts"], list(r["boundaries"]))
-        for r in chunk_boundaries(docs, L, bucketed=False).collect()
-    }
-    assert bounds == ref and bounds
+    assert bounds
 
     # rebuild expected boundaries from the packing map itself
     mapped = pack_sequences(docs, L).collect()

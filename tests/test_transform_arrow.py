@@ -10,7 +10,14 @@ import pytest
 
 from tests.conftest import SF_SMALL
 from tokforge.engine.config import EngineConfig
-from tokforge.engine.transform import cache_key_col, make_sign_udf
+from tokforge.engine.transform import (
+    STATUS_BAD_REQUEST,
+    STATUS_FORBIDDEN,
+    STATUS_NOT_FOUND,
+    STATUS_OK,
+    cache_key_col,
+    make_sign_udf,
+)
 from tokforge.engine.transform_arrow import transform_requests_arrow
 from tokforge.sources.requests import requests_df
 from tokforge.streaming.job import read_sink, transform_stream
@@ -164,12 +171,21 @@ def test_output_shaping_columns(spark):
             assert r["meta_orientation"] == expect, (chain, r)
 
 
+def status_for_error(error: "str | None", sig_valid: bool = True) -> int:
+    """Scalar reference for :func:`status_code_col`."""
+    if not sig_valid:
+        return STATUS_FORBIDDEN
+    if error is None:
+        return STATUS_OK
+    if error == "Request expired":
+        return STATUS_NOT_FOUND
+    return STATUS_BAD_REQUEST
+
+
 def test_status_taxonomy(spark):
     """The status column mirrors the reference's error classes
     (service.rs:676-800): 403 bad signature, 404 expired, 400 other
     errors, 200 OK — equal to the scalar mapping."""
-    from tokforge.engine.transform import status_for_error
-
     # expires = EPOCH+10s: docs with doc_id%7200 > 10 expire (most of 30)
     chain = "expires:1704067210/crop:10:0/format:int32"
     req = requests_df(spark, SF_SMALL, chain).limit(30)

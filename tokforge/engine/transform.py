@@ -75,17 +75,6 @@ STATUS_FORBIDDEN = 403
 STATUS_NOT_FOUND = 404
 
 
-def status_for_error(error: "str | None", sig_valid: bool = True) -> int:
-    """Scalar reference for :func:`status_code_col` (tests assert parity)."""
-    if not sig_valid:
-        return STATUS_FORBIDDEN
-    if error is None:
-        return STATUS_OK
-    if error == "Request expired":
-        return STATUS_NOT_FOUND
-    return STATUS_BAD_REQUEST
-
-
 def status_code_col(
     sig_valid: str = "sig_valid", error: str = "error"
 ) -> Column:

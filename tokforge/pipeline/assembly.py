@@ -1,15 +1,16 @@
 """Driver-gated faces of the corpus-assembly layer (sample / interleave /
 pack / decontam) — the operators a training-data pipeline runs AFTER
-dedup, each already proven row-identical to a window reference and an
-in-test DuckDB mirror (tests/test_budget_sample.py, test_interleave.py,
-test_pack.py, test_decontam.py).  This module only adds the gate shape:
-scalar-only columns, same names on both engines, deterministic constants
-(no weights derived from data — round-5 review flagged the collect()
-default in q_interleave as a foot-gun at 10^6 sources).
+dedup, each pinned by an in-test DuckDB mirror (tests/test_budget_sample.py,
+test_interleave.py, test_pack.py, test_decontam.py).  This module only
+adds the gate shape: scalar-only columns, same names on both engines,
+deterministic constants (no weights derived from data — round-5 review
+flagged the collect() default in q_interleave as a foot-gun at 10^6
+sources).
 
-All four run their BUCKETED scale path: the md5-order-key + hex-prefix
-decomposition, so the driver's hash check pins the 100 TB plan, not just
-the semantics.
+Sample, interleave and pack have one implementation each, built on
+pipeline.sample's ``_running_total`` (the md5-order-key + hex-prefix
+bucket decomposition), so the driver's hash check pins the 100 TB plan,
+not just the semantics.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tokforge.pipeline.decontam import q_decontaminate
-from tokforge.pipeline.interleave import weighted_interleave_bucketed
+from tokforge.pipeline.interleave import weighted_interleave
 from tokforge.pipeline.pack import SQL_PACK_CHUNKS, q_pack_chunks
 from tokforge.pipeline.sample import q_budget_sample
 from tokforge.sources.requests import load_documents
@@ -32,7 +33,7 @@ _ILV_WEIGHTS = {f"src{i}": float(2 ** (i % 5)) for i in range(20)}
 
 
 def q_gate_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return q_budget_sample(spark, sf_dir, _BUDGET, bucketed=True).select(
+    return q_budget_sample(spark, sf_dir, _BUDGET).select(
         "doc_id",
         "lang",
         F.col("w").cast("long").alias("w"),
@@ -56,7 +57,7 @@ SELECT doc_id, lang, w, cum FROM c WHERE cum - w < {_BUDGET}"""
 
 def q_gate_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir)
-    return weighted_interleave_bucketed(docs, _ILV_WEIGHTS).select(
+    return weighted_interleave(docs, _ILV_WEIGHTS).select(
         "doc_id",
         "source",
         F.col("rank_in_stratum").cast("long").alias("rank_in_stratum"),

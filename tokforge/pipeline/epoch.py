@@ -7,7 +7,7 @@ data-loader contract a training run actually holds a pipeline to:
 * a run killed at step N resumes at step N against the SAME order — the
   checkpoint is just ``(seed, epoch, step)``, never a data snapshot.
 
-Semantics (shared by both implementations and the DuckDB mirror in
+Semantics (shared by the Spark op and the DuckDB mirror in
 tests/test_epoch.py): the epoch key is
 ``md5(seed || ':' || epoch || ':' || id...)`` and the epoch order is
 ``ORDER BY __key, id...``; ``step`` is the 0-based rank in that order.
@@ -15,16 +15,15 @@ Folding ``epoch`` into the hash input is what makes each epoch an
 independent permutation — no reshuffle job, no stored permutation table.
 
 Scale shape (the same two-phase decomposition as pipeline.sample /
-interleave / pack):
+interleave / pack, one stratum):
 
 * the ORDER is a RANGE SORT on ``__key`` — writers use
   ``repartitionByRange("__key", ...)`` + ``sortWithinPartitions`` and the
   output files concatenate into the epoch; no single-task stage.
-* the STEP index never needs a global row_number: ``epoch_order_bucketed``
-  splits the key space into 16^prefix_len hex-prefix buckets, counts per
-  bucket (one map-side-combinable agg -> a tiny broadcast offsets table),
-  and ranks locally within each bucket.  Asserted row-identical to the
-  single-window reference.
+* the STEP index never needs a global row_number: it is the running
+  count from pipeline.sample's ``_running_total`` — counts per hex-prefix
+  bucket (one map-side-combinable agg -> a tiny broadcast offsets
+  table), then a local rank within each bucket.
 * RESUME is ``step >= N`` — over a materialized epoch (step written as a
   column, files range-partitioned by key) that is a pushed-down
   predicate + partition prune, so restarting at step 9e9 of 1e10 reads
@@ -39,8 +38,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tokforge.pipeline.sample import _running_total
 
 EPOCH_SEED = 20240817
 
@@ -64,53 +65,21 @@ def epoch_order(
     seed: int = EPOCH_SEED,
     id_cols: Sequence[str] = ("chunk_id",),
 ) -> DataFrame:
-    """Reference implementation: one global row_number window.  Returns
-    df + (__key, step); the epoch order is ORDER BY (__key, id...)."""
+    """Returns df + (__key, step); the epoch order is ORDER BY
+    (__key, id...)."""
     d = df.withColumn("__key", epoch_key(seed, epoch, id_cols))
-    win = Window.orderBy("__key", *id_cols)
-    return d.withColumn("step", (F.row_number().over(win) - 1).cast("long"))
-
-
-def epoch_order_bucketed(
-    df: DataFrame,
-    epoch: int,
-    seed: int = EPOCH_SEED,
-    id_cols: Sequence[str] = ("chunk_id",),
-    prefix_len: int = 2,
-) -> DataFrame:
-    """Scale implementation: md5-prefix bucket decomposition of the step
-    index (bucket-major order == global key order, md5 being a hex
-    string).  Row-identical to ``epoch_order`` for any prefix_len; the
-    offsets side is 16^prefix_len rows, broadcast."""
-    d = df.withColumn("__key", epoch_key(seed, epoch, id_cols)).withColumn(
-        "__bucket", F.substring("__key", 1, prefix_len)
-    )
-    counts = d.groupBy("__bucket").agg(F.count("*").alias("__bn"))
-    # the window below runs over the 16^prefix_len-row counts table — a
-    # driver-sized side input, same as interleave's offsets
-    off_win = Window.orderBy("__bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "__bucket",
-        F.coalesce(F.sum("__bn").over(off_win), F.lit(0)).alias("__off"),
-    )
-    local = Window.partitionBy("__bucket").orderBy("__key", *id_cols)
     return (
-        d.join(F.broadcast(offsets), "__bucket")
-        .withColumn(
-            "step",
-            (F.col("__off") + F.row_number().over(local) - 1).cast("long"),
-        )
-        .drop("__bucket", "__off")
+        _running_total(d, [], ["__key", *id_cols], F.lit(1))
+        .withColumn("step", F.col("__run") - 1)
+        .drop("__run")
     )
 
 
 def resume_from_step(ordered: DataFrame, step: int) -> DataFrame:
     """The mid-epoch restart: everything at or after ``step`` in the
     epoch order.  Over a materialized epoch this is a pushed-down
-    predicate; over the in-flight plan it composes with either
-    implementation above."""
+    predicate; over the in-flight plan it composes with
+    :func:`epoch_order`."""
     if step < 0:
         raise ValueError(f"resume step must be >= 0, got {step}")
     return ordered.filter(F.col("step") >= int(step))

@@ -2,7 +2,7 @@
 reproducibly" — the epoch-assembly step that follows dedup + budget
 sampling in a training-data pipeline.
 
-Semantics (shared by both implementations and the DuckDB mirror in
+Semantics (shared by the Spark op and the DuckDB mirror in
 tests/test_interleave.py):
 
 * Within each stratum documents take a deterministic pseudo-random order
@@ -21,22 +21,17 @@ with ``df.repartitionByRange("pos", "__key").sortWithinPartitions(...)``
 and the output files concatenate into the epoch — no single-task stage
 anywhere in the scale path.
 
-Two implementations of the per-stratum rank, asserted row-identical:
-
-* ``weighted_interleave`` — ``ROW_NUMBER() OVER (PARTITION BY stratum
-  ORDER BY key)``: one sort task per stratum (reference/oracle form).
-* ``weighted_interleave_bucketed`` — the 100 TB shape, the same
-  hex-prefix decomposition as pipeline.sample: bucket-major order equals
-  global key order, so rank = (count of earlier buckets, a tiny
-  broadcast table) + local row_number within (stratum, bucket).
+The per-stratum rank is the running count from pipeline.sample's
+``_running_total`` (the hex-prefix bucket decomposition), so no stratum
+ever ranks inside one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tokforge.pipeline.sample import _order_key
+from tokforge.pipeline.sample import _order_key, _running_total
 from tokforge.sources.requests import load_documents
 
 
@@ -53,18 +48,6 @@ def _weight_expr(weights: dict[str, float], stratum_col: str):
     return expr
 
 
-def _finish(d: DataFrame, rank, weights, stratum_col: str, id_col: str) -> DataFrame:
-    # pos as DOUBLE division — mirrored by the oracle's CAST AS DOUBLE
-    return (
-        d.withColumn("rank_in_stratum", rank)
-        .withColumn("w", _weight_expr(weights, stratum_col))
-        .filter(F.col("w").isNotNull())  # unlisted strata are excluded
-        .withColumn(
-            "pos", F.col("rank_in_stratum").cast("double") / F.col("w")
-        )
-    )
-
-
 # Hard cap on the weights=None convenience path (see q_interleave).
 _MAX_DERIVED_SOURCES = 1000
 
@@ -75,54 +58,24 @@ def weighted_interleave(
     stratum_col: str = "source",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Reference implementation: one row_number window per stratum.
-    Returns docs + (rank_in_stratum, w, pos, __key); the training order
-    is ORDER BY (pos, __key, id)."""
+    """Returns docs + (rank_in_stratum, w, pos, __key); the training order
+    is ORDER BY (pos, __key, id).  Strata absent from ``weights`` are
+    excluded."""
     d = docs.withColumn("__key", _order_key(id_col))
-    win = Window.partitionBy(stratum_col).orderBy("__key", id_col)
-    return _finish(d, F.row_number().over(win).cast("long"), weights, stratum_col, id_col)
-
-
-def weighted_interleave_bucketed(
-    docs: DataFrame,
-    weights: dict[str, float],
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    prefix_len: int = 2,
-) -> DataFrame:
-    """Scale implementation: decompose each stratum's rank into
-    16^prefix_len hash buckets (see module docstring).  Row-identical to
-    ``weighted_interleave`` for any prefix_len."""
-    d = docs.withColumn("__key", _order_key(id_col)).withColumn(
-        "__bucket", F.substring("__key", 1, prefix_len)
+    ranked = _running_total(d, [stratum_col], ["__key", id_col], F.lit(1))
+    # pos as DOUBLE division — mirrored by the oracle's CAST AS DOUBLE
+    return (
+        ranked.withColumnRenamed("__run", "rank_in_stratum")
+        .withColumn("w", _weight_expr(weights, stratum_col))
+        .filter(F.col("w").isNotNull())
+        .withColumn("pos", F.col("rank_in_stratum").cast("double") / F.col("w"))
     )
-    counts = d.groupBy(stratum_col, "__bucket").agg(F.count("*").alias("__bn"))
-    off_win = (
-        Window.partitionBy(stratum_col)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        stratum_col,
-        "__bucket",
-        F.coalesce(F.sum("__bn").over(off_win), F.lit(0)).alias("__roff"),
-    )
-    local = Window.partitionBy(stratum_col, "__bucket").orderBy("__key", id_col)
-    rank = (F.col("__roff") + F.row_number().over(local)).cast("long")
-    return _finish(
-        d.join(F.broadcast(offsets), [stratum_col, "__bucket"]),
-        rank,
-        weights,
-        stratum_col,
-        id_col,
-    ).drop("__bucket", "__roff")
 
 
 def q_interleave(
     spark: SparkSession,
     sf_dir: str,
     weights: dict[str, float] | None = None,
-    bucketed: bool = False,
 ) -> DataFrame:
     """Per-source weighted mix over the documents table (pytest-covered;
     the driver-gated face is pipeline/assembly.py q_gate_interleave, which
@@ -144,8 +97,7 @@ def q_interleave(
             )
         srcs = sorted(r[0] for r in rows)
         weights = {s: float(i + 1) for i, s in enumerate(srcs)}
-    fn = weighted_interleave_bucketed if bucketed else weighted_interleave
-    return fn(docs, weights).select(
+    return weighted_interleave(docs, weights).select(
         "doc_id", "source", "rank_in_stratum", "w", "pos", "__key"
     )
 
@@ -163,9 +115,8 @@ def temperature_weights(
     proportions, alpha = 0 uniform, the usual 0.2-0.7 range up-samples
     the tail without letting the head stratum drown it.
 
-    Returns a plain dict for :func:`weighted_interleave` /
-    ``weighted_interleave_bucketed`` — mix weights are scale-invariant
-    there (pos = rank / w), so no normalization is needed.
+    Returns a plain dict for :func:`weighted_interleave` — mix weights
+    are scale-invariant there (pos = rank / w), so no normalization is needed.
 
     Scale shape: ONE map-side-combinable aggregation to strata rows,
     collected driver-side like any dim table; capped at ``max_strata``

@@ -4,10 +4,10 @@ that follows sampling/interleaving in a training-data pipeline).
 
 Two deliverables:
 
-* the doc -> chunk MAP (``pack_sequences`` / ``pack_sequences_bucketed``):
-  for each document, which training sequence its first token lands in
-  (``chunk_first``), which one its last token lands in (``chunk_last``),
-  and the offset of its first token inside that first chunk;
+* the doc -> chunk MAP (``pack_sequences``): for each document, which
+  training sequence its first token lands in (``chunk_first``), which
+  one its last token lands in (``chunk_last``), and the offset of its
+  first token inside that first chunk;
 * the MATERIALIZED chunks (``emit_chunks``): the actual fixed-length
   token sequences, the analog of the reference's encode stage emitting
   real payloads (save.rs:74-178) rather than a plan for them.
@@ -22,31 +22,19 @@ Semantics (mirrored in DuckDB by tests/test_pack.py):
   boundary continues into the next chunk — no padding, no discard),
   ``offset = cum_before % L``.
 
-Scale shape: the running total is the SAME per-stratum prefix sum as
-pipeline.sample — the bucketed form aggregates per (stratum, hex-prefix
-bucket), windows over the tiny bucket table, broadcasts offsets back,
-and finishes locally; no stratum ever sorts in one task.
+Scale shape: the running total is pipeline.sample's ``_running_total``
+— per-(stratum, hex-prefix bucket) totals, a window over that tiny
+table, offsets broadcast back, a local window per bucket; no stratum
+ever sorts in one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tokforge.pipeline.sample import _order_key, token_weight_col
+from tokforge.pipeline.sample import _order_key, _running_total, token_weight_col
 from tokforge.sources.requests import load_documents
-
-
-def _assign(d: DataFrame, cum_before, seq_len: int) -> DataFrame:
-    return (
-        d.withColumn("cum_before", cum_before)
-        .withColumn("chunk_first", F.floor(F.col("cum_before") / seq_len))
-        .withColumn(
-            "chunk_last",
-            F.floor((F.col("cum_before") + F.col("w") - 1) / seq_len),
-        )
-        .withColumn("offset", F.col("cum_before") % seq_len)
-    )
 
 
 def pack_sequences(
@@ -56,55 +44,20 @@ def pack_sequences(
     weight: "F.Column | None" = None,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Reference implementation: one running-total window per stratum."""
+    """Returns docs + (w, cum_before, chunk_first, chunk_last, offset)."""
     w = weight if weight is not None else token_weight_col()
     d = docs.withColumn("w", w).withColumn("__key", _order_key(id_col))
-    win = (
-        Window.partitionBy(stratum_col)
-        .orderBy("__key", id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        _running_total(d, [stratum_col], ["__key", id_col], "w")
+        .withColumn("cum_before", F.col("__run") - F.col("w"))
+        .withColumn("chunk_first", F.floor(F.col("cum_before") / seq_len))
+        .withColumn(
+            "chunk_last",
+            F.floor((F.col("cum_before") + F.col("w") - 1) / seq_len),
+        )
+        .withColumn("offset", F.col("cum_before") % seq_len)
+        .drop("__key", "__run")
     )
-    cum_before = F.coalesce(F.sum("w").over(win), F.lit(0))
-    return _assign(d, cum_before, seq_len).drop("__key")
-
-
-def pack_sequences_bucketed(
-    docs: DataFrame,
-    seq_len: int,
-    stratum_col: str = "lang",
-    weight: "F.Column | None" = None,
-    id_col: str = "doc_id",
-    prefix_len: int = 2,
-) -> DataFrame:
-    """Scale implementation: the hex-prefix bucket decomposition of the
-    running total (see pipeline.sample).  Row-identical to
-    ``pack_sequences`` for any prefix_len."""
-    w = weight if weight is not None else token_weight_col()
-    d = (
-        docs.withColumn("w", w)
-        .withColumn("__key", _order_key(id_col))
-        .withColumn("__bucket", F.substring("__key", 1, prefix_len))
-    )
-    totals = d.groupBy(stratum_col, "__bucket").agg(F.sum("w").alias("__btotal"))
-    off_win = (
-        Window.partitionBy(stratum_col)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        stratum_col,
-        "__bucket",
-        F.coalesce(F.sum("__btotal").over(off_win), F.lit(0)).alias("__offset"),
-    )
-    local_win = (
-        Window.partitionBy(stratum_col, "__bucket")
-        .orderBy("__key", id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_before = F.col("__offset") + F.coalesce(F.sum("w").over(local_win), F.lit(0))
-    return _assign(
-        d.join(F.broadcast(offsets), [stratum_col, "__bucket"]), cum_before, seq_len
-    ).drop("__key", "__bucket", "__offset")
 
 
 def emit_chunks(
@@ -113,7 +66,6 @@ def emit_chunks(
     stratum_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
-    bucketed: bool = True,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Materialize the packed training sequences: per (stratum, chunk_id),
@@ -140,15 +92,14 @@ def emit_chunks(
     so the emitted chunks are real training sequences ready for the
     objective-construction stage (pipeline/corrupt.py), asserted end to
     end by tests/test_pack_corrupt.py."""
-    fn = pack_sequences_bucketed if bucketed else pack_sequences
     if tokens_col is not None:
-        mapped = fn(
+        mapped = pack_sequences(
             docs, seq_len, stratum_col,
             weight=F.size(tokens_col).cast("long"), id_col=id_col,
         )
         toks = F.col(tokens_col)
     else:
-        mapped = fn(docs, seq_len, stratum_col, id_col=id_col)
+        mapped = pack_sequences(docs, seq_len, stratum_col, id_col=id_col)
         toks = F.split(F.col(text_col), " ")
     per_chunk = (
         # Zero-weight docs (empty tokens_col array) contribute nothing to
@@ -186,14 +137,11 @@ def emit_chunks(
     ).withColumn("n_fill", F.size("tokens"))
 
 
-def q_pack(
-    spark: SparkSession, sf_dir: str, seq_len: int = 256, bucketed: bool = False
-) -> DataFrame:
+def q_pack(spark: SparkSession, sf_dir: str, seq_len: int = 256) -> DataFrame:
     """Per-language packing map over the documents table (pytest-covered;
     the materialized-chunk digest is the driver-gated face, q_pack_chunks)."""
     docs = load_documents(spark, sf_dir)
-    fn = pack_sequences_bucketed if bucketed else pack_sequences
-    return fn(docs, seq_len).select(
+    return pack_sequences(docs, seq_len).select(
         "doc_id", "lang", "w", "cum_before", "chunk_first", "chunk_last", "offset"
     )
 
@@ -248,7 +196,6 @@ def chunk_boundaries(
     stratum_col: str = "lang",
     weight: "F.Column | None" = None,
     id_col: str = "doc_id",
-    bucketed: bool = True,
 ) -> DataFrame:
     """Per-chunk DOCUMENT-BOUNDARY map — what a trainer needs to build
     block-diagonal attention masks (and EOD-token insertion points) over
@@ -266,8 +213,7 @@ def chunk_boundaries(
     sorted int array; the driver-facing digest face is the caller's
     choice (arrays digest through md5(join) like every gated face).
     """
-    fn = pack_sequences_bucketed if bucketed else pack_sequences
-    mapped = fn(docs, seq_len, stratum_col, weight=weight, id_col=id_col)
+    mapped = pack_sequences(docs, seq_len, stratum_col, weight=weight, id_col=id_col)
     return (
         mapped.filter(F.col("w") > 0)
         .groupBy(stratum_col, F.col("chunk_first").alias("chunk_id"))

@@ -30,7 +30,7 @@ Scale shape: the chain composes the already-audited shapes — narrow
 Arrow passes (span detection/removal, SimHash), gram- and digest-keyed
 shuffles with map-side combine, the md5-order + hex-prefix bucket
 decomposition for sample/interleave/pack/epoch (never a single-task
-sort), broadcast eval grams.  Each bucketed stage embeds its child plan
+sort), broadcast eval grams.  Each running-total stage embeds its child plan
 twice, so every stage lands behind a stage_boundary lineage cut — the
 pipeline/stage.py discipline (exponential-plan trap, CLAUDE.md).
 """
@@ -41,12 +41,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tokforge.pipeline.dedup import simhash_arrow, sql_simhash_expr
-from tokforge.pipeline.epoch import EPOCH_SEED, epoch_order_bucketed
+from tokforge.pipeline.epoch import EPOCH_SEED, epoch_order
 from tokforge.pipeline.gate import quality_gate, sql_quality_gate_ctes
-from tokforge.pipeline.interleave import weighted_interleave_bucketed
-from tokforge.pipeline.pack import pack_sequences_bucketed
-from tokforge.pipeline.sample import hash_split, sql_hash_split
-from tokforge.pipeline.sample import budget_sample_bucketed
+from tokforge.pipeline.interleave import weighted_interleave
+from tokforge.pipeline.pack import pack_sequences
+from tokforge.pipeline.sample import budget_sample, hash_split, sql_hash_split
 from tokforge.pipeline.stage import stage_boundary
 from tokforge.pipeline.substr import (
     duplicate_spans,
@@ -153,13 +152,13 @@ def corpus_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 7. per-(split, lang) token budget
-    s7 = budget_sample_bucketed(
+    s7 = budget_sample(
         d6, BUDGET, stratum_col="strat", weight=F.size("tokens").cast("long")
     ).withColumnRenamed("w", "tok_w").withColumnRenamed("cum", "cum_budget")
     s7 = stage_boundary(s7)
 
     # 8. weighted source interleave (explicit dyadic weights)
-    i8 = weighted_interleave_bucketed(s7, ILV_WEIGHTS)
+    i8 = weighted_interleave(s7, ILV_WEIGHTS)
     i8 = stage_boundary(
         i8.withColumnRenamed("rank_in_stratum", "ilv_rank")
         .withColumnRenamed("pos", "ilv_pos")
@@ -167,12 +166,12 @@ def corpus_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 9. sequence-pack map per (split, lang)
-    p9 = pack_sequences_bucketed(
+    p9 = pack_sequences(
         i8, SEQ_LEN, stratum_col="strat", weight=F.col("tok_w")
     ).drop("w")
 
     # 10. deterministic epoch-1 order over the product
-    e10 = epoch_order_bucketed(p9, EPOCH, id_cols=("doc_id",))
+    e10 = epoch_order(p9, EPOCH, id_cols=("doc_id",))
 
     return e10.select(
         "doc_id",

@@ -2,7 +2,7 @@
 (or source), deterministically" — the corpus-assembly step a training-data
 pipeline runs after dedup/quality filtering.
 
-Semantics (shared by both implementations and the DuckDB mirror in
+Semantics (shared by the Spark op and the DuckDB mirror in
 tests/test_budget_sample.py):
 
 * Within each stratum, documents are laid out in a deterministic
@@ -17,32 +17,15 @@ tests/test_budget_sample.py):
   for a non-empty stratum, total >= min(budget, stratum total), and
   overshoot is bounded by one document.
 
-Two implementations, asserted row-identical:
-
-* ``budget_sample`` — one window ``SUM(w) OVER (PARTITION BY stratum
-  ORDER BY key)``.  Correct everywhere, but a window ORDER BY sorts each
-  stratum inside ONE task: a 20 TB stratum funnels through one machine.
-  This is the reference/oracle form.
-* ``budget_sample_bucketed`` — the 100 TB shape.  The md5 key's first
-  ``prefix_len`` hex chars split every stratum into 16^prefix_len buckets
-  whose bucket-major order EQUALS the global key order (a string sorts by
-  its prefix first), so the global prefix decomposes exactly:
-
-    1. per-(stratum, bucket) token totals — one map-side-combinable agg
-       shrinking the corpus to strata x buckets rows;
-    2. a window over that TINY table computes each bucket's starting
-       offset (runs on one task, but the table is KBs);
-    3. offsets broadcast-join back; each bucket computes its LOCAL
-       running total independently — max sort size is stratum/buckets.
-
-  Buckets whose offset already exceeds the budget are dropped BEFORE the
-  sort (partition pruning for free: at B << corpus, most of the data
-  never sorts or shuffles past phase 1).
+The running total is :func:`_running_total`, the hex-prefix decomposition
+every corpus-assembly op (sample / interleave / pack / epoch) shares.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tokforge.sources.requests import load_documents
@@ -58,6 +41,67 @@ def token_weight_col():
     return F.size(F.split(F.col("text"), " ")).cast("long")
 
 
+# Hex chars of the md5 order key that name a bucket: 16^PREFIX_LEN
+# buckets per stratum.  Read at call time (tests monkeypatch it).
+PREFIX_LEN = 2
+
+
+def _running_total(
+    d: DataFrame,
+    strata: Sequence[str],
+    order: Sequence[str],
+    value: "str | Column",
+    below: "int | None" = None,
+) -> DataFrame:
+    """Add ``__run``: the inclusive running sum of ``value`` per ``strata``
+    in ``order`` order, for a frame that already carries the md5 ``__key``
+    (``order`` must start with it and be total).
+
+    A window ORDER BY sorts each stratum inside ONE task, so a 20 TB
+    stratum would funnel through one machine.  Instead, the key's first
+    PREFIX_LEN hex chars split every stratum into buckets whose
+    bucket-major order EQUALS the key order (a string sorts by its prefix
+    first), so the prefix sum decomposes exactly:
+
+      1. per-(stratum, bucket) totals — one map-side-combinable agg
+         shrinking the corpus to strata x buckets rows;
+      2. a window over that TINY table gives each bucket's starting
+         offset (one task, but the table is KBs);
+      3. the offsets broadcast-join back and each bucket runs its LOCAL
+         window — each sort holds about stratum / 16^PREFIX_LEN rows.
+
+    ``below`` drops buckets whose offset already reaches it BEFORE the
+    join and sort: at a budget far below the corpus, most rows never
+    sort or shuffle past step 1."""
+    d = d.withColumn("__bucket", F.substring("__key", 1, PREFIX_LEN))
+    off_win = (
+        Window.partitionBy(*strata)
+        .orderBy("__bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        d.groupBy(*strata, "__bucket")
+        .agg(F.sum(value).alias("__btotal"))
+        .select(
+            *strata,
+            "__bucket",
+            F.coalesce(F.sum("__btotal").over(off_win), F.lit(0)).alias("__offset"),
+        )
+    )
+    if below is not None:
+        offsets = offsets.filter(F.col("__offset") < F.lit(below))
+    local_win = (
+        Window.partitionBy(*strata, "__bucket")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        d.join(F.broadcast(offsets), [*strata, "__bucket"])
+        .withColumn("__run", F.col("__offset") + F.sum(value).over(local_win))
+        .drop("__bucket", "__offset")
+    )
+
+
 def budget_sample(
     docs: DataFrame,
     budget: int,
@@ -65,72 +109,23 @@ def budget_sample(
     weight: "F.Column | None" = None,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Reference implementation: one global window per stratum.  Returns
-    the admitted rows with `w` (token weight) and `cum` (running total
-    including the row) added."""
+    """The admitted rows with ``w`` (token weight) and ``cum`` (running
+    total including the row) added."""
     w = weight if weight is not None else token_weight_col()
     d = docs.withColumn("w", w).withColumn("__key", _order_key(id_col))
-    win = (
-        Window.partitionBy(stratum_col)
-        .orderBy("__key", id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     return (
-        d.withColumn("cum", F.sum("w").over(win))
+        _running_total(d, [stratum_col], ["__key", id_col], "w", below=budget)
+        .withColumnRenamed("__run", "cum")
         .filter(F.col("cum") - F.col("w") < F.lit(budget))
         .drop("__key")
     )
 
 
-def budget_sample_bucketed(
-    docs: DataFrame,
-    budget: int,
-    stratum_col: str = "lang",
-    weight: "F.Column | None" = None,
-    id_col: str = "doc_id",
-    prefix_len: int = 2,
-) -> DataFrame:
-    """Scale implementation: decompose each stratum's prefix scan into
-    16^prefix_len independent hash buckets (see module docstring).
-    Row-identical to ``budget_sample`` for any prefix_len."""
-    w = weight if weight is not None else token_weight_col()
-    d = (
-        docs.withColumn("w", w)
-        .withColumn("__key", _order_key(id_col))
-        .withColumn("__bucket", F.substring("__key", 1, prefix_len))
-    )
-    totals = d.groupBy(stratum_col, "__bucket").agg(F.sum("w").alias("__btotal"))
-    off_win = (
-        Window.partitionBy(stratum_col)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        stratum_col,
-        "__bucket",
-        F.coalesce(F.sum("__btotal").over(off_win), F.lit(0)).alias("__offset"),
-    ).filter(F.col("__offset") < F.lit(budget))  # prune full buckets pre-sort
-    local_win = (
-        Window.partitionBy(stratum_col, "__bucket")
-        .orderBy("__key", id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        d.join(F.broadcast(offsets), [stratum_col, "__bucket"])
-        .withColumn("cum", F.col("__offset") + F.sum("w").over(local_win))
-        .filter(F.col("cum") - F.col("w") < F.lit(budget))
-        .drop("__key", "__bucket", "__offset")
-    )
-
-
-def q_budget_sample(
-    spark: SparkSession, sf_dir: str, budget: int = 2000, bucketed: bool = False
-) -> DataFrame:
+def q_budget_sample(spark: SparkSession, sf_dir: str, budget: int = 2000) -> DataFrame:
     """Per-language token-budget sample over the documents table
     (pytest-covered; the driver registry stays at the 50-query window)."""
     docs = load_documents(spark, sf_dir)
-    fn = budget_sample_bucketed if bucketed else budget_sample
-    return fn(docs, budget).select("doc_id", "lang", "w", "cum")
+    return budget_sample(docs, budget).select("doc_id", "lang", "w", "cum")
 
 
 def hash_split(

@@ -185,6 +185,39 @@ FROM (
 WHERE {cond}"""
 
 
+def _reorder(
+    pending: list, pdf_iter: Iterator[pd.DataFrame], state: GroupState
+) -> Tuple[list, list, int]:
+    """The event-time reorder step both stateful detectors share: append
+    this invocation's arrivals to ``pending`` as ``[ts_ms, id, event]``,
+    sort by (ts, id), and split at the current watermark.  Returns
+    ``(ready, pending, wm)`` — the watermark-complete prefix in event
+    order, the rest, and the watermark.
+
+    The watermark only advances between micro-batches, so every row at or
+    below it has arrived (later ones were dropped as late) — exactly the
+    prefix on which detection decisions are final."""
+    if not state.hasTimedOut:
+        for rows in pdf_iter:
+            if not len(rows):
+                continue
+            # Unit-safe: go through datetime64[ms] so ns-, us- or
+            # ms-backed (incl. Arrow) timestamps all land in ms —
+            # a raw int64 view of a us-unit series would be 1000x off.
+            ts_ms = rows["ts"].to_numpy().astype("datetime64[ms]").astype(np.int64)
+            ids = rows["doc_id"].to_numpy(dtype=object)
+            evs = rows["event"].to_numpy(dtype=object)
+            pending.extend(
+                [int(t), str(d), str(e)] for t, d, e in zip(ts_ms, ids, evs)
+            )
+    wm = state.getCurrentWatermarkMs()
+    pending.sort(key=lambda r: (r[0], r[1]))
+    n_ready = 0
+    while n_ready < len(pending) and pending[n_ready][0] <= wm:
+        n_ready += 1
+    return pending[:n_ready], pending[n_ready:], wm
+
+
 def make_pattern_state_func(pattern: Sequence[str], within_s: int):
     """Build the keyed-state function.  Per invocation: append arrivals to
     the pending buffer, finalize (in (ts, id) order) everything at or
@@ -218,31 +251,7 @@ def make_pattern_state_func(pattern: Sequence[str], within_s: int):
         else:
             pending, tail = [], []
 
-        if not state.hasTimedOut:
-            for rows in pdf_iter:
-                if not len(rows):
-                    continue
-                # Unit-safe: go through datetime64[ms] so ns-, us- or
-                # ms-backed (incl. Arrow) timestamps all land in ms —
-                # a raw int64 view of a us-unit series would be 1000x off.
-                ts_ms = rows["ts"].to_numpy().astype("datetime64[ms]").astype(np.int64)
-                ids = rows["doc_id"].to_numpy(dtype=object)
-                evs = rows["event"].to_numpy(dtype=object)
-                pending.extend(
-                    [int(t), str(d), str(e)]
-                    for t, d, e in zip(ts_ms, ids, evs)
-                )
-
-        # Finalize the watermark-complete prefix in event order.  The
-        # watermark only advances between micro-batches, so every row at
-        # or below it has arrived (later ones were dropped as late) —
-        # exactly the prefix on which match decisions are final.
-        wm = state.getCurrentWatermarkMs()
-        pending.sort(key=lambda r: (r[0], r[1]))
-        n_ready = 0
-        while n_ready < len(pending) and pending[n_ready][0] <= wm:
-            n_ready += 1
-        ready, pending = pending[:n_ready], pending[n_ready:]
+        ready, pending, wm = _reorder(pending, pdf_iter, state)
 
         out_key, out_start, out_end, out_fid, out_lid = [], [], [], [], []
         if ready:
@@ -327,6 +336,26 @@ def classify_event(status_col: str = "n_tok") -> "F.Column":
     )
 
 
+def _event_stream(
+    spark: SparkSession,
+    in_path: str,
+    watermark: str,
+    classifier: "F.Column | None",
+) -> DataFrame:
+    """The detectors' input: file stream (Iceberg stand-in) -> event
+    classifier -> ``(source, doc_id, event, ts)`` -> watermark."""
+    from tokforge.streaming.source import read_request_stream
+
+    return (
+        read_request_stream(spark, in_path)
+        .withColumn(
+            "event", classify_event() if classifier is None else classifier
+        )
+        .select("source", "doc_id", "event", "ts")
+        .withWatermark("ts", watermark)
+    )
+
+
 def pattern_stream(
     spark: SparkSession,
     in_path: str,
@@ -343,16 +372,8 @@ def pattern_stream(
     (query, sink).  ``classifier`` overrides the default payload-size
     alphabet (any deterministic column expression over the request row)."""
     from tokforge.streaming.sink import IdempotentParquetSink
-    from tokforge.streaming.source import read_request_stream
 
-    stream = (
-        read_request_stream(spark, in_path)
-        .withColumn(
-            "event", classify_event() if classifier is None else classifier
-        )
-        .select("source", "doc_id", "event", "ts")
-        .withWatermark("ts", watermark)
-    )
+    stream = _event_stream(spark, in_path, watermark, classifier)
     matched = with_pattern_state(stream, pattern, within_s)
     sink = IdempotentParquetSink(out_dir)
     return sink.start(matched, checkpoint_dir, available_now), sink
@@ -483,24 +504,7 @@ def make_absence_state_func(a: str, b: str, within_s: int):
         else:
             pending, open_a = [], []
 
-        if not state.hasTimedOut:
-            for rows in pdf_iter:
-                if not len(rows):
-                    continue
-                ts_ms = rows["ts"].to_numpy().astype("datetime64[ms]").astype(np.int64)
-                ids = rows["doc_id"].to_numpy(dtype=object)
-                evs = rows["event"].to_numpy(dtype=object)
-                pending.extend(
-                    [int(t), str(d), str(e)]
-                    for t, d, e in zip(ts_ms, ids, evs)
-                )
-
-        wm = state.getCurrentWatermarkMs()
-        pending.sort(key=lambda r: (r[0], r[1]))
-        n_ready = 0
-        while n_ready < len(pending) and pending[n_ready][0] <= wm:
-            n_ready += 1
-        ready, pending = pending[:n_ready], pending[n_ready:]
+        ready, pending, wm = _reorder(pending, pdf_iter, state)
 
         for t, d, e in ready:
             if e == a:
@@ -592,16 +596,8 @@ def absence_stream(
     """Full absence-CEP job: file stream -> classifier -> watermark ->
     keyed absence state -> exactly-once sink.  Returns (query, sink)."""
     from tokforge.streaming.sink import IdempotentParquetSink
-    from tokforge.streaming.source import read_request_stream
 
-    stream = (
-        read_request_stream(spark, in_path)
-        .withColumn(
-            "event", classify_event() if classifier is None else classifier
-        )
-        .select("source", "doc_id", "event", "ts")
-        .withWatermark("ts", watermark)
-    )
+    stream = _event_stream(spark, in_path, watermark, classifier)
     alerts = with_absence_state(stream, a, b, within_s)
     sink = IdempotentParquetSink(out_dir)
     return sink.start(alerts, checkpoint_dir, available_now), sink

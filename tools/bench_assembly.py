@@ -34,9 +34,9 @@ import pyspark.sql.functions as F  # noqa: E402
 from tokforge.engine.session import build_spark  # noqa: E402
 from tokforge.pipeline.decontam import decontaminate  # noqa: E402
 from tokforge.pipeline.dedup import keep_canonical, q_lsh_pairs  # noqa: E402
-from tokforge.pipeline.interleave import weighted_interleave_bucketed  # noqa: E402
-from tokforge.pipeline.pack import pack_sequences_bucketed  # noqa: E402
-from tokforge.pipeline.sample import budget_sample_bucketed  # noqa: E402
+from tokforge.pipeline.interleave import weighted_interleave  # noqa: E402
+from tokforge.pipeline.pack import pack_sequences  # noqa: E402
+from tokforge.pipeline.sample import budget_sample  # noqa: E402
 from tokforge.pipeline.stage import stage_boundary  # noqa: E402
 from tokforge.sources.requests import REPLICA_STRIDE, load_documents  # noqa: E402
 
@@ -114,7 +114,7 @@ def main() -> None:
 
         def s3():
             out = stage_boundary(
-                budget_sample_bucketed(screened, BUDGET), f"{scratch}/sample"
+                budget_sample(screened, BUDGET), f"{scratch}/sample"
             )
             return out, out.count()
 
@@ -126,7 +126,7 @@ def main() -> None:
             )
             weights = {s: float(i + 1) for i, s in enumerate(srcs)}
             out = stage_boundary(
-                weighted_interleave_bucketed(sample.drop("w", "cum"), weights),
+                weighted_interleave(sample.drop("w", "cum"), weights),
                 f"{scratch}/mixed",
             )
             return out, out.count()
@@ -134,7 +134,7 @@ def main() -> None:
         mixed = timed("interleave", s4)
 
         def s5():
-            packed = pack_sequences_bucketed(mixed.drop("w"), SEQ_LEN)
+            packed = pack_sequences(mixed.drop("w"), SEQ_LEN)
             agg = packed.agg(
                 F.count("*").alias("n"), F.sum("w").alias("tok")
             ).collect()[0]

@@ -71,7 +71,7 @@ never recomputed.""", fmt(q_ngram_jaccard(spark, SF))))
 from tokforge.pipeline.pack import q_pack_chunks
 sections.append(("pack_chunks (materialized training sequences)",
 """What to check: the CORPUS-side wide ops are exactly two — the bucket
-window's hash exchange (local row_number per (lang, md5-prefix bucket))
+window's hash exchange (local running sum per (lang, md5-prefix bucket))
 and the final group on (lang, chunk_id) that reassembles each
 fixed-length sequence from the doc slices landing in it.  Every other
 `Exchange` in the tree operates on the aggregated per-(lang, bucket)
@@ -82,22 +82,22 @@ fmt(q_pack_chunks(spark, SF))))
 
 from tokforge.pipeline.assembly import q_gate_budget_sample
 sections.append(("budget_sample (token-budget stratified prefix)",
-"""What to check: the rank decomposition keeps every sort LOCAL — a
-row_number within (stratum, md5-prefix bucket) plus a broadcast offsets
+"""What to check: the running-total decomposition keeps every sort LOCAL — a
+running sum within (stratum, md5-prefix bucket) plus a broadcast offsets
 join; no global window over a stratum, no single-task stage; full
 buckets are pruned before any per-row work.""",
 fmt(q_gate_budget_sample(spark, SF))))
 
-from tokforge.pipeline.epoch import epoch_order_bucketed
+from tokforge.pipeline.epoch import epoch_order
 from tokforge.sources.requests import load_documents
-sections.append(("epoch_order_bucketed (per-epoch permutation + step index)",
-"""What to check: the step index is a LOCAL row_number within each
+sections.append(("epoch_order (per-epoch permutation + step index)",
+"""What to check: the step index is a LOCAL running count within each
 md5-prefix bucket plus a `BroadcastHashJoin` against the 256-row offsets
 table — the only wide operation over the corpus is the bucket window's
 hash exchange; the offsets aggregation is map-side combinable.  Resume
 (`step >= N`) composes as a plain Filter on top.""",
-fmt(epoch_order_bucketed(load_documents(spark, SF).select("doc_id", "source"),
-                         epoch=0, id_cols=("doc_id",)))))
+fmt(epoch_order(load_documents(spark, SF).select("doc_id", "source"),
+                epoch=0, id_cols=("doc_id",)))))
 
 from tokforge.streaming.patterns import detect_pattern_batch, detect_absence_batch
 ev = requests_df(spark, SF, "resize:fit:64/format:int16").select(
