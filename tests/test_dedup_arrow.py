@@ -1,7 +1,10 @@
-"""Edge-case coverage for the Arrow dedup kernels (signatures_arrow /
-simhash_arrow): rows the driver fixture never produces — empty token
-lists, n < SHINGLE_K, single-row batches — plus value equality against
-the straightforward per-row Python formulas."""
+"""Edge-case coverage for the one MinHash kernel (_minhash) and the one
+SimHash kernel (_simhash), driven through their token-carrying frames
+(signatures_arrow / simhash_arrow): rows the gated fixture never
+produces — empty token lists, n < SHINGLE_K, single-row batches — plus
+value equality against the straightforward per-row Python formulas.
+The fused key-only paths run the same kernels (tests/test_dedup_synth.py
+pins their token synthesis)."""
 
 from __future__ import annotations
 

@@ -13,15 +13,13 @@ import duckdb
 import pytest
 
 from tests.conftest import SF_SMALL
+from tokforge.pipeline.dedup import P, SHINGLE_MULT, sql_kgram_fold
 from tokforge.pipeline.substr import (
-    MULT,
     dup_coverage,
     duplicate_spans,
     kgram_counts,
     repetition_stats,
-    sql_kgram_fold,
 )
-from tokforge.pipeline.dedup import P
 from tokforge.sources.requests import requests_df, sql_requests_cte
 
 # ---------------------------------------------------------------------------
@@ -34,7 +32,7 @@ from tokforge.sources.requests import requests_df, sql_requests_cte
 def py_gram(t, i, k):
     h = t[i] % P
     for j in range(1, k):
-        h = (h * MULT + t[i + j]) % P
+        h = (h * SHINGLE_MULT + t[i + j]) % P
     return h
 
 

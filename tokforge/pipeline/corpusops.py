@@ -25,10 +25,11 @@ from pyspark.sql import functions as F
 from tokforge.constants import VOCAB
 from tokforge.pipeline.bpe import apply_bpe, pair_counts
 from tokforge.pipeline.corrupt import span_corrupt, sql_span_corrupt
+from tokforge.pipeline.dedup import sql_kgram_fold
 from tokforge.pipeline.gate import quality_gate, sql_quality_gate
 from tokforge.pipeline.sample import hash_split, sql_hash_split
 from tokforge.pipeline.stats import length_quantiles
-from tokforge.pipeline.substr import repetition_stats, sql_kgram_fold
+from tokforge.pipeline.substr import repetition_stats
 from tokforge.sources.requests import load_documents, requests_df, sql_requests_cte
 
 # ---------------------------------------------------------------------------

@@ -24,6 +24,7 @@ from tokforge.sources.requests import (
 # MinHash parameters: h_j(g) = (A[j] * g + B[j]) % P over 3-token shingles.
 P = 2147483647  # 2^31 - 1 (Mersenne prime)
 SHINGLE_K = 3
+SHINGLE_MULT = 50261  # the rolling k-gram fold's multiplier (_kgram_flat)
 N_HASHES = 8
 # Banding: 2 bands x 4 hashes.  With coarse features the per-hash collision
 # probability is ~= Jaccard J, so a band of r hashes collides at ~J^r —
@@ -45,20 +46,45 @@ SIMHASH_MULT = 2654435761
 SIMHASH_MOD = 2147483648
 
 
-# The 3-shingle hash g, as the DuckDB oracles render it: the reference
-# semantics the Arrow passes below reproduce.  Two measured traps bind
-# anyone writing it as Spark HOF expressions instead: eight separate
-# `array_min(transform(...))` columns make Catalyst inline the feature
-# expression into every column and codegen blows up superlinearly
-# (>390s vs ~5s at sf0.1); and an unmaterialized `tokens` expression gets
-# inlined into every element_at — O(n^2) per row, 50x slowdown (see
-# _materialized_requests).
+def _kgram_flat(values: "np.ndarray", rowmap: "np.ndarray", k: int):
+    """Flat rolling k-gram hashes over the _flat_tokens layout:
+    (g, gram_row, gram_pos_base_index) with g = fold(window, t0 % P,
+    (h * SHINGLE_MULT + t) % P), windows never crossing a row boundary.
+    The one gram identity of the dedup family: MinHash shingles are this
+    fold at k = SHINGLE_K, the substring layer (substr.py) uses any k."""
+    n = len(values)
+    if n < k:
+        e = np.empty(0, dtype=np.int64)
+        return e, e.copy(), e.copy()
+    m = n - k + 1
+    valid = rowmap[:m] == rowmap[k - 1 :]
+    h = values[:m] % P
+    for j in range(1, k):
+        h *= SHINGLE_MULT
+        h += values[j : m + j]
+        h %= P
+    idx = np.flatnonzero(valid)
+    return h[idx], rowmap[idx], idx
+
+
+def sql_kgram_fold(k: int) -> str:
+    """DuckDB twin of _kgram_flat for one gram starting at 0-based list
+    offset ``s`` (DuckDB lists are 1-based)."""
+    expr = f"CAST(tokens[s + 1] AS BIGINT) % {P}"
+    for j in range(1, k):
+        expr = f"(({expr}) * {SHINGLE_MULT} + tokens[s + {j + 1}]) % {P}"
+    return expr
+
+
+# The shingle list as the DuckDB oracles render it: the reference
+# semantics the Arrow passes below reproduce (range() is empty for
+# n_tok < SHINGLE_K).  Written as Spark HOF expressions instead, eight
+# separate `array_min(transform(...))` columns make Catalyst inline the
+# feature expression into every column and codegen blows up
+# superlinearly (>390s vs ~5s at sf0.1, measured).
 _SQL_SHINGLES = (
-    f"CASE WHEN n_tok >= {SHINGLE_K} THEN "
-    f"list_transform(range(0, n_tok - {SHINGLE_K} + 1), s -> "
-    f"((CAST(tokens[s + 1] AS BIGINT) * 50261 + tokens[s + 2]) % {P} * 50261 "
-    f"+ tokens[s + 3]) % {P}) "
-    "ELSE CAST([] AS BIGINT[]) END"
+    f"list_transform(range(0, n_tok - {SHINGLE_K} + 1), "
+    f"s -> {sql_kgram_fold(SHINGLE_K)})"
 )
 
 
@@ -86,6 +112,11 @@ GROUP BY 1"""
 # Arrow+numpy path does 30M+ — at 100 TB that constant is the difference
 # between a day and a month.  The numpy code reproduces the exact integer
 # arithmetic, so the driver gate pins equality against the oracles.
+#
+# One MinHash kernel and one SimHash kernel, both over the flat token
+# layout (values, rowmap, lengths).  Two token sources feed them:
+# _flat_tokens for frames that carry `tokens`, and _synth_tokens for the
+# key-only request lineage below.
 # ---------------------------------------------------------------------------
 
 
@@ -108,16 +139,90 @@ def _flat_tokens(batch):
     return values, rowmap, lengths
 
 
-def _row_shingles(values: "np.ndarray", rowmap: "np.ndarray"):
-    """Flat 3-token rolling shingles + their row ids: g(s) =
-    ((t[s]*50261 + t[s+1]) % P * 50261 + t[s+2]) % P, windows never
-    crossing a row boundary (same g as _SQL_SHINGLES)."""
-    if len(values) < SHINGLE_K:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    valid = rowmap[:-2] == rowmap[2:]
-    a, b, c = values[:-2][valid], values[1:-1][valid], values[2:][valid]
-    g = ((a * 50261 + b) % P * 50261 + c) % P
-    return g, rowmap[:-2][valid]
+def _synth_tokens(doc_ids: "np.ndarray"):
+    """The numpy twin of sources.requests.tokens_col / n_tok_col in the
+    _flat_tokens layout: tokens[i] = (doc_id*MUL_A + i*MUL_B) % VOCAB,
+    with the row length from the doc_id % 4 ladder."""
+    from tokforge.constants import VOCAB
+    from tokforge.sources.requests import LEN_LADDER, MUL_A, MUL_B
+
+    lengths = np.asarray(LEN_LADDER, dtype=np.int64)[doc_ids % 4]
+    rowmap = np.repeat(np.arange(len(doc_ids), dtype=np.int64), lengths)
+    starts = np.repeat(np.cumsum(lengths) - lengths, lengths)
+    pos = np.arange(len(rowmap), dtype=np.int64) - starts
+    values = (np.repeat(doc_ids, lengths) * MUL_A + pos * MUL_B) % VOCAB
+    return values, rowmap, lengths
+
+
+def _minhash(values, rowmap, m: int, feature_space: int | None):
+    """The MinHash kernel: an ``m``-row ListArray of N_HASHES-entry
+    signatures over the SHINGLE_K-shingles.  ``feature_space`` folds
+    shingles into the coarse LSH feature space first (min over the folded
+    multiset == min over the distinct set, so no distinct is needed).
+    Rows with no shingles (n < SHINGLE_K) get a NULL signature."""
+    import pyarrow as pa
+
+    g, g_rows, _ = _kgram_flat(values, rowmap, SHINGLE_K)
+    if feature_space is not None:
+        g = g % feature_space
+    counts = np.bincount(g_rows, minlength=m)
+    seg = np.zeros(m + 1, dtype=np.int64)
+    np.cumsum(counts, out=seg[1:])
+    has = counts > 0
+    # reduceat over NON-EMPTY rows' start offsets only: each index pair
+    # then spans exactly one row's shingles (empty rows contribute no
+    # elements, so skipping their indices is exact), and the final
+    # segment runs to len(hj).  The old clamp trick (min(seg, len-1) to
+    # keep trailing-empty indices in bounds) fed len-1 as the END of the
+    # last non-empty row's segment, silently dropping its final shingle —
+    # a chimeric signature caught by the streaming LSH oracle (the only
+    # gated fixture with unshingleable rows, which sort last in the batch).
+    starts = seg[:-1][has]
+    sig = np.zeros((m, N_HASHES), dtype=np.int64)
+    if starts.size:
+        for j in range(N_HASHES):
+            hj = (g * A[j] + B[j]) % P
+            sig[has, j] = np.minimum.reduceat(hj, starts)
+    flat = sig[has].reshape(-1)
+    offs = np.zeros(m + 1, dtype=np.int32)
+    np.cumsum(np.where(has, N_HASHES, 0), out=offs[1:])
+    arr = pa.ListArray.from_arrays(
+        pa.array(offs, type=pa.int32()), pa.array(flat, type=pa.int64())
+    )
+    if not has.all():
+        import pyarrow.compute as pc
+
+        arr = pc.if_else(pa.array(has), arr, pa.nulls(m, type=arr.type))
+    return arr
+
+
+def _simhash(values, lengths):
+    """The SimHash kernel: per-row 16-bit SimHash as an int64 Arrow array
+    (h = (x*MULT) % MOD, +-1 per bit, majority > 0)."""
+    import pyarrow as pa
+
+    # only the low SIMHASH_BITS (16) bits vote: a uint16 h carries them at
+    # a quarter of the int64 memory traffic (60 -> 35 ms per 10k
+    # synthesized rows, one core of a 4-cpu box)
+    h = ((values * SIMHASH_MULT) % SIMHASH_MOD).astype(np.uint16)
+    seg = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=seg[1:])
+    # non-empty rows' starts only — the same trailing-empty-row reduceat
+    # fix as _minhash; empty rows keep simhash 0, which is the oracle's
+    # NULL-list_sum semantics.
+    nonzero = lengths > 0
+    starts = seg[:-1][nonzero]
+    simhash = np.zeros(len(lengths), dtype=np.int64)
+    # one 1-D reduceat per bit (a 2-D axis-0 reduceat is ~100x slower);
+    # vote_b = 2*ones_b - n  >  0  <=>  majority of 1s
+    if starts.size:
+        nz_lengths = lengths[nonzero]
+        for bit in range(SIMHASH_BITS):
+            ones = (h >> bit) & 1
+            ones_per_row = np.add.reduceat(ones, starts, dtype=np.int64)
+            votes = 2 * ones_per_row - nz_lengths
+            simhash[nonzero] += (votes > 0) * (1 << bit)
+    return pa.array(simhash, type=pa.int64())
 
 
 def signatures_arrow(
@@ -126,105 +231,43 @@ def signatures_arrow(
     passthrough: tuple[tuple[str, str], ...] = (),
 ) -> DataFrame:
     """doc_id + MinHash signature (array<long>, N_HASHES entries) via ONE
-    mapInArrow pass.  ``feature_space`` folds shingles into the coarse LSH
-    feature space first (min over the folded multiset == min over the
-    distinct set, so array_distinct is unnecessary here).  Rows with no
-    shingles (n_tok < 3) emit a NULL signature — the callers filter them.
+    mapInArrow pass of the _minhash kernel over the frame's ``tokens``.
+    Rows with no shingles (n_tok < 3) emit a NULL signature — the callers
+    filter them.
 
     ``passthrough`` = ((name, ddl_type), ...) extra input columns carried
     through the same Arrow batch unchanged (e.g. the event-time ``ts`` for
     the streaming LSH stage) — the stream side reuses THIS function, so
     batch and streaming signatures are the same integer math by
     construction, not by parallel maintenance."""
-    from typing import Iterator
-
     import pyarrow as pa
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    cols = ["doc_id"] + [n for n, _ in passthrough]
+
+    def fn(batches):
         for batch in batches:
-            m = batch.num_rows
             values, rowmap, _ = _flat_tokens(batch)
-            g, g_rows = _row_shingles(values, rowmap)
-            if feature_space is not None:
-                g = g % feature_space
-            counts = np.bincount(g_rows, minlength=m)
-            seg = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(counts, out=seg[1:])
-            has = counts > 0
-            # reduceat over NON-EMPTY rows' start offsets only: each
-            # index pair then spans exactly one row's shingles (empty
-            # rows contribute no elements, so skipping their indices is
-            # exact), and the final segment runs to len(hj).  The old
-            # clamp trick (min(seg, len-1) to keep trailing-empty
-            # indices in bounds) fed len-1 as the END of the last
-            # non-empty row's segment, silently dropping its final
-            # shingle — a chimeric signature caught by the streaming
-            # LSH oracle (the only gated fixture with unshingleable
-            # rows, which sort last in the batch).
-            starts = seg[:-1][has]
-            sig = np.zeros((m, N_HASHES), dtype=np.int64)
-            if starts.size:
-                for j in range(N_HASHES):
-                    hj = (g * A[j] + B[j]) % P
-                    sig[has, j] = np.minimum.reduceat(hj, starts)
-            flat = sig[has].reshape(-1)
-            offs = np.zeros(m + 1, dtype=np.int32)
-            np.cumsum(np.where(has, N_HASHES, 0), out=offs[1:])
-            arr = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()), pa.array(flat, type=pa.int64())
-            )
-            if not has.all():
-                import pyarrow.compute as pc
-
-                arr = pc.if_else(pa.array(has), arr, pa.nulls(m, type=arr.type))
+            sig = _minhash(values, rowmap, batch.num_rows, feature_space)
             yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id")]
-                + [batch.column(n) for n, _ in passthrough]
-                + [arr],
-                names=["doc_id"] + [n for n, _ in passthrough] + ["sig"],
+                [batch.column(n) for n in cols] + [sig], names=cols + ["sig"]
             )
 
-    extra_sel = [n for n, _ in passthrough]
     extra_ddl = "".join(f"{n} {t}, " for n, t in passthrough)
-    return req.select("doc_id", *extra_sel, "tokens").mapInArrow(
+    return req.select(*cols, "tokens").mapInArrow(
         fn, f"doc_id string, {extra_ddl}sig array<long>"
     )
 
 
 def simhash_arrow(req: DataFrame) -> DataFrame:
-    """doc_id + 16-bit SimHash via one mapInArrow pass — identical bit
-    votes to the q_simhash expression (h = (x*MULT) % MOD, +-1 per bit,
-    majority > 0)."""
-    from typing import Iterator
-
+    """doc_id + 16-bit SimHash via one mapInArrow pass of the _simhash
+    kernel over the frame's ``tokens``."""
     import pyarrow as pa
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    def fn(batches):
         for batch in batches:
-            m = batch.num_rows
-            values, rowmap, lengths = _flat_tokens(batch)
-            h = (values * SIMHASH_MULT) % SIMHASH_MOD
-            seg = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(lengths, out=seg[1:])
-            # non-empty rows' starts only — same trailing-empty-row
-            # reduceat fix as signatures_arrow (the old clamp dropped
-            # the last token's vote from the final non-empty row when
-            # empty rows trailed it); empty rows keep simhash 0, which
-            # is the oracle's NULL-list_sum semantics.
-            nonzero = lengths > 0
-            starts = seg[:-1][nonzero]
-            simhash = np.zeros(m, dtype=np.int64)
-            # one 1-D reduceat per bit (a 2-D axis-0 reduceat is ~100x
-            # slower); vote_b = 2*ones_b - n  >  0  <=>  majority of 1s
-            if starts.size:
-                nz_lengths = lengths[nonzero]
-                for bit in range(SIMHASH_BITS):
-                    ones = (h >> bit) & 1
-                    ones_per_row = np.add.reduceat(ones, starts)
-                    votes = 2 * ones_per_row - nz_lengths
-                    simhash[nonzero] += (votes > 0) * (1 << bit)
+            values, _, lengths = _flat_tokens(batch)
             yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), pa.array(simhash, type=pa.int64())],
+                [batch.column("doc_id"), _simhash(values, lengths)],
                 names=["doc_id", "simhash16"],
             )
 
@@ -241,9 +284,9 @@ def simhash_arrow(req: DataFrame) -> DataFrame:
 # unsplittable single-row-group scan made the dedup hash queries serial
 # AND shipped the full token arrays through the exchange.  These paths
 # shuffle ONLY doc_id (guide §2.3 "shuffle keys, not payloads"), then
-# synthesize the exact same integer token matrix in numpy inside the same
-# Arrow pass that hashes it — identical math, oracles unchanged
-# (tests/test_dedup_synth.py pins row-identity to the unfused paths).
+# _synth_tokens rebuilds the exact same tokens inside the Arrow pass that
+# runs the same kernels on them — oracles unchanged
+# (tests/test_dedup_synth.py pins the synthesis to requests_df).
 # ---------------------------------------------------------------------------
 
 
@@ -266,86 +309,24 @@ def _synth_request_ids(
     return docs.repartition(n_part)
 
 
-def _synth_token_groups(doc_ids: "np.ndarray"):
-    """Yield (row_mask, (m_g, n) int64 token matrix) per length-ladder
-    class — the numpy twin of sources.requests.tokens_col/n_tok_col."""
-    from tokforge.sources.requests import LEN_LADDER, MUL_A, MUL_B
-    from tokforge.constants import VOCAB
-
-    c = doc_ids % 4
-    for ci, n in enumerate(LEN_LADDER):
-        mask = c == ci
-        if not mask.any():
-            continue
-        idx = np.arange(n, dtype=np.int64)
-        toks = (doc_ids[mask][:, None] * MUL_A + idx[None, :] * MUL_B) % VOCAB
-        yield mask, toks
-
-
-def q_simhash_synth(ids: DataFrame) -> DataFrame:
-    """doc_id + 16-bit SimHash with token synthesis fused into the Arrow
-    pass — same bit votes as simhash_arrow (h = (x*MULT) % MOD, +-1 per
-    bit, majority > 0), no token array ever crosses the JVM boundary."""
-    from typing import Iterator
-
+def _synth_hashed(ids: DataFrame, out: tuple[str, str], kernel) -> DataFrame:
+    """The fused mapInArrow shape: int64 doc_ids in, string doc_id plus
+    the ``out`` = (name, ddl_type) column out, where ``kernel(values,
+    rowmap, lengths)`` hashes the _synth_tokens of each batch — no token
+    array ever crosses the JVM boundary."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    def fn(batches):
         for batch in batches:
             d_arr = batch.column("doc_id")
             d = d_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            sh = np.zeros(len(d), dtype=np.int64)
-            for mask, toks in _synth_token_groups(d):
-                h = (toks * SIMHASH_MULT) % SIMHASH_MOD
-                n = toks.shape[1]
-                acc = np.zeros(toks.shape[0], dtype=np.int64)
-                for bit in range(SIMHASH_BITS):
-                    ones = ((h >> bit) & 1).sum(axis=1)
-                    acc += ((2 * ones - n) > 0) * (1 << bit)
-                sh[mask] = acc
             yield pa.RecordBatch.from_arrays(
-                [pc.cast(d_arr, pa.string()), pa.array(sh, type=pa.int64())],
-                names=["doc_id", "simhash16"],
+                [pc.cast(d_arr, pa.string()), kernel(*_synth_tokens(d))],
+                names=["doc_id", out[0]],
             )
 
-    return ids.mapInArrow(fn, "doc_id string, simhash16 long")
-
-
-def signatures_synth(ids: DataFrame, feature_space: int | None) -> DataFrame:
-    """doc_id + MinHash signature with token synthesis fused into the
-    Arrow pass — identical shingle/minhash integer math to
-    signatures_arrow.  Every ladder length >= SHINGLE_K, so no NULL-sig
-    rows exist on this path (the ladder starts at 6)."""
-    from typing import Iterator
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            d_arr = batch.column("doc_id")
-            d = d_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            m = len(d)
-            sig = np.zeros((m, N_HASHES), dtype=np.int64)
-            for mask, toks in _synth_token_groups(d):
-                a, b, c = toks[:, :-2], toks[:, 1:-1], toks[:, 2:]
-                g = ((a * 50261 + b) % P * 50261 + c) % P
-                if feature_space is not None:
-                    g = g % feature_space
-                for j in range(N_HASHES):
-                    hj = (g * A[j] + B[j]) % P
-                    sig[mask, j] = hj.min(axis=1)
-            flat = sig.reshape(-1)
-            offs = np.arange(0, (m + 1) * N_HASHES, N_HASHES, dtype=np.int32)
-            arr = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()), pa.array(flat, type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pc.cast(d_arr, pa.string()), arr], names=["doc_id", "sig"]
-            )
-
-    return ids.mapInArrow(fn, "doc_id string, sig array<long>")
+    return ids.mapInArrow(fn, f"doc_id string, {out[0]} {out[1]}")
 
 
 def _materialized_requests(
@@ -353,10 +334,12 @@ def _materialized_requests(
 ) -> DataFrame:
     """Request rows with the tokens ARRAY materialized behind an exchange.
 
-    Shingling accesses tokens via element_at; if `tokens` is still an
-    unmaterialized expression, Catalyst inlines the whole array-builder
-    into every element_at — O(n^2) work per row (measured 50x slowdown).
-    One round-robin exchange pins tokens as real column data.
+    The documents scan is one unsplittable row group, so without the
+    round-robin exchange everything above the token synthesis (the
+    jaccard token sets' array_distinct) runs in that single scan task;
+    behind it, it runs across the shuffle partitions.  Measured on
+    q_ngram_jaccard at sf0.1, 4 cpus, 3 alternating fresh-JVM pairs:
+    median 2.89 s with the exchange vs 3.13 s without it.
     """
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return requests_df(spark, sf_dir, label, replicas=replicas).repartition(n_part)
@@ -364,8 +347,12 @@ def _materialized_requests(
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc MinHash signature (8 hashes over 3-token shingles), computed
-    on the fused synthesis+hash Arrow path (signatures_synth)."""
-    df = signatures_synth(_synth_request_ids(spark, sf_dir), feature_space=None)
+    on the fused synthesis+hash Arrow path (_synth_hashed + _minhash)."""
+    df = _synth_hashed(
+        _synth_request_ids(spark, sf_dir),
+        ("sig", "array<long>"),
+        lambda v, r, n: _minhash(v, r, len(n), None),
+    )
     return df.select(
         "doc_id",
         *[F.element_at("sig", j + 1).alias(f"h{j}") for j in range(N_HASHES)],
@@ -402,8 +389,10 @@ def _sig_cached(spark: SparkSession, sf_dir: str, replicas: int) -> DataFrame:
     # _synth_request_ids already spreads rows across the session's
     # parallelism, so the Arrow pass is the materialization the persist
     # pins for both self-join sides
-    sig = signatures_synth(
-        _synth_request_ids(spark, sf_dir, replicas), FEATURE_SPACE
+    sig = _synth_hashed(
+        _synth_request_ids(spark, sf_dir, replicas),
+        ("sig", "array<long>"),
+        lambda v, r, n: _minhash(v, r, len(n), FEATURE_SPACE),
     ).persist()
     _SIG_CACHE[key] = sig
     return sig
@@ -539,9 +528,13 @@ def _sql_lsh_pairs() -> str:
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over token ids: per-bit majority vote of hashed
-    features, computed on the fused synthesis+hash Arrow path
-    (q_simhash_synth — the token arrays never leave the Python worker)."""
-    return q_simhash_synth(_synth_request_ids(spark, sf_dir))
+    features, computed on the fused synthesis+hash Arrow path (_synth_hashed
+    + _simhash — the token arrays never leave the Python worker)."""
+    return _synth_hashed(
+        _synth_request_ids(spark, sf_dir),
+        ("simhash16", "long"),
+        lambda v, r, n: _simhash(v, n),
+    )
 
 
 def sql_simhash_expr(tokens: str = "tokens") -> str:

@@ -101,7 +101,7 @@ def sql_quality_gate_ctes(
     the final SELECT; ends with the ``gate`` CTE) — reused verbatim by
     both :func:`sql_quality_gate` and the composed corpus-product oracle
     (pipeline/product.py)."""
-    from tokforge.pipeline.substr import sql_kgram_fold
+    from tokforge.pipeline.dedup import sql_kgram_fold
     from tokforge.pipeline.text import _sql_quality_score  # noqa: PLC2701
 
     fold = sql_kgram_fold(rep_k)

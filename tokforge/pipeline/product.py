@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tokforge.pipeline.dedup import simhash_arrow, sql_simhash_expr
+from tokforge.pipeline.dedup import simhash_arrow, sql_kgram_fold, sql_simhash_expr
 from tokforge.pipeline.epoch import EPOCH_SEED, epoch_order
 from tokforge.pipeline.gate import quality_gate, sql_quality_gate_ctes
 from tokforge.pipeline.interleave import weighted_interleave
@@ -51,7 +51,6 @@ from tokforge.pipeline.substr import (
     duplicate_spans,
     kgram_positions,
     remove_spans,
-    sql_kgram_fold,
 )
 from tokforge.sources.requests import load_documents, requests_df, sql_requests_cte
 

@@ -30,11 +30,11 @@ Faces:
   distinct k-gram counts and the duplicate-gram ratio.  One narrow
   Arrow pass, per-row ``np.unique`` via lexsort, zero shuffle.
 
-The k-gram hash generalizes dedup.py's 3-shingle fold —
-``h = fold(window, t0, (h * 50261 + t) % P)`` — and reproduces it
-exactly at k=3, so the substring layer and the MinHash layer score the
-same underlying gram identity.  All integer math; DuckDB mirrors in
-tests/test_substr.py.
+The k-gram hash is dedup.py's one rolling fold (``_kgram_flat`` /
+``sql_kgram_fold``, ``h = fold(window, t0 % P, (h * SHINGLE_MULT + t) % P)``);
+MinHash uses it at k = SHINGLE_K, so the substring layer and the MinHash
+layer score the same underlying gram identity.  All integer math; DuckDB
+mirrors in tests/test_substr.py.
 """
 
 from __future__ import annotations
@@ -44,25 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tokforge.pipeline.dedup import P, _flat_tokens
-
-MULT = 50261  # dedup.py shingle multiplier — k=3 reproduces _row_shingles
-
-
-def _kgram_flat(values, rowmap, k: int):
-    """Flat rolling k-gram hashes: (g, gram_row, gram_pos_base_index).
-    Windows never cross a row boundary."""
-    n = len(values)
-    if n < k:
-        e = np.empty(0, dtype=np.int64)
-        return e, e.copy(), e.copy()
-    m = n - k + 1
-    valid = rowmap[:m] == rowmap[k - 1 :]
-    h = values[:m] % P
-    for j in range(1, k):
-        h = (h * MULT + values[j : m + j]) % P
-    idx = np.flatnonzero(valid)
-    return h[valid], rowmap[:m][valid], idx
+from tokforge.pipeline.dedup import _flat_tokens, _kgram_flat
 
 
 def kgram_counts(req: DataFrame, k: int) -> DataFrame:
@@ -325,11 +307,3 @@ def remove_spans(req: DataFrame, spans: DataFrame) -> DataFrame:
 
     return joined.mapInArrow(fn, "doc_id string, tokens array<int>")
 
-
-def sql_kgram_fold(k: int) -> str:
-    """DuckDB twin of the rolling hash for one gram starting at 0-based
-    list offset ``s`` (DuckDB lists are 1-based)."""
-    expr = f"CAST(tokens[s + 1] AS BIGINT) % {P}"
-    for j in range(1, k):
-        expr = f"(({expr}) * {MULT} + tokens[s + {j + 1}]) % {P}"
-    return expr
