@@ -47,7 +47,7 @@ def build_spark(
     state_store: str | None = None,
 ) -> SparkSession:
     # Keep numpy buffers heap-resident in every child process (see
-    # tokforge/operators/alloc.py); must be in the env before the JVM forks
+    # tokforge/worker_setup.py); must be in the env before the JVM forks
     # the Python worker daemon.
     os.environ.setdefault("MALLOC_MMAP_MAX_", "0")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
 from tokforge.engine.transform import _plan_for, admit_bearer, status_code_col
 from tokforge.functions.signing import verify_arrays
-from tokforge.operators.alloc import tune_allocator  # noqa: F401
 from tokforge.operators.kernel import TransformError
 from tokforge.operators.kernel_rect import apply_plan_rect
 from tokforge.plans.options import OptionParseError, content_disposition, strips_metadata

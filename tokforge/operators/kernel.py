@@ -24,8 +24,6 @@ from typing import Optional
 
 import numpy as np
 
-from tokforge.operators.alloc import tune_allocator  # noqa: F401  (side effect)
-
 from tokforge.constants import (
     DEFAULT_FORMAT,
     DEFAULT_QUALITY,

@@ -18,8 +18,6 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from tokforge.operators.alloc import tune_allocator  # noqa: F401  (side effect)
-
 from tokforge.constants import (
     DEFAULT_FORMAT,
     DEFAULT_QUALITY,

@@ -59,7 +59,6 @@ from pyspark.sql.types import (
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
 from tokforge.engine.transform import cache_key_col
 from tokforge.engine.transform_arrow import expired_rows, transform_core
-from tokforge.operators.alloc import tune_allocator  # noqa: F401 - worker mallopt
 
 CACHE_OUTPUT_SCHEMA = StructType(
     [

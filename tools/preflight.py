@@ -15,6 +15,12 @@ Checks:
    in the audited-bounded allowlist below (round-7 verdict: an
    unbounded `orderBy().collect()` in a gated path is a scale-killer;
    new sites must be audited for a cap and added here)
+5. worker setup reachable — a fresh interpreter that imports only
+   tokforge.engine.transform (the module behind make_verify_udf, which
+   imports no kernel module) has zipimport's invalidate_caches replaced
+   by tokforge/worker_setup.py's wrapper, so every Spark Python worker
+   that unpickles a tokforge function skips the per-task re-read of
+   unchanged zip archives
 Full value-equality lives in tools/check_correctness.py (~8 min).
 """
 
@@ -75,6 +81,27 @@ def audit_collect_sites() -> list[str]:
     return problems
 
 
+def check_worker_setup() -> list[str]:
+    import subprocess
+
+    probe = (
+        "import zipimport, tokforge.engine.transform; "
+        "f = zipimport.zipimporter.invalidate_caches; "
+        "print(f.__module__, f.__qualname__)"
+    )
+    root = Path(__file__).resolve().parent.parent
+    p = subprocess.run(
+        [sys.executable, "-c", probe], cwd=root, capture_output=True, text=True
+    )
+    got = p.stdout.strip()
+    if p.returncode or got != "tokforge.worker_setup _invalidate_if_changed":
+        return [
+            "worker setup: importing tokforge.engine.transform alone left "
+            f"zipimporter.invalidate_caches as {got or p.stderr.strip()[-160:]!r}"
+        ]
+    return []
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     failures: list[str] = []
@@ -94,6 +121,7 @@ def main() -> int:
         failures.append(f"oracles without a query: {sorted(extra)}")
 
     failures.extend(audit_collect_sites())
+    failures.extend(check_worker_setup())
 
     import duckdb
 
@@ -137,7 +165,8 @@ def main() -> int:
         for f in failures:
             print(" -", f)
         return 1
-    print("preflight OK: 50 queries, all oracles live, all outputs scalar-only")
+    print("preflight OK: 50 queries, all oracles live, all outputs scalar-only, "
+          "worker setup reachable")
     return 0
 
 
