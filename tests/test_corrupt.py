@@ -1,11 +1,12 @@
-"""Span corruption (tokforge/pipeline/corrupt.py) four ways: the column
-face vs a pure-Python reference on the requests fixture, the Arrow scale
-face asserted identical to the column face, the DuckDB mirror, and the
-lossless-reconstruction invariant (inputs + targets rebuild the original
-sequence exactly).
+"""Span corruption (tokforge/pipeline/corrupt.py): the one Arrow kernel
+against a pure-Python reference (requests fixture, edge rows, a parameter
+fuzz) and against the DuckDB mirror, plus the lossless-reconstruction
+invariant (inputs + targets rebuild the original sequence exactly).
 """
 
 from __future__ import annotations
+
+import math
 
 import duckdb
 import pytest
@@ -15,7 +16,6 @@ from tokforge.pipeline.corrupt import (
     CORRUPT_SENT_BASE,
     CORRUPT_SENT_RANGE,
     span_corrupt,
-    span_corrupt_arrow,
     sql_span_corrupt,
 )
 from tokforge.sources.requests import requests_df, sql_requests_cte
@@ -28,8 +28,10 @@ SEED = 1
 def py_corrupt(doc_num, tokens, block=BLOCK, millis=MILLIS, seed=SEED):
     n = len(tokens)
     nb = (n + block - 1) // block
+    # C-style remainder (Spark / DuckDB): a negative residue masks
     mask = [
-        ((doc_num * 104651 + (k + seed) * 95231) % 1000) < millis for k in range(nb)
+        math.fmod(doc_num * 104651 + (k + seed) * 95231, 1000) < millis
+        for k in range(nb)
     ]
     inputs, targets, j = [], [], 0
     for k in range(nb):
@@ -81,11 +83,6 @@ def test_column_face_matches_python(spark):
     assert any(nm > 0 for _, _, nm, _, _ in got), "mask density actually fires"
 
 
-def test_arrow_face_identical(spark):
-    req = requests_df(spark, SF_SMALL, "corrupt")
-    assert _rows(span_corrupt_arrow(req)) == _rows(span_corrupt(req))
-
-
 def test_matches_duckdb_mirror(spark):
     req = requests_df(spark, SF_SMALL, "corrupt")
     got = _rows(span_corrupt(req))
@@ -107,7 +104,7 @@ SELECT doc_id, n_tok, n_masked, inputs, targets FROM corrupted"""
 def test_reconstruction_is_lossless(spark):
     req = requests_df(spark, SF_SMALL, "corrupt")
     toks = {r["doc_id"]: list(r["tokens"]) for r in req.collect()}
-    for d, n, nm, inputs, targets in _rows(span_corrupt_arrow(req)):
+    for d, n, nm, inputs, targets in _rows(span_corrupt(req)):
         assert py_reconstruct(inputs, targets) == toks[d]
         assert len(inputs) + len(targets) == n + 2 * nm  # sentinel twice
 
@@ -117,34 +114,34 @@ def test_edge_rows_and_density_bounds(spark):
         ("0", []),  # empty
         ("1", [5]),  # single token, one partial block
         ("2", list(range(17))),  # 2 full blocks + remainder
+        ("-3", list(range(9))),  # negative id: truncated remainder
     ]
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-    for face in (span_corrupt, span_corrupt_arrow):
-        got = _rows(face(df, block=BLOCK, millis=MILLIS, seed=SEED))
-        want = sorted(
-            (d, len(t), *py_corrupt(int(d), t)) for d, t in rows
-        )
-        assert got == want, face.__name__
-        # millis=0: nothing masked, inputs == tokens, targets empty
-        for d, n, nm, i, t in _rows(face(df, block=BLOCK, millis=0)):
+    got = _rows(span_corrupt(df, block=BLOCK, millis=MILLIS, seed=SEED))
+    want = sorted((d, len(t), *py_corrupt(int(d), t)) for d, t in rows)
+    assert got == want
+    # millis=0 masks only negative residues; the non-negative ids keep
+    # inputs == tokens, targets empty
+    for d, n, nm, i, t in _rows(span_corrupt(df, block=BLOCK, millis=0)):
+        if int(d) >= 0:
             assert nm == 0 and t == [] and i == dict(rows)[d]
-        # millis=1000: every block masked, inputs are all sentinels
-        for d, n, nm, i, t in _rows(face(df, block=BLOCK, millis=1000)):
-            assert nm == (n + BLOCK - 1) // BLOCK
-            assert all(x >= CORRUPT_SENT_BASE for x in i)
+    # millis=1000: every block masked, inputs are all sentinels
+    for d, n, nm, i, t in _rows(span_corrupt(df, block=BLOCK, millis=1000)):
+        assert nm == (n + BLOCK - 1) // BLOCK
+        assert all(x >= CORRUPT_SENT_BASE for x in i)
 
 
 def test_seed_changes_mask(spark):
     req = requests_df(spark, SF_SMALL, "corrupt")
-    a = {r[0]: r[2] for r in _rows(span_corrupt_arrow(req, seed=1))}
-    b = {r[0]: r[2] for r in _rows(span_corrupt_arrow(req, seed=2))}
+    a = {r[0]: r[2] for r in _rows(span_corrupt(req, seed=1))}
+    b = {r[0]: r[2] for r in _rows(span_corrupt(req, seed=2))}
     assert a != b, "a new seed gives a new epoch mask"
 
 
 def test_param_fuzz_both_faces(spark):
     """Random corpora under a parameter grid (block=1 token-level masking,
-    odd block sizes, near-0/near-1 densities, different seeds): both faces
-    match the pure-Python reference exactly."""
+    odd block sizes, near-0/near-1 densities, different seeds): the kernel
+    matches the pure-Python reference exactly."""
     import random
 
     rng = random.Random(60606)
@@ -158,15 +155,13 @@ def test_param_fuzz_both_faces(spark):
             (d, len(t), *py_corrupt(int(d), t, block=block, millis=millis, seed=seed))
             for d, t in rows
         )
-        for face in (span_corrupt, span_corrupt_arrow):
-            got = _rows(face(df, block=block, millis=millis, seed=seed))
-            assert got == want, (face.__name__, block, millis, seed)
+        got = _rows(span_corrupt(df, block=block, millis=millis, seed=seed))
+        assert got == want, (block, millis, seed)
 
 
 def test_rejects_bad_params(spark):
     req = requests_df(spark, SF_SMALL, "corrupt")
-    for face in (span_corrupt, span_corrupt_arrow):
-        with pytest.raises(ValueError):
-            face(req, millis=1001)
-        with pytest.raises(ValueError):
-            face(req, block=0)
+    with pytest.raises(ValueError):
+        span_corrupt(req, millis=1001)
+    with pytest.raises(ValueError):
+        span_corrupt(req, block=0)

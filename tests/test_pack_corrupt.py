@@ -11,7 +11,7 @@ import hashlib
 
 from tests.conftest import SF_SMALL
 from tests.test_corrupt import py_reconstruct
-from tokforge.pipeline.corrupt import span_corrupt_arrow
+from tokforge.pipeline.corrupt import span_corrupt
 from tokforge.pipeline.pack import emit_chunks
 from tokforge.sources.requests import requests_df
 
@@ -65,7 +65,7 @@ def test_pack_tokens_then_corrupt_roundtrip(spark):
     cdf = spark.createDataFrame(flat, "doc_id string, tokens array<int>")
     out = {
         r["doc_id"]: (list(r["inputs"]), list(r["targets"]), r["n_masked"])
-        for r in span_corrupt_arrow(cdf, block=16, millis=300, seed=3).collect()
+        for r in span_corrupt(cdf, block=16, millis=300, seed=3).collect()
     }
     originals = dict(flat)
     assert set(out) == set(originals)

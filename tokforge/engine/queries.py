@@ -23,6 +23,7 @@ from tokforge.engine.oracle import oracle_transform_sql
 from tokforge.engine.transform import make_sign_udf, make_verify_udf
 from tokforge.engine.transform_arrow import transform_requests_arrow as transform_requests
 from tokforge.sources.requests import (
+    array_digest,
     load_documents,
     load_embeddings,
     load_events,
@@ -177,13 +178,11 @@ _PRESET_CHAIN = "preset:thumb/rotate:180"
 
 
 def tokens_digest_col(col: str = "tokens_out") -> "F.Column":
-    """Deterministic scalar digest of the output token array — the driver's
-    canonicalizer sorts/hashes cell values and cannot handle list cells, so
-    every gated query exposes md5(join(tokens, ',')) instead of the raw
-    array.  DuckDB mirror: md5(array_to_string(tokens_out, ','))."""
-    joined = F.concat_ws(",", F.col(col).cast("array<string>"))
+    """The NULL-aware form of sources.requests.array_digest for the
+    output token array: a NULL array (an error row) stays NULL.  DuckDB
+    mirror: md5(array_to_string(tokens_out, ','))."""
     return F.when(F.col(col).isNull(), F.lit(None).cast("string")).otherwise(
-        F.md5(joined)
+        array_digest(col)
     )
 
 

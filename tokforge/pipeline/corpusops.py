@@ -30,7 +30,12 @@ from tokforge.pipeline.gate import quality_gate, sql_quality_gate
 from tokforge.pipeline.sample import hash_split, sql_hash_split
 from tokforge.pipeline.stats import length_quantiles
 from tokforge.pipeline.substr import repetition_stats
-from tokforge.sources.requests import load_documents, requests_df, sql_requests_cte
+from tokforge.sources.requests import (
+    array_digest,
+    load_documents,
+    requests_df,
+    sql_requests_cte,
+)
 
 # ---------------------------------------------------------------------------
 # repetition_stats — Gopher-style duplicate-n-gram filter (substr.py:203)
@@ -95,7 +100,7 @@ FROM documents"""
 
 
 # ---------------------------------------------------------------------------
-# span_corrupt — T5 denoising objective construction (corrupt.py:63)
+# span_corrupt — T5 denoising objective construction (corrupt.span_corrupt)
 # ---------------------------------------------------------------------------
 
 
@@ -104,13 +109,12 @@ def q_gate_span_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver canonicalizer."""
     req = requests_df(spark, sf_dir, "corrupt")
     out = span_corrupt(req)  # block=8, millis=250, seed=1 defaults
-    dig = lambda c: F.md5(F.concat_ws(",", F.col(c).cast("array<string>")))
     return out.select(
         "doc_id",
         "n_tok",
         "n_masked",
-        dig("inputs").alias("inputs_md5"),
-        dig("targets").alias("targets_md5"),
+        array_digest("inputs").alias("inputs_md5"),
+        array_digest("targets").alias("targets_md5"),
     )
 
 
@@ -213,9 +217,7 @@ def q_gate_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id",
         F.size("tokens").cast("long").alias("n_out"),
-        F.md5(F.concat_ws(",", F.col("tokens").cast("array<string>"))).alias(
-            "tokens_md5"
-        ),
+        array_digest("tokens").alias("tokens_md5"),
     )
 
 

@@ -16,17 +16,11 @@ wall-clock) and re-runnable per epoch by bumping ``seed``.  Sentinels
 are SEQUENTIAL per document (T5 convention): the j-th masked block gets
 sentinel ``CORRUPT_SENT_BASE + j % CORRUPT_SENT_RANGE``.
 
-Two faces, asserted identical (tests/test_corrupt.py):
-
-* ``span_corrupt`` — pure column algebra (transform/filter/flatten over
-  the block sequence).  The correctness face: every expression has a
-  DuckDB twin (``sql_span_corrupt``).  Spark HOFs are interpreted and
-  Catalyst inlines the mask/rank arrays into their consumers, so this
-  face costs O(blocks^2) arithmetic per doc — bounded (blocks <= 32 for
-  256-token sequences) but not the 100 TB path.
-* ``span_corrupt_arrow`` — one narrow mapInArrow pass over the flat
-  token buffer (the _flat_tokens layout): mask/rank/sentinel insertion
-  all via vectorized cumsum/repeat, no shuffle, no per-row Python.
+One kernel, ``span_corrupt``: a narrow mapInArrow pass over the flat
+token buffer (the _flat_tokens layout) — mask/rank/sentinel insertion all
+via vectorized cumsum/repeat, no shuffle, no per-row Python.  Its
+references are the DuckDB mirror ``sql_span_corrupt`` (the gated row's
+oracle) and the pure-Python ``py_corrupt`` in tests/test_corrupt.py.
 
 At 100 TB this is a map-only stage: corruption runs AFTER packing (the
 inputs are fixed-length chunks), so the pass streams through parquet at
@@ -54,66 +48,6 @@ CORRUPT_SENT_RANGE = 64
 _MASK_MUL_DOC = 104651
 _MASK_MUL_BLK = 95231
 _MASK_DEN = 1000
-
-
-def _masked_expr(doc: F.Column, k, seed: int, millis: int) -> F.Column:
-    return ((doc * _MASK_MUL_DOC + (k + seed) * _MASK_MUL_BLK) % _MASK_DEN) < millis
-
-
-def span_corrupt(
-    req: DataFrame, block: int = 8, millis: int = 250, seed: int = 1
-) -> DataFrame:
-    """Column-algebra face: (doc_id, n_tok, n_masked, inputs, targets)."""
-    if not (0 <= millis <= _MASK_DEN):
-        raise ValueError(f"millis must be in [0, {_MASK_DEN}], got {millis}")
-    if block < 1:
-        raise ValueError(f"block must be >= 1, got {block}")
-    d = F.col("doc_id").cast("long")
-    n = F.size("tokens")
-    nb = F.floor((n + (block - 1)) / block).cast("int")
-    blocks = F.sequence(F.lit(0), nb - 1)
-    mask = F.transform(blocks, lambda k: _masked_expr(d, k, seed, millis))
-    rank = F.transform(
-        blocks,
-        lambda k: F.size(F.filter(F.slice(mask, 1, k), lambda x: x)),
-    )
-
-    def sentinel(k):
-        return (
-            F.lit(CORRUPT_SENT_BASE)
-            + F.element_at(rank, k + 1) % CORRUPT_SENT_RANGE
-        ).cast("int")
-
-    def block_tokens(k):
-        return F.slice("tokens", k * block + 1, block)
-
-    inputs = F.flatten(
-        F.transform(
-            blocks,
-            lambda k: F.when(
-                F.element_at(mask, k + 1), F.array(sentinel(k))
-            ).otherwise(block_tokens(k)),
-        )
-    )
-    targets = F.flatten(
-        F.transform(
-            blocks,
-            lambda k: F.when(
-                F.element_at(mask, k + 1),
-                F.concat(F.array(sentinel(k)), block_tokens(k)),
-            ).otherwise(F.array().cast("array<int>")),
-        )
-    )
-    empty = F.array().cast("array<int>")
-    return req.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        n.cast("long").alias("n_tok"),
-        F.when(n == 0, F.lit(0).cast("long"))
-        .otherwise(F.size(F.filter(mask, lambda x: x)).cast("long"))
-        .alias("n_masked"),
-        F.when(n == 0, empty).otherwise(inputs).alias("inputs"),
-        F.when(n == 0, empty).otherwise(targets).alias("targets"),
-    )
 
 
 def sql_span_corrupt(block: int = 8, millis: int = 250, seed: int = 1) -> str:
@@ -152,11 +86,11 @@ corrupted AS (
 )"""
 
 
-def span_corrupt_arrow(
+def span_corrupt(
     req: DataFrame, block: int = 8, millis: int = 250, seed: int = 1
 ) -> DataFrame:
-    """Arrow scale face: identical output to :func:`span_corrupt`, one
-    vectorized pass over the flat token buffer."""
+    """(doc_id, n_tok, n_masked, inputs, targets) in one vectorized pass
+    over the flat token buffer."""
     import pyarrow as pa
 
     if not (0 <= millis <= _MASK_DEN):
@@ -176,9 +110,11 @@ def span_corrupt_arrow(
             np.cumsum(lengths, out=starts[1:])
             pos = np.arange(nv, dtype=np.int64) - starts[rowmap]
             blk = pos // block
-            masked = (
-                (docs[rowmap] * _MASK_MUL_DOC + (blk + seed) * _MASK_MUL_BLK)
-                % _MASK_DEN
+            # C-style remainder, the mirror's: a negative doc's residue
+            # is negative and masks every block (numpy's % would floor)
+            masked = np.fmod(
+                docs[rowmap] * _MASK_MUL_DOC + (blk + seed) * _MASK_MUL_BLK,
+                _MASK_DEN,
             ) < millis
             blk_start = pos % block == 0
             # per-row sequential rank of each MASKED block: cumsum of

@@ -16,7 +16,10 @@ from pyspark.sql import functions as F
 
 from tokforge.pipeline.stage import make_scratch_dir, stage_boundary
 from tokforge.sources.requests import (
+    _synth_tokens,
+    array_digest,
     load_documents,
+    replicated_documents,
     requests_df,
     sql_requests_cte,
 )
@@ -115,8 +118,8 @@ GROUP BY 1"""
 #
 # One MinHash kernel and one SimHash kernel, both over the flat token
 # layout (values, rowmap, lengths).  Two token sources feed them:
-# _flat_tokens for frames that carry `tokens`, and _synth_tokens for the
-# key-only request lineage below.
+# _flat_tokens for frames that carry `tokens`, and the request synthesizer
+# (sources.requests._synth_tokens) for the key-only request lineage below.
 # ---------------------------------------------------------------------------
 
 
@@ -136,21 +139,6 @@ def _flat_tokens(batch):
     offsets = offsets - offsets[0]
     lengths = np.diff(offsets)
     rowmap = np.repeat(np.arange(len(lengths), dtype=np.int64), lengths)
-    return values, rowmap, lengths
-
-
-def _synth_tokens(doc_ids: "np.ndarray"):
-    """The numpy twin of sources.requests.tokens_col / n_tok_col in the
-    _flat_tokens layout: tokens[i] = (doc_id*MUL_A + i*MUL_B) % VOCAB,
-    with the row length from the doc_id % 4 ladder."""
-    from tokforge.constants import VOCAB
-    from tokforge.sources.requests import LEN_LADDER, MUL_A, MUL_B
-
-    lengths = np.asarray(LEN_LADDER, dtype=np.int64)[doc_ids % 4]
-    rowmap = np.repeat(np.arange(len(doc_ids), dtype=np.int64), lengths)
-    starts = np.repeat(np.cumsum(lengths) - lengths, lengths)
-    pos = np.arange(len(rowmap), dtype=np.int64) - starts
-    values = (np.repeat(doc_ids, lengths) * MUL_A + pos * MUL_B) % VOCAB
     return values, rowmap, lengths
 
 
@@ -277,16 +265,13 @@ def simhash_arrow(req: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Fused synthesis + hash (round-8 optimization).  The request stream is
-# DERIVED data: tokens[i] = (doc_id*MUL_A + i*MUL_B) % VOCAB with n from
-# the doc_id%4 ladder (sources/requests.py, mirrored by the oracle CTE).
-# Materializing that array via interpreted HOF expressions on top of an
-# unsplittable single-row-group scan made the dedup hash queries serial
-# AND shipped the full token arrays through the exchange.  These paths
-# shuffle ONLY doc_id (guide §2.3 "shuffle keys, not payloads"), then
-# _synth_tokens rebuilds the exact same tokens inside the Arrow pass that
-# runs the same kernels on them — oracles unchanged
-# (tests/test_dedup_synth.py pins the synthesis to requests_df).
+# Fused synthesis + hash.  The request stream is DERIVED data
+# (sources/requests.py, mirrored by the oracle CTE), so these paths
+# shuffle ONLY the int64 doc_id (guide §2.3 "shuffle keys, not payloads")
+# over the unsplittable single-row-group scan, never the token arrays;
+# the one synthesizer, _synth_tokens, rebuilds the tokens inside the same
+# Arrow pass that runs the kernels on them — oracles unchanged
+# (tests/test_dedup_synth.py pins fused == unfused over requests_df).
 # ---------------------------------------------------------------------------
 
 
@@ -297,16 +282,8 @@ def _synth_request_ids(
     spread across the session's parallelism (the documents scan is a
     single unsplittable row group; the rows here are one int64 each, so
     the round-robin exchange is ~free)."""
-    from tokforge.sources.requests import REPLICA_STRIDE
-
-    docs = load_documents(spark, sf_dir).select("doc_id")
-    if replicas > 1:
-        reps = spark.range(replicas).select(F.col("id").alias("rep"))
-        docs = docs.crossJoin(F.broadcast(reps)).select(
-            (F.col("doc_id") + F.col("rep") * F.lit(REPLICA_STRIDE)).alias("doc_id")
-        )
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return docs.repartition(n_part)
+    return replicated_documents(spark, sf_dir, replicas).repartition(n_part)
 
 
 def _synth_hashed(ids: DataFrame, out: tuple[str, str], kernel) -> DataFrame:
@@ -859,7 +836,7 @@ def cross_split_leakage(
     )
     sig = simhash_arrow(base.select("doc_id", "tokens"))
     keyed = base.join(sig, "doc_id").withColumn(
-        "__dig", F.md5(F.concat_ws(",", F.col("tokens").cast("array<string>")))
+        "__dig", array_digest("tokens")
     )
     is_train = F.col("__split") == train_name
     by_dig = keyed.groupBy("__dig").agg(

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tokforge.sources.requests import array_digest
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -174,9 +176,12 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same information without float-formatting hazards).  Output is
     scalar-only so the driver canonicalizer can sort it."""
     feats = extract_features(synthesize_media(spark, _N_MEDIA))
-    digest = F.md5(F.concat_ws(",", F.col("colsum").cast("array<string>")))
     return feats.select(
-        "media_id", "kind", digest.alias("feature_md5"), "decoded_bytes", "thumb_width"
+        "media_id",
+        "kind",
+        array_digest("colsum").alias("feature_md5"),
+        "decoded_bytes",
+        "thumb_width",
     )
 
 

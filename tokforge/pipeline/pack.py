@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tokforge.pipeline.sample import _order_key, _running_total, token_weight_col
-from tokforge.sources.requests import load_documents
+from tokforge.sources.requests import array_digest, load_documents
 
 
 def pack_sequences(
@@ -159,7 +159,7 @@ def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "chunk_id",
         F.col("n_fill").cast("long").alias("n_fill"),
-        F.md5(F.concat_ws(",", "tokens")).alias("chunk_md5"),
+        array_digest("tokens").alias("chunk_md5"),
     )
 
 

@@ -52,7 +52,12 @@ from tokforge.pipeline.substr import (
     kgram_positions,
     remove_spans,
 )
-from tokforge.sources.requests import load_documents, requests_df, sql_requests_cte
+from tokforge.sources.requests import (
+    array_digest,
+    load_documents,
+    requests_df,
+    sql_requests_cte,
+)
 
 # same thresholds as the gated quality_gate row
 from tokforge.pipeline.corpusops import _GATE_PARAMS  # noqa: PLC2701
@@ -68,8 +73,6 @@ SEQ_LEN = 64
 EPOCH = 1
 # dyadic mix weights (exact double division) — the assembly-layer rule
 ILV_WEIGHTS = {f"src{i}": float(2 ** (i % 5)) for i in range(20)}
-
-_DIGEST = lambda c: F.md5(F.concat_ws(",", F.col(c).cast("array<string>")))
 
 
 def corpus_product(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,7 +107,7 @@ def corpus_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 3. exact dedup on the edited stream (keep lowest doc id)
-    d3 = d2.withColumn("tokens_md5", _DIGEST("tokens"))
+    d3 = d2.withColumn("tokens_md5", array_digest("tokens"))
     w_ex = Window.partitionBy("tokens_md5").orderBy("doc_num")
     d3 = d3.withColumn("__rk", F.row_number().over(w_ex)).filter(
         "__rk = 1"

@@ -147,16 +147,7 @@ def knn_bruteforce(emb: DataFrame, queries: DataFrame, k_top: int = TOP_K) -> Da
         [float(x) for x in r["qvec"]] if r["qvec"] is not None else None
         for r in qrows
     ]
-    # sequential-fold query norms: same op order as _norm_spark
-    q_norms = []
-    for v in q_vecs:
-        if v is None:
-            q_norms.append(0.0)
-            continue
-        acc = 0.0
-        for x in v:
-            acc = acc + x * x
-        q_norms.append(math.sqrt(acc))
+    q_norms = [0.0 if v is None else _py_norm(v) for v in q_vecs]
 
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -682,8 +673,6 @@ def _quant_expr(col: Column) -> Column:
 
 
 def _py_norm(s) -> float:
-    import math
-
     # left-to-right fold, the same order Spark's aggregate and DuckDB's
     # list_sum use — the literal must equal what the oracle computes
     acc = 0.0

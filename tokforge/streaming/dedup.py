@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tokforge.sources.requests import array_digest
 from tokforge.streaming.sink import IdempotentParquetSink
 from tokforge.streaming.source import read_request_stream
 
@@ -38,7 +39,7 @@ def content_hash_col() -> "F.Column":
     """md5 over the comma-joined token array — byte-identical to the batch
     exact-dedup key (pipeline/dedup.py) and to the DuckDB mirror
     ``md5(array_to_string(tokens, ','))``."""
-    return F.md5(F.concat_ws(",", F.col("tokens").cast("array<string>")))
+    return array_digest("tokens")
 
 
 def dedup_request_stream(

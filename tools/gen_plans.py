@@ -1,4 +1,8 @@
+import atexit
+import os
+import shutil
 import sys
+import tempfile
 sys.path.insert(0, '/root/repo')
 from tokforge.engine.session import build_spark
 from tokforge.engine.config import EngineConfig
@@ -14,12 +18,18 @@ def fmt(df):
 
 sections = []
 
-req = requests_df(spark, SF, "resize:fit:64/format:int16")
+# The request table as production meets it, a parquet scan (requests_df
+# synthesizes n_tok/tokens in a mapInArrow pass of its own); the fixed
+# directory name keeps the regenerated snapshot stable.
+req_dir = os.path.join(tempfile.gettempdir(), "tokforge_plans_requests")
+atexit.register(shutil.rmtree, req_dir, ignore_errors=True)
+requests_df(spark, SF, "resize:fit:64/format:int16").write.mode("overwrite").parquet(req_dir)
+req = spark.read.parquet(req_dir)
 out = transform_requests_arrow(req, EngineConfig(), verify=False).select("doc_id", "n_out", "size_bytes")
 sections.append(("Flagship transform path (scan -> one mapInArrow -> project)",
-"""The hot path.  What to check: ONE `MapInArrow` node, no `Exchange`
-anywhere, `ReadSchema` restricted to doc_id+source (request synthesis is
-column-pruned), whole-stage codegen around the column algebra.""", fmt(out)))
+"""The hot path, over a parquet request table.  What to check: ONE
+`MapInArrow` node, no `Exchange` anywhere, whole-stage codegen around the
+column algebra.""", fmt(out)))
 
 from tokforge.pipeline.similarity import q_knn_bruteforce, q_ivf_search, q_embed_near_dup
 sections.append(("knn_bruteforce (broadcast queries, two-phase top-k)",
@@ -55,10 +65,11 @@ filter.""", fmt(q_embed_near_dup(spark, SF))))
 from tokforge.engine.queries import q_admission_policy
 sections.append(("admission_policy (bearer + MIME + skip_processing)",
 """What to check: the constant bearer comparison is folded by Catalyst
-into a doc_id predicate that reaches the scan (`PushedFilters` /
-`DataFilters`), so rejected rows never leave the parquet reader; the
-whole composite is still ONE `MapInArrow` pass with zero `Exchange` —
-admission adds no shuffle and no extra Python crossing.""",
+into a JVM `Filter` on doc_id below the transform's `MapInArrow`, so
+rejected rows never reach the transform (the predicate cannot cross
+requests_df's synthesis `MapInArrow`); admission adds no `Exchange` and
+no Python crossing of its own: the transform's is the only `MapInArrow`
+above the synthesis.""",
 fmt(q_admission_policy(spark, SF))))
 
 from tokforge.pipeline.dedup import q_ngram_jaccard
@@ -100,7 +111,7 @@ fmt(epoch_order(load_documents(spark, SF).select("doc_id", "source"),
                 epoch=0, id_cols=("doc_id",)))))
 
 from tokforge.streaming.patterns import detect_pattern_batch, detect_absence_batch
-ev = requests_df(spark, SF, "resize:fit:64/format:int16").select(
+ev = req.select(
     "source", "doc_id",
     (F.element_at("tokens", 1) % 3).cast("string").alias("event"), "ts")
 sections.append(("CEP batch faces (pattern leads / absence running-min)",
@@ -132,13 +143,13 @@ via `BroadcastNestedLoopJoin` of a literal 3-row side.  Volume
 evidence in BENCH.md: same ~2.2 s wall at 49k and 31.5M tokens.""",
 fmt(length_quantiles(req))))
 
-from tokforge.pipeline.corrupt import span_corrupt_arrow
-sections.append(("span_corrupt_arrow (objective construction is map-only)",
-"""What to check: the whole op is Scan -> Project -> ONE `MapInArrow`
-— zero `Exchange`, zero aggregation.  The mask derives from integer
+from tokforge.pipeline.corrupt import span_corrupt
+sections.append(("span_corrupt (objective construction is map-only)",
+"""What to check: the whole op is Scan -> ONE `MapInArrow` — zero
+`Exchange`, zero aggregation.  The mask derives from integer
 hash math over (doc_id, block, seed), so task retry/speculation
 regenerates identical rows with no stored state.""",
-fmt(span_corrupt_arrow(req))))
+fmt(span_corrupt(req))))
 
 with open('/root/repo/docs/PLANS.md', 'w') as f:
     f.write("""# Physical plans of the headline queries (evidence, not intention)
