@@ -1,16 +1,17 @@
-"""Row-identity of the Arrow knn fast path vs the HOF-expression
-reference (round-8 optimization: the interpreted `aggregate`/`zip_with`
-cosine moved into numpy with the identical IEEE fold order; round(.,4)
-stays JVM-side on the bit-identical double)."""
+"""Row-identity of the Arrow knn pass (and of the IVF probe, which is the
+same pass) vs the HOF-expression reference: the interpreted
+`aggregate`/`zip_with` cosine below is what the numpy fold reproduces in
+the identical IEEE fold order; round(.,4) stays JVM-side on the
+bit-identical double."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from tokforge.pipeline.similarity import (
+    IVF_K,
     N_QUERIES,
     TOP_K,
-    _dot_spark,
-    _norm_spark,
+    ivf_search_trained,
     knn_bruteforce,
     topk_per_key,
 )
@@ -18,6 +19,24 @@ from tokforge.sources.requests import load_embeddings
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
+
+
+def _dot_spark(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _norm_spark(a):
+    return F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+    )
 
 
 def knn_bruteforce_reference(emb, queries, k_top=TOP_K):
@@ -73,10 +92,10 @@ def _edge_corpus(spark):
 
 
 def test_arrow_knn_survives_zero_norm(spark):
-    """Deliberate robustness difference vs the reference: a zero-norm
-    vector yields a NaN/Inf cosine (numpy IEEE semantics) instead of an
-    ANSI DIVIDE_BY_ZERO error; NaN sorts above every double, matching
-    Spark's sort rule for whatever NaNs reach the rank stage."""
+    """Deliberate difference vs the HOF reference, which raises ANSI
+    DIVIDE_BY_ZERO: a zero-norm vector's cosine is NULL, as DuckDB's
+    division gives, so it ranks below every number (NULLS LAST) and is
+    still emitted when the corpus has fewer than k numeric candidates."""
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.5, 0.5])],
         "vec_id long, embedding array<float>",
@@ -85,7 +104,10 @@ def test_arrow_knn_survives_zero_norm(spark):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     rows = knn_bruteforce(emb, queries, 2).collect()
-    assert {r["vec_id"] for r in rows} == {1, 2}
+    assert {(r["vec_id"], r["cos_sim"], r["rank"]) for r in rows} == {
+        (2, 0.7071, 1),
+        (1, None, 2),
+    }
 
 
 def test_arrow_knn_matches_reference_on_edge_corpus(spark):
@@ -120,3 +142,18 @@ def test_arrow_knn_query_cap(spark):
     )
     with pytest.raises(ValueError, match="cap"):
         knn_bruteforce(emb, queries, 1)
+
+
+def test_ivf_probe_of_every_cell_matches_reference_on_edge_corpus(spark):
+    """The IVF probe is knn's pass restricted to the probed cells, so
+    probing all IVF_K cells must give the reference knn rows exactly —
+    ragged lengths, the NULL embedding (both NULL against every cell,
+    hence cell 0) and the exact ties included."""
+    emb = _edge_corpus(spark)
+    queries = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    sums = [[i + 1, 3 - 2 * i, (i * i) % 5 - 2] for i in range(IVF_K)]
+    for k in (1, 3, 20):
+        got = ivf_search_trained(emb, queries, sums, nprobe=IVF_K, k_top=k)
+        assert _rows(got) == _rows(knn_bruteforce_reference(emb, queries, k)), f"k={k}"

@@ -113,14 +113,24 @@ def test_knn_topk_is_two_phase(spark):
     assert "SPARK_PARTITION_ID" in plan.upper() or "_pid" in plan
 
 
+def _assert_collected_probes_two_passes(plan: str) -> None:
+    """The IVF search contract: the probe side is a small collected
+    closure, so the plan reads the corpus once and nothing else (no probe
+    subtree, no BroadcastExchange needed); the corpus goes through one
+    MapInArrow for its cell and one for its scores; no pair scan."""
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("MapInArrow") == 2, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+
+
 def test_ivf_search_broadcasts_probes_no_corpus_window(spark):
-    """The IVF probe broadcasts the query side; cell assignment is a pure
-    column expression (no per-vector window over the corpus)."""
+    """The IVF probe ships the (collected, capped) query side to every
+    scoring task; cell assignment is one scoring pass over the scan (no
+    per-vector window or shuffle over the corpus)."""
     from tokforge.pipeline.similarity import q_ivf_search
 
-    df = q_ivf_search(spark, SF_SMALL)
-    plan = plan_of(df)
-    assert "BroadcastExchange" in plan or "Broadcast" in plan
+    _assert_collected_probes_two_passes(plan_of(q_ivf_search(spark, SF_SMALL)))
 
 
 def test_jaccard_verifies_lsh_candidates(spark):
@@ -343,17 +353,39 @@ def test_apply_bpe_is_map_only_both_paths(spark):
 
 
 def test_ivf_trained_search_broadcasts_probes_no_corpus_window(spark):
-    """The trained-IVF search keeps the IVF scale contract: exploded
-    query probes BROADCAST into an equi-join on the cell key (never a
-    nested-loop pair scan), and the only corpus-row shuffles are the
-    two-phase top-k's qid exchanges — assignment is a pure column
-    expression over the scan."""
+    """The trained-IVF search keeps the IVF scale contract: each query's
+    nprobe cells travel with the collected probe set (never a nested-loop
+    pair scan), and the corpus takes its cell in one scoring pass over the
+    scan before knn's scoring pass."""
     from tokforge.pipeline.similarity import q_ivf_search_trained
 
-    plan = plan_of(q_ivf_search_trained(spark, SF_SMALL))
-    assert "BroadcastExchange" in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
+    _assert_collected_probes_two_passes(plan_of(q_ivf_search_trained(spark, SF_SMALL)))
+
+
+def test_similarity_plans_carry_no_interpreted_cosine(spark):
+    """Every similarity score comes from the numpy fold: no similarity
+    query's analyzed plan holds an interpreted array fold, and
+    ann_ivf_assign is one scoring pass plus ONE aggregate keyed by cell
+    (no per-vector shuffle)."""
+    from tokforge.pipeline.similarity import (
+        SIMILARITY_QUERIES,
+        SIMILARITY_QUERIES_EXTRA,
+        q_ivf_assign,
+    )
+
+    for name, (fn, _) in {**SIMILARITY_QUERIES, **SIMILARITY_QUERIES_EXTRA}.items():
+        analyzed = fn(spark, SF_SMALL)._jdf.queryExecution().analyzed().toString()
+        assert "zip_with" not in analyzed and "aggregate(" not in analyzed, name
+
+    df = q_ivf_assign(spark, SF_SMALL)
+    aggs = [
+        line.strip(" :+-")
+        for line in optimized_of(df).splitlines()
+        if line.strip(" :+-").startswith("Aggregate")
+    ]
+    assert len(aggs) == 1 and aggs[0].startswith("Aggregate [cell#"), aggs
+    plan = plan_of(df)
+    assert plan.count("Exchange") == 1 and "hashpartitioning(cell#" in plan, plan
 
 
 def test_lm_score_joins_are_hash_equi_no_corpus_sort(spark):

@@ -30,8 +30,9 @@ from tokforge.pipeline.similarity import (
     IVF_K,
     N_QUERIES,
     TOP_K,
-    _argmax_cell_int,
+    _best_cells,
     _quant_expr,
+    _with_cos,
     ivf_search_trained,
     knn_bruteforce,
     q_ivf_search_trained,
@@ -128,10 +129,9 @@ def test_nprobe_monotone_and_pruning(spark):
     assert r1 <= r2 <= rk
     assert rk == 1.0  # probing every cell IS the exact search
 
-    corpus = emb.select(
-        "vec_id",
-        _argmax_cell_int(_quant_expr(F.col("embedding")), sums).alias("cell"),
-    )
+    corpus = _with_cos(
+        emb.select(_quant_expr(F.col("embedding")).alias("eq")), "eq", sums
+    ).select(_best_cells(F.col("cos"), 1)[0].alias("cell"))
     sizes = {r["cell"]: r["n"] for r in corpus.groupBy("cell").agg(F.count("*").alias("n")).collect()}
     # candidates actually scanned at nprobe=2 = sum of the two probed
     # cells' sizes per query; bound it by the two largest cells

@@ -3,27 +3,31 @@ brute-force cosine top-k as the exactness baseline, IVF coarse assignment
 plus a cell-pruned probe query as the scale path, and LSH sign-bucketed
 near-duplicate pairs.
 
+Every cosine comes from one numpy fold (``_cos``) inside a mapInArrow
+pass, in the accumulation order of DuckDB's list_sum, so the unrounded
+double is bit-identical on both engines; round(., 4), the cell argmax and
+the ranks stay JVM-side so Spark and DuckDB hash-match.  A zero
+denominator gives a NULL cosine, as in the oracle.
+
 100 TB shapes:
-- brute-force: the tiny query set broadcasts; the corpus never shuffles;
-  top-k is two-phase (local per-partition top-k, then a final rank over
-  <= k * n_partitions survivors) so no reducer ever sees the whole corpus.
+- brute-force: the tiny query set is collected (capped) and closed over
+  by one scoring pass; the corpus never joins; top-k is two-phase (local
+  per-partition top-k, then a final rank over <= k * n_partitions
+  survivors) so no reducer ever sees the whole corpus.
 - IVF: the centroid codebook is collected driver-side (it is the small dim
-  table — standard KMeans/IVF practice), assignment is a pure column
-  expression (zero shuffle), and the probe joins only the query's cell.
+  table — standard KMeans/IVF practice), assignment is one scoring pass
+  over the scan (zero shuffle), and each probe scores only its cells'
+  rows in the brute-force pass.
 - near-dup: sign-LSH over NEAR_DUP_BITS hyperplanes (bucket count 2^bits
   grows with the corpus via the constant) with 1-bit multi-probe for
   recall; candidate pairs stay within (bucket, probe) keys — all-pairs
   never materializes.
-
-Cosine math is done in DOUBLE with identical accumulation order on both
-engines and rounded to 4 decimals so Spark and DuckDB hash-match.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -37,24 +41,6 @@ N_CELLS = 4  # IVF coarse cells = the first N_CELLS vectors as centroids
 PROBE_LO, PROBE_HI = N_CELLS, N_CELLS + 4
 
 
-def _dot_spark(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm_spark(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 _SQL_DOT = (
     "list_sum(list_transform(range(len({a})), "
     "i -> CAST({a}[i + 1] AS DOUBLE) * CAST({b}[i + 1] AS DOUBLE)))"
@@ -62,6 +48,80 @@ _SQL_DOT = (
 _SQL_NORM = (
     "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 )
+
+
+def _cos(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The one cosine fold: last axis of float64 ``a`` against ``b`` (the
+    leading axes broadcast — a batch block against a reference set, or
+    row against row).  Returns (cos, null).
+
+    Dot and norms add left to right over the dim axis with a separate
+    multiply and add — the order of Spark's interpreted array fold (the
+    reference in tests/test_knn_arrow.py) and of DuckDB's list_sum — so
+    the unrounded double is bit-identical to both; each norm is computed
+    once per row, not once per pair.  A zero denominator is NULL, as
+    DuckDB's division gives (docs/SEMANTICS.md)."""
+    a = np.ascontiguousarray(np.moveaxis(a, -1, 0))
+    b = np.ascontiguousarray(np.moveaxis(b, -1, 0))
+    dot = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    na, nb = np.zeros(a.shape[1:]), np.zeros(b.shape[1:])
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    den = np.sqrt(na) * np.sqrt(nb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / den, np.broadcast_to(den == 0, dot.shape)
+
+
+def _vectors(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """An Arrow list<number> column as (flat float64 values, row starts,
+    row lengths).  A NULL row, or one holding a NULL element, has length
+    -1: its cosine is NULL against everything, as Spark's array fold is."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    vals = col.values.slice(off[0], off[-1] - off[0])
+    off = off - off[0]
+    lens = np.diff(off)
+    lens[col.is_null().to_numpy(zero_copy_only=False)] = -1
+    if vals.null_count:
+        holes = np.nonzero(vals.is_null().to_numpy(zero_copy_only=False))[0]
+        lens[np.searchsorted(off, holes, side="right") - 1] = -1
+    flat = vals.to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat, off[:-1], lens
+
+
+def _gather(flat: np.ndarray, starts: np.ndarray, rows: np.ndarray, d: int) -> np.ndarray:
+    return flat[starts[rows][:, None] + np.arange(d)]
+
+
+def _cos_to(vecs, refs: list, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(rows x refs) fold of the ``rows`` of a parsed batch (``_vectors``)
+    against a collected reference set; NULL where the lengths differ or
+    either side is NULL."""
+    flat, starts, lens = vecs
+    cos = np.zeros((rows.size, len(refs)))
+    null = np.ones(cos.shape, dtype=bool)
+    for d in {len(r) for r in refs if r is not None}:
+        i = np.nonzero(lens[rows] == d)[0]
+        cols = [j for j, r in enumerate(refs) if r is not None and len(r) == d]
+        if i.size:
+            ref = np.asarray([refs[j] for j in cols], dtype=np.float64)
+            c, z = _cos(_gather(flat, starts, rows[i], d)[:, None, :], ref[None])
+            cos[np.ix_(i, cols)], null[np.ix_(i, cols)] = c, z
+    return cos, null
+
+
+def _cos_pairs(va, vb) -> tuple[np.ndarray, np.ndarray]:
+    """Row-against-row fold of two parsed batches of equal row count."""
+    (fa, sa, la), (fb, sb, lb) = va, vb
+    cos = np.zeros(la.size)
+    null = np.ones(la.size, dtype=bool)
+    for d in np.unique(la[(la == lb) & (la >= 0)]):
+        rows = np.nonzero((la == d) & (lb == d))[0]
+        cos[rows], null[rows] = _cos(_gather(fa, sa, rows, d), _gather(fb, sb, rows, d))
+    return cos, null
 
 
 def topk_per_key(
@@ -90,154 +150,118 @@ def topk_per_key(
 
 
 # Derive-from-data collect cap (capped-with-error, the adjudicated
-# pattern): the query set is the broadcast-sized dim table by design.
+# pattern): every collected reference set — knn queries, IVF centroids
+# and probes, the trained codebook — is a broadcast-sized dim table.
 KNN_QUERY_CAP = 8192
 
-# Rounding-bucket slack for the local prefilter: keep any row whose
-# UNROUNDED cosine is within this of the k-th local best — a strict
-# superset of every row that can still tie/beat rank k after round(.,4)
-# (bucket width 1e-4; 2e-4 leaves >50x margin over double representation
-# fuzz of the thresholds).
+
+def _collect_capped(df: DataFrame, what: str) -> list:
+    rows = df.limit(KNN_QUERY_CAP + 1).collect()
+    if len(rows) > KNN_QUERY_CAP:
+        raise ValueError(
+            f"{what} has more than the broadcast-shaped cap of "
+            f"{KNN_QUERY_CAP} rows; shard it"
+        )
+    return rows
+
+
+# Rounding-bucket slack for the Arrow prefilters: keep any row whose
+# UNROUNDED cosine is within this of the cut (the k-th local best, or the
+# near-dup threshold) — a strict superset of every row that can still
+# reach it after round(.,4) (bucket width 1e-4; 2e-4 leaves >50x margin
+# over double representation fuzz of the thresholds).
 _KNN_PREFILTER_SLACK = 2e-4
+
+# Scores per (batch rows x queries) block: bounds the fold's working
+# set at a few MB whatever the query count.
+_BLOCK_SCORES = 1 << 20
 
 
 def knn_bruteforce(emb: DataFrame, queries: DataFrame, k_top: int = TOP_K) -> DataFrame:
     """Exact cosine top-k of ``queries`` (qid, qvec) against a corpus
-    (vec_id, embedding) on the Arrow fast path.
+    (vec_id, embedding): ONE mapInArrow pass over the corpus.
 
-    The HOF-expression cosine (the broadcast cross-join reference in
-    tests/test_knn_arrow.py) is interpreted by Catalyst at ~0.5M
-    element-ops/s; this path moves the identical IEEE arithmetic into
-    numpy inside ONE mapInArrow pass over the corpus:
+    - the bounded query set is collected (``_collect_capped``),
+    - per corpus batch ``_cos`` scores the (rows x queries) block in the
+      exact IEEE order of the HOF reference (tests/test_knn_arrow.py),
+    - a conservative local top-k prefilter per query (threshold = k-th
+      local best minus _KNN_PREFILTER_SLACK) bounds the stage's output at
+      ~k rows per (query, batch); NaN is kept above every number and
+      NULL below, as Spark sorts them,
+    - round(.,4) runs JVM-side on the bit-identical double (BigDecimal
+      HALF_UP) and topk_per_key assigns the final ranks.
 
-    - the bounded query set is collected (it is the broadcast dim table;
-      KNN_QUERY_CAP raises past the cap rather than collect unbounded),
-    - per corpus batch the dot/norm folds run as 64 vectorized adds in
-      EXACTLY the left-to-right IEEE order of F.aggregate's fold, so the
-      unrounded double is bit-identical to the expression result,
-    - a conservative local top-k prefilter (threshold = k-th local best
-      minus _KNN_PREFILTER_SLACK, NaNs kept — Spark sorts NaN above all
-      doubles) bounds the Arrow stage's output at ~k rows per (query,
-      batch): the corpus never leaves its scan task,
-    - round(.,4) then happens JVM-SIDE on the bit-identical double (same
-      BigDecimal HALF_UP as before), and the existing two-phase rank
-      (topk_per_key) assigns final ranks over the tiny survivor set.
+    NULL cosines (length mismatch, NULL vector, zero norm) are emitted
+    only when a batch has fewer than k_top scored candidates for the
+    query, which keeps the NULLS-LAST tail exact on degenerate inputs.
 
-    Rows whose embedding length differs from the query's produce NULL
-    cosine (zip_with's null-padding semantics); they rank below every
-    number and are emitted only when a batch has fewer than k_top
-    length-matched candidates, preserving exact parity on degenerate
-    inputs.  tests/test_knn_arrow.py pins row-identity to the reference
-    on every fixture SF plus ragged/NaN edge corpora."""
-    from typing import Iterator
-
-    import pyarrow as pa
-
-    qrows = queries.select("qid", "qvec").collect()
-    if len(qrows) > KNN_QUERY_CAP:
-        raise ValueError(
-            f"knn_bruteforce query set has {len(qrows)} rows, above the "
-            f"broadcast-shaped cap {KNN_QUERY_CAP}; shard the query set"
-        )
-    q_ids = [r["qid"] for r in qrows]
-    # None qvec => every cosine for that query is NULL (zip_with/aggregate
-    # null semantics); kept as None so the batch fn routes it to the
-    # null-cosine path.
-    q_vecs = [
-        [float(x) for x in r["qvec"]] if r["qvec"] is not None else None
-        for r in qrows
-    ]
-    q_norms = [0.0 if v is None else _py_norm(v) for v in q_vecs]
-
+    The IVF probes are this same pass: given a corpus carrying ``cell``
+    and queries carrying ``cells`` (array<int>), each cell's rows are
+    scored only against the queries that probe it."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    qid_pa = to_arrow_type(queries.schema["qid"].dataType)
-    vid_pa = to_arrow_type(emb.schema["vec_id"].dataType)
-    qid_ddl = queries.schema["qid"].dataType.simpleString()
-    vid_ddl = emb.schema["vec_id"].dataType.simpleString()
+    probed = "cells" in queries.columns
+    qrows = _collect_capped(
+        queries.select("qid", "qvec", *(["cells"] if probed else [])),
+        "knn query set",
+    )
+    refs = [r["qvec"] for r in qrows]
+    qid_type = queries.schema["qid"].dataType
+    q_ids = pa.array([r["qid"] for r in qrows], type=to_arrow_type(qid_type))
+    q_key = q_ids.to_numpy(zero_copy_only=False)
+    q_ok = ~q_ids.is_null().to_numpy(zero_copy_only=False)
+    probing: dict = {}  # cell -> the queries that probe it
+    for j, r in enumerate(qrows if probed else ()):
+        for c in r["cells"] or ():
+            probing.setdefault(c, []).append(j)
+
+    def score(batches):
+        for batch in batches:
+            vid = batch.column("vec_id")
+            v_key = vid.to_numpy(zero_copy_only=False)
+            v_ok = ~vid.is_null().to_numpy(zero_copy_only=False)
+            vecs = _vectors(batch.column("embedding"))
+            if probed:
+                cell = batch.column("cell").to_numpy(zero_copy_only=False)
+                groups = [(np.nonzero(cell == c)[0], np.array(q)) for c, q in probing.items()]
+            else:
+                groups = [(np.arange(batch.num_rows), np.arange(len(refs)))]
+            hits = []
+            for rows, qs in groups:
+                step = max(1, _BLOCK_SCORES // max(rows.size, 1))
+                for q in (qs[lo : lo + step] for lo in range(0, qs.size, step)):
+                    cos, null = _cos_to(vecs, [refs[j] for j in q], rows)
+                    e = (v_key[rows, None] != q_key[q]) & v_ok[rows, None] & q_ok[q]
+                    matched = e & ~null
+                    nan = np.isnan(cos)
+                    kth = np.full(q.size, -np.inf)
+                    if rows.size > k_top:
+                        s = np.where(matched & ~nan, cos, -np.inf)
+                        kth = np.partition(s, rows.size - k_top, axis=0)[rows.size - k_top]
+                    with np.errstate(invalid="ignore"):
+                        keep = matched & ((cos >= kth - _KNN_PREFILTER_SLACK) | nan)
+                    keep |= e & null & (matched.sum(axis=0) < k_top)
+                    r, c = np.nonzero(keep)
+                    hits.append((rows[r], q[c], cos[r, c], null[r, c]))
+            if hits:
+                r, c, cos, null = (np.concatenate(x) for x in zip(*hits))
+                yield pa.RecordBatch.from_arrays(
+                    [q_ids.take(c), vid.take(r), pa.array(cos, mask=null)],
+                    names=["qid", "vec_id", "cos_un"],
+                )
+
     spark = emb.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            m = batch.num_rows
-            if m == 0:
-                continue
-            col = batch.column("embedding")
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = col.values.to_numpy(zero_copy_only=False)
-            flat = flat[offsets[0] : offsets[-1]]
-            offsets = offsets - offsets[0]
-            lens = np.diff(offsets)
-            null_rows = np.asarray(col.is_null().to_numpy(zero_copy_only=False))
-            vec_ids = batch.column("vec_id").to_pylist()
-            vec_np = np.asarray(vec_ids, dtype=object)
-
-            out_qid: list = []
-            out_vid: list = []
-            out_cos: list = []
-
-            for j, qid in enumerate(q_ids):
-                elig = np.asarray([v != qid for v in vec_ids], dtype=bool)
-                if q_vecs[j] is None:
-                    matched = np.zeros(m, dtype=bool)
-                else:
-                    dq = len(q_vecs[j])
-                    matched = elig & (lens == dq) & ~null_rows
-                idx = np.nonzero(matched)[0]
-                if idx.size:
-                    # gather the length-dq rows into an (r, dq) float64 matrix
-                    gat = offsets[idx][:, None] + np.arange(dq, dtype=np.int64)
-                    mat = flat[gat].astype(np.float64)
-                    qv = np.asarray(q_vecs[j], dtype=np.float64)
-                    dot = np.zeros(idx.size, dtype=np.float64)
-                    nrm = np.zeros(idx.size, dtype=np.float64)
-                    for i in range(dq):
-                        ci = mat[:, i]
-                        np.add(dot, qv[i] * ci, out=dot)
-                        np.add(nrm, ci * ci, out=nrm)
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        cos = dot / (q_norms[j] * np.sqrt(nrm))
-                    nan_mask = np.isnan(cos)
-                    finite = cos[~nan_mask]
-                    if finite.size > k_top:
-                        kth = np.partition(finite, finite.size - k_top)[
-                            finite.size - k_top
-                        ]
-                        keep = (cos >= kth - _KNN_PREFILTER_SLACK) | nan_mask
-                    else:
-                        keep = np.ones(idx.size, dtype=bool)
-                    for p in np.nonzero(keep)[0]:
-                        out_qid.append(qid)
-                        out_vid.append(vec_ids[idx[p]])
-                        out_cos.append(float(cos[p]))
-                if idx.size < k_top:
-                    # fewer than k length-matched candidates IN THIS BATCH:
-                    # NULL-cosine rows could still enter the top-k, emit them
-                    for p in np.nonzero(elig & ~matched)[0]:
-                        out_qid.append(qid)
-                        out_vid.append(vec_np[p])
-                        out_cos.append(None)
-
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_qid, type=qid_pa),
-                    pa.array(out_vid, type=vid_pa),
-                    pa.array(out_cos, type=pa.float64()),
-                ],
-                names=["qid", "vec_id", "cos_un"],
-            )
-
+    qid_ddl = qid_type.simpleString()
+    vid_ddl = emb.schema["vec_id"].dataType.simpleString()
     # the corpus scan may be a single unsplittable parquet row group; the
     # rows are narrow (id + dim floats), so a round-robin exchange is the
     # cheap way to spread the numpy scoring across the session's
     # parallelism (scale-adaptive: follows spark.sql.shuffle.partitions)
     pre = (
-        emb.select("vec_id", "embedding")
+        emb.select("vec_id", "embedding", *(["cell"] if probed else []))
         .repartition(n_part)
-        .mapInArrow(fn, f"qid {qid_ddl}, vec_id {vid_ddl}, cos_un double")
+        .mapInArrow(score, f"qid {qid_ddl}, vec_id {vid_ddl}, cos_un double")
     )
     scored = pre.select(
         "qid", "vec_id", F.round(F.col("cos_un"), 4).alias("cos_sim")
@@ -272,36 +296,85 @@ SELECT qid, vec_id, cos_sim, rank FROM (
 ) WHERE rank <= {TOP_K}"""
 
 
+def _with_cos(df: DataFrame, vec: str, refs: list) -> DataFrame:
+    """``df`` plus ``cos array<double>``: the fold of column ``vec``
+    against every vector of the collected reference set ``refs`` (one
+    mapInArrow; entry i is NULL where the fold is).  The cell choice
+    stays JVM-side (``_ranked_cells``) so round(.,4) is Spark's own."""
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+    k = len(refs)
+
+    def score(batches):
+        for batch in batches:
+            cos, null = _cos_to(_vectors(batch.column(vec)), refs, np.arange(batch.num_rows))
+            starts = pa.array(np.arange(0, cos.size + 1, k, dtype=np.int32))
+            lists = pa.ListArray.from_arrays(
+                starts, pa.array(cos.ravel(), mask=null.ravel())
+            )
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, lists], names=[*batch.schema.names, "cos"]
+            )
+
+    out = StructType([*df.schema.fields, StructField("cos", ArrayType(DoubleType()))])
+    return df.mapInArrow(score, out)
+
+
+def _ranked_cells(cos: Column) -> Column:
+    """The k (round(cos, 4), -cell) structs, best first: struct order is
+    ``ORDER BY cos DESC, cell`` — ties to the lowest cell, NaN first,
+    NULL last (a row NULL against every cell lands in cell 0)."""
+    return F.sort_array(
+        F.transform(
+            cos,
+            lambda c, i: F.struct(F.round(c, 4).alias("cos"), (-i).alias("negcell")),
+        ),
+        asc=False,
+    )
+
+
+def _best_cells(cos: Column, n: int) -> Column:
+    return F.transform(F.slice(_ranked_cells(cos), 1, n), lambda s: -s["negcell"])
+
+
+def _case_cell(cos: Column) -> Column:
+    """ann_ivf_search's cell rule, as its oracle's CASE chain
+    (``_sql_cell_case``) states it: the first cell whose rounded cosine is
+    >= every later cell's, else the last.  Equal to ``_ranked_cells``'s
+    choice on numbers; a NULL comparison is never true, so a row holding
+    any NULL cosine falls through to the last cell there."""
+    r = F.transform(cos, lambda c: F.round(c, 4))
+    unbeaten = F.transform(
+        r, lambda c, i: F.forall(F.slice(r, i + 2, F.size(r)), lambda d: c >= d)
+    )
+    return (F.array_position(unbeaten, True) - 1).cast("int")
+
+
+def _centroids(emb: DataFrame) -> list:
+    """The fixed codebook: the first N_CELLS vectors, cell = vec_id."""
+    rows = _collect_capped(
+        emb.filter(F.col("vec_id") < N_CELLS).select("vec_id", "embedding"),
+        "IVF centroid set",
+    )
+    cents = {r["vec_id"]: r["embedding"] for r in rows}
+    return [cents[i] for i in range(N_CELLS)]
+
+
 def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse assignment: each vector goes to the cell of its most
-    similar centroid (centroids = the first N_CELLS vectors, broadcast).
-    Downstream ANN probes only the query's cell (q_ivf_search)."""
+    similar centroid (centroids = the first N_CELLS vectors, collected).
+    One scoring pass, then one aggregate keyed by cell — no per-vector
+    shuffle.  Downstream ANN probes only the query's cell (q_ivf_search)."""
     emb = load_embeddings(spark, sf_dir)
-    cents = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec")
-    )
-    scored = emb.select("vec_id", "embedding").crossJoin(F.broadcast(cents))
-    cos = F.round(
-        _dot_spark(F.col("cvec"), F.col("embedding"))
-        / (_norm_spark(F.col("cvec")) * _norm_spark(F.col("embedding"))),
-        4,
-    )
-    # per-vector argmax as a map-side-combinable agg (max of (cos, -cell)
-    # picks highest cos, tie -> lowest cell) — no per-vector window.
-    agg = (
-        scored.select(
-            "vec_id",
-            F.struct(
-                cos.alias("cos"), (-F.col("cell")).cast("int").alias("negcell")
-            ).alias("sc"),
+    best = _ranked_cells(F.col("cos"))[0]
+    return (
+        _with_cos(emb.select("embedding"), "embedding", _centroids(emb))
+        .select((-best["negcell"]).alias("cell"), best["cos"].alias("cos"))
+        .groupBy("cell")
+        .agg(
+            F.count("*").alias("n_vectors"),
+            F.round(F.avg("cos"), 4).alias("avg_cos_to_centroid"),
         )
-        .groupBy("vec_id")
-        .agg(F.max("sc").alias("m"))
-        .select("vec_id", (-F.col("m.negcell")).alias("cell"), F.col("m.cos").alias("cos"))
-    )
-    return agg.groupBy("cell").agg(
-        F.count("*").alias("n_vectors"),
-        F.round(F.avg("cos"), 4).alias("avg_cos_to_centroid"),
     )
 
 
@@ -324,43 +397,12 @@ FROM assigned WHERE rk = 1
 GROUP BY cell"""
 
 
-def _cell_expr(cos_cols: list[Column]) -> Column:
-    """argmax over the per-centroid cosine columns; ties -> lowest cell
-    (mirrors the `ORDER BY cos DESC, cell` rank rule)."""
-    cell = F.lit(len(cos_cols) - 1)
-    for i in range(len(cos_cols) - 2, -1, -1):
-        cond = F.lit(True)
-        for j in range(i + 1, len(cos_cols)):
-            cond = cond & (cos_cols[i] >= cos_cols[j])
-        cell = F.when(cond, i).otherwise(cell)
-    return cell.cast("int")
-
-
 def _sql_cell_case(names: list[str]) -> str:
     arms = []
     for i in range(len(names) - 1):
         cond = " AND ".join(f"{names[i]} >= {names[j]}" for j in range(i + 1, len(names)))
         arms.append(f"WHEN {cond} THEN {i}")
     return "CAST(CASE " + " ".join(arms) + f" ELSE {len(names) - 1} END AS INTEGER)"
-
-
-def _probe_topk(corpus: DataFrame, probes: DataFrame, k_top: int) -> DataFrame:
-    """The IVF scoring tail: broadcast the (qid, qvec, cell) probes into an
-    equi-join on the corpus's (vec_id, embedding, cell), score the rounded
-    cosine over the ORIGINAL float embeddings (the knn expression), rank
-    via two-phase top-k."""
-    joined = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    cos = F.round(
-        _dot_spark(F.col("qvec"), F.col("embedding"))
-        / (_norm_spark(F.col("qvec")) * _norm_spark(F.col("embedding"))),
-        4,
-    )
-    scored = joined.select("qid", "vec_id", cos.alias("cos_sim"))
-    return topk_per_key(
-        scored, "qid", [F.desc("cos_sim"), F.col("vec_id")], k_top
-    ).select("qid", "vec_id", "cos_sim", "rank")
 
 
 def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,37 +412,22 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching the full corpus).
 
     The centroid codebook is collected (N_CELLS rows — the broadcast dim
-    table), so cell assignment is a pure column expression over literal
-    arrays: zero shuffle for the corpus scan, one bounded shuffle for the
-    cell join, two-phase top-k for the rank."""
+    table); the corpus takes its cell in one scoring pass over the scan
+    (zero shuffle), the probes take theirs the same way and are collected,
+    and knn's pass scores each probe against its cell's rows only."""
     emb = load_embeddings(spark, sf_dir)
-    cent_rows = (
-        emb.filter(F.col("vec_id") < N_CELLS)
-        .select("vec_id", "embedding")
-        .collect()
+    cents = _centroids(emb)
+    corpus = _with_cos(emb.select("vec_id", "embedding"), "embedding", cents).select(
+        "vec_id", "embedding", _case_cell(F.col("cos")).alias("cell")
     )
-    cents = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in cent_rows}
-
-    def cos_to_cent(vec_col: Column, cvec: list[float]) -> Column:
-        lit = F.array(*[F.lit(x) for x in cvec])
-        return F.round(
-            _dot_spark(lit, vec_col) / (_norm_spark(lit) * _norm_spark(vec_col)), 4
-        )
-
-    def with_cell(df: DataFrame) -> DataFrame:
-        cos_cols = [cos_to_cent(F.col("embedding"), cents[i]) for i in range(N_CELLS)]
-        return df.withColumn("cell", _cell_expr(cos_cols))
-
-    corpus = with_cell(emb.select("vec_id", "embedding"))
-    probes = with_cell(
-        emb.filter(
-            (F.col("vec_id") >= PROBE_LO) & (F.col("vec_id") < PROBE_HI)
-        ).select("vec_id", "embedding")
-    ).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"), "cell"
-    )
-
-    return _probe_topk(corpus, probes, TOP_K)
+    probes = _with_cos(
+        emb.filter((F.col("vec_id") >= PROBE_LO) & (F.col("vec_id") < PROBE_HI)).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+        ),
+        "qvec",
+        cents,
+    ).select("qid", "qvec", F.array(_case_cell(F.col("cos"))).alias("cells"))
+    return knn_bruteforce(corpus, probes, TOP_K)
 
 
 def _sql_ivf_search() -> str:
@@ -467,8 +494,10 @@ def _near_dup_join(
 ) -> DataFrame:
     """Shared candidate join for sign-LSH near-dup: ``emb`` carries
     (vec_id, embedding, bucket); side B explodes each vector into its
-    bucket plus the `bits` Hamming-1 neighbours (1-bit multi-probe), exact
-    cosine runs on candidates only, pairs above threshold survive.
+    bucket plus the `bits` Hamming-1 neighbours (1-bit multi-probe), and
+    one Arrow pass scores the candidate pairs row against row with the
+    cosine fold, keeping only pairs within _KNN_PREFILTER_SLACK of the
+    threshold; the JVM rounds and applies the exact threshold.
     Candidate volume is O(n^2 / 2^bits * (bits+1)) — bounded by the bits
     knob, never all-pairs."""
     probes = F.array(
@@ -486,16 +515,28 @@ def _near_dup_join(
     a = emb.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"), "bucket"
     )
-    cos = F.round(
-        _dot_spark(F.col("emb_a"), F.col("emb_b"))
-        / (_norm_spark(F.col("emb_a")) * _norm_spark(F.col("emb_b"))),
-        4,
-    )
+    vid_ddl = emb.schema["vec_id"].dataType.simpleString()
+
+    def score(batches):
+        for batch in batches:
+            cos, null = _cos_pairs(
+                _vectors(batch.column("emb_a")), _vectors(batch.column("emb_b"))
+            )
+            with np.errstate(invalid="ignore"):
+                keep = ~null & ((cos >= threshold - _KNN_PREFILTER_SLACK) | np.isnan(cos))
+            idx = pa.array(np.nonzero(keep)[0])
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c).take(idx) for c in ("vec_a", "vec_b")] + [pa.array(cos[keep])],
+                names=["vec_a", "vec_b", "cos_un"],
+            )
+
     return (
         a.join(b, (F.col("bucket") == F.col("probe")) & (F.col("vec_a") < F.col("vec_b")))
-        .select("vec_a", "vec_b", cos.alias("cos_sim"))
-        .distinct()
+        .select("vec_a", "vec_b", "emb_a", "emb_b")
+        .mapInArrow(score, f"vec_a {vid_ddl}, vec_b {vid_ddl}, cos_un double")
+        .select("vec_a", "vec_b", F.round(F.col("cos_un"), 4).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
+        .distinct()
     )
 
 
@@ -522,8 +563,6 @@ def _random_hyperplanes(dim: int, bits: int = NEAR_DUP_BITS, seed: int = NEAR_DU
     classic random-projection sign-LSH construction (Charikar STOC'02).
     Deterministic for (dim, bits, seed): every executor regenerates the
     identical matrix from the closure; nothing to ship or checkpoint."""
-    import numpy as np
-
     return np.random.default_rng(seed).standard_normal((bits, dim))
 
 
@@ -559,9 +598,6 @@ def buckets_random_arrow(
     hyperplane; for strict cross-run replay (checkpoint recovery), pass
     the recorded ``mean`` explicitly — it is part of the model state,
     like IVF centroids."""
-    import numpy as np
-    import pyarrow as pa
-
     planes = _random_hyperplanes(dim, bits, seed)
     if mean is not None:
         mean = np.asarray(mean, dtype=np.float64)
@@ -579,13 +615,8 @@ def buckets_random_arrow(
 
     def fn(batches):
         for batch in batches:
-            col = batch.column("embedding")
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            values = col.values.to_numpy(zero_copy_only=False).astype(np.float64)
-            values = values[offsets[0] : offsets[-1]]
-            x = values.reshape(-1, dim)  # fixed-dim corpus (load invariant)
+            flat, _, _ = _vectors(batch.column("embedding"))
+            x = flat.reshape(-1, dim)  # fixed-dim corpus (load invariant)
             sign_bits = ((x - mean) @ planes.T) >= 0.0
             bucket = sign_bits.astype(np.int64) @ weights
             yield pa.RecordBatch.from_arrays(
@@ -646,17 +677,17 @@ WHERE round(({dot}) / (({na}) * ({nb})), 4) >= {NEAR_DUP_THRESHOLD}"""
 # partitioning and engine.  Cosine is scale-invariant, so the un-normalized
 # sum IS the centroid for assignment purposes (no count, no division — the
 # mean never needs to exist).  Assignment compares round(cos, 4) with ties
-# to the lowest cell; every scalar is a fixed-order fold over the dim axis,
-# the same idiom the gated knn row already proves bit-identical across
-# engines.  Quantization at 2^-20 is far below the 1e-4 cosine rounding.
+# to the lowest cell; every cosine is the module's one fold (``_cos``), the
+# same fold the gated knn row proves bit-identical across engines.
+# Quantization at 2^-20 is far below the 1e-4 cosine rounding.
 #
-# Scale shape: per round ONE scan + ONE map-side-combinable agg collecting
-# k x dim int64s (a small dim table, like any collected codebook);
-# assignment is a pure column expression (array_max over k structs), so
-# the corpus never shuffles; each round rebuilds its plan from the base
-# scan with fresh literals, so lineage depth is constant (unlike
-# connected_components, where the round output feeds the next round's
-# join).  Recall bounds: tests/test_similarity_trained_ivf.py.
+# Scale shape: per round ONE pass over the persisted quantized scan + ONE
+# map-side-combinable agg collecting k x dim int64s (a small dim table,
+# like any collected codebook); assignment is one scoring pass closed
+# over the k sums plus a JVM struct max, so the corpus never shuffles;
+# each round rebuilds its plan from the base scan, so lineage depth is
+# constant (unlike connected_components, where the round output feeds the
+# next round's join).  Recall bounds: tests/test_similarity_trained_ivf.py.
 # ---------------------------------------------------------------------------
 
 IVF_SEED = 20240817
@@ -670,35 +701,6 @@ def _quant_expr(col: Column) -> Column:
     return F.transform(
         col, lambda x: F.floor(x.cast("double") * IVF_SCALE + F.lit(0.5)).cast("long")
     )
-
-
-def _py_norm(s) -> float:
-    # left-to-right fold, the same order Spark's aggregate and DuckDB's
-    # list_sum use — the literal must equal what the oracle computes
-    acc = 0.0
-    for v in s:
-        acc += float(v) * float(v)
-    return math.sqrt(acc)
-
-
-def _cos_to_sum(eq_col: Column, s) -> Column:
-    lit = F.array(*[F.lit(float(v)) for v in s])
-    return F.round(
-        _dot_spark(lit, eq_col) / (F.lit(_py_norm(s)) * _norm_spark(eq_col)), 4
-    )
-
-
-def _argmax_cell_int(eq_col: Column, sums) -> Column:
-    """argmax-rounded-cosine cell over the integer-sum centroids; ties ->
-    lowest cell (struct max of (cos, -cell) == ORDER BY cos DESC, cell)."""
-    scs = [
-        F.struct(
-            _cos_to_sum(eq_col, s).alias("cos"),
-            F.lit(-i).cast("int").alias("negcell"),
-        )
-        for i, s in enumerate(sums)
-    ]
-    return (-F.array_max(F.array(*scs))["negcell"]).cast("int")
 
 
 def train_ivf(
@@ -718,28 +720,28 @@ def train_ivf(
     # projection once as a stage table and training against that
     base = emb.select("vec_id", _quant_expr(F.col("embedding")).alias("eq")).persist()
     try:
-        init = (
+        init = _collect_capped(
             base.withColumn(
                 "__r", F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("vec_id")))
             )
             .orderBy("__r", "vec_id")
             .limit(k)
-            .select("eq")
-            .collect()
+            .select("eq"),
+            "IVF init codebook",
         )
         sums = [[int(x) for x in r["eq"]] for r in init]
         for _ in range(iters):
-            cell = _argmax_cell_int(F.col("eq"), sums)
-            agg = (
-                base.select(cell.alias("cell"), "eq")
+            agg = _collect_capped(
+                _with_cos(base.select("eq"), "eq", sums)
+                .select(_best_cells(F.col("cos"), 1)[0].alias("cell"), "eq")
                 .groupBy("cell")
                 .agg(
                     *[
                         F.sum(F.element_at("eq", i + 1)).alias(f"s{i}")
                         for i in range(dim)
                     ]
-                )
-                .collect()
+                ),
+                "IVF codebook",
             )
             new = [list(s) for s in sums]
             for r in agg:
@@ -759,30 +761,22 @@ def ivf_search_trained(
 ) -> DataFrame:
     """ANN top-k of ``queries`` (qid, qvec) against the trained codebook
     ``sums``, probing each query's ``nprobe`` best cells (multi-cell probe
-    — the recall lever IVF actually ships with).  Corpus assignment is a
-    pure column expression (the corpus never shuffles); each query
-    explodes into its nprobe best cells (array_sort over k (-cos, cell)
-    structs, ties to the lowest cell), and the exploded probes are the
-    broadcast side of the cell join."""
-    # quantize in a projection of its own: the cell expressions read it 2k
-    # times per row
-    corpus = emb.select(
-        "vec_id", "embedding", _quant_expr(F.col("embedding")).alias("eq")
-    ).select("vec_id", "embedding", _argmax_cell_int(F.col("eq"), sums).alias("cell"))
-    scs = [
-        F.struct(
-            (-_cos_to_sum(F.col("qeq"), s)).alias("negcos"),
-            F.lit(i).cast("int").alias("cell"),
-        )
-        for i, s in enumerate(sums)
-    ]
-    probe_cells = F.transform(
-        F.slice(F.array_sort(F.array(*scs)), 1, nprobe), lambda s: s["cell"]
-    )
-    probes = queries.select(
-        "qid", "qvec", _quant_expr(F.col("qvec")).alias("qeq")
-    ).select("qid", "qvec", F.explode(probe_cells).alias("cell"))
-    return _probe_topk(corpus, probes, k_top)
+    — the recall lever IVF actually ships with).  The corpus takes its
+    cell in one scoring pass over its quantized vectors (the corpus never
+    shuffles for it); each query takes its nprobe best cells the same way
+    (ties to the lowest cell), and knn's pass scores each query against
+    the rows of its probed cells only."""
+    corpus = _with_cos(
+        emb.select("vec_id", "embedding", _quant_expr(F.col("embedding")).alias("eq")),
+        "eq",
+        sums,
+    ).select("vec_id", "embedding", _best_cells(F.col("cos"), 1)[0].alias("cell"))
+    probes = _with_cos(
+        queries.select("qid", "qvec", _quant_expr(F.col("qvec")).alias("qeq")),
+        "qeq",
+        sums,
+    ).select("qid", "qvec", _best_cells(F.col("cos"), nprobe).alias("cells"))
+    return knn_bruteforce(corpus, probes, k_top)
 
 
 def q_ivf_search_trained(

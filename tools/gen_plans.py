@@ -32,35 +32,41 @@ sections.append(("Flagship transform path (scan -> one mapInArrow -> project)",
 column algebra.""", fmt(out)))
 
 from tokforge.pipeline.similarity import q_knn_bruteforce, q_ivf_search, q_embed_near_dup
-sections.append(("knn_bruteforce (broadcast queries, two-phase top-k)",
-"""What to check: the scoring join IS a `BroadcastNestedLoopJoin Cross`
-by design — brute-force knn scores every (corpus row x query) pair, with
-the tiny query set on the broadcast side, so the corpus never shuffles.
-The rank is TWO `Window` stages — the first partitioned by
+sections.append(("knn_bruteforce (collected queries, one scoring pass, two-phase top-k)",
+"""What to check: no join at all — the tiny query set is collected
+(capped) and closed over by ONE `MapInArrow` that scores every corpus
+batch with the numpy cosine fold and emits only its local top-k
+candidates; the only exchange below it is the round-robin spread of the
+scan.  The rank is TWO `Window` stages — the first partitioned by
 (qid, SPARK_PARTITION_ID()) = local top-k, the second over the bounded
 survivors — plus Spark's `WindowGroupLimit` pushdown before each
 exchange.  No single-reducer rank over the corpus.""", fmt(q_knn_bruteforce(spark, SF))))
 
 sections.append(("ann_ivf_search (cell-pruned probe; rotated out r7 — kept for the shape)",
-"""What to check: cell assignment is inline column algebra over literal
-centroid arrays (no shuffle, no per-vector window), probes broadcast,
-the only exchange keys on `cell`, then the same two-phase top-k.""", fmt(q_ivf_search(spark, SF))))
+"""What to check: the corpus takes its cell in one `MapInArrow` over the
+scan (cosine to each collected centroid) plus a JVM argmax — no shuffle,
+no per-vector window; the probes and their cells are a collected closure
+(no probe subtree, no join), and knn's scoring `MapInArrow` scores each
+cell's rows against the probes naming it, then the same two-phase
+top-k.""", fmt(q_ivf_search(spark, SF))))
 
 from tokforge.pipeline.similarity import q_ivf_search_trained
 sections.append(("ivf_search_trained (gated r7: exact-trained codebook, nprobe=2)",
 """What to check: SAME scale contract as the untrained probe — the
-trained integer-sum centroids arrive as literals (training itself ran
-as one scan + one map-side-combinable agg per Lloyd round, constant
-lineage depth), corpus assignment is inline column algebra, the
-exploded 2-cell probes broadcast into a hash equi-join on `cell`
-(no nested loop), then the two-phase top-k.""",
+trained integer-sum centroids are closed over by the assignment
+`MapInArrow` over the quantized scan (training itself ran as one pass +
+one map-side-combinable agg per Lloyd round, constant lineage depth),
+each query's 2 probe cells travel with the collected probe set (no
+join, no nested loop), then knn's scoring `MapInArrow` and the
+two-phase top-k.""",
 fmt(q_ivf_search_trained(spark, SF))))
 
 sections.append(("embed_near_dup (multi-probe sign-LSH blocking)",
 """What to check: the join is a hash EQUI-join on bucket == probe (a
 nested-loop/cartesian here would mean the blocking key fell out), the
-B side explodes to bits+1 probe rows, distinct before the threshold
-filter.""", fmt(q_embed_near_dup(spark, SF))))
+B side explodes to bits+1 probe rows, one `MapInArrow` scores the
+candidate pairs with the cosine fold, and the threshold filter runs
+before the distinct.""", fmt(q_embed_near_dup(spark, SF))))
 
 from tokforge.engine.queries import q_admission_policy
 sections.append(("admission_policy (bearer + MIME + skip_processing)",

@@ -50,9 +50,10 @@ COLLECT_ALLOWLIST = {
     "pipeline/interleave.py": 2,  # limit(max_strata+1) x2, raise past cap
     "pipeline/bpe.py": 1,         # per-round limit(k)
     "pipeline/corpusops.py": 1,   # _greedy_disjoint_picks growing limit()
-    "pipeline/similarity.py": 5,  # centroid/query dim tables: constant
-                                  # filters, limit(k), k-row aggs, query
-                                  # cap raising past KNN_QUERY_CAP
+    "pipeline/similarity.py": 2,  # _collect_capped (every reference set:
+                                  # knn queries, centroids, probes, trained
+                                  # codebook; raises past KNN_QUERY_CAP) +
+                                  # the one-row mean agg
 }
 
 
