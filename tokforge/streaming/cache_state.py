@@ -18,15 +18,31 @@ STATE COMPACTION (the 100 TB-critical shape): grouping by raw cache_key
 means one Python invocation PER KEY — measured 208 us/row of pure
 grouped-pandas overhead (~5k rows/s on 32 cores, while the stateless
 transform path does 27M tokens/s).  Instead the key space is hashed into
-`buckets` groups and each bucket's state holds a compact dict of entries
-(parallel arrays), so one invocation serves ~rows/buckets requests and
+`buckets` groups and each bucket's state holds a compact entry table
+(parallel columns), so one invocation serves ~rows/buckets requests and
 the per-group overhead amortizes away — measured 6x end-to-end sustained
 speedup at 720k keys (149.7s -> 24.8s for the full pipeline; the state
 op itself ~40x).  Batching each bucket's MISS rows through the rect
 kernel (instead of per-row apply_plan) bought a further 3.4x on the same
 layout (24.8s -> 7.1s warmed, ~2.5M tokens served/s — BENCH.md).  Bucket
-count bounds entry-list size; TTL evicts entries (processing-time, like
+count bounds entry-table size; TTL evicts entries (processing-time, like
 the LRU's expiry) and idle buckets drop whole via the group timeout.
+
+STATE LAYOUT: no Python object per entry or per token.  A bucket's state
+row is ``keys`` (and ``dtypes``) as ``array<string>`` and every other
+column as one little-endian fixed-width ``binary``: the served tokens are
+one flat int32 buffer plus an int32 length per entry (the flat-values-
+plus-lengths shape ``transform_core`` works in), ``last_ms`` is int64,
+INFO's ``n_outs`` / ``sizes`` int32 / int64.  Decoding is
+``np.frombuffer``, encoding ``tobytes()``, so a touched bucket costs a
+few memcpys instead of pickling its whole table value by value both
+ways; ``CacheNamespace`` is the one codec for both namespaces.  The
+lifecycle runs on those columns: ``pd.Index.get_indexer`` probes,
+an ``alive`` mask applies TTL, ``pd.factorize`` + ``np.unique`` pick each
+key's first row, MISS buckets append their kernel matrices to the
+payload as they lie, and rows serve zero-copy views of it.  This layout
+cannot restore a checkpoint written by the earlier nested-list layout
+(docs/SEMANTICS.md "Cache state layout").
 
 Within a micro-batch, rows for a key are processed in event-time order:
 the first computes (MISS) and inserts; every later row — same batch or a
@@ -38,8 +54,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from itertools import repeat
-from typing import Callable, Iterator, Tuple
+from typing import Iterator, NamedTuple, Tuple
 
 import numpy as np
 import pandas as pd
@@ -48,6 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -73,16 +89,6 @@ CACHE_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# One bucket's compacted entry table: parallel arrays keyed by cache_key.
-CACHE_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(StringType())),
-        StructField("dtypes", ArrayType(StringType())),
-        StructField("toks", ArrayType(ArrayType(IntegerType()))),
-        StructField("last_ms", ArrayType(LongType())),
-    ]
-)
-
 INFO_OUTPUT_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -95,35 +101,41 @@ INFO_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# One bucket's compacted info table: parallel arrays keyed by doc_id.
-INFO_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(StringType())),
-        StructField("n_outs", ArrayType(IntegerType())),
-        StructField("dtypes", ArrayType(StringType())),
-        StructField("sizes", ArrayType(LongType())),
-        StructField("last_ms", ArrayType(LongType())),
-    ]
-)
-
 # Scale-adaptive bucket count: buckets per shuffle partition.  Each state
 # task owns (buckets / shuffle_partitions) groups, so this bounds grouped-
 # pandas invocations per task at a constant while total bucket count
 # grows with the cluster (bigger clusters <-> bigger state).
-BUCKETS_PER_PARTITION = 32
+BUCKETS_PER_PARTITION = 8
 
 
 def resolve_buckets(buckets: "int | None", df: DataFrame) -> int:
     """Call-time bucket-count resolution: an explicit ``buckets`` wins,
     else BUCKETS_PER_PARTITION x spark.sql.shuffle.partitions.  The trade
     is per-invocation grouped-pandas overhead (measured ~0.25 ms/group on
-    this box: 16384 groups cost ~4.8 s of pure machinery on a 200k-row
-    batch, and the full streaming pass dropped 5.99s -> 2.87s at 1024
-    buckets, rows identical) against per-bucket state-table size (every
-    TOUCHED bucket (de)serializes its whole entry list, so sparse trickle
-    batches over a huge state want MANY buckets, while availableNow/
-    full-scan batches want few).  Bucketing never changes row output —
-    only which group serves a key — pinned by
+    a 32-core box: 16384 groups cost ~4.8 s of pure machinery on a
+    200k-row batch, and the full streaming pass dropped 5.99s -> 2.87s at
+    1024 buckets, rows identical) against per-bucket state-table size
+    (every TOUCHED bucket decodes and re-encodes its whole entry table).
+    With the flat binary state a table costs memcpys rather than a pickle
+    per value, so the balance moved to fewer, larger buckets.  Sweep on
+    perfbench stream_cold (4 cpus, 4 shuffle partitions, 20k entries at
+    the last batch; seeds 1 / 2, bench_runs/perfbench_ab_binary_state.jsonl):
+
+    ==================  =======  ==================  ==========
+    buckets/partition   buckets  last_batch_ms       pass_s
+    ==================  =======  ==================  ==========
+    4                   16       1039 / 1235         4.55 / 5.01
+    8                   32       970 / 1179          4.38 / 5.08
+    16                  64       988 / 1336          4.30 / 5.48
+    32                  128      1173 / 1288         4.86 / 5.48
+    ==================  =======  ==================  ==========
+
+    A sparse batch does not pay for the larger tables: a trickle drain of
+    50-row batches over the same 20k-entry state (tools/
+    bench_cache_trickle.py, 2 alternating pairs) ran 751 / 936 ms per
+    batch at 32 buckets against 878 / 969 ms with the earlier nested-list
+    state at 128.  Bucketing never changes row output — only which group
+    serves a key — pinned by
     tests/test_streaming.py::test_cache_bucket_count_invariance."""
     if buckets is not None:
         return buckets
@@ -155,25 +167,147 @@ def miss_core(rows: pd.DataFrame, idx: np.ndarray, config: EngineConfig):
     )
 
 
+# Fixed-width state columns are little-endian whatever the host's order.
+_I32, _I64 = np.dtype("<i4"), np.dtype("<i8")
+_NO_TOKS = np.empty(0, _I32)  # the payload of a namespace without tokens
+
+
+class EntryTable(NamedTuple):
+    """One bucket's entry table as flat numpy columns, one entry per
+    cached key.  ``cols`` maps each stored state field to its column;
+    ``toks`` is the flat int32 token payload, entry i's run sized by
+    ``cols["lens"][i]`` (empty for a namespace that stores no tokens)."""
+
+    keys: np.ndarray  # object: the namespace key
+    cols: dict
+    toks: np.ndarray
+    last_ms: np.ndarray  # last access, processing-time ms
+
+
+def _starts(lens: np.ndarray) -> np.ndarray:
+    """Run start of each entry in a flat payload sized by ``lens``."""
+    out = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=out[1:])
+    return out
+
+
 @dataclass(frozen=True)
 class CacheNamespace:
-    """One cache namespace, as data for the shared bucket lifecycle.
+    """One cache namespace, as data for the shared bucket lifecycle and
+    its one state codec.
 
-    An entry stores the ``state_schema`` fields between ``keys`` and
-    ``last_ms``, in that order.  ``miss_values(cols, pos, matrix)`` turns
-    one ``transform_core`` bucket into those values, one sequence per
-    field; ``serve(served)`` turns each row's stored values (None for an
-    ERROR row) into the output's value columns.  ``expiry_gates_hits``
-    runs the expiry gate before the probe, so an expired request is
-    rejected even when its entry is cached."""
+    ``fields`` are the stored per-entry columns, ``(state field, dtype,
+    transform_core column a MISS fills it from)``: ``object`` is an
+    ``array<string>`` state field, a fixed-width dtype a ``binary`` one.
+    With ``tokens`` the served token payload rides along as one flat int32
+    ``binary`` ("toks") sized by the ``lens`` field.  ``serves`` maps each
+    output value column to the stored field a row serves it from (an ERROR
+    row serves None / 0); with ``tokens`` the row also serves
+    ``tokens_out``.  ``expiry_gates_hits`` runs the expiry gate before the
+    probe, so an expired request is rejected even when its entry is
+    cached."""
 
     key: str
     status: str
     output_schema: StructType
-    state_schema: StructType
-    miss_values: Callable[[dict, np.ndarray, np.ndarray], tuple]
-    serve: Callable[[list], dict]
+    fields: tuple
+    tokens: bool
+    serves: tuple
     expiry_gates_hits: bool
+
+    @property
+    def state_schema(self) -> StructType:
+        """keys, the stored fields, the token payload, last_ms — no nested
+        array anywhere, so a bucket's state crosses the Python boundary as
+        a handful of byte strings plus its key list."""
+        return StructType(
+            [StructField("keys", ArrayType(StringType()))]
+            + [
+                StructField(name, ArrayType(StringType()) if dt is object else BinaryType())
+                for name, dt, _ in self.fields
+            ]
+            + ([StructField("toks", BinaryType())] if self.tokens else [])
+            + [StructField("last_ms", BinaryType())]
+        )
+
+    def decode(self, stored: tuple) -> EntryTable:
+        """State row -> EntryTable: ``np.frombuffer`` per binary field."""
+        keys, *vals, last = stored
+        cols = {
+            name: np.array(v, dtype=object) if dt is object else np.frombuffer(v, dtype=dt)
+            for (name, dt, _), v in zip(self.fields, vals)
+        }
+        toks = np.frombuffer(vals[-1], dtype=_I32) if self.tokens else _NO_TOKS
+        # copied: a HIT refreshes recency in place
+        return EntryTable(np.array(keys, dtype=object), cols, toks, np.frombuffer(last, _I64).copy())
+
+    def encode(self, table: EntryTable) -> tuple:
+        """EntryTable -> state row: ``tobytes()`` per binary field."""
+        return (
+            list(table.keys),
+            *(
+                list(table.cols[name]) if dt is object else table.cols[name].tobytes()
+                for name, dt, _ in self.fields
+            ),
+            *((table.toks.tobytes(),) if self.tokens else ()),
+            table.last_ms.tobytes(),
+        )
+
+    def empty(self) -> EntryTable:
+        return EntryTable(
+            np.empty(0, dtype=object),
+            {name: np.empty(0, dtype=dt) for name, dt, _ in self.fields},
+            _NO_TOKS,
+            np.empty(0, _I64),
+        )
+
+    def take(self, table: EntryTable, idx: np.ndarray) -> EntryTable:
+        """The entries ``idx``, in that order; the token payload is
+        gathered in one fancy index over the flat buffer."""
+        toks = table.toks
+        if self.tokens:
+            lens = table.cols["lens"][idx]
+            shift = _starts(table.cols["lens"])[idx] - _starts(lens)
+            toks = toks[np.repeat(shift, lens) + np.arange(int(lens.sum()))]
+        return EntryTable(
+            table.keys[idx],
+            {name: col[idx] for name, col in table.cols.items()},
+            toks,
+            table.last_ms[idx],
+        )
+
+    def concat(self, a: EntryTable, b: EntryTable) -> EntryTable:
+        return EntryTable(
+            np.concatenate([a.keys, b.keys]),
+            {name: np.concatenate([a.cols[name], b.cols[name]]) for name in a.cols},
+            np.concatenate([a.toks, b.toks]),
+            np.concatenate([a.last_ms, b.last_ms]),
+        )
+
+    def serve(self, table: EntryTable, src: np.ndarray) -> dict:
+        """Output value columns for rows served from entries ``src`` (-1 =
+        an ERROR row).  Tokens are zero-copy views into the payload."""
+        ok = src >= 0
+        at = src[ok]
+        out = {}
+        for col, name in self.serves:
+            stored = table.cols[name]
+            vals = (
+                np.full(len(src), None, dtype=object)
+                if stored.dtype == object
+                else np.zeros(len(src), dtype=stored.dtype)
+            )
+            vals[ok] = stored[at]
+            out[col] = vals
+        if self.tokens:
+            lens = table.cols["lens"]
+            start = np.zeros(len(src), dtype=np.int64)
+            start[ok] = _starts(lens)[at]
+            end = start.copy()
+            end[ok] += lens[at]
+            toks = table.toks
+            out["tokens_out"] = [toks[a:b] if k else None for k, a, b in zip(ok, start, end)]
+        return out
 
     def state_func(
         self,
@@ -214,20 +348,18 @@ class CacheNamespace:
             ts_vals = rows["ts"].to_numpy()
             keys = rows[self.key].to_numpy(dtype=object)
             order = np.lexsort((doc_ids, ts_vals)) if m > 1 else np.arange(m)
-            # state -> dict {key: [*values, last_access_ms]}
-            entries: dict = {}
-            if state.exists:
-                keys_s, *values_s, last_s = state.get
-                entries = {k: [*v, lm] for k, *v, lm in zip(keys_s, *values_s, last_s)}
+            table = self.decode(state.get) if state.exists else self.empty()
             now_ms = int(time.time() * 1000)
-            if ttl_ms > 0 and entries:
+            if ttl_ms > 0 and len(table.keys):
                 # entry-level TTL (processing time — the same clock
                 # ProcessingTimeTimeout uses; never in the row-output path)
-                entries = {k: v for k, v in entries.items() if now_ms - v[-1] <= ttl_ms}
+                alive = now_ms - table.last_ms <= ttl_ms
+                if not alive.all():
+                    table = self.take(table, np.nonzero(alive)[0])
 
             statuses = np.empty(m, dtype=object)
             errors = np.full(m, None, dtype=object)
-            served: list = [None] * m  # each row's entry values; None = ERROR
+            src = np.full(m, -1, dtype=np.int64)  # each row's entry; -1 = ERROR
 
             if self.expiry_gates_hits:
                 # Expiry runs BEFORE the cache probe (reference request
@@ -243,57 +375,57 @@ class CacheNamespace:
             else:
                 expired = np.zeros(m, dtype=bool)
 
-            # Pass 1 — classify in event-time order, no kernel work: state
-            # HIT, first-occurrence MISS (computes below), or duplicate of a
-            # MISS in this same batch (serves the computed result, status HIT).
-            first_of: dict = {}  # key -> computing row index
-            dup_of = np.full(m, -1, dtype=np.int64)
-            for i in order.tolist():
-                if expired[i]:
-                    continue
-                ent = entries.get(keys[i])
-                if ent is not None:
-                    statuses[i] = "HIT"
-                    served[i] = ent
-                    ent[-1] = now_ms  # access refreshes recency
-                    continue
-                j = first_of.get(keys[i])
-                if j is None:
-                    first_of[keys[i]] = i
-                else:
-                    dup_of[i] = j
+            # State HIT: serve the entry; the access refreshes recency.
+            found = pd.Index(table.keys).get_indexer(keys)
+            hit = (found >= 0) & ~expired
+            statuses[hit] = "HIT"
+            src[hit] = found[hit]
+            table.last_ms[found[hit]] = now_ms
 
-            # Pass 2 — MISS rows through the shared transform core (bucketed
-            # by (ops, n, src_dtype), rect kernel): a cold cache or miss storm
+            # Every other live row, in event-time order: the first row of
+            # each key computes (MISS); later rows are its duplicates.
+            cand = order[(found[order] < 0) & ~expired[order]]
+            codes, _ = pd.factorize(keys[cand], use_na_sentinel=False)
+            miss = cand[np.unique(codes, return_index=True)[1]]
+            computing = miss[codes]
+
+            # MISS rows through the shared transform core (bucketed by
+            # (ops, n, src_dtype), rect kernel): a cold cache or miss storm
             # pays vectorized cost, never per-row Python (service.rs:312-322
-            # compute-and-insert).
+            # compute-and-insert).  Each computed bucket's matrix appends
+            # to the payload as it lies.
             inserted = False
-            if first_of:
-                miss = np.fromiter(first_of.values(), dtype=np.int64, count=len(first_of))
+            if len(miss):
                 cols, buckets = miss_core(rows, miss, config)
                 failed = cols["error"] != None  # noqa: E711 - vectorized comparison
                 statuses[miss[failed]] = "ERROR"
                 errors[miss[failed]] = cols["error"][failed]
-                for pos, matrix in buckets:
+                if buckets:
+                    pos = np.concatenate([p for p, _ in buckets])
+                    new = EntryTable(
+                        keys[miss[pos]],
+                        {name: cols[c][pos].astype(dt) for name, dt, c in self.fields},
+                        np.concatenate([mat.ravel() for _, mat in buckets], dtype=_I32)
+                        if self.tokens
+                        else _NO_TOKS,
+                        np.full(len(pos), now_ms, dtype=_I64),
+                    )
                     statuses[miss[pos]] = "MISS"
-                    for i, values in zip(
-                        miss[pos].tolist(), zip(*self.miss_values(cols, pos, matrix))
-                    ):
-                        entries[keys[i]] = served[i] = [*values, now_ms]
+                    src[miss[pos]] = len(table.keys) + np.arange(len(pos))
+                    table = self.concat(table, new)
                     inserted = True
 
-            # Pass 3 — duplicates serve their computing row's result (HIT,
-            # like a state hit) or replay its error.
-            for i in np.nonzero(dup_of >= 0)[0]:
-                j = dup_of[i]
-                if statuses[j] == "ERROR":
-                    statuses[i] = "ERROR"
-                    errors[i] = errors[j]
-                else:
-                    statuses[i] = "HIT"
-                    served[i] = served[j]
+            # Duplicates serve their computing row's entry (HIT, like a
+            # state hit) or replay its error.
+            dup = computing != cand
+            dups, of = cand[dup], computing[dup]
+            statuses[dups] = "HIT"
+            errors[dups] = errors[of]
+            statuses[dups[errors[of] != None]] = "ERROR"  # noqa: E711
+            src[dups] = src[of]
+            served = self.serve(table, src)
 
-            if capacity > 0 and len(entries) > capacity:
+            if capacity > 0 and len(table.keys) > capacity:
                 # Capacity-bounded LRU: evict lowest last-access first until
                 # the bucket is back at cap.  Entries touched in THIS
                 # invocation (hits refreshed + fresh misses) share one clock
@@ -303,11 +435,10 @@ class CacheNamespace:
                 # (the computed result is served either way); the overflow is
                 # simply not retained — exactly foyer's admission-then-evict
                 # behavior at capacity.
-                victims = sorted(entries.items(), key=lambda kv: (kv[1][-1], kv[0]))
-                for k, _ in victims[: len(entries) - capacity]:
-                    del entries[k]
+                lru = np.lexsort((table.keys, table.last_ms))
+                table = self.take(table, np.sort(lru[len(table.keys) - capacity :]))
 
-            if entries:
+            if len(table.keys):
                 # Pure-HIT skip (r8): with TTL and capacity both OFF, the only
                 # thing an all-hits invocation changed is last-access
                 # refreshes, which nothing can ever observe (no expiry, no
@@ -320,9 +451,7 @@ class CacheNamespace:
                 # changes future HIT/MISS output) the write stays
                 # unconditional.
                 if inserted or ttl_ms > 0 or capacity > 0 or not state.exists:
-                    state.update(
-                        (list(entries), *(list(c) for c in zip(*entries.values())))
-                    )
+                    state.update(self.encode(table))
                     if ttl_ms > 0:
                         # re-arm the bucket-idle timeout on EVERY invocation
                         # (Spark clears a pending timeout when the function
@@ -337,7 +466,7 @@ class CacheNamespace:
                 "ts": ts_vals,
                 self.status: statuses,
                 "error": errors,
-                **self.serve(served),
+                **served,
             }
             yield pd.DataFrame({f: out[f] for f in fields})
 
@@ -373,49 +502,14 @@ class CacheNamespace:
         )
 
 
-def _result_miss_values(cols: dict, pos: np.ndarray, matrix: np.ndarray) -> tuple:
-    return repeat(cols["dtype"][pos[0]]), matrix.tolist()
-
-
-def _serve_results(served: list) -> dict:
-    toks = [None if v is None else v[1] for v in served]
-    return {
-        "tokens_out": toks,
-        "n_out": np.fromiter(
-            (0 if t is None else len(t) for t in toks), dtype=np.int32, count=len(toks)
-        ),
-        "dtype": [None if v is None else v[0] for v in served],
-    }
-
-
-def _info_miss_values(cols: dict, pos: np.ndarray, matrix: np.ndarray) -> tuple:
-    return (
-        repeat(matrix.shape[1]),
-        repeat(cols["dtype"][pos[0]]),
-        cols["size_bytes"][pos].tolist(),
-    )
-
-
-def _serve_info(served: list) -> dict:
-    return {
-        "n_out": np.fromiter(
-            (0 if v is None else v[0] for v in served), dtype=np.int32, count=len(served)
-        ),
-        "dtype": [None if v is None else v[1] for v in served],
-        "size_bytes": np.fromiter(
-            (0 if v is None else v[2] for v in served), dtype=np.int64, count=len(served)
-        ),
-    }
-
-
 # Processed results, keyed by cache_key: an entry is (dtype, tokens).
 RESULT_CACHE = CacheNamespace(
     key="cache_key",
     status="cache_status",
     output_schema=CACHE_OUTPUT_SCHEMA,
-    state_schema=CACHE_STATE_SCHEMA,
-    miss_values=_result_miss_values,
-    serve=_serve_results,
+    fields=(("dtypes", object, "dtype"), ("lens", _I32, "n_out")),
+    tokens=True,
+    serves=(("n_out", "lens"), ("dtype", "dtypes")),
     expiry_gates_hits=True,
 )
 
@@ -427,9 +521,9 @@ INFO_CACHE = CacheNamespace(
     key="doc_id",
     status="info_status",
     output_schema=INFO_OUTPUT_SCHEMA,
-    state_schema=INFO_STATE_SCHEMA,
-    miss_values=_info_miss_values,
-    serve=_serve_info,
+    fields=(("n_outs", _I32, "n_out"), ("dtypes", object, "dtype"), ("sizes", _I64, "size_bytes")),
+    tokens=False,
+    serves=(("n_out", "n_outs"), ("dtype", "dtypes"), ("size_bytes", "sizes")),
     expiry_gates_hits=False,
 )
 

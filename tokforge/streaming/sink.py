@@ -100,9 +100,16 @@ class IdempotentParquetSink:
         )
 
 
+# The stateOperators fields kept per operator: update and commit time, the
+# state-store memory and entry count (where a micro-batch's state cost goes).
+STATE_OPERATOR_FIELDS = ("allUpdatesTimeMs", "commitTimeMs", "memoryUsedBytes", "numRowsTotal")
+
+
 class MetricsListener(StreamingQueryListener):
-    """Collects per-batch observed metrics + progress (rows/sec), the
-    df.observe + StreamingQueryListener pair from SURVEY.md §2.5."""
+    """Collects per-batch observed metrics + progress, the df.observe +
+    StreamingQueryListener pair from SURVEY.md §2.5.  Each progress record
+    keeps the full ``durationMs`` phase map and, per state operator, the
+    ``STATE_OPERATOR_FIELDS``."""
 
     def __init__(self):
         self.progress: list[dict] = []
@@ -120,6 +127,11 @@ class MetricsListener(StreamingQueryListener):
                     "batchId": p.batchId,
                     "numInputRows": p.numInputRows,
                     "processedRowsPerSecond": p.processedRowsPerSecond,
+                    "durationMs": dict(p.durationMs),
+                    "stateOperators": [
+                        {f: getattr(op, f) for f in STATE_OPERATOR_FIELDS}
+                        for op in p.stateOperators
+                    ],
                 }
             )
             obs = p.observedMetrics
