@@ -130,13 +130,16 @@ def resolve_buckets(buckets: "int | None", df: DataFrame) -> int:
     32                  128      1173 / 1288         4.86 / 5.48
     ==================  =======  ==================  ==========
 
-    A sparse batch does not pay for the larger tables: a trickle drain of
     50-row batches over the same 20k-entry state (tools/
-    bench_cache_trickle.py, 2 alternating pairs) ran 751 / 936 ms per
-    batch at 32 buckets against 878 / 969 ms with the earlier nested-list
-    state at 128.  Bucketing never changes row output — only which group
-    serves a key — pinned by
-    tests/test_streaming.py::test_cache_bucket_count_invariance."""
+    bench_cache_trickle.py, flat state, 5 alternating pairs) showed no
+    bucket-count cost: median batch 718 ms at 8 per partition against
+    729 ms at 32 (8 faster in 2 of 5 pairs; the state operator's
+    allUpdatesTimeMs 856 vs 957 ms, 5 of 5).  50 new keys touch most of
+    32 buckets and about a third of 128, so this is not the regime of a
+    few keys over very large tables, which was not measured.  Bucketing
+    never changes row output — only which group serves a key — pinned by
+    tests/test_streaming.py::test_cache_bucket_count_invariance.  The
+    streaming LSH stage keeps its own count (lsh_dedup.py)."""
     if buckets is not None:
         return buckets
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -169,14 +172,14 @@ def miss_core(rows: pd.DataFrame, idx: np.ndarray, config: EngineConfig):
 
 # Fixed-width state columns are little-endian whatever the host's order.
 _I32, _I64 = np.dtype("<i4"), np.dtype("<i8")
-_NO_TOKS = np.empty(0, _I32)  # the payload of a namespace without tokens
 
 
 class EntryTable(NamedTuple):
     """One bucket's entry table as flat numpy columns, one entry per
     cached key.  ``cols`` maps each stored state field to its column;
     ``toks`` is the flat int32 token payload, entry i's run sized by
-    ``cols["lens"][i]`` (empty for a namespace that stores no tokens)."""
+    ``cols["lens"][i]`` (empty for a namespace without a ``lens``
+    field)."""
 
     keys: np.ndarray  # object: the namespace key
     cols: dict
@@ -199,21 +202,25 @@ class CacheNamespace:
     ``fields`` are the stored per-entry columns, ``(state field, dtype,
     transform_core column a MISS fills it from)``: ``object`` is an
     ``array<string>`` state field, a fixed-width dtype a ``binary`` one.
-    With ``tokens`` the served token payload rides along as one flat int32
-    ``binary`` ("toks") sized by the ``lens`` field.  ``serves`` maps each
-    output value column to the stored field a row serves it from (an ERROR
-    row serves None / 0); with ``tokens`` the row also serves
-    ``tokens_out``.  ``expiry_gates_hits`` runs the expiry gate before the
-    probe, so an expired request is rejected even when its entry is
-    cached."""
+    A ``lens`` field means the namespace stores a token payload: one flat
+    int32 ``binary`` ("toks"), entry i's run ``lens[i]`` long, which MISS
+    rows fill from their kernel matrices and every row serves as
+    ``tokens_out``.  ``serves`` maps each scalar output value column to the
+    stored field a row serves it from (an ERROR row serves None / 0).
+    ``expiry_gates_hits`` runs the expiry gate before the probe, so an
+    expired request is rejected even when its entry is cached."""
 
     key: str
     status: str
     output_schema: StructType
     fields: tuple
-    tokens: bool
     serves: tuple
     expiry_gates_hits: bool
+
+    @property
+    def tokens(self) -> bool:
+        """Whether entries carry a token payload (sized by ``lens``)."""
+        return any(name == "lens" for name, _, _ in self.fields)
 
     @property
     def state_schema(self) -> StructType:
@@ -237,7 +244,7 @@ class CacheNamespace:
             name: np.array(v, dtype=object) if dt is object else np.frombuffer(v, dtype=dt)
             for (name, dt, _), v in zip(self.fields, vals)
         }
-        toks = np.frombuffer(vals[-1], dtype=_I32) if self.tokens else _NO_TOKS
+        toks = np.frombuffer(vals[-1], dtype=_I32) if self.tokens else np.empty(0, _I32)
         # copied: a HIT refreshes recency in place
         return EntryTable(np.array(keys, dtype=object), cols, toks, np.frombuffer(last, _I64).copy())
 
@@ -257,7 +264,7 @@ class CacheNamespace:
         return EntryTable(
             np.empty(0, dtype=object),
             {name: np.empty(0, dtype=dt) for name, dt, _ in self.fields},
-            _NO_TOKS,
+            np.empty(0, _I32),
             np.empty(0, _I64),
         )
 
@@ -407,7 +414,7 @@ class CacheNamespace:
                         {name: cols[c][pos].astype(dt) for name, dt, c in self.fields},
                         np.concatenate([mat.ravel() for _, mat in buckets], dtype=_I32)
                         if self.tokens
-                        else _NO_TOKS,
+                        else np.empty(0, _I32),
                         np.full(len(pos), now_ms, dtype=_I64),
                     )
                     statuses[miss[pos]] = "MISS"
@@ -508,7 +515,6 @@ RESULT_CACHE = CacheNamespace(
     status="cache_status",
     output_schema=CACHE_OUTPUT_SCHEMA,
     fields=(("dtypes", object, "dtype"), ("lens", _I32, "n_out")),
-    tokens=True,
     serves=(("n_out", "lens"), ("dtype", "dtypes")),
     expiry_gates_hits=True,
 )
@@ -522,7 +528,6 @@ INFO_CACHE = CacheNamespace(
     status="info_status",
     output_schema=INFO_OUTPUT_SCHEMA,
     fields=(("n_outs", _I32, "n_out"), ("dtypes", object, "dtype"), ("sizes", _I64, "size_bytes")),
-    tokens=False,
     serves=(("n_out", "n_outs"), ("dtype", "dtypes"), ("size_bytes", "sizes")),
     expiry_gates_hits=False,
 )

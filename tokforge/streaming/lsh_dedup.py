@@ -61,6 +61,11 @@ from tokforge.streaming.source import read_request_stream
 
 DEFAULT_THRESHOLD = 0.5  # >= 4 of 8 MinHash positions equal
 DEFAULT_HORIZON_MS = 10 * 60 * 1000
+# Band buckets per shuffle partition.  The band state below is still a
+# nested-list table that pickles value by value, so it stays at the
+# bucket count the result cache used before its state went flat; a new
+# count would also re-bucket the band keys of a resumed checkpoint.
+BUCKETS_PER_PARTITION = 32
 
 BAND_OUTPUT_SCHEMA = StructType(
     [
@@ -225,13 +230,13 @@ def with_lsh_state(
 ) -> DataFrame:
     """Attach the streaming LSH index to a request stream: one shuffle on
     the band-bucket hash (state compaction — same pattern as the result
-    cache's buckets; count resolves at call time via
-    cache_state.resolve_buckets).  All rows of one (band_idx, band_val)
-    hash to the same bucket for ANY bucket count, so the verdicts are
-    bucket-count invariant."""
-    from tokforge.streaming.cache_state import resolve_buckets
-
-    buckets = resolve_buckets(buckets, stream)
+    cache's buckets; an explicit ``buckets`` wins, else the count resolves
+    at call time to BUCKETS_PER_PARTITION x spark.sql.shuffle.partitions).
+    All rows of one (band_idx, band_val) hash to the same bucket for ANY
+    bucket count, so the verdicts are bucket-count invariant."""
+    if buckets is None:
+        n_part = int(stream.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        buckets = BUCKETS_PER_PARTITION * n_part
     bands = banded(signatures_with_ts(stream)).withColumn(
         "_bucket",
         F.pmod(F.xxhash64(F.col("band_idx"), F.col("band_val")), F.lit(buckets)),

@@ -1,24 +1,30 @@
 """Trickle drain over a large cache state: what a sparse micro-batch costs
 when every bucket it touches is big.
 
-Builds a 20k-entry result-cache state (4 drops of 5k signed requests with
-new keys, the perfbench stream_cold shape), then drains 8 trickle drops of
-50 new-key requests each, one drop per micro-batch (``maxFilesPerTrigger``
-1).  Every trickle row is a MISS, so every bucket it lands in decodes and
-re-encodes its whole entry table — the worst case for fewer, larger
-buckets.  One warm-up drain runs first on its own checkpoint; the timed
-drain follows.  The bucket count is the checkout's default
-(``cache_state.resolve_buckets``), so running this from two checkouts
-compares their bucket layouts.
+The input is perfbench's stream_cold input (4 drops of 5000 signed
+requests with new keys: a 20k-entry result-cache state) plus 8 trickle
+drops of 50 more new-key requests each, taken from the next seed's
+replica slots so no key repeats.  perfbench's own stream pass drains it,
+one drop per micro-batch (``maxFilesPerTrigger`` 1); one warm-up drain
+runs first on its own checkpoint, then the timed drain, then perfbench's
+stream checks (exactly_once, no_errors, hit_ratio 0,
+cross_path_checksum).  Every trickle row is a MISS, so every bucket it
+lands in decodes and re-encodes its whole entry table.
 
-Usage: python tools/bench_cache_trickle.py [label] [sf_dir]
+``--buckets-per-partition`` overrides ``cache_state.BUCKETS_PER_PARTITION``
+for the run (default: the checkout's), so one checkout can compare bucket
+layouts over the same state code.
+
+Usage: python tools/bench_cache_trickle.py [--buckets-per-partition N]
+           [--seed S] [--label L]
 Prints one JSON line: per-batch ``triggerExecution`` / ``addBatch`` and
 the state operator's ``allUpdatesTimeMs`` for the build and the trickle
-phases, their medians, the bucket count and ``cpus``.
+phases, their medians, the bucket count, ``cpus`` and the check results.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -27,64 +33,53 @@ import sys
 import tempfile
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path[:0] = [str(ROOT), str(ROOT / "perfbench")]
 
-SF_DIR = "/root/testdata/sf0.1"
-CHAIN = "resize:fit:64/crop:48:0:ce/quality:80/format:int16"  # bench.SIMPLE_CHAIN
-BUILD_DROPS = 4  # x 5000 requests: a 20k-entry state
+import pyspark.sql.functions as F  # noqa: E402
+from pyspark.sql.window import Window  # noqa: E402
+
+import inputs  # noqa: E402
+from bench import SIMPLE_CHAIN  # noqa: E402
+from workloads import StreamCold  # noqa: E402
+
 TRICKLE_DROPS = 8
 TRICKLE_ROWS = 50
 
 
-def write_input(spark, sf_dir: str, path: str) -> int:
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window
+class CacheTrickle(StreamCold):
+    """stream_cold's drops, then TRICKLE_DROPS drops of TRICKLE_ROWS rows."""
 
-    from tokforge.engine.config import EngineConfig
-    from tokforge.engine.transform import make_sign_udf
-    from tokforge.sources.requests import requests_df
+    name = "cache_trickle"
 
-    req = requests_df(spark, sf_dir, CHAIN, replicas=BUILD_DROPS + 1)
-    sign = make_sign_udf(EngineConfig())
-    req = req.withColumn("sig", sign(F.col("ops"), F.col("doc_id"))).cache()
-    n_docs = req.count() // (BUILD_DROPS + 1)
-    # request rank by doc id: drops take disjoint id ranges, so no key repeats
-    rank = F.row_number().over(Window.orderBy(F.col("doc_id").cast("long"))) - 1
-    ranked = req.withColumn("_r", rank)
-    for i in range(BUILD_DROPS):
-        part = ranked.filter((F.col("_r") >= i * n_docs) & (F.col("_r") < (i + 1) * n_docs))
-        _drop(part, i).write.parquet(f"{path}/drop={i}")
-    tail = ranked.filter(F.col("_r") >= BUILD_DROPS * n_docs)
-    for j in range(TRICKLE_DROPS):
-        lo = BUILD_DROPS * n_docs + j * TRICKLE_ROWS
-        part = tail.filter((F.col("_r") >= lo) & (F.col("_r") < lo + TRICKLE_ROWS))
-        _drop(part, BUILD_DROPS + j).write.parquet(f"{path}/drop={BUILD_DROPS + j}")
-    req.unpersist()
-    return n_docs
+    def build_inputs(self, work: Path) -> None:
+        super().build_inputs(work)
+        r = self.run
+        # the next seed's replica slots: doc ids disjoint from every build drop
+        req = inputs.signed_requests(
+            r.spark, self.corpus, work / "trickle", r.seed + 1, SIMPLE_CHAIN, 1, r.cfg
+        ).drop("rep")
+        rank = F.row_number().over(Window.orderBy(F.col("doc_id").cast("long"))) - 1
+        req = req.withColumn("_r", rank).filter(F.col("_r") < TRICKLE_DROPS * TRICKLE_ROWS)
+        drop = (F.floor(F.col("_r") / TRICKLE_ROWS) + self.drops).cast("int")
+        req = req.withColumn("drop", drop).withColumn(
+            "ts", (F.unix_timestamp("ts") + F.col("drop") * inputs.DROP_STEP_S).cast("timestamp")
+        ).drop("_r")
+        req.repartition(TRICKLE_DROPS, "drop").write.mode("append").partitionBy("drop").parquet(
+            self.in_dir
+        )
+        self.rows += TRICKLE_DROPS * TRICKLE_ROWS
 
 
-def _drop(df, i: int):
-    import pyspark.sql.functions as F
+class TrickleRun:
+    """What perfbench's stream workloads read off its Run."""
 
-    return (
-        df.drop("_r")
-        .withColumn("ts", (F.unix_timestamp("ts") + i * 600).cast("timestamp"))
-        .coalesce(1)
-    )
+    n_docs = 5000  # documents in the sf0.1 corpus
 
+    def __init__(self, spark, seed: int):
+        from tokforge.engine.config import EngineConfig
 
-def drain(spark, in_path: str, work: Path, tag: str) -> list[dict]:
-    from tokforge.engine.config import EngineConfig
-    from tokforge.streaming.job import transform_stream
-
-    q, _ = transform_stream(
-        spark, in_path, str(work / f"out-{tag}"), str(work / f"ckpt-{tag}"),
-        EngineConfig(), verify=True, available_now=True, max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-    if q.exception() is not None:
-        raise q.exception()
-    return [json.loads(p.json) for p in q.recentProgress if p.numInputRows > 0]
+        self.spark, self.seed, self.cfg = spark, seed, EngineConfig()
 
 
 def summarize(batches: list[dict]) -> dict:
@@ -103,32 +98,43 @@ def summarize(batches: list[dict]) -> dict:
 
 
 def main() -> None:
-    label = sys.argv[1] if len(sys.argv) > 1 else "head"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else SF_DIR
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--buckets-per-partition", type=int, default=None)
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--label", default="head")
+    args = ap.parse_args()
+
     from tokforge.engine.session import build_spark
     from tokforge.streaming import cache_state
 
+    if args.buckets_per_partition is not None:
+        cache_state.BUCKETS_PER_PARTITION = args.buckets_per_partition
     cpus = len(os.sched_getaffinity(0))
     work = Path(tempfile.mkdtemp(prefix="tokforge-trickle-"))
     spark = build_spark(master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        in_path = str(work / "in")
-        n_docs = write_input(spark, sf_dir, in_path)
-        drain(spark, in_path, work, "warm")
-        batches = drain(spark, in_path, work, "timed")
+        wl = CacheTrickle(TrickleRun(spark, args.seed))
+        wl.build_inputs(work)
+        wl.warm_up()
+        res = wl.one_pass("timed")
+        if not res.ok:
+            raise RuntimeError(res.problem)
+        batches = [p for p in res.progress if p["numInputRows"] > 0]
         state_rows = max(
             (sum(op["numRowsTotal"] for op in b["stateOperators"]) for b in batches), default=0
         )
         print(json.dumps({
             "workload": "cache_trickle",
-            "label": label,
+            "label": args.label,
+            "seed": args.seed,
             "cpus": cpus,
             "buckets": cache_state.BUCKETS_PER_PARTITION * cpus,
-            "state_entries": BUILD_DROPS * n_docs,
+            "state_entries": wl.drops * wl.replicas_per_drop * TrickleRun.n_docs,
             "state_rows_total": state_rows,
-            "build": summarize(batches[:BUILD_DROPS]),
-            "trickle": summarize(batches[BUILD_DROPS:]),
+            "build": summarize(batches[: wl.drops]),
+            "trickle": summarize(batches[wl.drops:]),
+            "checks": [list(c) for c in wl.run_checks()],
         }))
     finally:
         spark.stop()
