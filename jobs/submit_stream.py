@@ -9,7 +9,7 @@ Example:
   spark-submit --master local[32] --py-files /tmp/tokforge.zip \\
       jobs/submit_stream.py \\
       --input /data/requests --output /data/out --checkpoint /data/ckpt \\
-      --ttl-ms 3600000 --watermark "10 minutes" --continuous
+      --ttl-ms 3600000 --continuous
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ def main() -> None:
     parser.add_argument("--output", required=True)
     parser.add_argument("--checkpoint", required=True)
     parser.add_argument("--ttl-ms", type=int, default=0)
-    parser.add_argument("--watermark", default="10 minutes")
     parser.add_argument("--no-verify", action="store_true")
     parser.add_argument("--continuous", action="store_true",
                         help="run forever (processingTime trigger) instead of availableNow")
@@ -64,7 +63,6 @@ def main() -> None:
         EngineConfig.from_env(),
         verify=not args.no_verify,
         ttl_ms=args.ttl_ms,
-        watermark=args.watermark,
         available_now=not args.continuous,
         max_files_per_trigger=args.max_files_per_trigger,
         partition_cols=tuple(

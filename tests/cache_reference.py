@@ -60,11 +60,12 @@ _VALUES = {
 }
 
 
-def reference_state_func(ns, config, ttl_ms: int = 0, capacity: int = 0):
+def reference_state_func(ns, config, ttl_ms: int = 0):
     """The dict lifecycle for namespace ``ns`` (a production
     ``CacheNamespace``: key, status, output schema, expiry gating).  State
     is ``(keys, *values, last_ms)`` as parallel Python lists."""
     miss_values, serve = _VALUES[ns.key]
+    capacity = config.cache_capacity_per_bucket
     fields = ns.output_schema.fieldNames()
 
     def state_fn(key, pdf_iter, state):

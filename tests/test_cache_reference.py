@@ -8,6 +8,7 @@ No Spark: both lifecycles run against an in-memory GroupState."""
 
 from __future__ import annotations
 
+import dataclasses
 import types
 
 import numpy as np
@@ -17,7 +18,7 @@ import pytest
 from tests import cache_reference
 from tokforge.engine.config import EngineConfig
 from tokforge.streaming import cache_state
-from tokforge.streaming.cache_state import INFO_CACHE, RESULT_CACHE, EntryTable
+from tokforge.streaming.cache_state import INFO_CACHE, RESULT_CACHE
 
 EXPIRES = 1_704_070_800
 CHAINS = (
@@ -105,8 +106,9 @@ def test_lifecycle_matches_dict_reference(monkeypatch, ns, ttl_ms, capacity, see
     doc_tokens = [
         rng.integers(0, 50_000, LADDER[d % 4]).astype(np.int32) for d in range(9)
     ]
-    fn = ns.state_func(CFG, ttl_ms=ttl_ms, capacity=capacity)
-    ref = cache_reference.reference_state_func(ns, CFG, ttl_ms=ttl_ms, capacity=capacity)
+    cfg = dataclasses.replace(CFG, cache_capacity_per_bucket=capacity)
+    fn = ns.state_func(cfg, ttl_ms=ttl_ms)
+    ref = cache_reference.reference_state_func(ns, cfg, ttl_ms=ttl_ms)
     st, st_ref = _State(), _State()
     statuses = set()
     for step in range(16):
@@ -134,36 +136,42 @@ def test_lifecycle_matches_dict_reference(monkeypatch, ns, ttl_ms, capacity, see
 
 def test_state_schema_has_no_nested_array():
     """Both namespaces' state is keys + dtypes as array<string> and every
-    other field as flat binary; ``keys`` stays the first field."""
-    from pyspark.sql.types import ArrayType, BinaryType, StringType
+    other field as flat binary, field for field the layout whose
+    checkpoints this code restores (docs/SEMANTICS.md "Cache state
+    layout"); ``keys`` stays the first field."""
+    from pyspark.sql.types import ArrayType, BinaryType, StringType, StructField, StructType
 
-    for ns in (RESULT_CACHE, INFO_CACHE):
-        schema = ns.state_schema
-        assert schema.fieldNames()[0] == "keys"
-        for f in schema.fields:
-            assert f.dataType in (ArrayType(StringType()), BinaryType()), f
+    def schema(*fields):
+        return StructType(
+            [StructField(n, ArrayType(StringType()) if t == "strings" else BinaryType()) for n, t in fields]
+        )
+
+    assert RESULT_CACHE.layout.state_schema == schema(
+        ("keys", "strings"), ("dtypes", "strings"), ("lens", "binary"), ("toks", "binary"), ("last_ms", "binary")
+    )
+    assert INFO_CACHE.layout.state_schema == schema(
+        ("keys", "strings"), ("n_outs", "binary"), ("dtypes", "strings"), ("sizes", "binary"), ("last_ms", "binary")
+    )
 
 
 def test_state_round_trips_through_bytes():
     """decode(encode(t)) == t, and a take() of the flat payload gathers the
     right token runs."""
-    t = RESULT_CACHE.empty()
-    new = EntryTable(
-        np.array(["a", "b", "c"], dtype=object),
-        {
-            "dtypes": np.array(["int16", "uint8", "int16"], dtype=object),
-            "lens": np.array([2, 0, 3], dtype="<i4"),
-        },
-        np.array([1, 2, 7, 8, 9], dtype="<i4"),
-        np.array([5, 6, 7], dtype="<i8"),
-    )
-    t = RESULT_CACHE.concat(t, new)
-    back = RESULT_CACHE.decode(RESULT_CACHE.encode(t))
-    assert list(back.keys) == ["a", "b", "c"]
-    assert list(back.toks) == [1, 2, 7, 8, 9]
-    assert list(back.last_ms) == [5, 6, 7]
-    sub = RESULT_CACHE.take(back, np.array([2, 0]))
-    assert list(sub.keys) == ["c", "a"] and list(sub.toks) == [7, 8, 9, 1, 2]
+    layout = RESULT_CACHE.layout
+    new = {
+        "keys": np.array(["a", "b", "c"], dtype=object),
+        "dtypes": np.array(["int16", "uint8", "int16"], dtype=object),
+        "lens": np.array([2, 0, 3], dtype="<i4"),
+        "toks": np.array([1, 2, 7, 8, 9], dtype="<i4"),
+        "last_ms": np.array([5, 6, 7], dtype="<i8"),
+    }
+    t = layout.concat(layout.empty(), new)
+    back = layout.decode(layout.encode(t))
+    assert list(back["keys"]) == ["a", "b", "c"]
+    assert list(back["toks"]) == [1, 2, 7, 8, 9]
+    assert list(back["last_ms"]) == [5, 6, 7]
+    sub = layout.take(back, np.array([2, 0]))
+    assert list(sub["keys"]) == ["c", "a"] and list(sub["toks"]) == [7, 8, 9, 1, 2]
     served = RESULT_CACHE.serve(back, np.array([2, -1, 1, 0]))
     assert [None if v is None else list(v) for v in served["tokens_out"]] == [
         [7, 8, 9],

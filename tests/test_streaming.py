@@ -6,6 +6,7 @@ from the data (replay-deterministic); availableNow triggers bound runtime.
 
 from __future__ import annotations
 
+import dataclasses
 import time
 
 import pyspark.sql.functions as F
@@ -29,6 +30,10 @@ from tokforge.streaming.sink import (
 
 CHAIN = "resize:fit:32/quality:80/format:int16"
 CFG = EngineConfig()
+
+
+def _capped(capacity: int) -> EngineConfig:
+    return dataclasses.replace(CFG, cache_capacity_per_bucket=capacity)
 
 
 def _finish(query, timeout=45):
@@ -117,6 +122,44 @@ def test_cache_hits_match_batch_engine(spark, tmp_path):
         for r in transform_requests_arrow(req, CFG, verify=False).collect()
     }
     assert stream_rows == batch_rows
+
+
+def test_late_rows_served_without_watermark(spark, tmp_path):
+    """The cache pipeline carries no watermark, and its stateful operator
+    drops no late row: a second drop of 20 new keys stamped 2 h behind
+    the first drop's event time lands in the sink in full, every row a
+    MISS with the batch pass's tokens."""
+    from tokforge.engine.transform_arrow import transform_requests_arrow
+
+    in_path, out_dir, ckpt = (
+        str(tmp_path / "in"),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    req = _signed_requests(spark).cache()
+    docs = sorted(r["doc_id"] for r in req.select("doc_id").collect())
+    early = req.filter(F.col("doc_id").isin(docs[:20]))
+    late = req.filter(F.col("doc_id").isin(docs[20:])).withColumn(
+        "ts", F.expr("timestamp'2024-01-01 00:00:00'")
+    )
+    early.withColumn("ts", F.expr("timestamp'2024-01-01 02:00:00'")).write.parquet(
+        f"{in_path}/drop=0"
+    )
+    late.write.parquet(f"{in_path}/drop=1")
+    query, _ = transform_stream(
+        spark, in_path, out_dir, ckpt, CFG, verify=True, max_files_per_trigger=1
+    )
+    _finish(query)
+    assert sum(1 for p in query.recentProgress if p["numInputRows"] > 0) == 2
+    served = {
+        r["doc_id"]: (r["cache_status"], list(r["tokens_out"]))
+        for r in read_sink(spark, out_dir).filter(F.col("doc_id").isin(docs[20:])).collect()
+    }
+    batch = {
+        r["doc_id"]: ("MISS", list(r["tokens_out"]))
+        for r in transform_requests_arrow(late, CFG, verify=False).collect()
+    }
+    assert len(served) == 20 and served == batch
 
 
 def test_cache_expiry_gates_hits(spark, tmp_path):
@@ -373,7 +416,7 @@ def test_cache_capacity_lru_eviction(spark):
     grows with active-keys-per-TTL)."""
     from tokforge.streaming.cache_state import RESULT_CACHE
 
-    fn = RESULT_CACHE.state_func(CFG, ttl_ms=0, capacity=2)
+    fn = RESULT_CACHE.state_func(_capped(2), ttl_ms=0)
     state = _StubGroupState()
 
     def run(keys):
@@ -393,7 +436,7 @@ def test_cache_capacity_lru_eviction(spark):
 
     # a single over-cap miss storm: every row is still answered, state
     # retains only `capacity` entries (admission-then-evict at capacity)
-    fn2 = RESULT_CACHE.state_func(CFG, ttl_ms=0, capacity=2)
+    fn2 = RESULT_CACHE.state_func(_capped(2), ttl_ms=0)
     st2 = _StubGroupState()
     out = list(fn2((0,), iter([_one_request_batch(spark, [f"k{i}" for i in range(5)])]), st2))
     assert list(out[0]["cache_status"]) == ["MISS"] * 5
@@ -424,7 +467,7 @@ def test_pure_hit_batch_skips_state_rewrite(spark):
         (INFO_CACHE.state_func, "info_status"),
     ):
         # ttl=0, capacity=0: second (pure-HIT) invocation must not write
-        fn = make(CFG, ttl_ms=0, capacity=0)
+        fn = make(_capped(0), ttl_ms=0)
         state = _CountingState()
         batch = _one_request_batch(spark, ["ka", "kb"], doc_ids=["da", "db"])
         out1 = list(fn((0,), iter([batch]), state))
@@ -441,14 +484,14 @@ def test_pure_hit_batch_skips_state_rewrite(spark):
 
         # capacity > 0: pure-HIT invocations must keep writing (recency
         # feeds LRU eviction)
-        fn_cap = make(CFG, ttl_ms=0, capacity=8)
+        fn_cap = make(_capped(8), ttl_ms=0)
         st_cap = _CountingState()
         list(fn_cap((0,), iter([batch]), st_cap))
         list(fn_cap((0,), iter([batch]), st_cap))
         assert st_cap.update_count == 2
 
         # ttl > 0: pure-HIT invocations must keep writing + re-arming
-        fn_ttl = make(CFG, ttl_ms=100000, capacity=0)
+        fn_ttl = make(_capped(0), ttl_ms=100000)
         st_ttl = _CountingState()
         list(fn_ttl((0,), iter([batch]), st_ttl))
         list(fn_ttl((0,), iter([batch]), st_ttl))
@@ -462,7 +505,7 @@ def test_info_capacity_lru_eviction(spark):
     store."""
     from tokforge.streaming.cache_state import INFO_CACHE
 
-    fn = INFO_CACHE.state_func(CFG, ttl_ms=0, capacity=1)
+    fn = INFO_CACHE.state_func(_capped(1), ttl_ms=0)
     state = _StubGroupState()
 
     def run(docs):
@@ -505,7 +548,7 @@ def test_cache_capacity_end_to_end_stream(spark, tmp_path):
         stream = read_request_stream(spark, in_path).withWatermark(
             "ts", "10 minutes"
         )
-        cached = with_cache_state(stream, CFG, ttl_ms=0, buckets=1, capacity=2)
+        cached = with_cache_state(stream, _capped(2), ttl_ms=0, buckets=1)
         sink = IdempotentParquetSink(out_dir)
         q = (
             cached.writeStream.foreachBatch(sink)

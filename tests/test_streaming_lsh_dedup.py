@@ -125,6 +125,45 @@ def test_near_dup_readmitted_past_horizon(spark, tmp_path):
     ]
 
 
+def test_verdicts_bucket_count_invariant(spark, tmp_path):
+    """One multi-drop LSH stream drained at two bucket counts: the sinks
+    are identical row for row.  A band key hashes to one bucket at any
+    count, and with drops arriving in event-time order, eviction by a
+    bucket's max event time never removes an entry a later row could
+    still match."""
+    feed = _originals(spark)
+    para = _paraphrases(feed)
+    in_dir = str(tmp_path / "in")
+    _write_drop(feed, in_dir, 0, 0)
+    _write_drop(para, in_dir, 1, 120)
+    _write_drop(_paraphrases(para), in_dir, 2, 300)
+    _write_drop(feed, in_dir, 3, 420)  # the originals re-filed, same doc ids
+
+    outs = []
+    for buckets in (1, 64):
+        out = str(tmp_path / f"out{buckets}")
+        query, _ = lsh_dedup_stream(
+            spark,
+            in_dir,
+            out,
+            str(tmp_path / f"ckpt{buckets}"),
+            buckets=buckets,
+            max_files_per_trigger=1,
+        )
+        query.awaitTermination(180)
+        outs.append(
+            sorted(
+                tuple(r)
+                for r in read_sink(spark, out)
+                .select("doc_id", "ts", "matched_doc", "est_jaccard", "near_dup")
+                .collect()
+            )
+        )
+    assert outs[0] == outs[1]
+    assert len(outs[0]) == 4 * feed.count()
+    assert sum(r[4] for r in outs[0]) >= 3 * feed.count()
+
+
 def test_gated_row_matches_duckdb_oracle(spark):
     """The driver-gated face (streaming/queries.q_stream_lsh_dedup) equals
     its DuckDB oracle row-for-row at sf0.001: the whole stream — Arrow

@@ -39,10 +39,6 @@ from tokforge.operators.kernel import TransformError
 from tokforge.operators.kernel_rect import apply_plan_rect
 from tokforge.plans.options import OptionParseError, content_disposition, strips_metadata
 
-# kernel-side slice size: each length-ladder bucket of a slice stays
-# cache-resident through the op chain (see transform_requests_arrow.fn)
-_KERNEL_SLICE_ROWS = 10_000
-
 OUTPUT_SCHEMA_DDL = (
     "doc_id string, source string, ts timestamp, ops string, n_tok int, "
     "sig_valid boolean, tokens_out array<int>, n_out int, dtype string, "
@@ -305,22 +301,8 @@ def transform_requests_arrow(
     df = df.select(*cols)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Decouple TRANSFER batch size from KERNEL working-set size: the
-        # Arrow boundary amortizes best with large batches while the
-        # vectorized kernel wants each length-ladder bucket inside L2/L3
-        # (measured: 100k-row kernel buckets blow L3).  Large incoming
-        # batches are zero-copy sliced to ~10k rows before bucketing, so
-        # both sides sit at their own optimum regardless of
-        # spark.sql.execution.arrow.maxRecordsPerBatch.
         for batch in batches:
-            n = batch.num_rows
-            if n <= _KERNEL_SLICE_ROWS:
-                yield _transform_record_batch(batch, config)
-            else:
-                for s in range(0, n, _KERNEL_SLICE_ROWS):
-                    yield _transform_record_batch(
-                        batch.slice(s, _KERNEL_SLICE_ROWS), config
-                    )
+            yield _transform_record_batch(batch, config)
 
     # status class is derived JVM-side from (sig_valid, error) — zero cost
     # inside the Arrow pass

@@ -36,13 +36,13 @@ plus-lengths shape ``transform_core`` works in), ``last_ms`` is int64,
 INFO's ``n_outs`` / ``sizes`` int32 / int64.  Decoding is
 ``np.frombuffer``, encoding ``tobytes()``, so a touched bucket costs a
 few memcpys instead of pickling its whole table value by value both
-ways; ``CacheNamespace`` is the one codec for both namespaces.  The
-lifecycle runs on those columns: ``pd.Index.get_indexer`` probes,
-an ``alive`` mask applies TTL, ``pd.factorize`` + ``np.unique`` pick each
-key's first row, MISS buckets append their kernel matrices to the
-payload as they lie, and rows serve zero-copy views of it.  This layout
+ways; ``EntryLayout`` is the one codec, which the streaming LSH index
+uses too.  The lifecycle runs on those columns: ``pd.Index.get_indexer``
+probes, an ``alive`` mask applies TTL, ``pd.factorize`` + ``np.unique``
+pick each key's first row, MISS buckets append their kernel matrices to
+the payload as they lie, and rows serve zero-copy views of it.  This layout
 cannot restore a checkpoint written by the earlier nested-list layout
-(docs/SEMANTICS.md "Cache state layout").
+(docs/SEMANTICS.md "Keyed state layout").
 
 Within a micro-batch, rows for a key are processed in event-time order:
 the first computes (MISS) and inserts; every later row — same batch or a
@@ -54,7 +54,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Iterator, NamedTuple, Tuple
+from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -138,8 +138,14 @@ def resolve_buckets(buckets: "int | None", df: DataFrame) -> int:
     32 buckets and about a third of 128, so this is not the regime of a
     few keys over very large tables, which was not measured.  Bucketing
     never changes row output — only which group serves a key — pinned by
-    tests/test_streaming.py::test_cache_bucket_count_invariance.  The
-    streaming LSH stage keeps its own count (lsh_dedup.py)."""
+    tests/test_streaming.py::test_cache_bucket_count_invariance.
+
+    The streaming LSH index (lsh_dedup.py) takes this count too.  On the
+    stream_lsh_dedup fixture at sf0.1 drained in 8 event-time drops
+    (tools/bench_lsh_stream.py, 6 alternating launches, 4 cpus), 8 per
+    partition beat 32 on pass_s in 5 of 6 (7.6 vs 8.9 s median) and on
+    the state operator's allUpdatesTimeMs in 6 of 6 (815 vs 1394 ms),
+    with identical verdicts."""
     if buckets is not None:
         return buckets
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -174,19 +180,6 @@ def miss_core(rows: pd.DataFrame, idx: np.ndarray, config: EngineConfig):
 _I32, _I64 = np.dtype("<i4"), np.dtype("<i8")
 
 
-class EntryTable(NamedTuple):
-    """One bucket's entry table as flat numpy columns, one entry per
-    cached key.  ``cols`` maps each stored state field to its column;
-    ``toks`` is the flat int32 token payload, entry i's run sized by
-    ``cols["lens"][i]`` (empty for a namespace without a ``lens``
-    field)."""
-
-    keys: np.ndarray  # object: the namespace key
-    cols: dict
-    toks: np.ndarray
-    last_ms: np.ndarray  # last access, processing-time ms
-
-
 def _starts(lens: np.ndarray) -> np.ndarray:
     """Run start of each entry in a flat payload sized by ``lens``."""
     out = np.zeros(len(lens), dtype=np.int64)
@@ -195,110 +188,101 @@ def _starts(lens: np.ndarray) -> np.ndarray:
 
 
 @dataclass(frozen=True)
-class CacheNamespace:
-    """One cache namespace, as data for the shared bucket lifecycle and
-    its one state codec.
+class EntryLayout:
+    """One bucket's state as a flat entry table, and its one codec: the
+    layout of every bucketed keyed-state operator (both cache namespaces
+    and the streaming LSH index, streaming/lsh_dedup.py).
 
-    ``fields`` are the stored per-entry columns, ``(state field, dtype,
-    transform_core column a MISS fills it from)``: ``object`` is an
-    ``array<string>`` state field, a fixed-width dtype a ``binary`` one.
-    A ``lens`` field means the namespace stores a token payload: one flat
-    int32 ``binary`` ("toks"), entry i's run ``lens[i]`` long, which MISS
-    rows fill from their kernel matrices and every row serves as
-    ``tokens_out``.  ``serves`` maps each scalar output value column to the
-    stored field a row serves it from (an ERROR row serves None / 0).
-    ``expiry_gates_hits`` runs the expiry gate before the probe, so an
-    expired request is rejected even when its entry is cached."""
+    ``fields`` are ``(state field, dtype)`` in state-row order.  ``object``
+    is an ``array<string>`` field; a fixed-width dtype is one little-endian
+    ``binary`` with one value per entry (a subarray dtype such as
+    ``("<i8", (8,))`` one fixed-width row per entry, decoding to a
+    matrix).  A third element names a length field and makes the field a
+    flat payload: entry i's run is ``lens[i]`` long.  A table is a dict of
+    numpy columns keyed by field name."""
+
+    fields: tuple
+
+    @property
+    def state_schema(self) -> StructType:
+        """No nested array anywhere, so a bucket's state crosses the
+        Python boundary as a handful of byte strings plus string lists."""
+        return StructType(
+            [
+                StructField(name, ArrayType(StringType()) if dt is object else BinaryType())
+                for name, dt, *_ in self.fields
+            ]
+        )
+
+    def decode(self, stored: tuple) -> dict:
+        """State row -> table: ``np.frombuffer`` per binary field (a
+        read-only view of the row's bytes)."""
+        return {
+            name: np.array(v, dtype=object) if dt is object else np.frombuffer(v, dtype=dt)
+            for (name, dt, *_), v in zip(self.fields, stored)
+        }
+
+    def encode(self, table: dict) -> tuple:
+        """Table -> state row: ``tobytes()`` per binary field."""
+        return tuple(
+            list(table[name]) if dt is object else table[name].astype(dt.base, copy=False).tobytes()
+            for name, dt, *_ in self.fields
+        )
+
+    def empty(self) -> dict:
+        return {name: np.empty(0, dtype=dt) for name, dt, *_ in self.fields}
+
+    def take(self, table: dict, idx: np.ndarray) -> dict:
+        """The entries ``idx``, in that order; a payload is gathered in one
+        fancy index over its flat buffer."""
+        out = {}
+        for name, _, *sized_by in self.fields:
+            col = table[name]
+            if sized_by:
+                lens = table[sized_by[0]]
+                sub = lens[idx]
+                shift = _starts(lens)[idx] - _starts(sub)
+                col = col[np.repeat(shift, sub) + np.arange(int(sub.sum()))]
+            else:
+                col = col[idx]
+            out[name] = col
+        return out
+
+    def concat(self, a: dict, b: dict) -> dict:
+        return {name: np.concatenate([a[name], b[name]]) for name in a}
+
+
+@dataclass(frozen=True)
+class CacheNamespace:
+    """One cache namespace, as data for the shared bucket lifecycle.
+
+    ``layout`` is its entry table: ``keys`` (the namespace key) first,
+    ``last_ms`` (int64 processing-time ms of the last access) last.  A
+    ``toks`` payload sized by ``lens`` means entries store a token run,
+    which MISS rows fill from their kernel matrices and every row serves
+    as ``tokens_out``.  ``fills`` maps each other stored field to the
+    ``transform_core`` column a MISS fills it from, ``serves`` each scalar
+    output value column to the stored field a row serves it from (an ERROR
+    row serves None / 0).  ``expiry_gates_hits`` runs the expiry gate
+    before the probe, so an expired request is rejected even when its
+    entry is cached."""
 
     key: str
     status: str
     output_schema: StructType
-    fields: tuple
+    layout: EntryLayout
+    fills: tuple
     serves: tuple
     expiry_gates_hits: bool
 
-    @property
-    def tokens(self) -> bool:
-        """Whether entries carry a token payload (sized by ``lens``)."""
-        return any(name == "lens" for name, _, _ in self.fields)
-
-    @property
-    def state_schema(self) -> StructType:
-        """keys, the stored fields, the token payload, last_ms — no nested
-        array anywhere, so a bucket's state crosses the Python boundary as
-        a handful of byte strings plus its key list."""
-        return StructType(
-            [StructField("keys", ArrayType(StringType()))]
-            + [
-                StructField(name, ArrayType(StringType()) if dt is object else BinaryType())
-                for name, dt, _ in self.fields
-            ]
-            + ([StructField("toks", BinaryType())] if self.tokens else [])
-            + [StructField("last_ms", BinaryType())]
-        )
-
-    def decode(self, stored: tuple) -> EntryTable:
-        """State row -> EntryTable: ``np.frombuffer`` per binary field."""
-        keys, *vals, last = stored
-        cols = {
-            name: np.array(v, dtype=object) if dt is object else np.frombuffer(v, dtype=dt)
-            for (name, dt, _), v in zip(self.fields, vals)
-        }
-        toks = np.frombuffer(vals[-1], dtype=_I32) if self.tokens else np.empty(0, _I32)
-        # copied: a HIT refreshes recency in place
-        return EntryTable(np.array(keys, dtype=object), cols, toks, np.frombuffer(last, _I64).copy())
-
-    def encode(self, table: EntryTable) -> tuple:
-        """EntryTable -> state row: ``tobytes()`` per binary field."""
-        return (
-            list(table.keys),
-            *(
-                list(table.cols[name]) if dt is object else table.cols[name].tobytes()
-                for name, dt, _ in self.fields
-            ),
-            *((table.toks.tobytes(),) if self.tokens else ()),
-            table.last_ms.tobytes(),
-        )
-
-    def empty(self) -> EntryTable:
-        return EntryTable(
-            np.empty(0, dtype=object),
-            {name: np.empty(0, dtype=dt) for name, dt, _ in self.fields},
-            np.empty(0, _I32),
-            np.empty(0, _I64),
-        )
-
-    def take(self, table: EntryTable, idx: np.ndarray) -> EntryTable:
-        """The entries ``idx``, in that order; the token payload is
-        gathered in one fancy index over the flat buffer."""
-        toks = table.toks
-        if self.tokens:
-            lens = table.cols["lens"][idx]
-            shift = _starts(table.cols["lens"])[idx] - _starts(lens)
-            toks = toks[np.repeat(shift, lens) + np.arange(int(lens.sum()))]
-        return EntryTable(
-            table.keys[idx],
-            {name: col[idx] for name, col in table.cols.items()},
-            toks,
-            table.last_ms[idx],
-        )
-
-    def concat(self, a: EntryTable, b: EntryTable) -> EntryTable:
-        return EntryTable(
-            np.concatenate([a.keys, b.keys]),
-            {name: np.concatenate([a.cols[name], b.cols[name]]) for name in a.cols},
-            np.concatenate([a.toks, b.toks]),
-            np.concatenate([a.last_ms, b.last_ms]),
-        )
-
-    def serve(self, table: EntryTable, src: np.ndarray) -> dict:
+    def serve(self, table: dict, src: np.ndarray) -> dict:
         """Output value columns for rows served from entries ``src`` (-1 =
         an ERROR row).  Tokens are zero-copy views into the payload."""
         ok = src >= 0
         at = src[ok]
         out = {}
         for col, name in self.serves:
-            stored = table.cols[name]
+            stored = table[name]
             vals = (
                 np.full(len(src), None, dtype=object)
                 if stored.dtype == object
@@ -306,36 +290,30 @@ class CacheNamespace:
             )
             vals[ok] = stored[at]
             out[col] = vals
-        if self.tokens:
-            lens = table.cols["lens"]
+        if "toks" in table:
+            lens = table["lens"]
             start = np.zeros(len(src), dtype=np.int64)
             start[ok] = _starts(lens)[at]
             end = start.copy()
             end[ok] += lens[at]
-            toks = table.toks
+            toks = table["toks"]
             out["tokens_out"] = [toks[a:b] if k else None for k, a, b in zip(ok, start, end)]
         return out
 
-    def state_func(
-        self,
-        config: EngineConfig = DEFAULT_CONFIG,
-        ttl_ms: int = 0,
-        capacity: int | None = None,
-    ):
+    def state_func(self, config: EngineConfig = DEFAULT_CONFIG, ttl_ms: int = 0):
         """Build the stateful group function (key = hash bucket).  ttl_ms
         <= 0 disables eviction; with TTL, entries expire `ttl_ms` after
         their last ACCESS (sliding, the LRU recency rule) and an idle
         bucket's whole state drops via the group timeout.
 
-        ``capacity`` (default: config.cache_capacity_per_bucket; 0 =
-        unbounded) is the per-bucket entry cap, the foyer hard-capacity
-        analog (reference: caching/config.rs:54-66 memory 1000 / disk
-        10000; LRU eviction cache.rs:152-165): when a batch leaves a
-        bucket over cap, lowest-recency entries are evicted first, so total
-        state is bounded by buckets x capacity even under a hot-key storm
-        where every distinct key recurs within one TTL window."""
-        if capacity is None:
-            capacity = config.cache_capacity_per_bucket
+        ``config.cache_capacity_per_bucket`` (0 = unbounded) is the
+        per-bucket entry cap, the foyer hard-capacity analog (reference:
+        caching/config.rs:54-66 memory 1000 / disk 10000; LRU eviction
+        cache.rs:152-165): when a batch leaves a bucket over cap,
+        lowest-recency entries are evicted first, so total state is
+        bounded by buckets x capacity even under a hot-key storm where
+        every distinct key recurs within one TTL window."""
+        capacity = config.cache_capacity_per_bucket
         fields = self.output_schema.fieldNames()
 
         def state_fn(
@@ -355,14 +333,16 @@ class CacheNamespace:
             ts_vals = rows["ts"].to_numpy()
             keys = rows[self.key].to_numpy(dtype=object)
             order = np.lexsort((doc_ids, ts_vals)) if m > 1 else np.arange(m)
-            table = self.decode(state.get) if state.exists else self.empty()
+            layout = self.layout
+            table = layout.decode(state.get) if state.exists else layout.empty()
+            table["last_ms"] = table["last_ms"].copy()  # a HIT refreshes recency in place
             now_ms = int(time.time() * 1000)
-            if ttl_ms > 0 and len(table.keys):
+            if ttl_ms > 0 and len(table["keys"]):
                 # entry-level TTL (processing time — the same clock
                 # ProcessingTimeTimeout uses; never in the row-output path)
-                alive = now_ms - table.last_ms <= ttl_ms
+                alive = now_ms - table["last_ms"] <= ttl_ms
                 if not alive.all():
-                    table = self.take(table, np.nonzero(alive)[0])
+                    table = layout.take(table, np.nonzero(alive)[0])
 
             statuses = np.empty(m, dtype=object)
             errors = np.full(m, None, dtype=object)
@@ -383,11 +363,11 @@ class CacheNamespace:
                 expired = np.zeros(m, dtype=bool)
 
             # State HIT: serve the entry; the access refreshes recency.
-            found = pd.Index(table.keys).get_indexer(keys)
+            found = pd.Index(table["keys"]).get_indexer(keys)
             hit = (found >= 0) & ~expired
             statuses[hit] = "HIT"
             src[hit] = found[hit]
-            table.last_ms[found[hit]] = now_ms
+            table["last_ms"][found[hit]] = now_ms
 
             # Every other live row, in event-time order: the first row of
             # each key computes (MISS); later rows are its duplicates.
@@ -409,17 +389,17 @@ class CacheNamespace:
                 errors[miss[failed]] = cols["error"][failed]
                 if buckets:
                     pos = np.concatenate([p for p, _ in buckets])
-                    new = EntryTable(
-                        keys[miss[pos]],
-                        {name: cols[c][pos].astype(dt) for name, dt, c in self.fields},
-                        np.concatenate([mat.ravel() for _, mat in buckets], dtype=_I32)
-                        if self.tokens
-                        else np.empty(0, _I32),
-                        np.full(len(pos), now_ms, dtype=_I64),
-                    )
+                    new = {
+                        "keys": keys[miss[pos]],
+                        **{name: cols[c][pos] for name, c in self.fills},
+                        "last_ms": np.full(len(pos), now_ms, dtype=_I64),
+                    }
+                    if "toks" in table:
+                        mats = [mat.ravel() for _, mat in buckets]
+                        new["toks"] = np.concatenate(mats, dtype=_I32)
                     statuses[miss[pos]] = "MISS"
-                    src[miss[pos]] = len(table.keys) + np.arange(len(pos))
-                    table = self.concat(table, new)
+                    src[miss[pos]] = len(table["keys"]) + np.arange(len(pos))
+                    table = layout.concat(table, new)
                     inserted = True
 
             # Duplicates serve their computing row's entry (HIT, like a
@@ -432,7 +412,7 @@ class CacheNamespace:
             src[dups] = src[of]
             served = self.serve(table, src)
 
-            if capacity > 0 and len(table.keys) > capacity:
+            if capacity > 0 and len(table["keys"]) > capacity:
                 # Capacity-bounded LRU: evict lowest last-access first until
                 # the bucket is back at cap.  Entries touched in THIS
                 # invocation (hits refreshed + fresh misses) share one clock
@@ -442,10 +422,10 @@ class CacheNamespace:
                 # (the computed result is served either way); the overflow is
                 # simply not retained — exactly foyer's admission-then-evict
                 # behavior at capacity.
-                lru = np.lexsort((table.keys, table.last_ms))
-                table = self.take(table, np.sort(lru[len(table.keys) - capacity :]))
+                lru = np.lexsort((table["keys"], table["last_ms"]))
+                table = layout.take(table, np.sort(lru[len(lru) - capacity :]))
 
-            if len(table.keys):
+            if len(table["keys"]):
                 # Pure-HIT skip (r8): with TTL and capacity both OFF, the only
                 # thing an all-hits invocation changed is last-access
                 # refreshes, which nothing can ever observe (no expiry, no
@@ -458,7 +438,7 @@ class CacheNamespace:
                 # changes future HIT/MISS output) the write stays
                 # unconditional.
                 if inserted or ttl_ms > 0 or capacity > 0 or not state.exists:
-                    state.update(self.encode(table))
+                    state.update(layout.encode(table))
                     if ttl_ms > 0:
                         # re-arm the bucket-idle timeout on EVERY invocation
                         # (Spark clears a pending timeout when the function
@@ -485,7 +465,6 @@ class CacheNamespace:
         config: EngineConfig,
         ttl_ms: int,
         buckets: int | None,
-        capacity: int | None,
     ) -> DataFrame:
         """Shuffle ``requests`` once on this namespace's key HASH BUCKET
         (state compaction — see module docstring) and run the lifecycle
@@ -501,9 +480,9 @@ class CacheNamespace:
             else GroupStateTimeout.NoTimeout
         )
         return keyed.groupBy("_bucket").applyInPandasWithState(
-            self.state_func(config, ttl_ms, capacity),
+            self.state_func(config, ttl_ms),
             self.output_schema,
-            self.state_schema,
+            self.layout.state_schema,
             "append",
             timeout,
         )
@@ -514,7 +493,16 @@ RESULT_CACHE = CacheNamespace(
     key="cache_key",
     status="cache_status",
     output_schema=CACHE_OUTPUT_SCHEMA,
-    fields=(("dtypes", object, "dtype"), ("lens", _I32, "n_out")),
+    layout=EntryLayout(
+        (
+            ("keys", object),
+            ("dtypes", object),
+            ("lens", _I32),
+            ("toks", _I32, "lens"),
+            ("last_ms", _I64),
+        )
+    ),
+    fills=(("dtypes", "dtype"), ("lens", "n_out")),
     serves=(("n_out", "lens"), ("dtype", "dtypes")),
     expiry_gates_hits=True,
 )
@@ -527,7 +515,16 @@ INFO_CACHE = CacheNamespace(
     key="doc_id",
     status="info_status",
     output_schema=INFO_OUTPUT_SCHEMA,
-    fields=(("n_outs", _I32, "n_out"), ("dtypes", object, "dtype"), ("sizes", _I64, "size_bytes")),
+    layout=EntryLayout(
+        (
+            ("keys", object),
+            ("n_outs", _I32),
+            ("dtypes", object),
+            ("sizes", _I64),
+            ("last_ms", _I64),
+        )
+    ),
+    fills=(("n_outs", "n_out"), ("dtypes", "dtype"), ("sizes", "size_bytes")),
     serves=(("n_out", "n_outs"), ("dtype", "dtypes"), ("size_bytes", "sizes")),
     expiry_gates_hits=False,
 )
@@ -538,14 +535,13 @@ def with_cache_state(
     config: EngineConfig = DEFAULT_CONFIG,
     ttl_ms: int = 0,
     buckets: int | None = None,
-    capacity: int | None = None,
 ) -> DataFrame:
     """Attach the result cache to a (streaming) request DataFrame, keyed
-    by the cache key.  ``capacity`` (default config.cache_capacity_per_
-    bucket) caps entries per bucket with LRU eviction, bounding total
-    state at buckets x capacity."""
+    by the cache key.  ``config.cache_capacity_per_bucket`` caps entries
+    per bucket with LRU eviction, bounding total state at buckets x
+    capacity."""
     keyed = requests.withColumn("cache_key", cache_key_col(config))
-    return RESULT_CACHE.attach(keyed, config, ttl_ms, buckets, capacity)
+    return RESULT_CACHE.attach(keyed, config, ttl_ms, buckets)
 
 
 def with_info_state(
@@ -553,9 +549,8 @@ def with_info_state(
     config: EngineConfig = DEFAULT_CONFIG,
     ttl_ms: int = 0,
     buckets: int | None = None,
-    capacity: int | None = None,
 ) -> DataFrame:
     """Attach the info cache to a (streaming) request DataFrame, keyed by
     doc_id — a DIFFERENT key space than the result cache's cache_key
     buckets, which is what makes it a genuine second namespace."""
-    return INFO_CACHE.attach(requests, config, ttl_ms, buckets, capacity)
+    return INFO_CACHE.attach(requests, config, ttl_ms, buckets)

@@ -1,13 +1,14 @@
 """Streaming job assembly (SURVEY.md §3 Spark shape):
 
-    readStream(requests) -> withWatermark -> signature gate ->
-    stateful cache (applyInPandasWithState) -> observe ->
-    foreachBatch idempotent sink
+    readStream(requests) -> signature gate -> stateful cache
+    (applyInPandasWithState) -> observe -> foreachBatch idempotent sink
 
 plus the windowed-aggregation queries (tumbling/sliding/session) that give
 the rate-limit/burst-coalescing surface.  Every job is checkpointed and
 resumable; all time comes from the `ts` column (no wall clock in the row
-path) so replays are byte-identical.
+path) so replays are byte-identical.  The cache pipelines carry no
+watermark: their one stateful operator runs without an event-time
+timeout, so a watermark would drop no late row and evict no state.
 """
 
 from __future__ import annotations
@@ -30,7 +31,6 @@ def transform_stream(
     config: EngineConfig = DEFAULT_CONFIG,
     verify: bool = True,
     ttl_ms: int = 0,
-    watermark: str = "10 minutes",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     rejected_dir: str | None = None,
@@ -53,7 +53,6 @@ def transform_stream(
     # the cache namespace below (and any stream started after it)
     apply_state_store(spark, config.state_store)
     stream = read_request_stream(spark, in_path, max_files_per_trigger)
-    stream = stream.withWatermark("ts", watermark)
     rejected_query = None
     rejected_sink = None
     if verify:
@@ -104,7 +103,6 @@ def info_stream(
     checkpoint_dir: str,
     config: EngineConfig = DEFAULT_CONFIG,
     ttl_ms: int = 0,
-    watermark: str = "10 minutes",
     available_now: bool = True,
 ):
     """The /info metadata pipeline: same source, but through the SECOND
@@ -114,8 +112,7 @@ def info_stream(
     from tokforge.engine.session import apply_state_store
 
     apply_state_store(spark, config.state_store)
-    stream = read_request_stream(spark, in_path).withWatermark("ts", watermark)
-    infod = with_info_state(stream, config, ttl_ms)
+    infod = with_info_state(read_request_stream(spark, in_path), config, ttl_ms)
     sink = IdempotentParquetSink(out_dir)
     return sink.start(infod, checkpoint_dir, available_now), sink
 

@@ -19,6 +19,11 @@ State is an LSH INDEX, not a corpus: each doc files N_BANDS entries
 max-seen event time passes their ts + horizon — so state is bounded by
 (docs within one horizon) x N_BANDS, independent of corpus size, and the
 RocksDB provider tier (engine/config.py state_store) spills it off-heap.
+A bucket's index is the caches' flat entry table (``BAND_STATE``, the one
+``cache_state.EntryLayout`` codec: strings as ``array<string>``, the
+signatures and event times as little-endian ``binary``) under the
+caches' bucket count: a touched bucket decodes with ``np.frombuffer``
+and builds no Python list per stored signature.
 Like the exact stage, a near-dup arriving later than the horizon is
 re-admitted; cross-horizon near-dedup belongs to the batch layer
 (pipeline/dedup.py LSH + ngram-Jaccard), which this stage feeds.
@@ -40,10 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -53,19 +56,16 @@ from pyspark.sql.types import (
 from tokforge.pipeline.dedup import (
     FEATURE_SPACE,
     N_BANDS,
+    N_HASHES,
     band_val_col,
     signatures_arrow,
 )
+from tokforge.streaming.cache_state import EntryLayout, resolve_buckets
 from tokforge.streaming.sink import IdempotentParquetSink
 from tokforge.streaming.source import read_request_stream
 
 DEFAULT_THRESHOLD = 0.5  # >= 4 of 8 MinHash positions equal
 DEFAULT_HORIZON_MS = 10 * 60 * 1000
-# Band buckets per shuffle partition.  The band state below is still a
-# nested-list table that pickles value by value, so it stays at the
-# bucket count the result cache used before its state went flat; a new
-# count would also re-bucket the band keys of a resumed checkpoint.
-BUCKETS_PER_PARTITION = 32
 
 BAND_OUTPUT_SCHEMA = StructType(
     [
@@ -77,14 +77,16 @@ BAND_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# One bucket's LSH index: parallel arrays of filed entries.
-BAND_STATE_SCHEMA = StructType(
-    [
-        StructField("bkeys", ArrayType(StringType())),
-        StructField("doc_ids", ArrayType(StringType())),
-        StructField("sigs", ArrayType(ArrayType(LongType()))),
-        StructField("ts_ms", ArrayType(LongType())),
-    ]
+# One bucket's LSH index in the caches' flat entry-table layout: one entry
+# per filed (doc, band) — band key "band_idx:band_val" and doc id as
+# strings, the signature as one fixed-width int64 row, the event time.
+BAND_STATE = EntryLayout(
+    (
+        ("bkeys", object),
+        ("doc_ids", object),
+        ("sigs", np.dtype(("<i8", (N_HASHES,)))),
+        ("ts_ms", np.dtype("<i8")),
+    )
 )
 
 
@@ -133,79 +135,64 @@ def make_lsh_state_func(
         pdf_iter: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-
         chunks = list(pdf_iter)
         rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
         m = len(rows)
         doc_ids = rows["doc_id"].to_numpy(dtype=object)
         ts_vals = rows["ts"].to_numpy()
-        sigs = rows["sig"].to_numpy(dtype=object)
         bidx = rows["band_idx"].to_numpy()
-        bval = rows["band_val"].to_numpy(dtype=object)
-        ts_ms = (ts_vals.astype("datetime64[ms]").astype(np.int64))
 
-        entries: dict[str, list] = {}  # bkey -> [[doc_id, sig(list), ts_ms], ...]
-        max_ts = 0
-        if state.exists:
-            bkeys, s_docs, s_sigs, s_ts = state.get
-            for bk, d, sg, t in zip(bkeys, s_docs, s_sigs, s_ts):
-                entries.setdefault(bk, []).append([d, sg, t])
-                max_ts = max(max_ts, t)
+        # Rows file in event-time order (ties by doc_id): first-seen-wins,
+        # the exact stage's dropDuplicatesWithinWatermark orientation.  An
+        # unshingleable doc (NULL sig) passes through, never indexed.
+        order = np.lexsort((doc_ids, ts_vals))
+        filed = order[(rows["sig"].notna() & rows["band_val"].notna()).to_numpy()[order]]
+        bval = rows["band_val"].to_numpy()[filed].astype(np.int64)
+        sig_rows = [*rows["sig"].to_numpy()[filed], np.empty(0, np.int64)]
+        new = {
+            "bkeys": np.array(
+                [f"{b}:{v}" for b, v in zip(bidx[filed].tolist(), bval.tolist())], dtype=object
+            ),
+            "doc_ids": doc_ids[filed],
+            "sigs": np.concatenate(sig_rows).reshape(-1, N_HASHES),
+            "ts_ms": ts_vals[filed].astype("datetime64[ms]").astype(np.int64),
+        }
+        table = BAND_STATE.decode(state.get) if state.exists else BAND_STATE.empty()
+        n_old = len(table["bkeys"])
+        table = BAND_STATE.concat(table, new)
+        docs, sigs, ts_ms = table["doc_ids"], table["sigs"], table["ts_ms"]
 
+        # A filed row's candidates are the entries under its band key filed
+        # before it: stored entries, then earlier rows.  Entry positions
+        # grouped by band key (a stable sort keeps filing order) make them
+        # one slice of ``by_key``; only rows with a non-empty slice loop.
+        codes = pd.factorize(table["bkeys"])[0]
+        by_key = np.argsort(codes, kind="stable")
+        first = np.searchsorted(codes[by_key], codes)
+        slot = np.empty_like(by_key)
+        slot[by_key] = np.arange(len(by_key))
         matched = np.full(m, None, dtype=object)
         est = np.zeros(m, dtype=np.float64)
-        # first-seen-wins in event-time order (ties by doc_id), matching
-        # the exact stage's dropDuplicatesWithinWatermark orientation
-        for i in np.lexsort((doc_ids, ts_vals)):
-            if sigs[i] is None or pd.isna(bval[i]):
-                continue  # unshingleable doc: pass through, never indexed
-            bk = f"{int(bidx[i])}:{int(bval[i])}"
-            sig_i = np.asarray(sigs[i], dtype=np.int64)
-            best = None
-            for d, sg, _t in entries.get(bk, ()):
-                if d == doc_ids[i]:
-                    continue
-                # horizon is enforced at MATCH time, not just at the
-                # end-of-batch state compaction: an entry filed more than
-                # one horizon before THIS row's event time is already
-                # dead for it, even if eviction hasn't swept it yet
-                if int(ts_ms[i]) - _t > horizon_ms:
-                    continue
-                frac = float(np.mean(sig_i == np.asarray(sg, dtype=np.int64)))
-                if frac >= threshold and (
-                    best is None or frac > best[1] or (frac == best[1] and d < best[0])
-                ):
-                    best = (d, frac)
-            if best is not None:
-                matched[i] = best[0]
-                est[i] = best[1]
-            entries.setdefault(bk, []).append(
-                [doc_ids[i], [int(x) for x in sigs[i]], int(ts_ms[i])]
-            )
-            max_ts = max(max_ts, int(ts_ms[i]))
+        for p in n_old + np.nonzero(slot[n_old:] > first[n_old:])[0]:
+            cand = by_key[first[p] : slot[p]]
+            frac = (sigs[cand] == sigs[p]).mean(axis=1)
+            # the horizon holds at MATCH time too: an entry filed more than
+            # one horizon before THIS row's event time is dead for it, even
+            # if eviction has not swept it yet
+            ok = (frac >= threshold) & (docs[cand] != docs[p])
+            ok &= ts_ms[p] - ts_ms[cand] <= horizon_ms
+            if ok.any():
+                i = filed[p - n_old]
+                est[i] = frac[ok].max()
+                matched[i] = docs[cand[ok & (frac == est[i])]].min()  # ties: lowest doc id
 
         # event-time horizon eviction: the streaming analog of the batch
         # layer owning anything older — state never outgrows the horizon
-        floor = max_ts - horizon_ms
-        entries = {
-            bk: [e for e in es if e[2] >= floor]
-            for bk, es in entries.items()
-        }
-        entries = {bk: es for bk, es in entries.items() if es}
-
-        if entries:
-            flat = [(bk, *e) for bk, es in entries.items() for e in es]
-            state.update(
-                (
-                    [f[0] for f in flat],
-                    [f[1] for f in flat],
-                    [f[2] for f in flat],
-                    [f[3] for f in flat],
-                )
-            )
+        keep = ts_ms >= ts_ms.max(initial=0) - horizon_ms
+        if not keep.all():
+            table = BAND_STATE.take(table, np.nonzero(keep)[0])
+        if len(table["bkeys"]):
+            state.update(BAND_STATE.encode(table))
         elif state.exists:
             state.remove()
 
@@ -229,14 +216,14 @@ def with_lsh_state(
     buckets: int | None = None,
 ) -> DataFrame:
     """Attach the streaming LSH index to a request stream: one shuffle on
-    the band-bucket hash (state compaction — same pattern as the result
-    cache's buckets; an explicit ``buckets`` wins, else the count resolves
-    at call time to BUCKETS_PER_PARTITION x spark.sql.shuffle.partitions).
-    All rows of one (band_idx, band_val) hash to the same bucket for ANY
-    bucket count, so the verdicts are bucket-count invariant."""
-    if buckets is None:
-        n_part = int(stream.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        buckets = BUCKETS_PER_PARTITION * n_part
+    the band-bucket hash (state compaction, with the caches' bucket count:
+    ``cache_state.resolve_buckets``).  All rows of one (band_idx,
+    band_val) hash to the same bucket for ANY bucket count, so on a feed
+    that arrives in event-time order the verdicts are bucket-count
+    invariant.  Eviction follows each bucket's own max event time, so a
+    row arriving behind it can find entries already evicted, and which
+    ones depends on the keys sharing its bucket."""
+    buckets = resolve_buckets(buckets, stream)
     bands = banded(signatures_with_ts(stream)).withColumn(
         "_bucket",
         F.pmod(F.xxhash64(F.col("band_idx"), F.col("band_val")), F.lit(buckets)),
@@ -244,7 +231,7 @@ def with_lsh_state(
     return bands.groupBy("_bucket").applyInPandasWithState(
         make_lsh_state_func(threshold, horizon_ms),
         BAND_OUTPUT_SCHEMA,
-        BAND_STATE_SCHEMA,
+        BAND_STATE.state_schema,
         "append",
         GroupStateTimeout.NoTimeout,
     )

@@ -10,7 +10,6 @@ downstream is source-agnostic.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -33,19 +32,6 @@ REQUEST_SCHEMA = StructType(
         StructField("src_dtype", StringType()),
     ]
 )
-
-
-def write_request_batches(
-    requests: DataFrame, path: str, n_batches: int = 3, ts_step_s: int = 600
-) -> None:
-    """Materialize a request DataFrame as N parquet drops under `path`
-    (one file-stream micro-batch each, replicas shifted in event time) —
-    the test/bench stand-in for an arriving Iceberg stream."""
-    for i in range(n_batches):
-        batch = requests.withColumn(
-            "ts", (F.unix_timestamp("ts") + i * ts_step_s).cast("timestamp")
-        )
-        batch.write.mode("overwrite" if False else "append").parquet(f"{path}/drop={i}")
 
 
 def read_request_stream(
