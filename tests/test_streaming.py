@@ -1040,6 +1040,112 @@ def test_rejected_rows_dead_letter_sink(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
+def test_stream_plan_verifies_inside_state_operator(spark, tmp_path):
+    """The signature gate rides in the one Python crossing, as in the batch
+    pass: a verifying stream's executed plan has no verify UDF node
+    (ArrowEvalPython) and exactly one state operator."""
+    in_path, out_dir, ckpt = (
+        str(tmp_path / "in"),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    _signed_requests(spark, limit=10).write.parquet(f"{in_path}/drop=0")
+    query, _ = transform_stream(spark, in_path, out_dir, ckpt, CFG, verify=True)
+    _finish(query)
+    plan = query._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 0, plan
+    assert plan.count("FlatMapGroupsInPandasWithState") == 1, plan
+    assert read_sink(spark, out_dir).count() == 10
+
+
+def test_forged_rows_never_touch_state(spark, tmp_path):
+    """A row with a bad signature never reads or writes cache state: the
+    valid rows drained with forged copies of their cache keys mixed in —
+    earlier in event time within the same drop, at the same instant, in an
+    earlier drop than the key's first valid row, and as a later drop made
+    only of forgeries — sink exactly the rows they sink alone, HIT/MISS
+    included."""
+    req = _signed_requests(spark, limit=12).cache()
+    docs = sorted(r["doc_id"] for r in req.select("doc_id").collect())
+    early = docs[:8]  # docs[8:] first come with a valid signature in drop 1
+
+    def shifted(df, seconds):
+        return df.withColumn("ts", (F.unix_timestamp("ts") + seconds).cast("timestamp"))
+
+    forged = req.withColumn("sig", F.reverse("sig"))
+    valid_drops = [
+        shifted(req.filter(F.col("doc_id").isin(early)), 0),
+        shifted(req, 600),
+    ]
+    forged_drops = [
+        shifted(forged.filter(F.col("doc_id").isin(docs[:4])), -60).unionByName(
+            forged.filter(F.col("doc_id").isin(docs[4:]))
+        ),
+        shifted(forged.filter(F.col("doc_id").isin(early)), 540),
+        shifted(forged, 1200),
+    ]
+
+    def drain(name, drops):
+        base = tmp_path / name
+        for i, drop in enumerate(drops):
+            drop.coalesce(1).write.parquet(str(base / "in" / f"drop={i}"))
+        query, _ = transform_stream(
+            spark, str(base / "in"), str(base / "out"), str(base / "ckpt"), CFG,
+            verify=True, ttl_ms=0, max_files_per_trigger=1,
+        )
+        _finish(query)
+        return sorted(
+            (r["cache_key"], r["doc_id"], r["ts"], r["cache_status"],
+             tuple(r["tokens_out"] or ()), r["n_out"], r["dtype"], r["error"])
+            for r in read_sink(spark, str(base / "out")).collect()
+        )
+
+    alone = drain("alone", valid_drops)
+    mixed = drain(
+        "mixed",
+        [valid_drops[0].unionByName(forged_drops[0]),
+         valid_drops[1].unionByName(forged_drops[1]),
+         forged_drops[2]],
+    )
+    assert mixed == alone
+    statuses = [r[3] for r in alone]
+    assert statuses.count("MISS") == 12 and statuses.count("HIT") == 8
+    req.unpersist()
+
+
+def test_all_forged_bucket_call_skips_state(spark):
+    """A bucket call whose rows all fail the signature gate returns before
+    state is decoded: nothing is emitted or written, and with a TTL the
+    idle timeout is re-armed (Spark clears it on every call)."""
+    from tokforge.streaming.cache_state import INFO_CACHE, RESULT_CACHE
+
+    class _Sealed(_StubGroupState):
+        def __init__(self, value):
+            super().__init__()
+            self.value = value
+            self.reads = 0
+
+        @property
+        def get(self):
+            self.reads += 1
+            return self.value
+
+        def update(self, v):
+            raise AssertionError("state written")
+
+        def remove(self):
+            raise AssertionError("state removed")
+
+    batch = _one_request_batch(spark, ["ka", "kb"])
+    batch["sig"] = ["forged", None]
+    for ns in (RESULT_CACHE, INFO_CACHE):
+        for ttl_ms, arms in ((0, 0), (100000, 1)):
+            state = _Sealed(("sentinel",))
+            out = list(ns.state_func(CFG, ttl_ms=ttl_ms)((0,), iter([batch]), state))
+            assert out == [] and state.reads == 0
+            assert state.timeout_set_count == arms
+
+
 def test_partitioned_sink_commits_and_prunes(spark, tmp_path):
     """Hidden-partitioning analog: a sink built with partition_cols writes
     data/batch_id=N/source=S/... directories; partition discovery recovers

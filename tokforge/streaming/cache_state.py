@@ -10,9 +10,11 @@ its own key space: ``RESULT_CACHE`` is keyed by cache_key and stores the
 served tokens, ``INFO_CACHE`` is keyed by doc_id (info is per source
 document, independent of the ops chain) and stores only the
 post-transform metadata, so its state stays tiny.  Both run the one
-bucket lifecycle in ``CacheNamespace.state_func``; a namespace is data
-(key, status column, stored values, how a MISS fills them and a row
-serves them, whether expiry gates HITs), never a second code path.
+bucket lifecycle in ``CacheNamespace.state_func``, whose first gate is
+the request signature (as in the batch pass, it runs iff the rows carry
+``sig``); a namespace is data (key, status column, stored values, how a
+MISS fills them and a row serves them, whether expiry gates HITs), never
+a second code path.
 
 STATE COMPACTION (the 100 TB-critical shape): grouping by raw cache_key
 means one Python invocation PER KEY — measured 208 us/row of pure
@@ -75,6 +77,7 @@ from pyspark.sql.types import (
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
 from tokforge.engine.transform import cache_key_col
 from tokforge.engine.transform_arrow import expired_rows, transform_core
+from tokforge.functions.signing import verify_series
 
 CACHE_OUTPUT_SCHEMA = StructType(
     [
@@ -301,8 +304,12 @@ class CacheNamespace:
         return out
 
     def state_func(self, config: EngineConfig = DEFAULT_CONFIG, ttl_ms: int = 0):
-        """Build the stateful group function (key = hash bucket).  ttl_ms
-        <= 0 disables eviction; with TTL, entries expire `ttl_ms` after
+        """Build the stateful group function (key = hash bucket).  When
+        the rows carry ``sig``, the signature gate runs first and drops
+        every forged row before state is read; a bucket call whose rows
+        all fail returns before decoding state, only re-arming the idle
+        timeout (Spark clears it on every call).  ttl_ms <= 0 disables
+        eviction; with TTL, entries expire `ttl_ms` after
         their last ACCESS (sliding, the LRU recency rule) and an idle
         bucket's whole state drops via the group timeout.
 
@@ -328,6 +335,18 @@ class CacheNamespace:
 
             chunks = list(pdf_iter)
             rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+            if "sig" in rows.columns:
+                # gate 0, the signature (service.rs:453-470): verify iff the
+                # rows carry sig, the batch pass's rule
+                ok = verify_series(
+                    config.key, config.salt, rows["sig"], rows["ops"], rows["doc_id"],
+                    config.allow_unsigned,
+                ).to_numpy()
+                if not ok.any():
+                    if ttl_ms > 0 and state.exists:
+                        state.setTimeoutDuration(ttl_ms)  # Spark cleared it
+                    return
+                rows = rows[ok]
             m = len(rows)
             doc_ids = rows["doc_id"].to_numpy(dtype=object)
             ts_vals = rows["ts"].to_numpy()

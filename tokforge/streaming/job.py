@@ -1,7 +1,15 @@
 """Streaming job assembly (SURVEY.md §3 Spark shape):
 
-    readStream(requests) -> signature gate -> stateful cache
-    (applyInPandasWithState) -> observe -> foreachBatch idempotent sink
+    readStream(requests) -> stateful cache (applyInPandasWithState:
+    signature gate, then the cache lifecycle) -> observe -> foreachBatch
+    idempotent sink
+
+The signature gate sits where the batch pass puts it, inside the one
+Python crossing: the state function verifies iff its rows carry ``sig``
+(``transform_stream(verify=False)`` and ``info_stream`` drop it), so a
+forged row never touches state and the stream plan holds no verify UDF.
+Only the optional dead-letter query (``rejected_dir``) runs the verify
+UDF, as its own verify-only stream.
 
 plus the windowed-aggregation queries (tumbling/sliding/session) that give
 the rate-limit/burst-coalescing surface.  Every job is checkpointed and
@@ -17,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
-from tokforge.engine.transform import make_verify_udf
 from tokforge.streaming.cache_state import with_cache_state, with_info_state
 from tokforge.streaming.sink import IdempotentParquetSink, observe_requests
 from tokforge.streaming.source import read_request_stream
@@ -41,10 +48,11 @@ def transform_stream(
     ``partition_cols`` (e.g. ("source",)) turns on hidden-partitioned
     commits in the sink — read back with read_sink(..., partitioned=True).
 
-    When ``rejected_dir`` is given, signature-rejected rows are routed to
-    their own exactly-once sink (the 403-response analog,
-    service.rs:453-470) instead of being dropped — a dead-letter channel
-    with the same idempotent-commit guarantees as the main output.
+    When ``rejected_dir`` is given, signature-rejected rows are also
+    written to their own exactly-once sink (the 403-response analog,
+    service.rs:453-470) by a second, verify-only query — a dead-letter
+    channel with the same idempotent-commit guarantees as the main
+    output, which drops them in its state operator either way.
     """
     from tokforge.engine.session import apply_state_store
 
@@ -55,37 +63,26 @@ def transform_stream(
     stream = read_request_stream(spark, in_path, max_files_per_trigger)
     rejected_query = None
     rejected_sink = None
-    if verify:
-        verify_udf = make_verify_udf(config)
-        stream = stream.withColumn(
-            "sig_valid", verify_udf(F.col("sig"), F.col("ops"), F.col("doc_id"))
-        )
-        if rejected_dir is not None:
-            # status class via the shared taxonomy (service.rs:676-800):
-            # the dead-letter sink partitions on it, so per-class replay /
-            # alerting reads prune whole directories
-            from tokforge.engine.transform import STATUS_FORBIDDEN
+    if not verify:
+        stream = stream.drop("sig")  # the state operator verifies iff rows carry sig
+    elif rejected_dir is not None:
+        # status class via the shared taxonomy (service.rs:676-800): the
+        # dead-letter sink partitions on it, so per-class replay /
+        # alerting reads prune whole directories
+        from tokforge.engine.transform import STATUS_FORBIDDEN, make_verify_udf
 
-            rejected = stream.filter(~F.col("sig_valid")).select(
-                "doc_id",
-                "source",
-                "ts",
-                "ops",
-                F.lit(STATUS_FORBIDDEN).cast("int").alias("status"),
-            )
-            rejected_sink = IdempotentParquetSink(
-                rejected_dir, partition_cols=("status",)
-            )
-            rejected_query = rejected_sink.start(
-                rejected, rejected_dir + "/_ckpt", available_now
-            )
-            if available_now:
-                # The dead-letter channel drains the already-available input
-                # synchronously, so a failure surfaces here (awaitTermination
-                # re-raises) instead of being silently dropped, and callers
-                # never race its commits.
-                rejected_query.awaitTermination()
-        stream = stream.filter(F.col("sig_valid"))
+        verify_udf = make_verify_udf(config)
+        rejected = stream.filter(~verify_udf("sig", "ops", "doc_id")).select(
+            "doc_id", "source", "ts", "ops", F.lit(STATUS_FORBIDDEN).cast("int").alias("status")
+        )
+        rejected_sink = IdempotentParquetSink(rejected_dir, partition_cols=("status",))
+        rejected_query = rejected_sink.start(rejected, rejected_dir + "/_ckpt", available_now)
+        if available_now:
+            # The dead-letter channel drains the already-available input
+            # synchronously, so a failure surfaces here (awaitTermination
+            # re-raises) instead of being silently dropped, and callers
+            # never race its commits.
+            rejected_query.awaitTermination()
     cached = with_cache_state(stream, config, ttl_ms)
     cached = observe_requests(cached)
     sink = IdempotentParquetSink(out_dir, partition_cols=partition_cols)
@@ -112,7 +109,8 @@ def info_stream(
     from tokforge.engine.session import apply_state_store
 
     apply_state_store(spark, config.state_store)
-    infod = with_info_state(read_request_stream(spark, in_path), config, ttl_ms)
+    # unsigned /info: without sig the shared lifecycle skips its signature gate
+    infod = with_info_state(read_request_stream(spark, in_path).drop("sig"), config, ttl_ms)
     sink = IdempotentParquetSink(out_dir)
     return sink.start(infod, checkpoint_dir, available_now), sink
 
