@@ -38,18 +38,19 @@ def _capped(capacity: int) -> EngineConfig:
 
 def _finish(query, timeout=45):
     """Timer-less availableNow queries terminate on their own; queries with
-    registered state timers keep scheduling timeout batches instead, so
-    after a grace period stop once the source is drained (an empty batch
-    completed after at least one data batch)."""
-    query.awaitTermination(timeout)
-    deadline = time.time() + 180
-    while time.time() < deadline and query.isActive:
-        progress = query.recentProgress
-        if any(p["numInputRows"] == 0 for p in progress) and any(
-            p["numInputRows"] > 0 for p in progress
-        ):
+    registered state timers keep scheduling no-data timeout batches
+    instead, so those are stopped once the source is drained: a zero-row
+    batch completed after the run's last data batch.  Batches are tracked
+    by id across 0.5 s polls, so a data batch counts even after it has
+    left the 100-update ``recentProgress`` window."""
+    rows_by_batch = {}
+    deadline = time.time() + timeout + 180
+    while not query.awaitTermination(0.5) and time.time() < deadline:
+        for p in query.recentProgress:
+            rows_by_batch[p["batchId"]] = p["numInputRows"]
+        data = [b for b, n in rows_by_batch.items() if n > 0]
+        if data and any(n == 0 and b > max(data) for b, n in rows_by_batch.items()):
             break
-        time.sleep(0.5)
     if query.isActive:
         query.stop()
     query.awaitTermination(60)
@@ -274,6 +275,79 @@ def test_checkpoint_resume_processes_only_new_data(spark, tmp_path):
     # the resumed batch saw existing state: all second-drop rows are HITs
     hits = result.filter(F.col("cache_status") == "HIT").count()
     assert hits == 10
+
+
+def _file_managers(query):
+    """Class names of the offsets and commits logs' checkpoint file managers."""
+    sq = query._jsq.streamingQuery()
+    return {
+        log.fileManager().getClass().getSimpleName()
+        for log in (sq.offsetLog(), sq.commitLog())
+    }
+
+
+def test_local_checkpoint_uses_filesystem_manager(spark, tmp_path):
+    """A checkpoint on the local disk commits through the FileSystem
+    checkpoint manager (no readlink fork per file); a non-local path
+    leaves the choice to Spark, decided without opening the FileSystem."""
+    from tokforge.engine.session import CHECKPOINT_MANAGER_CONF, apply_checkpoint_manager
+
+    in_path = str(tmp_path / "in")
+    _signed_requests(spark, limit=5).write.parquet(f"{in_path}/drop=0")
+    query, _ = transform_stream(
+        spark, in_path, str(tmp_path / "out"), str(tmp_path / "ckpt"), CFG, verify=False
+    )
+    _finish(query)
+    assert _file_managers(query) == {"FileSystemBasedCheckpointFileManager"}
+
+    apply_checkpoint_manager(spark, "hdfs://nn:8020/ck")
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) is None
+
+
+@pytest.mark.parametrize("first_on_spark_default", [True, False])
+def test_checkpoint_restores_across_manager_switch(
+    spark, tmp_path, monkeypatch, first_on_spark_default
+):
+    """A checkpoint written by Spark's default (FileContext) manager
+    resumes under the FileSystem manager, and the reverse: drop 1 is
+    committed exactly once and served from drop 0's cache state."""
+    from tokforge.engine.session import CHECKPOINT_MANAGER_CONF
+    from tokforge.streaming import sink as sink_module
+
+    in_path, out_dir, ckpt = (
+        str(tmp_path / "in"),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+
+    def drain(spark_default):
+        if spark_default:  # conf unset: Spark picks its own manager
+            monkeypatch.setattr(
+                sink_module,
+                "apply_checkpoint_manager",
+                lambda session, _: session.conf.unset(CHECKPOINT_MANAGER_CONF),
+            )
+        else:
+            monkeypatch.undo()
+        query, _ = transform_stream(spark, in_path, out_dir, ckpt, CFG, verify=False)
+        _finish(query)
+        manager = "FileContext" if spark_default else "FileSystem"
+        assert _file_managers(query) == {f"{manager}BasedCheckpointFileManager"}
+
+    req = _signed_requests(spark, limit=10)
+    req.write.parquet(f"{in_path}/drop=0")
+    drain(first_on_spark_default)
+    req.withColumn("ts", (F.unix_timestamp("ts") + 600).cast("timestamp")).write.parquet(
+        f"{in_path}/drop=1"
+    )
+    drain(not first_on_spark_default)
+
+    result = read_sink(spark, out_dir)
+    assert result.count() == 20
+    assert result.select("doc_id", "ts").distinct().count() == 20
+    second = result.filter(F.col("batch_id") == 1)
+    assert second.count() == 10
+    assert second.filter(F.col("cache_status") == "HIT").count() == 10
 
 
 def test_cache_ttl_eviction(spark, tmp_path):

@@ -4,6 +4,12 @@ Defaults target local[32] testing but every knob is the one you would set
 on a 1000-executor cluster: AQE on (runtime re-plan + skew-join splitting),
 Arrow for the pandas UDF exchange, UTC session time so event-time windows
 are replay-stable, shuffle partitions sized to cores.
+
+Two stream-start rules live here, both read by Spark when a query starts
+(so a runtime conf works): ``apply_state_store`` picks the state-store
+tier, and ``apply_checkpoint_manager`` picks how checkpoint files are
+committed: through the FileSystem API on a local disk, Spark's own
+choice on every other FileSystem.
 """
 
 from __future__ import annotations
@@ -15,6 +21,11 @@ from pyspark.sql import SparkSession
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
 
 
@@ -38,6 +49,30 @@ def apply_state_store(spark: SparkSession, state_store: str) -> None:
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     else:
         raise ValueError(f"unknown state_store tier: {state_store!r}")
+
+
+def apply_checkpoint_manager(spark: SparkSession, checkpoint_dir: str) -> None:
+    """Select the checkpoint file manager for a stream about to start on
+    ``checkpoint_dir``.  Spark's default for ``file:`` paths commits each
+    offsets / commits / state-delta file through ``FileContext.rename``,
+    which asks for the link status of the source, the destination and
+    both ``.crc`` twins; without libhadoop each ask forks a ``readlink``
+    process that always fails (16 per state task and 24 on the stream
+    thread per micro-batch).  A local ``rename(2)`` is already atomic, so
+    on the local FileSystem the FileSystem-API manager keeps the atomic
+    commit without the forks; checksums (the ``.crc`` files and Spark's
+    checkpoint file checksums) stay on.  Any other FileSystem (HDFS, S3,
+    ABFS) keeps Spark's own choice.  The decision reads only the path's
+    scheme, resolved against ``fs.defaultFS``; no FileSystem is opened."""
+    hadoop_fs = spark._jvm.org.apache.hadoop.fs
+    scheme = hadoop_fs.Path(checkpoint_dir).toUri().getScheme()
+    if scheme is None:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = hadoop_fs.FileSystem.getDefaultUri(conf).getScheme()
+    if scheme == "file":
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)
+    else:
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
 
 
 def build_spark(

@@ -7,6 +7,12 @@ Exactly-once recipe: each micro-batch writes to `data/batch_id=N` ONLY if
 the ledger has no marker for N; the marker is written after a successful
 write.  On restart-and-replay Spark may re-offer a committed batch — the
 ledger check makes the replay a no-op, so downstream sees each batch once.
+
+Every tokforge stream starts through ``IdempotentParquetSink.start``, so
+that is where the stream-start checkpoint rule runs: a checkpoint on the
+local disk commits its offsets, commits and state files through the
+FileSystem checkpoint manager, and any other FileSystem keeps Spark's
+choice (``engine.session.apply_checkpoint_manager``).
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
+
+from tokforge.engine.session import apply_checkpoint_manager
 
 
 def lineage_columns(df: DataFrame, batch_id: int) -> DataFrame:
@@ -52,7 +60,9 @@ class IdempotentParquetSink:
         """Start ``df`` as a checkpointed append query into this sink and
         return the query.  ``available_now`` drains the input present at
         start and stops; otherwise the query runs a micro-batch every
-        second."""
+        second.  The checkpoint file manager is picked for
+        ``checkpoint_dir`` first (``apply_checkpoint_manager``)."""
+        apply_checkpoint_manager(df.sparkSession, checkpoint_dir)
         writer = (
             df.writeStream.foreachBatch(self)
             .option("checkpointLocation", checkpoint_dir)
